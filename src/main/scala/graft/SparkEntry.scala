@@ -27,22 +27,17 @@ object SparkEntry {
     parsedCache.find(e => (e._1 eq spark) && e._2 == dir) match {
       case Some((_, _, df)) => df
       case None =>
-        // RDD-level persistence (round 6, guide §1.2 per-task work): a DF
-        // .persist here built Spark's columnar InMemoryRelation over the
-        // 332-column kernel output — per-column compression builders cost
-        // ~3 s at sf0.1 on top of the kernel, and every cached read paid
-        // ~0.5 s of batch decompression. The kernel's rows are fresh
-        // self-contained GenericInternalRows (RowKernel's row-object
-        // contract), so caching them as-is makes the cache build ≈ the
-        // kernel pass and reads a plain field projection. Same rows, same
-        // schema — the 221 oracles are the guard.
-        val rdd = org.apache.spark.sql.graft.InternalBridge.toUnsafe(
-            Pipeline.parseRowsRdd(spark, Transcripts.input(spark, dir),
-              emitDropped = false),
-            graft.pipeline.RowKernel.schema)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val df = org.apache.spark.sql.graft.InternalBridge.toDf(
-          spark, rdd, graft.pipeline.RowKernel.schema)
+        // RDD-level persistence (guide §1.2 per-task work): a DF .persist
+        // here builds Spark's columnar InMemoryRelation over the 332-column
+        // kernel output — per-column compression builders cost ~3 s at
+        // sf0.1 on top of the kernel, and every cached read paid ~0.5 s of
+        // batch decompression. The kernel node already emits UnsafeRows, so
+        // caching copies of them makes the cache build ≈ the kernel pass and
+        // reads a plain field projection. Same rows, same schema — the 221
+        // oracles are the guard.
+        val df = org.apache.spark.sql.graft.GraftParse.persistedRows(
+          Pipeline.parseDf(spark, Transcripts.input(spark, dir)),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         parsedCache = (spark, dir, df) :: parsedCache
         df
     }

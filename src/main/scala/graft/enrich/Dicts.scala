@@ -300,11 +300,10 @@ object Dicts {
     * so construction is amortized exactly like the lazy resource vals it
     * aggregates (measured ~0.1 s per call, paid up to ~25× per bench run
     * across its sessions and kernel legs before this). */
-  @volatile private var cachedBuild: Dicts = null
-  def build(): Dicts = {
-    var c = cachedBuild
-    if (c == null) { c = buildFresh(); cachedBuild = c }
-    c
+  private var cachedBuild: Dicts = null
+  def build(): Dicts = synchronized {
+    if (cachedBuild == null) cachedBuild = buildFresh()
+    cachedBuild
   }
 
   private def buildFresh(): Dicts = Dicts(

@@ -6532,14 +6532,17 @@ fsd_turns AS (
     * times per session. DataFrames resolve their source eagerly at
     * creation, so a cached plan stays bound to ITS sfDir even after the
     * `events` temp view is re-pointed. No data is cached — every action
-    * still evaluates the generator from the parquet input. */
+    * still evaluates the generator from the parquet input. Every call,
+    * cache hit or not, points `events` at `sfDir`, as the side inputs do.
+    * A hit returns the SAME DataFrame (same exprIds): a caller that joins
+    * two inputs must alias them. */
   @volatile private var dfCache: List[(SparkSession, String, DataFrame)] = Nil
   def df(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     dfCache = dfCache.filter(e => !e._1.sparkContext.isStopped)
+    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
     dfCache.find(e => (e._1 eq spark) && e._2 == sfDir) match {
       case Some((_, _, cached)) => cached
       case None =>
-        spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
         val out = spark.sql(s"WITH $cte SELECT * FROM turns")
         dfCache = (spark, sfDir, out) :: dfCache
         out

@@ -5,21 +5,24 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.enrich.Dicts
 import graft.model.{ParsedTurn, Turn}
+import org.apache.spark.sql.graft.GraftParse
 
 /** Spark wiring of the engine (SURVEY.md §3.1 "Spark equivalent of the whole
-  * of A"): read → ONE fused mapPartitions (parse+enrich with broadcasts) →
-  * per-sink filtered writes → grouped counts. The record-level stages are
-  * narrow (no shuffle); the only shuffles in the whole job are the final
-  * aggregations — by design, that plan shape survives a 100× scale-up
-  * unchanged (parallelism is purely input-partition-bound).
+  * of A"): read → conv_id exchange → ONE fused kernel node (GraftParse:
+  * parse+enrich with broadcasts) → per-sink filtered writes → grouped
+  * counts. The record-level stages are narrow; the only shuffles are the
+  * conv_id exchange and the final aggregations — by design, that plan
+  * shape survives a 100× scale-up unchanged.
   */
 object Pipeline {
 
   @volatile private var cachedBc: Option[(SparkSession, Broadcast[Dicts])] = None
 
   /** Broadcast the dictionaries once per session (translate/geoip/dns/misp
-    * tables; SURVEY.md §2.4). */
+    * tables; SURVEY.md §2.4), and register the GraftParse planner and
+    * pruning rule on the session. */
   def dictsBroadcast(spark: SparkSession): Broadcast[Dicts] = synchronized {
+    GraftParse.register(spark)
     cachedBc match {
       case Some((s, bc)) if s eq spark => bc
       case _ =>
@@ -46,72 +49,40 @@ object Pipeline {
     }
   }
 
-  /** Input DataFrame with the 6 input_hint columns → parsed (the production
-    * path: InternalRow-level kernel, no encoder boundary — see RowKernel).
-    *
-    * EXPLICIT partitioning (north rule): hash-repartition on conv_id to
-    * exactly the executor parallelism before the fused kernel. Without this,
-    * AQE right-sizes the upstream shuffle by BYTES and coalesces a small
-    * input to ~1 partition — correct for scans, wrong for a compute-bound
-    * parse stage (measured: 8→32 cores gained only 1.03× before the fix).
-    * At 100 TB the same line keeps hot conversations co-located and the
-    * kernel parallelism pinned to the cluster width. */
+  /** Input DataFrame with the 6 input_hint columns → parsed: the
+    * [[org.apache.spark.sql.graft.GraftParse]] kernel node at full width.
+    * The optimizer narrows it to the columns the query reads and picks the
+    * counts-only, masked or full kernel from them, so
+    * `sinkCounts(parseDf(df))` runs the counts-only kernel. */
   def parseDf(spark: SparkSession, df: DataFrame): DataFrame =
     parseRows(spark, df, emitDropped = false)
 
-  /** Row-level kernel with optional dropped-turn marker rows (Sink's
-    * single-pass conservation accounting). */
   /** Pre-kernel input prep shared by every row-kernel entry point: project
     * to the 6 input_hint columns (drives parquet column pruning) and
-    * hash-repartition on conv_id to the executor parallelism. Exposed
-    * package-wide so PlanAuditSpec can assert the executed plan shape —
-    * the kernel's RDD bridge hides this stage from the outer plan. */
+    * hash-repartition on conv_id to the executor parallelism.
+    *
+    * EXPLICIT partitioning (north rule): without it, AQE right-sizes the
+    * upstream shuffle by BYTES and coalesces a small input to ~1 partition
+    * — correct for scans, wrong for a compute-bound parse stage (measured:
+    * 8→32 cores gained only 1.03× before the fix). At 100 TB the same line
+    * keeps hot conversations co-located and the kernel parallelism pinned
+    * to the cluster width. */
   private[graft] def parseInput(spark: SparkSession, df: DataFrame): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
     df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
       .repartition(p, col("conv_id"))
   }
 
-  def parseRows(spark: SparkSession, df: DataFrame, emitDropped: Boolean): DataFrame = {
-    import org.apache.spark.sql.graft.InternalBridge
-    InternalBridge.toDf(spark, parseRowsRdd(spark, df, emitDropped), RowKernel.schema)
-  }
+  /** Row-level kernel with optional dropped-turn marker rows (Sink's
+    * single-pass conservation accounting). */
+  def parseRows(spark: SparkSession, df: DataFrame, emitDropped: Boolean): DataFrame =
+    GraftParse.dataFrame(parseInput(spark, df), emitDropped, dictsBroadcast(spark))
 
-  /** Kernel output as the raw InternalRow RDD — same lineage as
-    * [[parseRows]] without the DataFrame wrapper, so a caller may persist
-    * at the RDD layer (SparkEntry.parsed: building Spark's columnar
-    * InMemoryRelation over the 332-column kernel output pays per-column
-    * compression builders; the kernel's rows are fresh self-contained
-    * GenericInternalRows — RowKernel's row-object contract — so caching
-    * them as-is is safe and costs only the kernel pass itself). */
-  private[graft] def parseRowsRdd(spark: SparkSession, df: DataFrame, emitDropped: Boolean):
-      org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.graft.InternalBridge
-    val in = parseInput(spark, df)
-    val bc = dictsBroadcast(spark)
-    InternalBridge.toRdd(in)
-      .mapPartitions(it => RowKernel.process(it, bc.value, emitDropped))
-  }
-
-  /** Lazy flatten (ROADMAP lever; round-3 verdict's one `weak`): parse +
-    * enrich as usual, but materialize ONLY the requested ParsedTurn columns
-    * (plus the 13 context columns). Catalyst cannot prune columns through
-    * the opaque kernel, so the kernel prunes itself — the ~290-column
-    * flatten's per-field map walks and UTF8String copies are the wide
-    * path's DRAM ceiling on a single box. The trailing select narrows the
-    * rows immediately, so every downstream exchange/operator carries only
-    * the requested columns. Equality with `parseDf(...).select(cols)` is
-    * oracle-proven (q05p shares q05's SQL) and spec-proven
-    * (LazyFlattenSpec, full-mask and subset-mask). */
-  def parseDfSelect(spark: SparkSession, df: DataFrame, cols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.graft.InternalBridge
-    val in = parseInput(spark, df)
-    val bc = dictsBroadcast(spark)
-    val mask = RowKernel.maskFor(cols)
-    val rdd = InternalBridge.toRdd(in)
-      .mapPartitions(it => RowKernel.processProjected(it, bc.value, emitDropped = false, mask))
-    InternalBridge.toDf(spark, rdd, RowKernel.schema).select(cols.map(col): _*)
-  }
+  /** `parseDf(df).select(cols)`: the kernel flattens only `cols` (the
+    * masked mode), or skips enrichment and flatten when `cols` are all
+    * counts columns. */
+  def parseDfSelect(spark: SparkSession, df: DataFrame, cols: Seq[String]): DataFrame =
+    parseDf(spark, df).select(cols.map(col): _*)
 
   /** Typed variant of parseDf (Dataset encoder path) — kept for the
     * streaming pipeline and as the parity reference for RowKernel. */
@@ -129,19 +100,10 @@ object Pipeline {
   def typedToFlatDf(ds: Dataset[ParsedTurn]): DataFrame =
     ds.toDF().select(col("*"), col("ext.*")).drop("ext")
 
-  /** Counts-only narrow path straight from the input table: parse decides
-    * cardinality, the enrichment chain and the ~250-column flatten are
-    * skipped entirely (they cannot affect the grouped columns — see
-    * Engine.parseCardinality). q05f's oracle is the SAME SQL as q05's,
-    * proving equality with the full-width path. */
-  def sinkCountsFromInput(spark: SparkSession, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.InternalBridge
-    val in = parseInput(spark, df)
-    val bc = dictsBroadcast(spark)
-    val rdd = InternalBridge.toRdd(in)
-      .mapPartitions(it => RowKernel.processCounts(it, bc.value))
-    sinkCounts(InternalBridge.toDf(spark, rdd, RowKernel.countSchema))
-  }
+  /** `sinkCounts(parseDf(df))`, which plans the counts-only kernel (see
+    * Engine.parseCardinality). q05f's oracle is the SAME SQL as q05's. */
+  def sinkCountsFromInput(spark: SparkSession, df: DataFrame): DataFrame =
+    sinkCounts(parseDf(spark, df))
 
   /** North-rule aggregate: per-sink grouped counts by
     * (technology, role, tool, event-time bucket) — Catalyst-native

@@ -69,25 +69,12 @@ object RowKernel {
     }
   }
 
-  /** One partition of input rows (conv_id, turn_idx, role, text, tool, ts)
-    * → 0..N output rows each. `emitDropped` additionally materializes one
-    * marker row (parse_rule='dropped', empty route_outputs) per `drop {}`-ed
-    * input turn so a single pass can account for conservation metrics —
-    * used by Sink; the query path filters at the source by not asking. */
-  def process(it: Iterator[InternalRow], dicts: Dicts,
-              emitDropped: Boolean): Iterator[InternalRow] =
-    processProjected(it, dicts, emitDropped, null)
-
-  /** Lazy flatten (ROADMAP lever): `mask(ordinal)` selects which ParsedTurn
-    * columns to materialize — unselected Event-derived fields stay null and
-    * skip their map walk + UTF8String conversion entirely, which is the
-    * wide path's DRAM traffic. The 13 context columns (conv/turn/.../route)
-    * are always populated (they cost nothing and the sinks key on them).
-    * Output schema is unchanged; callers project on top, so Catalyst
-    * immediately narrows the rows (see Pipeline.parseDfSelect). `null` mask
-    * = full flatten (identical to round-3 behavior). */
-  def processProjected(it: Iterator[InternalRow], dicts: Dicts,
-                       emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] = {
+  /** The preamble every kernel mode shares: per partition, a technology
+    * cache; per input row (conv_id, turn_idx, role, text, tool, ts), its
+    * compiled technology, `ts` in micros and millis, and the decoded text.
+    * `f` returns the turn's output rows. */
+  private def eachTurn(it: Iterator[InternalRow])(
+      f: (InternalRow, Tech, Long, Long, String) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
     val techs = new java.util.HashMap[UTF8String, Tech]()
     it.flatMap { row =>
       val toolU8 = if (row.isNullAt(4)) UTF8String.EMPTY_UTF8 else row.getUTF8String(4)
@@ -99,8 +86,26 @@ object RowKernel {
         techs.put(key, tech)
       }
       val tsMicros = row.getLong(5)
-      val tsMillis = Math.floorDiv(tsMicros, 1000L)
       val text = if (row.isNullAt(3)) null else row.getUTF8String(3).toString
+      f(row, tech, tsMicros, Math.floorDiv(tsMicros, 1000L), text)
+    }
+  }
+
+  /** One partition of input rows → 0..N output rows each. `emitDropped`
+    * additionally materializes one marker row (parse_rule='dropped', empty
+    * route_outputs) per `drop {}`-ed input turn so a single pass can
+    * account for conservation metrics — used by Sink; the query path
+    * filters at the source by not asking.
+    *
+    * Lazy flatten: `mask(ordinal)` selects which columns to materialize —
+    * unselected Event-derived fields stay null and skip their map walk +
+    * UTF8String conversion entirely, which is the wide path's DRAM traffic.
+    * The 13 context columns (conv/turn/.../route) are always populated.
+    * Output schema is unchanged (GraftParseExec projects the selected
+    * columns); `null` mask = full flatten. */
+  def process(it: Iterator[InternalRow], dicts: Dicts,
+              emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] =
+    eachTurn(it) { (row, tech, tsMicros, tsMillis, text) =>
       val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
       if (results == null && !emitDropped) Nil
       else {
@@ -120,7 +125,6 @@ object RowKernel {
         }
       }
     }
-  }
 
   /** Count of always-populated context columns at the head of the flatten
     * put order (conv_id..route_outputs). Shared by maskFor and asserted at
@@ -184,26 +188,13 @@ object RowKernel {
     *
     * ROW-OBJECT CAVEAT (exception to this file's header contract): the
     * emitted rows share ONE mutable GenericInternalRow. This is only safe
-    * because the sole consumer (Pipeline.sinkCountsFromInput) feeds a hash
-    * aggregate that consumes each row before next() — a cache/sort/collect
-    * over this iterator would silently see the last row N times. Kept
-    * package-private so no caller outside the pipeline can buffer it. */
-  private[pipeline] def processCounts(it: Iterator[InternalRow], dicts: Dicts): Iterator[InternalRow] = {
-    val techs = new java.util.HashMap[UTF8String, Tech]()
+    * because the sole consumer, GraftParseExec, projects each row to an
+    * UnsafeRow before pulling the next — a cache/sort/collect over this
+    * iterator would silently see the last row N times. */
+  def processCounts(it: Iterator[InternalRow], dicts: Dicts): Iterator[InternalRow] = {
     val out = new Array[Any](5)
     val row = new GenericInternalRow(out)
-    it.flatMap { r =>
-      val toolU8 = if (r.isNullAt(4)) UTF8String.EMPTY_UTF8 else r.getUTF8String(4)
-      var tech = techs.get(toolU8)
-      if (tech == null) {
-        val key = toolU8.clone()
-        val (cfg, program) = Engine.techOf(key.toString)
-        tech = new Tech(key, cfg, program)
-        techs.put(key, tech)
-      }
-      val tsMicros = r.getLong(5)
-      val tsMillis = Math.floorDiv(tsMicros, 1000L)
-      val text = if (r.isNullAt(3)) null else r.getUTF8String(3).toString
+    eachTurn(it) { (r, tech, tsMicros, tsMillis, text) =>
       val n = Engine.parseCardinality(tech.cfg, tech.program, text, tsMillis, dicts)
       if (n == 0) Nil
       else {
@@ -212,7 +203,7 @@ object RowKernel {
         out(2) = tech.toolU8
         out(3) = tsMicros
         out(4) = tech.routeOutputs
-        Seq.fill(n)(row: InternalRow)
+        Iterator.fill(n)(row)
       }
     }
   }

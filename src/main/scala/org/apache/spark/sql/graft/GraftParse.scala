@@ -1,0 +1,140 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.storage.StorageLevel
+import graft.enrich.Dicts
+import graft.pipeline.RowKernel
+
+/** The fused parse→enrich kernel as ONE logical plan node: input rows
+  * (conv_id, turn_idx, role, text, tool, ts) → 0..N rows of `output`, a
+  * subset of [[RowKernel.schema]]. Because the kernel sits in the plan
+  * instead of behind an RDD, Catalyst sees the whole query: [[PruneColumns]]
+  * narrows `output` to what the plan above reads, and the mode follows from
+  * what is left (see [[GraftParse.modeOf]]). `emitDropped` adds one marker
+  * row per `drop {}`-ed turn (Sink's single-pass conservation accounting).
+  *
+  * `output` keeps the attributes (and exprIds) it was built with; pruning
+  * only drops entries, so references above the node stay bound. */
+case class GraftParse(child: LogicalPlan, output: Seq[Attribute], emitDropped: Boolean,
+                      dicts: Broadcast[Dicts]) extends UnaryNode {
+  // the kernel produces its output and reads every input column
+  override def producedAttributes: AttributeSet = outputSet
+  override def references: AttributeSet = child.outputSet
+  def mode: String = GraftParse.modeOf(output, emitDropped)
+  override protected def stringArgs: Iterator[Any] = Iterator(mode, output)
+  override protected def withNewChildInternal(newChild: LogicalPlan): GraftParse =
+    copy(child = newChild)
+}
+
+/** Runs the row kernel in the node's mode over each child partition and
+  * emits UnsafeRows of exactly `output`. Every kernel row is projected
+  * before the kernel is pulled again (the counts kernel reuses one mutable
+  * row); the projection in turn reuses its buffer, so a consumer that keeps
+  * rows across `next()` must copy them, as with any SparkPlan. */
+case class GraftParseExec(output: Seq[Attribute], emitDropped: Boolean,
+                          dicts: Broadcast[Dicts], child: SparkPlan) extends UnaryExecNode {
+  override def producedAttributes: AttributeSet = outputSet
+  override def references: AttributeSet = child.outputSet
+  def mode: String = GraftParse.modeOf(output, emitDropped)
+  override protected def stringArgs: Iterator[Any] = Iterator(mode, output)
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val m = mode
+    val layout = if (m == GraftParse.Counts) RowKernel.countSchema else RowKernel.schema
+    val mask = if (m == GraftParse.Masked) RowKernel.maskFor(output.map(_.name)) else null
+    // nullable = true: a masked-out or marker field may be null whatever the encoder declared
+    val fields = output.map(a => BoundReference(layout.fieldIndex(a.name), a.dataType, nullable = true))
+    val (bc, withDropped, numOut) = (dicts, emitDropped, longMetric("numOutputRows"))
+    child.execute().mapPartitionsInternal { it =>
+      val proj = UnsafeProjection.create(fields)
+      val rows =
+        if (m == GraftParse.Counts) RowKernel.processCounts(it, bc.value)
+        else RowKernel.process(it, bc.value, withDropped, mask)
+      rows.map { r => numOut += 1; proj(r) }
+    }
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan): GraftParseExec =
+    copy(child = newChild)
+}
+
+object GraftParse {
+  /** Counts: parse for cardinality only, no enrichment, no flatten
+    * (Engine.parseCardinality) — valid when only the columns taken from the
+    * input row and the static technology config are read. Masked: the full
+    * kernel, flattening only the output's columns. Full: every column. */
+  val Counts = "counts"
+  val Masked = "masked"
+  val Full = "full"
+
+  // lazy: register() runs at session set-up and must not initialize RowKernel
+  private lazy val countCols: Set[String] = RowKernel.countSchema.fieldNames.toSet
+
+  def modeOf(output: Seq[Attribute], emitDropped: Boolean): String =
+    if (!emitDropped && output.forall(a => countCols.contains(a.name))) Counts
+    else if (output.size == RowKernel.schema.length) Full
+    else Masked
+
+  /** The kernel over `input` (the six input columns), at full width until
+    * the optimizer prunes it. */
+  def dataFrame(input: DataFrame, emitDropped: Boolean, dicts: Broadcast[Dicts]): DataFrame = {
+    val ds = input.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      GraftParse(ds.logicalPlan, DataTypeUtils.toAttributes(RowKernel.schema), emitDropped, dicts))
+  }
+
+  /** `df`'s executed rows copied out of the exec's reused buffer and
+    * persisted at the RDD layer, as a DataFrame with `df`'s schema. Each
+    * cached row is one UnsafeRow (one byte array), and a read is a plain
+    * field projection — no columnar cache builders over 332 columns. */
+  def persistedRows(df: DataFrame, level: StorageLevel): DataFrame = {
+    val rdd = df.queryExecution.toRdd.map(_.copy()).persist(level)
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rdd, df.schema)
+  }
+
+  /** Narrow the node's output to the columns the Project above it reads.
+    * ColumnPruning puts such a Project under Generate/Aggregate, so this
+    * also covers explode and count() (zero columns). It then removes the
+    * Project between a Filter and the node, hence the second case. */
+  object PruneColumns extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+      case p @ Project(_, g: GraftParse) if !g.outputSet.subsetOf(p.references) =>
+        p.copy(child = narrow(g, p.references))
+      case p @ Project(_, f @ Filter(_, g: GraftParse))
+          if !g.outputSet.subsetOf(p.references ++ f.references) =>
+        p.copy(child = f.copy(child = narrow(g, p.references ++ f.references)))
+    }
+    private def narrow(g: GraftParse, used: AttributeSet): GraftParse =
+      g.copy(output = g.output.filter(used.contains))
+  }
+
+  object Planner extends SparkStrategy {
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case GraftParse(child, output, emitDropped, dicts) =>
+        GraftParseExec(output, emitDropped, dicts, planLater(child)) :: Nil
+      case _ => Nil
+    }
+  }
+
+  /** Add the planner strategy and the pruning rule to `spark`, once. */
+  def register(spark: SparkSession): Unit = {
+    val x = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
+    x.synchronized {
+      if (!x.extraStrategies.contains(Planner)) x.extraStrategies = Planner +: x.extraStrategies
+      if (!x.extraOptimizations.contains(PruneColumns))
+        x.extraOptimizations = x.extraOptimizations :+ PruneColumns
+    }
+  }
+}

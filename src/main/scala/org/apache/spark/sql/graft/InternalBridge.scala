@@ -1,47 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
-
-/** Minimal bridge into the `private[sql]` InternalRow plumbing of the classic
-  * SparkSession/Dataset (hence this file's package). Used by the fused
-  * parse→enrich kernel to run at the Tungsten row level: consuming
-  * `queryExecution.toRdd` and producing a DataFrame straight from
-  * `RDD[InternalRow]` skips the Dataset encoder boundary entirely — no
-  * case-class materialization, no Option boxing, no double String⇄UTF8String
-  * conversion per field. This is the documented Spark-native extension point
-  * for custom physical operators (LogicalRDD), not a fork of Spark internals.
-  */
+/** Minimal bridge into the `private[sql]` Column ⇄ Expression plumbing of
+  * the classic session (hence this file's package), for custom Catalyst
+  * expressions such as CosineSim. */
 object InternalBridge {
 
-  /** The physical rows of a DataFrame (post-optimization plan output).
-    * NOTE: Spark's iterator contract allows row-object reuse — consumers
-    * must copy anything they retain across `next()` calls. */
-  def toRdd(df: DataFrame): RDD[InternalRow] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
-
-  /** Wrap an `RDD[InternalRow]` as a DataFrame with the given schema
-    * (LogicalRDD under the hood — Catalyst optimizes everything downstream
-    * of it as usual). */
-  def toDf(spark: SparkSession, rdd: RDD[InternalRow], schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
-
-  /** Project rows to self-contained UnsafeRows (one flat byte[] each) —
-    * the cache-friendly layout: SizeEstimator's unroll sampling walks a
-    * 2-object graph instead of ~330 boxed fields, field reads are offset
-    * arithmetic, and GC sees one array per row. The projection reuses its
-    * buffer, hence the per-row copy(). */
-  def toUnsafe(rdd: RDD[InternalRow], schema: StructType): RDD[InternalRow] =
-    rdd.mapPartitions { it =>
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(schema.fields.map(_.dataType))
-      it.map(r => proj(r).copy())
-    }
-
-  /** Column ⇄ Catalyst Expression bridges for custom expressions. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 

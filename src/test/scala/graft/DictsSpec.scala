@@ -35,6 +35,8 @@ class DictsSpec extends AnyFunSuite {
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
     oos.writeObject(d); oos.close()
+    // the wire format is the proxy's, not default serialization of Dicts
+    assert(new String(bos.toByteArray, "ISO-8859-1").contains("DictsSerProxy"))
     val d2 = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(bos.toByteArray)).readObject().asInstanceOf[Dicts]
     assert(d2 ne d) // genuinely went through the wire format

@@ -1,16 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.gen.Transcripts
+import org.apache.spark.sql.graft.GraftParse
+import org.apache.spark.storage.StorageLevel
 import graft.pipeline.{Pipeline, RowKernel}
 
-/** The lazy flatten (masked kernel, Pipeline.parseDfSelect) must be
-  * column-for-column identical to the full flatten followed by a Catalyst
-  * projection — on a narrow column set, a wide one including arrays and
-  * booleans, and the degenerate full mask. */
+/** Every mode the optimizer picks for the GraftParse node (counts, masked,
+  * full) must return exactly the rows of the same columns read from a
+  * persisted `parseDf(…)`. The cache holds the unpruned, full-width kernel
+  * output, persisted at the RDD layer (as SparkEntry.parsed does): a
+  * DataFrame cache would also answer the fresh `parseDf` on the other side,
+  * whose plan has the same result. Corpora: the main input
+  * (vpcflow NODATA drops, azure records[] splits), iis (directive lines
+  * dropped) and okta (a JSON array fans out to one row per element). */
 class LazyFlattenSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -23,37 +29,90 @@ class LazyFlattenSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
   override def afterAll(): Unit = spark.stop()
 
-  private def assertSameCols(cols: Seq[String], what: String): Unit = {
-    val input = Transcripts.input(spark, sf)
-    val lazyDf = Pipeline.parseDfSelect(spark, input, cols)
-    val fullDf = Pipeline.parseDf(spark, input).select(cols.map(col): _*)
-    assert(lazyDf.schema == fullDf.schema, s"$what schema differs")
-    assert(lazyDf.exceptAll(fullDf).count() == 0 && fullDf.exceptAll(lazyDf).count() == 0,
-      s"$what rows differ between masked and full flatten")
+  private val aggCols = Seq("route_outputs", "technology", "role", "tool", "ts")
+
+  /** (name, input, persisted full-width parseDf of it). */
+  private lazy val corpora: Seq[(String, DataFrame, DataFrame)] = {
+    spark.sparkContext.setLogLevel("ERROR")
+    Seq("main" -> Transcripts.input _, "iis" -> Transcripts.iisInput _,
+      "okta" -> Transcripts.oktaInput _).map { case (name, in) =>
+      val input = in(spark, sf)
+      val full = GraftParse.persistedRows(Pipeline.parseDf(spark, input), StorageLevel.MEMORY_ONLY)
+      full.count()
+      (name, input, full)
+    }
   }
 
-  test("masked kernel == full kernel + projection (aggregate column set)") {
-    spark.sparkContext.setLogLevel("ERROR")
-    assertSameCols(Seq("route_outputs", "technology", "role", "tool", "ts"), "agg-cols")
+  /** The GraftParse modes in `df`'s executed plan (run it first). */
+  private def modes(df: DataFrame): Seq[String] =
+    "GraftParse (counts|masked|full)".r
+      .findAllMatchIn(df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
+      .map(_.group(1)).toSeq
+
+  private def assertSameRows(pruned: DataFrame, cached: DataFrame, mode: String, what: String): Unit = {
+    assert(pruned.schema == cached.schema, s"$what schema differs")
+    assert(pruned.exceptAll(cached).count() == 0 && cached.exceptAll(pruned).count() == 0,
+      s"$what rows differ between the $mode kernel and the persisted full kernel")
+    pruned.collect()
+    assert(modes(pruned) == Seq(mode), s"$what planned ${modes(pruned)}, expected $mode")
+  }
+
+  private def assertSameCols(cols: Seq[String], mode: String): Unit =
+    corpora.foreach { case (name, input, full) =>
+      assertSameRows(Pipeline.parseDfSelect(spark, input, cols), full.select(cols.map(col): _*),
+        mode, s"$name/${cols.size} cols")
+    }
+
+  test("the corpora exercise drop{} and records[] fan-out") {
+    val sizes = corpora.map { case (name, input, full) => name -> (input.count(), full.count()) }.toMap
+    assert(sizes("iis")._2 < sizes("iis")._1, s"iis drops no turn: ${sizes("iis")}")
+    assert(sizes("okta")._2 > sizes("okta")._1, s"okta fans out no turn: ${sizes("okta")}")
+  }
+
+  test("counts kernel == full kernel + projection (aggregate column set)") {
+    assertSameCols(aggCols, "counts")
   }
 
   test("masked kernel == full kernel + projection (mixed wide set)") {
     assertSameCols(Seq("conv_id", "turn_idx", "sub_idx", "parse_ok", "parse_rule",
       "event_module", "event_dataset", "source_ip", "source_ip_private",
       "destination_port", "event_created_ms", "related_ip", "tags",
-      "user_agent_original", "event_hash"), "mixed-cols")
+      "user_agent_original", "event_hash"), "masked")
   }
 
   test("full mask == unmasked kernel (degenerate case)") {
-    val all = RowKernel.schema.fieldNames.toSeq
-    assertSameCols(all, "full-mask")
+    assertSameCols(RowKernel.schema.fieldNames.toSeq, "full")
   }
 
   test("sinkCounts over the lazy flatten equals the full-path counts") {
-    val input = Transcripts.input(spark, sf)
-    val full = Pipeline.sinkCounts(Pipeline.parseDf(spark, input))
-    val lzy = Pipeline.sinkCounts(Pipeline.parseDfSelect(spark, input,
-      Seq("route_outputs", "technology", "role", "tool", "ts")))
-    assert(lzy.exceptAll(full).count() == 0 && full.exceptAll(lzy).count() == 0)
+    corpora.foreach { case (name, input, full) =>
+      assertSameRows(Pipeline.sinkCounts(Pipeline.parseDf(spark, input)), Pipeline.sinkCounts(full),
+        "counts", s"$name/sinkCounts")
+    }
+  }
+
+  test("count() prunes the kernel to zero columns and counts every output row") {
+    corpora.foreach { case (name, input, full) =>
+      val parsed = Pipeline.parseDf(spark, input)
+      assert(parsed.count() == full.count(), s"$name: count() differs")
+      val counted = parsed.groupBy().count() // the plan count() runs
+      counted.collect()
+      assert(modes(counted) == Seq("counts"), s"$name: count() planned ${modes(counted)}")
+    }
+  }
+
+  test("counts kernel rows stay distinct through collect() and cache()") {
+    corpora.foreach { case (name, input, full) =>
+      val want = full.select("technology", "role").collect().map(_.toString).sorted.toSeq
+      val pruned = Pipeline.parseDf(spark, input).select("technology", "role")
+      assert(pruned.collect().map(_.toString).sorted.toSeq == want, s"$name: collect() differs")
+      assert(modes(pruned) == Seq("counts"), s"$name: planned ${modes(pruned)}")
+      val cached = Pipeline.parseDf(spark, input).select("technology", "role").cache()
+      try {
+        cached.count()
+        assert(cached.collect().map(_.toString).sorted.toSeq == want, s"$name: cache() differs")
+        assert(modes(cached) == Seq("counts"), s"$name: cached ${modes(cached)}")
+      } finally cached.unpersist()
+    }
   }
 }

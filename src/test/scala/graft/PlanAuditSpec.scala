@@ -9,9 +9,9 @@ import graft.pipeline.Pipeline
 
 /** Physical-plan audits: the shapes the 100-TB design depends on must hold
   * in the executed plan, not just in intent (SURVEY §4 / VERDICT plan
-  * audits). The kernel's RDD bridge hides the pre-kernel stage from the
-  * outer plan, so the input prep is audited via Pipeline.parseInput (the
-  * exact DataFrame every kernel entry point consumes). */
+  * audits). The kernel is the GraftParse node, so the executed plan shows
+  * the whole query: input prep, the node and the mode the optimizer picked
+  * for it. */
 class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -51,24 +51,60 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!read.contains("extra_wide_column"), s"column pruning failed: $read")
   }
 
-  test("sink counts add exactly ONE aggregation exchange over the kernel") {
+  /** The final (post-AQE) section of an executed plan's tree string. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+
+  /** The modes of every GraftParse node in a plan string, top-down. */
+  private def modes(plan: String): Seq[String] =
+    "GraftParse (counts|masked|full)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
+
+  test("sink counts: conv_id exchange below GraftParse, ONE agg exchange above") {
     val df = Pipeline.sinkCounts(Pipeline.parseDf(spark, spark.read.parquet(inputPath)))
     df.collect()
-    // AQE's toString renders the initial plan below the final one — audit
-    // only the final plan section
-    val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    val exchanges = "Exchange ".r.findAllIn(plan).size
-    assert(exchanges == 1, s"one agg shuffle expected over the kernel scan, got $exchanges:\n${plan.take(1200)}")
-    assert(plan.contains("partial_count"), plan.take(1200)) // map-side combine before the shuffle
+    val plan = finalPlan(df)
+    val lines = plan.split("\n").toSeq
+    def lineOf(s: String) = lines.indexWhere(_.contains(s))
+    val exchanges = lines.zipWithIndex.filter(_._1.contains("Exchange "))
+    assert(exchanges.size == 2, s"expected the conv_id and the aggregate exchange:\n$plan")
+    val (aggExchange, inputExchange) = (exchanges(0), exchanges(1))
+    assert(inputExchange._1.contains("hashpartitioning(conv_id"), plan)
+    val kernel = lineOf("GraftParse ")
+    val partial = lineOf("partial_count")
+    assert(aggExchange._2 < partial && partial < kernel && kernel < inputExchange._2,
+      s"expected agg exchange > partial_count > GraftParse > conv_id exchange:\n$plan")
+    assert(modes(plan) == Seq("counts"), s"sinkCounts(parseDf) must run the counts-only kernel:\n$plan")
   }
 
-  // ---- ml family (round-5 verdict item 5) --------------------------------
+  test("GraftParse runs the masked kernel under a 3-column enriched select") {
+    val df = Pipeline.parseDf(spark, spark.read.parquet(inputPath))
+      .select("source_ip", "event_module", "source_ip_private")
+    df.collect()
+    val plan = finalPlan(df)
+    assert(modes(plan) == Seq("masked"), plan)
+    val node = plan.split("\n").find(_.contains("GraftParse ")).get
+    assert(Seq("source_ip#", "event_module#", "source_ip_private#").forall(node.contains) &&
+      !node.contains("technology#"), s"output not pruned to the select: $node")
+  }
 
-  /** Round-5's d02 regression class: constructing the pairs DataFrame ran an
-    * eager split-count job and the plan recomputed the minhash lineage three
-    * times. Pin both properties: construction runs ZERO Spark jobs, and the
-    * executed plan scans documents.parquet exactly once (the self-join's
-    * second side must be a ReusedExchange). */
+  test("GraftParse runs the full kernel under Sink.writeSnapshot's emitDropped parse") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_planaudit_sink").toString
+    spark.listenerManager.register(listener)
+    try {
+      graft.pipeline.Sink.writeSnapshot(spark, spark.read.parquet(inputPath), root, "s1", numChunks = 2)
+      val deadline = System.nanoTime() + 10000000000L
+      while (plans.size < 3 && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val seen = plans.toArray(Array.empty[String]).toSeq.flatMap(modes)
+    assert(seen.nonEmpty && seen.forall(_ == "full"), s"GraftParse modes in the sink's plans: $seen")
+  }
+
   test("parsed() RDD-level cache returns exactly the rows of the direct kernel path") {
     spark.sparkContext.setLogLevel("ERROR")
     // round-6: SparkEntry.parsed persists the kernel output as UnsafeRows at
@@ -83,6 +119,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c.sameElements(d))
   }
 
+  // ---- ml family (round-5 verdict item 5) --------------------------------
+
+  /** Round-5's d02 regression class: constructing the pairs DataFrame ran an
+    * eager split-count job and the plan recomputed the minhash lineage three
+    * times. Pin both properties: construction runs ZERO Spark jobs, and the
+    * executed plan scans documents.parquet exactly once (the self-join's
+    * second side must be a ReusedExchange). */
   test("d02: constructing minhashPairs runs no Spark job") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
