@@ -238,25 +238,23 @@ object Bench {
     // Kernel-only thread-scaling (no Spark layer): cache-local and far less
     // sensitive to co-tenant memory pressure — the noise-robust signal that
     // the ENGINE scales, reported alongside the environment-dependent full
-    // path. Uses a driver-side sample (bench-only; not a data path).
-    val sampleTurns: Array[graft.model.Turn] =
-      spark.read.parquet(inputPath)
-        .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .limit(192000)
-        .as[graft.model.Turn](org.apache.spark.sql.Encoders.product[graft.model.Turn])
-        .collect()
+    // path. Uses a locally collected sample (bench-only; not a data path) of
+    // the input rows as the kernel node reads them (copied UnsafeRows), run
+    // through the production row kernel at full width.
+    val sample = spark.read.parquet(inputPath)
+      .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val sampleRows: Array[org.apache.spark.sql.catalyst.InternalRow] =
+      sample.limit(192000).queryExecution.toRdd.map(_.copy()).collect()
     def kernelRun(threads: Int): Double = {
       val dicts = graft.enrich.Dicts.build()
-      val per = sampleTurns.length / threads
+      val per = sampleRows.length / threads
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         val ts = (0 until threads).map { t =>
           new Thread(() => {
-            var i = t * per
-            val end = i + per
-            var acc = 0L
-            while (i < end) { acc += graft.pipeline.Engine.processTurn(sampleTurns(i), dicts).size; i += 1 }
-            if (acc < 0) println("?")
+            val n = graft.pipeline.RowKernel.process(sampleRows.iterator.slice(t * per, (t + 1) * per),
+              dicts, emitDropped = false, mask = null).size
+            if (n < 0) println("?")
           })
         }
         ts.foreach(_.start()); ts.foreach(_.join())
@@ -280,7 +278,9 @@ object Bench {
     // polluting any timed Spark leg (instrumentation stays off the
     // production chain).
     val enrichSteps: Vector[(String, Double)] =
-      ProfileEnrich.stepSeconds(sampleTurns.take(48000), graft.enrich.Dicts.build())
+      ProfileEnrich.stepSeconds(
+        sample.limit(48000).as[graft.model.Turn](org.apache.spark.sql.Encoders.product[graft.model.Turn])
+          .collect(), graft.enrich.Dicts.build())
 
     // ANN quality: recall of the IVF approximate top-k vs exact brute force
     val exact = graft.ml.Similarity.bruteTopK(spark, sfDir)

@@ -6534,8 +6534,9 @@ fsd_turns AS (
     * `events` temp view is re-pointed. No data is cached — every action
     * still evaluates the generator from the parquet input. Every call,
     * cache hit or not, points `events` at `sfDir`, as the side inputs do.
-    * A hit returns the SAME DataFrame (same exprIds): a caller that joins
-    * two inputs must alias them. */
+    * A hit returns the SAME DataFrame (same exprIds), so two calls are one
+    * plan to the analyzer: a caller that joins two inputs, including a
+    * self-join of this one, must `alias` each side. */
   @volatile private var dfCache: List[(SparkSession, String, DataFrame)] = Nil
   def df(spark: SparkSession, sfDir: String): DataFrame = synchronized {
     dfCache = dfCache.filter(e => !e._1.sparkContext.isStopped)

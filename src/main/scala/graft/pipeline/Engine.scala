@@ -3,12 +3,13 @@ package graft.pipeline
 import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import graft.enrich.{Dicts, Enrich}
-import graft.model.{Event, ParsedTurn, Turn}
+import graft.model.Event
 import graft.rules.{Dropped, Parsed, ParseCtx, Registry, TechnologyConfig}
 
-/** The fused parse→enrich kernel: one Turn in, 0..N ParsedTurn out. Runs
-  * entirely inside a single mapPartitions — one serialization boundary for
-  * the whole record-level pipeline (SURVEY.md §2.7/§4). Pure function of
+/** The per-turn core of the fused parse→enrich kernel: one turn in, 0..N
+  * enriched events out, which [[RowKernel]] flattens to rows inside the
+  * GraftParse plan node — one serialization boundary for the whole
+  * record-level pipeline (SURVEY.md §2.7/§4). Pure function of
   * (turn, dicts): no wall-clock, no network, no mutable global state beyond
   * per-JVM compiled-pattern caches.
   */
@@ -71,9 +72,9 @@ object Engine {
     * are 1:1 field transforms — only parse programs drop (`drop {}`) or
     * split (records[] envelopes), and the grouped columns of the counts
     * aggregate (technology/role/tool/ts/route_outputs) all come from the
-    * input row and the static TechnologyConfig, never from the Event. The
-    * ROADMAP "counts-only narrow projection" lever: Catalyst cannot prune
-    * columns through an opaque flatMap kernel, so the kernel prunes itself. */
+    * input row and the static TechnologyConfig, never from the Event.
+    * GraftParse runs this (its counts mode) when the plan above it reads
+    * only those columns. */
   def parseCardinality(cfg: TechnologyConfig,
                        program: (Event, ParseCtx) => graft.rules.ParseOutcome,
                        text: String, tsMillis: Long, dicts: Dicts): Int = {
@@ -98,385 +99,9 @@ object Engine {
     (Registry.configs.getOrElse(tool, Registry.configs("unknown")),
       Registry.programs.getOrElse(tool, Registry.programs("unknown")))
 
-  def processTurn(t: Turn, dicts: Dicts): Seq[ParsedTurn] = {
-    val (cfg, program) = techOf(t.tool)
-    val tsMillis = t.ts.getTime
-    val out = parseAndEnrich(cfg, program, t.text, tsMillis, dicts)
-    if (out == null) Nil
-    else out.zipWithIndex.map { case ((e, ok), i) => flatten(t, e, ok, i, cfg, tsMillis) }
-  }
-
   /** Elastic-style dated index (ref: config/outputs/elastic_output.conf:6-15
     * `%{[@metadata][output]}` with `%{+xxxx.MM.dd}` date pattern) — derived
     * from event time, deterministic. */
   def routeIndex(cfg: TechnologyConfig, tsMillis: Long): String =
     cfg.indexName + "_" + dayFmt.format(Instant.ofEpochMilli(tsMillis))
-
-  private def flatten(t: Turn, ev: Event, parseOk: Boolean, subIdx: Int,
-                      cfg: TechnologyConfig, tsMillis: Long): ParsedTurn = {
-    def s(p: String): String = ev.getString(p).orNull
-    def l(p: String): java.lang.Long = ev.get(p) match {
-      case Some(x: Long) => java.lang.Long.valueOf(x)
-      case Some(x: String) => x.toLongOption.map(java.lang.Long.valueOf(_)).orNull
-      case Some(x: Double) => java.lang.Long.valueOf(x.toLong)
-      case _ => null
-    }
-    def arr(p: String): Seq[String] = ev.get(p) match {
-      case Some(a: scala.collection.mutable.ArrayBuffer[Any @unchecked]) =>
-        a.collect { case x: String => x }.toVector
-      case Some(x: String) => Vector(x)
-      case _ => Vector.empty
-    }
-    ParsedTurn(
-      conv_id = t.conv_id,
-      turn_idx = t.turn_idx,
-      sub_idx = subIdx,
-      role = t.role,
-      tool = t.tool,
-      ts = t.ts,
-      text = t.text,
-      technology = cfg.tech,
-      parse_rule = {
-        // Logstash add_field on an existing field promotes to array
-        // (linux.host stacks RULE 1 + RULE 2) — surfaced comma-joined
-        val pr = ev.get("[agent][parse_rule]") match {
-          case Some(x: String) => x
-          case Some(a: scala.collection.mutable.ArrayBuffer[Any @unchecked]) =>
-            a.collect { case x: String => x }.mkString(",")
-          case _ => null
-        }
-        if (pr == null) "not parsed" else pr
-      },
-      parse_ok = parseOk,
-      tags = ev.tags.toVector.sorted,
-      // a parse-stage `replace [@metadata][output]` overrides the generated
-      // dated index verbatim (ref: api_list_ad_users.conf:50-53 +
-      // config/outputs/elastic_output.conf:9 `index => "%{[@metadata][output]}"`)
-      route_index = ev.getString("[@metadata][output]").getOrElse(routeIndex(cfg, tsMillis)),
-      route_outputs = cfg.outputs,
-      message = s("message"),
-      log_original = s("[log][original]"),
-      event_module = s("[event][module]"),
-      event_dataset = s("[event][dataset]"),
-      event_kind = s("[event][kind]"),
-      event_category = s("[event][category]"),
-      event_type = s("[event][type]"),
-      event_action = s("[event][action]"),
-      event_outcome = s("[event][outcome]"),
-      event_provider = s("[event][provider]"),
-      event_severity = l("[event][severity]"),
-      event_created_ms = l("[event][created_ms]"),
-      event_end_ms = l("[event][end_ms]"),
-      event_hash = s("[event][hash]"),
-      source_ip = s("[source][ip]"),
-      source_address = s("[source][address]"),
-      source_port = l("[source][port]"),
-      source_mac = s("[source][mac]"),
-      source_ip_private =
-        if (ev.hasTag("sip_private")) java.lang.Boolean.TRUE
-        else if (ev.hasTag("sip_public")) java.lang.Boolean.FALSE else null,
-      source_geo_country = s("[source][geo][country_iso_code]"),
-      source_geo_city = s("[source][geo][city_name]"),
-      destination_ip = s("[destination][ip]"),
-      destination_port = l("[destination][port]"),
-      destination_ip_private =
-        if (ev.hasTag("dip_private")) java.lang.Boolean.TRUE
-        else if (ev.hasTag("dip_public")) java.lang.Boolean.FALSE else null,
-      destination_geo_country = s("[destination][geo][country_iso_code]"),
-      destination_geo_city = s("[destination][geo][city_name]"),
-      destination_domain = s("[destination][domain]"),
-      network_transport = s("[network][transport]"),
-      network_protocol = s("[network][protocol]"),
-      network_iana_number = s("[network][iana_number]"),
-      network_bytes = l("[network][bytes]"),
-      network_packets = l("[network][packets]"),
-      log_syslog_facility_code = l("[log][syslog][facility][code]"),
-      log_syslog_facility_name = s("[log][syslog][facility][name]"),
-      log_syslog_severity_code = l("[log][syslog][severity][code]"),
-      log_syslog_severity_name = s("[log][syslog][severity][name]"),
-      log_source_hostname = s("[log][source][hostname]"),
-      rule_name = s("[rule][name]"),
-      rule_description = s("[rule][description]"),
-      rule_category = s("[rule][category]"),
-      rule_version = s("[rule][version]"),
-      rule_ruleset = s("[rule][ruleset]"),
-      host_name = s("[host][name]"),
-      host_id = s("[host][id]"),
-      user_name = s("[user][name]"),
-      user_email = s("[user][email]"),
-      user_full_name = s("[user][full_name]"),
-      url_original = s("[url][original]"),
-      url_domain = s("[url][domain]"),
-      url_path = s("[url][path]"),
-      url_query = s("[url][query]"),
-      url_tld = s("[url][top_level_domain]"),
-      url_registered_domain = s("[url][registered_domain]"),
-      service_name = s("[service][name]"),
-      service_version = s("[service][version]"),
-      cloud_provider = s("[cloud][provider]"),
-      cloud_account_id = s("[cloud][account][id]"),
-      observer_vendor = s("[observer][vendor]"),
-      observer_product = s("[observer][product]"),
-      observer_egress_interface_id = s("[observer][egress][interface][id]"),
-      error_code = s("[error][code]"),
-      threat_tactic_name = s("[threat][tactic][name]"),
-      threat_tactic_reference = s("[threat][tactic][reference]"),
-      process_pid = l("[process][pid]"),
-      source_nat_ip = s("[source][nat][ip]"),
-      http_request_method = s("[http][request][method]"),
-      source_bytes = l("[source][bytes]"),
-      destination_bytes = l("[destination][bytes]"),
-      host_ip = s("[host][ip]"),
-      event_id_s = s("[event][id]"),
-      user_agent_original = s("[user_agent][original]"),
-      browser_name = s("[browser][name]"),
-      browser_version = s("[browser][version]"),
-      ua_device_name = s("[user_agent][device][name]"),
-      ua_os_family = s("[user_agent][os][family]"),
-      ua_os_platform = s("[user_agent][os][platform]"),
-      ua_os_version = s("[user_agent][os][version]"),
-      related_ip = arr("[related][ip]"),
-      related_hosts = arr("[related][hosts]"),
-      related_user = arr("[related][user]"),
-      host_hostname = s("[host][hostname]"),
-      host_domain = s("[host][domain]"),
-      event_reason = s("[event][reason]"),
-      event_recommendation = s("[event][recommendation]"),
-      event_start_ms = l("[event][start_ms]"),
-      observer_ingress_interface_name = s("[observer][ingress][interface][name]"),
-      log_level = s("[log][level]"),
-      source_domain = s("[source][domain]"),
-      ua_os_name = s("[user_agent][os][name]"),
-      user_id = s("[user][id]"),
-      user_roles = s("[user][roles]"),
-      user_type = s("[user][type]"),
-      destination_user_id = s("[destination][user][id]"),
-      destination_user_email = s("[destination][user][email]"),
-      destination_user_full_name = s("[destination][user][full_name]"),
-      transaction_id = s("[transaction][id]"),
-      cloud_region = s("[cloud][region]"),
-      file_directory = s("[file][directory]"),
-      file_name = s("[file][name]"),
-      service_type = s("[service][type]"),
-      error_message = s("[error][message]"),
-      threat_indicator_ip = s("[threat][indicator][ip]"),
-      threat_indicator_provider = s("[threat][indicator][provider]"),
-      related_mac = arr("[related][mac]"),
-      related_hash = arr("[related][hash]"),
-      destination_address = s("[destination][address]"),
-      url_full = s("[url][full]"),
-      client_ip = s("[client][ip]"),
-      source_user_email = s("[source][user][email]"),
-      rule_id = s("[rule][id]"),
-      rule_uuid = s("[rule][uuid]"),
-      rule_reference = s("[rule][reference]"),
-      event_status = s("[event][status]"),
-      threat_list_created_ms = l("[threat][list][created_ms]"),
-      group_id = s("[group][id]"),
-      event_severity_name = s("[event][severity_name]"),
-      event_modified_ms = l("[event][modified_ms]"),
-      threat_technique_id = arr("[threat][technique][id]"),
-      file_attributes = arr("[file][attributes]"),
-      file_size = l("[file][size]"),
-      rule_author = arr("[rule][author]"),
-      trace_id = s("[trace][id]"),
-      event_risk_score = l("[event][risk_score]"),
-      vulnerability_score_base = l("[vulnerability][score][base]"),
-      event_risk_score_norm = l("[event][risk_score_norm]"),
-      email_subject = s("[email][subject]"),
-      email_header_from = s("[email][header_from]"),
-      email_header_replyto = s("[email][header_replyto]"),
-      url_scheme = s("[url][scheme]"),
-      event_ingested_ms = l("[event][ingested_ms]"),
-      event_duration = s("[event][duration]"),
-      cloud_instance_name = s("[cloud][instance][name]"),
-      http_response_status_code = l("[http][response][status_code]"),
-      http_request_bytes = l("[http][request][bytes]"),
-      http_response_bytes = l("[http][response][bytes]"),
-      http_request_referrer = s("[http][request][referrer]"),
-      user_agent_name = s("[user_agent][name]"),
-      tls_cipher = s("[tls][cipher]"),
-      tls_version_protocol = s("[tls][version_protocol]"),
-      tls_next_protocol = s("[tls][next_protocol]"),
-      tls_client_server_name = s("[tls][client][server_name]"),
-      database_user_name = s("[database][user][name]"),
-      organization_id = s("[organization][id]"),
-      event_url = s("[event][url]"),
-      server_user_group_id = s("[server][user][group][id]"),
-      source_name = s("[source][name]"),
-      file_extension = s("[file][extension]"),
-      file_type = s("[file][type]"),
-      observer_name = s("[observer][name]"),
-      event_code = s("[event][code]"),
-      event_sequence = s("[event][sequence]"),
-      observer_ip = s("[observer][ip]"),
-      observer_port = l("[observer][port]"),
-      process_command_line = s("[process][command_line]"),
-      network_name = s("[network][name]"),
-      labels_tags = s("[labels][tags]"),
-      file_target_path = s("[file][target_path]"),
-      database_instance = s("[database][instance]"),
-      process_name = s("[process][name]"),
-      network_forwarded_ip = s("[network][forwarded_ip]"),
-      cloud_instance_id = s("[cloud][instance][id]"),
-      http_request_mime_type = s("[http][request][mime_type]"),
-      http_cookie_name = s("[http][cookie][name]"),
-      source_as_number = l("[source][as][number]"),
-      destination_as_number = l("[destination][as][number]"),
-      observer_ingress_interface_id = s("[observer][ingress][interface][id]"),
-      cloud_availability_zone = s("[cloud][availability_zone]"),
-      container_image_name = s("[container][image][name]"),
-      service_state = s("[service][state]"),
-      cloud_machine_type = s("[cloud][machine][type]"),
-      user_group_name = s("[user][group][name]"),
-      user_group_id = s("[user][group][id]"),
-      cloud_project_name = arr("[cloud][project][name]"),
-      source_as_organization_name = s("[source][as][organization][name]"),
-      log_syslog_priority = s("[log][syslog][priority]"),
-      threat_technique_name = s("[threat][technique][name]"),
-      network_direction = s("[network][direction]"),
-      server_address = s("[server][address]"),
-      client_port = l("[client][port]"),
-      http_version = s("[http][version]"),
-      source_user_id = s("[source][user][id]"),
-      source_user_full_name = s("[source][user][full_name]"),
-      source_user_domain = s("[source][user][domain]"),
-      destination_nat_ip = s("[destination][nat][ip]"),
-      service_ephemeral_id = s("[service][ephemeral_id]"),
-      host_os_name = s("[host][os][name]"),
-      host_os_version = s("[host][os][version]"),
-      threat_list_category = s("[threat][list][category]"),
-      threat_list_attribute_tag = s("[threat][list][attribute_tag]"),
-      agent_name = s("[agent][name]"),
-      database_name = s("[database][name]"),
-      database_table = s("[database][table]"),
-      database_field_names = s("[database][field_names]"),
-      database_user_id = s("[database][user][id]"),
-      database_user_email = s("[database][user][email]"),
-      database_user_full_name = s("[database][user][full_name]"),
-      event_original = s("[event][original]"),
-      error_id = s("[error][id]"),
-      file_path = s("[file][path]"),
-      client_user_title = s("[client][user][title]"),
-      client_user_name = s("[client][user][name]"),
-      client_domain = s("[client][domain]"),
-      host_user_title = s("[host][user][title]"),
-      host_user_roles = s("[host][user][roles]"),
-      host_disk_read_bytes = l("[host][disk][read][bytes]"),
-      package_type = s("[package][type]"),
-      threat_list_uuid = s("[threat][list][uuid]"),
-      threat_list_type = s("[threat][list][type]"),
-      threat_list_ioc = s("[threat][list][ioc]"),
-      threat_list_event_id_s = s("[threat][list][event_id]"),
-      threat_list_start_ms = l("[threat][list][start_ms]"),
-      threat_list_severity_name = s("[threat][list][severity_name]"),
-      threat_list_event_analysis = s("[threat][list][event_analysis]"),
-      threat_list_distribution = s("[threat][list][distribution]"),
-      threat_list_safe_to_enable_ids = s("[threat][list][safe_to_enable_ids]"),
-      threat_list_source_org = s("[threat][list][source_org]"),
-      threat_list_event_info = s("[threat][list][event_info]"),
-      threat_list_object_relation = s("[threat][list][object_relation]"),
-      threat_list_comment = s("[threat][list][comment]"),
-      threat_framework = s("[threat][framework]"),
-      source_user_name = s("[source][user][name]"),
-      group_name = s("[group][name]"),
-      server_ip = s("[server][ip]"),
-      server_port = l("[server][port]"),
-      source_nat_port = l("[source][nat][port]"),
-      host_serial = s("[host][serial]"),
-      server_user_id = s("[server][user][id]"),
-      tls_client_subject = s("[tls][client][subject]"),
-      source_user_roles = s("[source][user][roles]"),
-      user_domain = s("[user][domain]"),
-      host_mac = s("[host][mac]"),
-      observer_hostname = s("[observer][hostname]"),
-      observer_version = s("[observer][version]"),
-      host_os_family = s("[host][os][family]"),
-      host_model = s("[host][model]"),
-      host_manufacturer = s("[host][manufacturer]"),
-      process_executable = s("[process][executable]"),
-      organization_name = s("[organization][name]"),
-      error_type = s("[error][type]"),
-      destination_user_name = s("[destination][user][name]"),
-      ext = graft.model.ParsedTurnExt(
-      container_id = s("[container][id]"),
-      process_start_ms = l("[process][start_ms]"),
-      process_hash_md5 = s("[process][hash][md5]"),
-      process_parent_start_ms = l("[process][parent][start_ms]"),
-      process_parent_name = s("[process][parent][name]"),
-      process_parent_pid = l("[process][parent][pid]"),
-      process_parent_hash_sha1 = s("[process][parent][hash][sha1]"),
-      process_parent_hash_sha256 = s("[process][parent][hash][sha256]"),
-      file_hash_md5 = arr("[file][hash][md5]"),
-      file_hash_sha1 = arr("[file][hash][sha1]"),
-      file_hash_sha256 = arr("[file][hash][sha256]"),
-      file_hash_sha512 = arr("[file][hash][sha512]"),
-      alarm_id = s("[alarm][id]"),
-      process_pe_company = s("[process][pe][company]"),
-      process_pe_description = s("[process][pe][description]"),
-      process_pe_file_version = s("[process][pe][file_version]"),
-      process_pe_original_file_name = s("[process][pe][original_file_name]"),
-      event_reference = s("[event][reference]"),
-      host_geo_name = s("[host][geo][name]"),
-      client_as_organization_name = s("[client][as][organization][name]"),
-      host_geo_location = s("[host][geo][location]"),
-      observer_ingress_interface_alias = s("[observer][ingress][interface][alias]"),
-      process_entity_id = s("[process][entity_id]"),
-      process_parent_command_line = s("[process][parent][command_line]"),
-      process_pgid = l("[process][pgid]"),
-      file_uid = s("[file][uid]"),
-      log_origin_function = s("[log][origin][function]"),
-      log_origin_file_line = s("[log][origin][file][line]"),
-      dns_answers_class = s("[dns][answers][class]"),
-      log_logger = s("[log][logger]"),
-      process_thread_name = s("[process][thread][name]"),
-      span_id = s("[span][id]"),
-      file_mime_type = s("[file][mime_type]"),
-      container_runtime = s("[container][runtime]"),
-      container_image_tag = s("[container][image][tag]"),
-      container_name = s("[container][name]"),
-      cloud_project_id = s("[cloud][project][id]"),
-      cloud_account_name = s("[cloud][account][name]"),
-      cloud_service_name = s("[cloud][service][name]"),
-      host_os_installation_date_ms = l("[host][os][installation_date_ms]"),
-      host_logged_in_users = s("[host][logged_in_users]"),
-      host_last_logged_in_user = s("[host][last_logged_in_user]"),
-      host_timezone = s("[host][timezone]"),
-      host_os_type = s("[host][os][type]"),
-      log_source_ip = s("[log][source][ip]"),
-      process_id = s("[process][id]"),
-      observer_type = s("[observer][type]"),
-      event_description = s("[event][description]"),
-      log_offset = l("[log][offset]"),
-      log_file_path = s("[log][file][path]"),
-      ecs_version = s("[ecs][version]"),
-      client_nat_ip = s("[client][nat][ip]"),
-      host_user_name = s("[host][user][name]"),
-      user_agent_version = s("[user_agent][version]"),
-      source_user_group_name = s("[source][user][group][name]"),
-      log_origin_file_name = s("[log][origin][file][name]"),
-      client_bytes = l("[client][bytes]"),
-      dns_header_flags = s("[dns][header_flags]"),
-      process_uptime = l("[process][uptime]"),
-      client_address = s("[client][address]"),
-      client_user_roles = s("[client][user][roles]"),
-      destination_host_name = s("[destination][host][name]"),
-      server_host_name = s("[server][host][name]"),
-      host_geo_country_iso_code = s("[host][geo][country_iso_code]"),
-      dns_answers_type = s("[dns][answers][type]"),
-      file_gid = s("[file][gid]"),
-      service_id = s("[service][id]"),
-      database_query = s("[database][query]"),
-      dns_op_code = s("[dns][op_code]"),
-      dns_question_name = s("[dns][question][name]"),
-      dns_question_class = s("[dns][question][class]"),
-      dns_question_type = s("[dns][question][type]"),
-      dns_response_code = s("[dns][response_code]"),
-      dns_resolved_ip = s("[dns][resolved_ip]"),
-      dns_answers_data = s("[dns][answers][data]"),
-      dns_answers_name = s("[dns][answers][name]"),
-      dns_id = s("[dns][id]"),
-      host_type = s("[host][type]"),
-      package_name = s("[package][name]")))
-  }
 }

@@ -1,10 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.enrich.Dicts
-import graft.model.{ParsedTurn, Turn}
 import org.apache.spark.sql.graft.GraftParse
 
 /** Spark wiring of the engine (SURVEY.md §3.1 "Spark equivalent of the whole
@@ -33,19 +32,6 @@ object Pipeline {
           Dicts.build().copy(misp = MispFeeder.store(spark)))
         cachedBc = Some((spark, bc))
         bc
-    }
-  }
-
-  /** The fused parse+enrich stage: Dataset[Turn] → Dataset[ParsedTurn].
-    * flatMap because cardinality can go DOWN (drop {}) or UP (records[]
-    * split). Pattern compilation happens lazily per executor JVM; only
-    * dictionary data crosses the wire. */
-  def parse(spark: SparkSession, input: Dataset[Turn]): Dataset[ParsedTurn] = {
-    import spark.implicits._
-    val bc = dictsBroadcast(spark)
-    input.mapPartitions { it =>
-      val dicts = bc.value
-      it.flatMap(t => Engine.processTurn(t, dicts))
     }
   }
 
@@ -83,22 +69,6 @@ object Pipeline {
     * counts columns. */
   def parseDfSelect(spark: SparkSession, df: DataFrame, cols: Seq[String]): DataFrame =
     parseDf(spark, df).select(cols.map(col): _*)
-
-  /** Typed variant of parseDf (Dataset encoder path) — kept for the
-    * streaming pipeline and as the parity reference for RowKernel. */
-  def parseTyped(spark: SparkSession, df: DataFrame): Dataset[ParsedTurn] = {
-    import spark.implicits._
-    val p = spark.sparkContext.defaultParallelism
-    parse(spark, df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .repartition(p, col("conv_id")).as[Turn])
-  }
-
-  /** Project the typed Dataset's nested `ext` overflow struct (the JVM
-    * 254-parameter case-class wall, Schema.scala) back to the kernel's flat
-    * table: ext's fields land at the end in declaration order, exactly
-    * matching RowKernel.schema. */
-  def typedToFlatDf(ds: Dataset[ParsedTurn]): DataFrame =
-    ds.toDF().select(col("*"), col("ext.*")).drop("ext")
 
   /** `sinkCounts(parseDf(df))`, which plans the counts-only kernel (see
     * Engine.parseCardinality). q05f's oracle is the SAME SQL as q05's. */

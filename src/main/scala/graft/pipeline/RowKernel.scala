@@ -9,16 +9,16 @@ import graft.enrich.Dicts
 import graft.model.Event
 import graft.rules.{ParseCtx, ParseOutcome, TechnologyConfig}
 
-/** InternalRow-level realization of the fused parse→enrich kernel.
+/** InternalRow-level realization of the fused parse→enrich kernel, run by
+  * the GraftParse plan node in batch and streaming alike.
   *
-  * Identical semantics to the typed `Dataset[Turn] → Dataset[ParsedTurn]`
-  * path (proven row-for-row equal by RowParitySpec), but skips the Dataset
-  * encoder boundary on BOTH sides: input fields are read straight from the
-  * Tungsten row (no Turn/Timestamp materialization — pass-through strings
-  * are cloned as UTF8String bytes, never decoded), and output rows are built
-  * directly (no 93-field case class, no generated serializer re-encoding
-  * every string). At ≥8 allocating threads per box this measurably reduces
-  * DRAM pressure — the bottleneck behind the N-vs-4N scaling obligation.
+  * There is no Dataset encoder boundary on either side: input fields are
+  * read straight from the Tungsten row (no object/Timestamp materialization
+  * — pass-through strings are cloned as UTF8String bytes, never decoded),
+  * and output rows are built directly (no wide case class, no generated
+  * serializer re-encoding every string). At ≥8 allocating threads per box
+  * this measurably reduces DRAM pressure — the bottleneck behind the N-vs-4N
+  * scaling obligation.
   *
   * Row-object contract: every emitted row is a fresh GenericInternalRow
   * (safe to buffer/cache downstream); input rows are only read inside the
@@ -26,12 +26,10 @@ import graft.rules.{ParseCtx, ParseOutcome, TechnologyConfig}
   */
 object RowKernel {
 
-  /** Output schema — derived from the ParsedTurn encoder so the row path and
-    * the typed path are the same table by construction. The typed class
-    * nests its 254th-parameter overflow in `ext` (JVM case-class limit, see
-    * Schema.scala); the ROW path has no such limit, so the kernel's table
-    * stays FLAT — ext's fields are spliced inline in declaration order and
-    * Pipeline.typedToFlatDf projects the typed shape to this one. */
+  /** Output schema — derived from the ParsedTurn declaration, which nests
+    * its 254th-parameter overflow in `ext` (JVM case-class limit, see
+    * Schema.scala); a row has no such limit, so the kernel's table stays
+    * FLAT — ext's fields are spliced inline in declaration order. */
   val schema: StructType = {
     val base = org.apache.spark.sql.Encoders.product[graft.model.ParsedTurn].schema
     val ext = org.apache.spark.sql.Encoders.product[graft.model.ParsedTurnExt].schema
@@ -151,8 +149,7 @@ object RowKernel {
   // populates only a few dozen leaves. The spec below declares the same
   // columns in the same put order; flatten now walks the event tree ONCE,
   // scattering populated leaves into their ordinals through a precomputed
-  // segment trie — O(populated fields), not O(schema width). Parity with
-  // the typed Engine.flatten is proven by RowParitySpec (full corpus).
+  // segment trie — O(populated fields), not O(schema width).
 
   private final val KS = 0 // string column (stringAtParts semantics)
   private final val KL = 1 // long column (Long | numeric-string | Double)
@@ -223,9 +220,8 @@ object RowKernel {
   /** Event-derived columns in flatten put order (ordinal = numContextCols +
     * index). The column list is the round-5 flatten body VERBATIM — it is
     * frozen by the output schema; only the execution strategy changed
-    * (trie scatter instead of ~280 per-column path probes). Field-for-field
-    * mirror of Engine.flatten (ParsedTurn declaration order); RowParitySpec
-    * proves equality against the typed path. */
+    * (trie scatter instead of ~280 per-column path probes), in ParsedTurn
+    * declaration order. */
   private val derivedCols: Array[DCol] = {
     val b = scala.collection.mutable.ArrayBuffer.empty[DCol]
     def s(p: String): Unit = b += new DCol(p, KS, null, null)

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftParse
 
 /** Routed sink writer with snapshot manifests, per-partition lineage +
   * metrics, and checkpoint-resume (north rule: "resumable from checkpoint
@@ -106,9 +107,13 @@ object Sink {
     // rows (empty route_outputs) so conservation needs no second input scan.
     // conv_id passes through the kernel unchanged, so the chunk is
     // re-derivable on the output side with the same hash expression.
-    val parsed = Pipeline.parseRows(spark, pendingInput, emitDropped = true)
-      .withColumn("chunk", chunkOf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Persisted at the RDD layer (as SparkEntry.parsed): the write's stage
+    // runs kernel, cache build and write together. A Dataset persist of this
+    // plan, which holds the conv_id exchange, is built by adaptive execution
+    // as a stage of its own that the write then reads back.
+    val parsed = GraftParse.persistedRows(
+      Pipeline.parseRows(spark, pendingInput, emitDropped = true).withColumn("chunk", chunkOf),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // single write job: explode route fan-out, dynamic overwrite of only
       // the (sink, chunk) partitions this invocation owns. Marker rows have
@@ -145,7 +150,7 @@ object Sink {
         commitLedger(rootDir, snapshotId, c)
         m
       }
-    } finally parsed.unpersist()
+    } finally GraftParse.unpersistRows(parsed)
   }
 
   private def writeManifest(rootDir: String, snapshotId: String, m: ChunkMetrics): Unit = {

@@ -2,21 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftParse
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import graft.model.{ParsedTurn, Turn}
-import graft.pipeline.{Engine, Pipeline}
+import graft.pipeline.Pipeline
 
 /** Structured Streaming variant of the pipeline (SURVEY.md §1.4: the
   * streaming input in the reference is Kafka; no Kafka connector jar ships
   * offline, so the source here is the file source over the same
   * transcript-table schema — the transform chain is source-agnostic).
   *
-  * readStream → the SAME fused parse/enrich kernel (mapPartitions works
-  * identically on streaming Datasets) → watermarked tumbling-window counts
-  * per sink (the north-rule aggregate, incrementalized), plus a
-  * mapGroupsWithState per-conversation session operator as the custom-state
-  * surface (SURVEY.md §2.7).
+  * readStream → the SAME GraftParse kernel node as batch (a logical node
+  * plans under Structured Streaming too, so the optimizer narrows it per
+  * query) → watermarked tumbling-window counts per sink (the north-rule
+  * aggregate, incrementalized), plus a mapGroupsWithState per-conversation
+  * session operator as the custom-state surface (SURVEY.md §2.7).
   */
 object StreamingPipeline {
 
@@ -53,22 +53,19 @@ object StreamingPipeline {
       "SELECT conv_id, CAST(event_id AS INT) AS turn_idx, role, text, tool, ts FROM ge_txt")
   }
 
-  /** Same kernel as batch — one code path for both execution modes. */
-  def parse(spark: SparkSession, stream: DataFrame): Dataset[ParsedTurn] = {
-    import spark.implicits._
-    val bc = Pipeline.dictsBroadcast(spark)
-    stream.select("conv_id", "turn_idx", "role", "text", "tool", "ts").as[Turn]
-      .mapPartitions { it =>
-        val dicts = bc.value
-        it.flatMap(t => Engine.processTurn(t, dicts))
-      }
-  }
+  /** Same kernel node as batch, over the stream's six input columns. There
+    * is no conv_id exchange: the kernel is a per-row function, and an extra
+    * shuffle per micro-batch costs more than it spreads. `sinkCounts` over
+    * this runs the counts-only kernel. */
+  def parse(spark: SparkSession, stream: DataFrame): DataFrame =
+    GraftParse.dataFrame(stream.select("conv_id", "turn_idx", "role", "text", "tool", "ts"),
+      emitDropped = false, Pipeline.dictsBroadcast(spark))
 
   /** North-rule aggregate, streaming form: per-sink counts by
     * (technology, role, tool, 1-hour tumbling window) with a 2-hour
     * watermark bounding state. */
-  def sinkCounts(parsed: Dataset[ParsedTurn]): DataFrame =
-    parsed.toDF()
+  def sinkCounts(parsed: DataFrame): DataFrame =
+    parsed
       .withWatermark("ts", "2 hours")
       .select(explode(col("route_outputs")).as("sink"),
         col("technology"), col("role"), col("tool"), col("ts"))
@@ -77,19 +74,21 @@ object StreamingPipeline {
       .agg(count(lit(1)).as("cnt"))
 
   /** Per-conversation running state (custom state surface):
-    * tracks turns seen and parse failures per conv_id. */
+    * tracks turns seen and parse failures per conv_id. Reads two kernel
+    * columns, so the kernel runs masked. */
   final case class ConvState(turns: Long, failures: Long)
   final case class ConvUpdate(conv_id: String, turns: Long, failures: Long)
 
-  def conversationState(spark: SparkSession, parsed: Dataset[ParsedTurn]): Dataset[ConvUpdate] = {
+  def conversationState(spark: SparkSession, parsed: DataFrame): Dataset[ConvUpdate] = {
     import spark.implicits._
-    parsed.groupByKey(_.conv_id)
+    parsed.select("conv_id", "parse_ok").as[(String, Boolean)]
+      .groupByKey(_._1)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (conv: String, rows: Iterator[ParsedTurn], state: GroupState[ConvState]) =>
+        (conv: String, rows: Iterator[(String, Boolean)], state: GroupState[ConvState]) =>
           val prev = state.getOption.getOrElse(ConvState(0L, 0L))
           var t = prev.turns
           var f = prev.failures
-          rows.foreach { r => t += 1; if (!r.parse_ok) f += 1 }
+          rows.foreach { case (_, ok) => t += 1; if (!ok) f += 1 }
           state.update(ConvState(t, f))
           ConvUpdate(conv, t, f)
       }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Bound
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.storage.StorageLevel
 import graft.enrich.Dicts
@@ -97,12 +97,20 @@ object GraftParse {
   /** `df`'s executed rows copied out of the exec's reused buffer and
     * persisted at the RDD layer, as a DataFrame with `df`'s schema. Each
     * cached row is one UnsafeRow (one byte array), and a read is a plain
-    * field projection — no columnar cache builders over 332 columns. */
+    * field projection — no columnar cache builders over 332 columns. The
+    * rows' plan gets a SQL execution of its own, so query listeners and the
+    * UI see it; its last stage runs in the first job that reads the rows. */
   def persistedRows(df: DataFrame, level: StorageLevel): DataFrame = {
-    val rdd = df.queryExecution.toRdd.map(_.copy()).persist(level)
+    val qe = df.queryExecution
+    val rdd = SQLExecution.withNewExecutionId(qe, Some("persistedRows"))(qe.toRdd)
+      .map(_.copy()).persist(level)
     df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, df.schema)
   }
+
+  /** Release the RDD behind a [[persistedRows]] DataFrame. */
+  def unpersistRows(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
 
   /** Narrow the node's output to the columns the Project above it reads.
     * ColumnPruning puts such a Project under Generate/Aggregate, so this

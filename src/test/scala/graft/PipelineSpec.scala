@@ -108,7 +108,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Transcripts.oktaInput(spark, sf).write.mode("overwrite").parquet(inDir)
     val parsed = StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inDir))
     StreamingPipeline.runToMemory(
-      parsed.toDF().select("conv_id", "turn_idx", "sub_idx", "event_type", "event_outcome"),
+      parsed.select("conv_id", "turn_idx", "sub_idx", "event_type", "event_outcome"),
       "stream_okta", org.apache.spark.sql.streaming.OutputMode.Append(),
       tmp("graft-ckpt-okta-"))
     val streamed = spark.table("stream_okta")
@@ -118,11 +118,35 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0)
   }
 
+  test("streaming parse of a drop{} corpus (iis) equals batch: counts and rows") {
+    val inDir = tmp("graft-stream-iis-")
+    Transcripts.iisInput(spark, sf).write.mode("overwrite").parquet(inDir)
+    val batch = Pipeline.parseDf(spark, Transcripts.iisInput(spark, sf))
+    val cols = Seq("conv_id", "turn_idx", "sub_idx", "technology", "parse_rule", "url_path", "source_ip")
+    StreamingPipeline.runToMemory(
+      StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inDir)).select(cols.map(col): _*),
+      "stream_iis_rows", org.apache.spark.sql.streaming.OutputMode.Append(), tmp("graft-ckpt-iis-"))
+    val rows = spark.table("stream_iis_rows")
+    val batchRows = batch.select(cols.map(col): _*)
+    // some turns are drop{}-ed, so the kernel emits fewer rows than it reads
+    assert(rows.count() > 0 && rows.count() < spark.read.parquet(inDir).count())
+    assert(rows.exceptAll(batchRows).count() == 0 && batchRows.exceptAll(rows).count() == 0)
+
+    StreamingPipeline.runToMemory(
+      StreamingPipeline.sinkCounts(StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inDir))),
+      "stream_iis_counts", org.apache.spark.sql.streaming.OutputMode.Complete(), tmp("graft-ckpt-iis2-"))
+    val counts = spark.table("stream_iis_counts")
+      .select(col("sink"), col("technology"), col("role"), col("tool"),
+        year(col("window.start")).as("y"), month(col("window.start")).as("m"),
+        dayofmonth(col("window.start")).as("d"), hour(col("window.start")).as("h"),
+        col("cnt"))
+    val batchCounts = Pipeline.sinkCounts(batch)
+    assert(counts.exceptAll(batchCounts).count() == 0 && batchCounts.exceptAll(counts).count() == 0)
+  }
+
   test("rate streaming source (kafka-topic analogue) == batch kernel on identical ticks") {
     val parsed = StreamingPipeline.parse(spark, StreamingPipeline.rateTurns(spark, 200))
-    // flatten the typed `ext` overflow struct so the memory table matches
-    // the row kernel's flat table (Schema.scala 254-param wall)
-    val q = Pipeline.typedToFlatDf(parsed).writeStream.format("memory").queryName("rate_parsed")
+    val q = parsed.writeStream.format("memory").queryName("rate_parsed")
       .outputMode("append").option("checkpointLocation", tmp("graft-ckpt-rate-"))
       .start()
     try {
@@ -204,7 +228,7 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     def runOnce(): Unit = {
       val parsed = StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inDir))
-      val q = parsed.toDF()
+      val q = parsed
         .select("conv_id", "turn_idx", "sub_idx", "technology", "event_hash")
         .writeStream.format("parquet")
         .option("path", outDir)

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.gen.Transcripts
 import graft.pipeline.Pipeline
+import graft.streaming.StreamingPipeline
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Physical-plan audits: the shapes the 100-TB design depends on must hold
   * in the executed plan, not just in intent (SURVEY §4 / VERDICT plan
@@ -117,6 +119,52 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = cached.collect().map(_.toString).sorted
     assert(c.length == d.length)
     assert(c.sameElements(d))
+  }
+
+  // ---- streaming: the same node under Structured Streaming ----------------
+
+  /** Run `df` over all of `inputPath` to a memory sink and return the
+    * executed plan of its last micro-batch. */
+  private def streamedPlan(df: org.apache.spark.sql.DataFrame, name: String,
+                           mode: OutputMode): String = {
+    val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .option("checkpointLocation", java.nio.file.Files.createTempDirectory(s"graft_ckpt_$name").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+  }
+
+  private def streamed: org.apache.spark.sql.DataFrame =
+    StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inputPath))
+
+  /** The output column names of the plan's (single) GraftParse node. */
+  private def nodeOutput(plan: String): Seq[String] =
+    "(\\w+)#\\d+".r.findAllMatchIn(plan.split("\n").find(_.contains("GraftParse ")).get)
+      .map(_.group(1)).toSeq
+
+  test("streaming sinkCounts runs the counts kernel with no exchange below it") {
+    val plan = streamedPlan(StreamingPipeline.sinkCounts(streamed), "audit_counts",
+      OutputMode.Complete())
+    assert(modes(plan) == Seq("counts"), plan)
+    val below = plan.split("\n").dropWhile(!_.contains("GraftParse "))
+    assert(!below.exists(_.contains("Exchange ")), s"an exchange below the kernel:\n$plan")
+  }
+
+  test("streaming conversationState runs the masked kernel over (conv_id, parse_ok)") {
+    val plan = streamedPlan(StreamingPipeline.conversationState(spark, streamed).toDF(), "audit_state",
+      OutputMode.Update())
+    assert(modes(plan) == Seq("masked"), plan)
+    assert(nodeOutput(plan) == Seq("conv_id", "parse_ok"), plan)
+  }
+
+  test("streaming 5-column select (the resume spec's) runs the masked kernel") {
+    val plan = streamedPlan(
+      streamed.select("conv_id", "turn_idx", "sub_idx", "technology", "event_hash"), "audit_select",
+      OutputMode.Append())
+    assert(modes(plan) == Seq("masked"), plan)
+    assert(nodeOutput(plan).toSet == Set("conv_id", "turn_idx", "sub_idx", "technology", "event_hash"), plan)
   }
 
   // ---- ml family (round-5 verdict item 5) --------------------------------
