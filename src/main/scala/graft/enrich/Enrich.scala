@@ -626,7 +626,7 @@ object Enrich {
     S("[email][subject]", "email.subject"), // :1678
     S("[email][body]", "email.body"), // :1703
     S("[email][header]", "email.header")) // :1728
-  private val MispAbsent: String = new String(" absent") // identity sentinel
+  private val MispAbsent: String = new String("\u0000absent") // identity sentinel
   // md5 SLOTS: several probes share a field ([file][name] ×5, the user.email
   // family, [destination][ip] ×4 …) — assign one slot per distinct path so
   // each populated field is read and hashed at most ONCE per event.

@@ -1,64 +1,37 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.model.{Columns, Event}
 
-/** ECS-shaped nested projection of the flat ParsedTurn table (SURVEY.md
-  * §1.4: the target data model is ECS 1.7/1.9 — a fixed, wide, NESTED
-  * schema). The engine keeps the inter-stage representation flat/columnar
-  * (better for Tungsten + cross-engine comparison); this projection is the
-  * sink-facing view whose struct layout matches the Elastic index templates
-  * (ref: the json index templates under doc/templates/ECS_1.7/).
+/** ECS-shaped nested projection of the flat kernel table (SURVEY.md §1.4:
+  * the target data model is ECS 1.7/1.9 — a fixed, wide, NESTED schema).
+  * The engine keeps the inter-stage representation flat/columnar (better for
+  * Tungsten + cross-engine comparison); this projection is the sink-facing
+  * view whose struct layout matches the Elastic index templates (ref: the
+  * json index templates under doc/templates/ECS_1.7/).
+  *
+  * Derived from the column table: each event-derived column sits at its ECS
+  * path; the context columns and the tag-derived booleans stay at the top
+  * level, with `ts` as `@timestamp`.
   */
 object Ecs {
 
-  def project(parsed: DataFrame): DataFrame = {
-    def st(fields: (String, String)*) = {
-      val present = fields.filter { case (c, _) => parsed.columns.contains(c) }
-      struct(present.map { case (c, n) => col(c).as(n) }: _*)
+  def project(parsed: DataFrame): DataFrame = parsed.select(nest(Columns.all.map { c =>
+    val at = if (c.path != null) Event.parsePath(c.path).toList
+             else List(if (c.name == "ts") "@timestamp" else c.name)
+    (at, c.name)
+  }): _*)
+
+  /** One level of the view: the (path, column) leaves grouped by their
+    * first segment, in table order. */
+  private def nest(leaves: Seq[(List[String], String)]): Seq[Column] =
+    leaves.map(_._1.head).distinct.map { seg =>
+      leaves.filter(_._1.head == seg) match {
+        case Seq((_ :: Nil, name)) => col(name).as(seg)
+        case under =>
+          require(under.forall(_._1.tail.nonEmpty), s"ECS path segment $seg is both a leaf and a struct")
+          struct(nest(under.map { case (p, name) => (p.tail, name) }): _*).as(seg)
+      }
     }
-    parsed.select(
-      col("conv_id"), col("turn_idx"), col("sub_idx"), col("role"),
-      col("tool"), col("ts").as("@timestamp"), col("text"),
-      col("technology"), col("tags"),
-      st("event_module" -> "module", "event_dataset" -> "dataset",
-        "event_kind" -> "kind", "event_category" -> "category",
-        "event_type" -> "type", "event_action" -> "action",
-        "event_outcome" -> "outcome", "event_provider" -> "provider",
-        "event_severity" -> "severity", "event_created_ms" -> "created_ms",
-        "event_end_ms" -> "end_ms", "event_hash" -> "hash").as("event"),
-      st("source_ip" -> "ip", "source_address" -> "address",
-        "source_port" -> "port", "source_mac" -> "mac").as("source"),
-      struct(
-        st("source_geo_country" -> "country_iso_code",
-          "source_geo_city" -> "city_name").as("geo")).as("source_ext"),
-      st("destination_ip" -> "ip", "destination_port" -> "port",
-        "destination_domain" -> "domain").as("destination"),
-      st("network_transport" -> "transport", "network_protocol" -> "protocol",
-        "network_iana_number" -> "iana_number", "network_bytes" -> "bytes",
-        "network_packets" -> "packets").as("network"),
-      struct(
-        struct(
-          st("log_syslog_facility_code" -> "code",
-            "log_syslog_facility_name" -> "name").as("facility"),
-          st("log_syslog_severity_code" -> "code",
-            "log_syslog_severity_name" -> "name").as("severity")).as("syslog"),
-        col("log_original").as("original")).as("log"),
-      st("rule_name" -> "name", "rule_description" -> "description",
-        "rule_category" -> "category", "rule_version" -> "version").as("rule"),
-      st("host_name" -> "name", "host_id" -> "id").as("host"),
-      st("user_name" -> "name", "user_email" -> "email",
-        "user_full_name" -> "full_name").as("user"),
-      st("url_original" -> "original", "url_domain" -> "domain",
-        "url_path" -> "path", "url_query" -> "query",
-        "url_tld" -> "top_level_domain",
-        "url_registered_domain" -> "registered_domain").as("url"),
-      st("user_agent_original" -> "original", "ua_device_name" -> "device_name",
-        "ua_os_family" -> "os_family", "ua_os_platform" -> "os_platform",
-        "ua_os_version" -> "os_version").as("user_agent"),
-      st("threat_tactic_name" -> "tactic_name",
-        "threat_tactic_reference" -> "tactic_reference").as("threat"),
-      st("related_ip" -> "ip", "related_user" -> "user").as("related"),
-      col("route_index"), col("route_outputs"))
-  }
 }

@@ -4,7 +4,7 @@ import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import graft.enrich.{Dicts, Enrich}
 import graft.model.Event
-import graft.rules.{Dropped, Parsed, ParseCtx, Registry, TechnologyConfig}
+import graft.rules.{Dropped, Parsed, ParseCtx, ParseOutcome, Registry, TechnologyConfig}
 
 /** The per-turn core of the fused parse→enrich kernel: one turn in, 0..N
   * enriched events out, which [[RowKernel]] flattens to rows inside the
@@ -27,14 +27,15 @@ object Engine {
       !ev.tags.exists(tag => tag.startsWith("_dissectfailure") ||
         tag.startsWith("_grokparsefailure") || tag == "dissect_failure_1")
 
-  /** Shared kernel core: run the technology's parse program, stamp parse_ok
-    * per produced event, then run the enrichment chain. Returns null when the
-    * turn was dropped (`drop {}`), else (event, parse_ok) pairs in sub_idx
-    * order. Pure function of (tool, text, tsMillis, dicts). */
-  def parseAndEnrich(cfg: TechnologyConfig, program: (Event, ParseCtx) => graft.rules.ParseOutcome,
-                     text: String, tsMillis: Long, dicts: Dicts): Seq[(Event, Boolean)] = {
-    val tsYear = Instant.ofEpochMilli(tsMillis).atZone(ZoneOffset.UTC).getYear
-    val ctx = ParseCtx(tsMillis, tsYear)
+  /** Parse context of a turn at `tsMillis`: the time and its UTC year. */
+  def parseCtx(tsMillis: Long): ParseCtx =
+    ParseCtx(tsMillis, Instant.ofEpochMilli(tsMillis).atZone(ZoneOffset.UTC).getYear)
+
+  /** The kernel preamble, then the technology's parse program: a fresh
+    * event holding `text` as `message`, the input codec applied, and a
+    * scalar `host` copied to [agent][name]. */
+  def parse(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
+            text: String, ctx: ParseCtx, dicts: Dicts): ParseOutcome = {
     graft.rules.RuleDicts.set(dicts) // parse-stage translates (cisco)
     val ev = new Event
     ev.set("message", if (text == null) "" else text)
@@ -55,10 +56,20 @@ object Engine {
       case _: Event.FMap => ()
       case hostScalar => ev.set("[agent][name]", Event.deepCopy(hostScalar))
     }
-    program(ev, ctx) match {
+    program(ev, ctx)
+  }
+
+  /** Shared kernel core: parse the turn, stamp parse_ok per produced
+    * event, then run the enrichment chain. Returns null when the turn was
+    * dropped (`drop {}`), else (event, parse_ok) pairs in sub_idx order.
+    * Pure function of (tool, text, tsMillis, dicts). */
+  def parseAndEnrich(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
+                     text: String, tsMillis: Long, dicts: Dicts): Seq[(Event, Boolean)] = {
+    val ctx = parseCtx(tsMillis)
+    parse(cfg, program, text, ctx, dicts) match {
       case Dropped => null
       case Parsed(events) =>
-        val ectx = Enrich.Ctx(tsMillis, tsYear)
+        val ectx = Enrich.Ctx(tsMillis, ctx.tsYear)
         events.map { e =>
           val ok = parseOkOf(e)
           Enrich(e, cfg, dicts, ectx)
@@ -75,27 +86,14 @@ object Engine {
     * input row and the static TechnologyConfig, never from the Event.
     * GraftParse runs this (its counts mode) when the plan above it reads
     * only those columns. */
-  def parseCardinality(cfg: TechnologyConfig,
-                       program: (Event, ParseCtx) => graft.rules.ParseOutcome,
-                       text: String, tsMillis: Long, dicts: Dicts): Int = {
-    val tsYear = Instant.ofEpochMilli(tsMillis).atZone(ZoneOffset.UTC).getYear
-    val ctx = ParseCtx(tsMillis, tsYear)
-    graft.rules.RuleDicts.set(dicts)
-    val ev = new Event
-    ev.set("message", if (text == null) "" else text)
-    if (cfg.jsonCodec) graft.parse.JsonOps.parse(ev, "message", "")
-    ev.valueOrNull("host") match {
-      case null => ()
-      case _: Event.FMap => ()
-      case hostScalar => ev.set("[agent][name]", Event.deepCopy(hostScalar))
-    }
-    program(ev, ctx) match {
+  def parseCardinality(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
+                       text: String, tsMillis: Long, dicts: Dicts): Int =
+    parse(cfg, program, text, parseCtx(tsMillis), dicts) match {
       case Dropped => 0
       case Parsed(events) => events.size
     }
-  }
 
-  def techOf(tool: String): (TechnologyConfig, (Event, ParseCtx) => graft.rules.ParseOutcome) =
+  def techOf(tool: String): (TechnologyConfig, (Event, ParseCtx) => ParseOutcome) =
     (Registry.configs.getOrElse(tool, Registry.configs("unknown")),
       Registry.programs.getOrElse(tool, Registry.programs("unknown")))
 

@@ -3,10 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.enrich.Dicts
-import graft.model.Event
+import graft.model.{Columns, Event}
 import graft.rules.{ParseCtx, ParseOutcome, TechnologyConfig}
 
 /** InternalRow-level realization of the fused parse→enrich kernel, run by
@@ -26,22 +26,16 @@ import graft.rules.{ParseCtx, ParseOutcome, TechnologyConfig}
   */
 object RowKernel {
 
-  /** Output schema — derived from the ParsedTurn declaration, which nests
-    * its 254th-parameter overflow in `ext` (JVM case-class limit, see
-    * Schema.scala); a row has no such limit, so the kernel's table stays
-    * FLAT — ext's fields are spliced inline in declaration order. */
-  val schema: StructType = {
-    val base = org.apache.spark.sql.Encoders.product[graft.model.ParsedTurn].schema
-    val ext = org.apache.spark.sql.Encoders.product[graft.model.ParsedTurnExt].schema
-    StructType(base.fields.filter(_.name != "ext") ++ ext.fields)
-  }
+  /** Output schema, in the column table's order. */
+  val schema: StructType =
+    StructType(Columns.all.map(c => StructField(c.name, c.dataType, c.nullable)))
   private val numFields = schema.length
 
   private val emptyArray = new GenericArrayData(Array.empty[Any])
   private val droppedRule = UTF8String.fromString("dropped")
   private val notParsed = UTF8String.fromString("not parsed")
   private val arrayOrdinals: Array[Int] = schema.fields.zipWithIndex.collect {
-    case (f, idx) if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] => idx
+    case (f, idx) if f.dataType.isInstanceOf[ArrayType] => idx
   }
 
   /** Per-partition compiled technology entry: config + program + reusable
@@ -124,11 +118,10 @@ object RowKernel {
       }
     }
 
-  /** Count of always-populated context columns at the head of the flatten
-    * put order (conv_id..route_outputs). Shared by maskFor and asserted at
-    * the point in flatten where the Event-derived section begins, so a
-    * later context-column insertion cannot silently misalign the mask. */
-  val numContextCols = 13
+  /** Count of always-populated context columns at the head of the table
+    * (conv_id..route_outputs), whose ordinals `flatten` and `droppedRow`
+    * write directly. */
+  val numContextCols: Int = Columns.all.indexWhere(_.kind != Columns.Context)
 
   /** Ordinal mask for a column subset (always includes the context
     * columns — they are populated unconditionally). NOTE: this is the
@@ -144,21 +137,9 @@ object RowKernel {
   }
 
   // ---- Flatten inversion (round 6, guide §1.2 "per-task work") ----------
-  // The round-5 flatten probed all ~280 Event-derived paths per row (each a
-  // 2-4 level map walk → ~700 hash gets/row) even though a typical event
-  // populates only a few dozen leaves. The spec below declares the same
-  // columns in the same put order; flatten now walks the event tree ONCE,
-  // scattering populated leaves into their ordinals through a precomputed
-  // segment trie — O(populated fields), not O(schema width).
-
-  private final val KS = 0 // string column (stringAtParts semantics)
-  private final val KL = 1 // long column (Long | numeric-string | Double)
-  private final val KA = 2 // array-of-string column (scalar promoted)
-
-  /** One Event-derived column: a (path, kind) probe, or a tag-pair derived
-    * boolean (`priv`) when `path == null`. */
-  private final class DCol(val path: String, val kind: Int,
-                           val tagTrue: String, val tagFalse: String)
+  // flatten walks the event tree ONCE, scattering populated leaves into
+  // their ordinals through a segment trie built from the column table —
+  // O(populated fields), not O(schema width).
 
   /** Trie over path segments; a terminal node carries the flatten ordinal
     * and conversion kind of the column ending there. */
@@ -169,15 +150,8 @@ object RowKernel {
   }
 
   /** Counts-only 5-column schema (see Engine.parseCardinality). */
-  val countSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("technology", StringType),
-      StructField("role", StringType),
-      StructField("tool", StringType),
-      StructField("ts", TimestampType),
-      StructField("route_outputs", ArrayType(StringType))))
-  }
+  val countSchema: StructType =
+    StructType(Seq("technology", "role", "tool", "ts", "route_outputs").map(schema(_)))
 
   /** Counts-only kernel: same parse dispatch, no enrichment chain, no wide
     * flatten — one reused 5-column row emitted `cardinality` times per
@@ -217,356 +191,19 @@ object RowKernel {
     new GenericInternalRow(v)
   }
 
-  /** Event-derived columns in flatten put order (ordinal = numContextCols +
-    * index). The column list is the round-5 flatten body VERBATIM — it is
-    * frozen by the output schema; only the execution strategy changed
-    * (trie scatter instead of ~280 per-column path probes), in ParsedTurn
-    * declaration order. */
-  private val derivedCols: Array[DCol] = {
-    val b = scala.collection.mutable.ArrayBuffer.empty[DCol]
-    def s(p: String): Unit = b += new DCol(p, KS, null, null)
-    def l(p: String): Unit = b += new DCol(p, KL, null, null)
-    def arr(p: String): Unit = b += new DCol(p, KA, null, null)
-    def priv(tagTrue: String, tagFalse: String): Unit =
-      b += new DCol(null, -1, tagTrue, tagFalse)
-    s("message")
-    s("[log][original]")
-    s("[event][module]")
-    s("[event][dataset]")
-    s("[event][kind]")
-    s("[event][category]")
-    s("[event][type]")
-    s("[event][action]")
-    s("[event][outcome]")
-    s("[event][provider]")
-    l("[event][severity]")
-    l("[event][created_ms]")
-    l("[event][end_ms]")
-    s("[event][hash]")
-    s("[source][ip]")
-    s("[source][address]")
-    l("[source][port]")
-    s("[source][mac]")
-    priv("sip_private", "sip_public")
-    s("[source][geo][country_iso_code]")
-    s("[source][geo][city_name]")
-    s("[destination][ip]")
-    l("[destination][port]")
-    priv("dip_private", "dip_public")
-    s("[destination][geo][country_iso_code]")
-    s("[destination][geo][city_name]")
-    s("[destination][domain]")
-    s("[network][transport]")
-    s("[network][protocol]")
-    s("[network][iana_number]")
-    l("[network][bytes]")
-    l("[network][packets]")
-    l("[log][syslog][facility][code]")
-    s("[log][syslog][facility][name]")
-    l("[log][syslog][severity][code]")
-    s("[log][syslog][severity][name]")
-    s("[log][source][hostname]")
-    s("[rule][name]")
-    s("[rule][description]")
-    s("[rule][category]")
-    s("[rule][version]")
-    s("[rule][ruleset]")
-    s("[host][name]")
-    s("[host][id]")
-    s("[user][name]")
-    s("[user][email]")
-    s("[user][full_name]")
-    s("[url][original]")
-    s("[url][domain]")
-    s("[url][path]")
-    s("[url][query]")
-    s("[url][top_level_domain]")
-    s("[url][registered_domain]")
-    s("[service][name]")
-    s("[service][version]")
-    s("[cloud][provider]")
-    s("[cloud][account][id]")
-    s("[observer][vendor]")
-    s("[observer][product]")
-    s("[observer][egress][interface][id]")
-    s("[error][code]")
-    s("[threat][tactic][name]")
-    s("[threat][tactic][reference]")
-    l("[process][pid]")
-    s("[source][nat][ip]")
-    s("[http][request][method]")
-    l("[source][bytes]")
-    l("[destination][bytes]")
-    s("[host][ip]")
-    s("[event][id]")
-    s("[user_agent][original]")
-    s("[browser][name]")
-    s("[browser][version]")
-    s("[user_agent][device][name]")
-    s("[user_agent][os][family]")
-    s("[user_agent][os][platform]")
-    s("[user_agent][os][version]")
-    arr("[related][ip]")
-    arr("[related][hosts]")
-    arr("[related][user]")
-    s("[host][hostname]")
-    s("[host][domain]")
-    s("[event][reason]")
-    s("[event][recommendation]")
-    l("[event][start_ms]")
-    s("[observer][ingress][interface][name]")
-    s("[log][level]")
-    s("[source][domain]")
-    s("[user_agent][os][name]")
-    s("[user][id]")
-    s("[user][roles]")
-    s("[user][type]")
-    s("[destination][user][id]")
-    s("[destination][user][email]")
-    s("[destination][user][full_name]")
-    s("[transaction][id]")
-    s("[cloud][region]")
-    s("[file][directory]")
-    s("[file][name]")
-    s("[service][type]")
-    s("[error][message]")
-    s("[threat][indicator][ip]")
-    s("[threat][indicator][provider]")
-    arr("[related][mac]")
-    arr("[related][hash]")
-    s("[destination][address]")
-    s("[url][full]")
-    s("[client][ip]")
-    s("[source][user][email]")
-    s("[rule][id]")
-    s("[rule][uuid]")
-    s("[rule][reference]")
-    s("[event][status]")
-    l("[threat][list][created_ms]")
-    s("[group][id]")
-    s("[event][severity_name]")
-    l("[event][modified_ms]")
-    arr("[threat][technique][id]")
-    arr("[file][attributes]")
-    l("[file][size]")
-    arr("[rule][author]")
-    s("[trace][id]")
-    l("[event][risk_score]")
-    l("[vulnerability][score][base]")
-    l("[event][risk_score_norm]")
-    s("[email][subject]")
-    s("[email][header_from]")
-    s("[email][header_replyto]")
-    s("[url][scheme]")
-    l("[event][ingested_ms]")
-    s("[event][duration]")
-    s("[cloud][instance][name]")
-    l("[http][response][status_code]")
-    l("[http][request][bytes]")
-    l("[http][response][bytes]")
-    s("[http][request][referrer]")
-    s("[user_agent][name]")
-    s("[tls][cipher]")
-    s("[tls][version_protocol]")
-    s("[tls][next_protocol]")
-    s("[tls][client][server_name]")
-    s("[database][user][name]")
-    s("[organization][id]")
-    s("[event][url]")
-    s("[server][user][group][id]")
-    s("[source][name]")
-    s("[file][extension]")
-    s("[file][type]")
-    s("[observer][name]")
-    s("[event][code]")
-    s("[event][sequence]")
-    s("[observer][ip]")
-    l("[observer][port]")
-    s("[process][command_line]")
-    s("[network][name]")
-    s("[labels][tags]")
-    s("[file][target_path]")
-    s("[database][instance]")
-    s("[process][name]")
-    s("[network][forwarded_ip]")
-    s("[cloud][instance][id]")
-    s("[http][request][mime_type]")
-    s("[http][cookie][name]")
-    l("[source][as][number]")
-    l("[destination][as][number]")
-    s("[observer][ingress][interface][id]")
-    s("[cloud][availability_zone]")
-    s("[container][image][name]")
-    s("[service][state]")
-    s("[cloud][machine][type]")
-    s("[user][group][name]")
-    s("[user][group][id]")
-    arr("[cloud][project][name]")
-    s("[source][as][organization][name]")
-    s("[log][syslog][priority]")
-    s("[threat][technique][name]")
-    s("[network][direction]")
-    s("[server][address]")
-    l("[client][port]")
-    s("[http][version]")
-    s("[source][user][id]")
-    s("[source][user][full_name]")
-    s("[source][user][domain]")
-    s("[destination][nat][ip]")
-    s("[service][ephemeral_id]")
-    s("[host][os][name]")
-    s("[host][os][version]")
-    s("[threat][list][category]")
-    s("[threat][list][attribute_tag]")
-    s("[agent][name]")
-    s("[database][name]")
-    s("[database][table]")
-    s("[database][field_names]")
-    s("[database][user][id]")
-    s("[database][user][email]")
-    s("[database][user][full_name]")
-    s("[event][original]")
-    s("[error][id]")
-    s("[file][path]")
-    s("[client][user][title]")
-    s("[client][user][name]")
-    s("[client][domain]")
-    s("[host][user][title]")
-    s("[host][user][roles]")
-    l("[host][disk][read][bytes]")
-    s("[package][type]")
-    s("[threat][list][uuid]")
-    s("[threat][list][type]")
-    s("[threat][list][ioc]")
-    s("[threat][list][event_id]")
-    l("[threat][list][start_ms]")
-    s("[threat][list][severity_name]")
-    s("[threat][list][event_analysis]")
-    s("[threat][list][distribution]")
-    s("[threat][list][safe_to_enable_ids]")
-    s("[threat][list][source_org]")
-    s("[threat][list][event_info]")
-    s("[threat][list][object_relation]")
-    s("[threat][list][comment]")
-    s("[threat][framework]")
-    s("[source][user][name]")
-    s("[group][name]")
-    s("[server][ip]")
-    l("[server][port]")
-    l("[source][nat][port]")
-    s("[host][serial]")
-    s("[server][user][id]")
-    s("[tls][client][subject]")
-    s("[source][user][roles]")
-    s("[user][domain]")
-    s("[host][mac]")
-    s("[observer][hostname]")
-    s("[observer][version]")
-    s("[host][os][family]")
-    s("[host][model]")
-    s("[host][manufacturer]")
-    s("[process][executable]")
-    s("[organization][name]")
-    s("[error][type]")
-    s("[destination][user][name]")
-    s("[container][id]")
-    l("[process][start_ms]")
-    s("[process][hash][md5]")
-    l("[process][parent][start_ms]")
-    s("[process][parent][name]")
-    l("[process][parent][pid]")
-    s("[process][parent][hash][sha1]")
-    s("[process][parent][hash][sha256]")
-    arr("[file][hash][md5]")
-    arr("[file][hash][sha1]")
-    arr("[file][hash][sha256]")
-    arr("[file][hash][sha512]")
-    s("[alarm][id]")
-    s("[process][pe][company]")
-    s("[process][pe][description]")
-    s("[process][pe][file_version]")
-    s("[process][pe][original_file_name]")
-    s("[event][reference]")
-    s("[host][geo][name]")
-    s("[client][as][organization][name]")
-    s("[host][geo][location]")
-    s("[observer][ingress][interface][alias]")
-    s("[process][entity_id]")
-    s("[process][parent][command_line]")
-    l("[process][pgid]")
-    s("[file][uid]")
-    s("[log][origin][function]")
-    s("[log][origin][file][line]")
-    s("[dns][answers][class]")
-    s("[log][logger]")
-    s("[process][thread][name]")
-    s("[span][id]")
-    s("[file][mime_type]")
-    s("[container][runtime]")
-    s("[container][image][tag]")
-    s("[container][name]")
-    s("[cloud][project][id]")
-    s("[cloud][account][name]")
-    s("[cloud][service][name]")
-    l("[host][os][installation_date_ms]")
-    s("[host][logged_in_users]")
-    s("[host][last_logged_in_user]")
-    s("[host][timezone]")
-    s("[host][os][type]")
-    s("[log][source][ip]")
-    s("[process][id]")
-    s("[observer][type]")
-    s("[event][description]")
-    l("[log][offset]")
-    s("[log][file][path]")
-    s("[ecs][version]")
-    s("[client][nat][ip]")
-    s("[host][user][name]")
-    s("[user_agent][version]")
-    s("[source][user][group][name]")
-    s("[log][origin][file][name]")
-    l("[client][bytes]")
-    s("[dns][header_flags]")
-    l("[process][uptime]")
-    s("[client][address]")
-    s("[client][user][roles]")
-    s("[destination][host][name]")
-    s("[server][host][name]")
-    s("[host][geo][country_iso_code]")
-    s("[dns][answers][type]")
-    s("[file][gid]")
-    s("[service][id]")
-    s("[database][query]")
-    s("[dns][op_code]")
-    s("[dns][question][name]")
-    s("[dns][question][class]")
-    s("[dns][question][type]")
-    s("[dns][response_code]")
-    s("[dns][resolved_ip]")
-    s("[dns][answers][data]")
-    s("[dns][answers][name]")
-    s("[dns][id]")
-    s("[host][type]")
-    s("[package][name]")
-    b.toArray
-  }
-
   private val flattenTrie: FTrie = new FTrie
 
   /** Tag-derived boolean columns (ordinal, tagTrue, tagFalse) and the
-    * ordinals defaulting to the shared empty array; also builds
-    * [[flattenTrie]] and asserts the spec covers the schema exactly. */
+    * event-derived ordinals defaulting to the shared empty array; also
+    * builds [[flattenTrie]]. */
   private val (privOrdinals, derivedArrOrdinals): (Array[(Int, String, String)], Array[Int]) = {
     val privs = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
     val arrs = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var idx = 0
-    while (idx < derivedCols.length) {
-      val c = derivedCols(idx)
-      val ord = numContextCols + idx
-      if (c.path == null) privs += ((ord, c.tagTrue, c.tagFalse))
-      else {
+    Columns.all.zipWithIndex.foreach { case (c, ord) =>
+      if (c.kind == Columns.Priv) privs += ((ord, c.tagTrue, c.tagFalse))
+      else if (c.kind != Columns.Context) {
         var n = flattenTrie
-        graft.model.Event.parsePath(c.path).foreach { seg =>
+        Event.parsePath(c.path).foreach { seg =>
           var ch = n.children.get(seg)
           if (ch == null) { ch = new FTrie; n.children.put(seg, ch) }
           n = ch
@@ -574,12 +211,9 @@ object RowKernel {
         require(n.ordinal == -1, s"duplicate flatten path ${c.path}")
         n.ordinal = ord
         n.kind = c.kind
-        if (c.kind == KA) arrs += ord
+        if (c.kind == Columns.Arr) arrs += ord
       }
-      idx += 1
     }
-    require(numContextCols + derivedCols.length == numFields,
-      s"flatten spec covers ${numContextCols + derivedCols.length} of $numFields fields")
     (privs.toArray, arrs.toArray)
   }
 
@@ -671,7 +305,7 @@ object RowKernel {
     * semantics (returning null keeps the column's default). */
   private def convertLeaf(value: Any, kind: Int,
                           textStr: String, textU8: UTF8String): Any = kind match {
-    case KS => value match {
+    case Columns.Str => value match {
       case x: String =>
         if ((x eq textStr) && textU8 != null) textU8 else UTF8String.fromString(x)
       case x: Long => UTF8String.fromString(x.toString)
@@ -679,7 +313,7 @@ object RowKernel {
       case x: Boolean => UTF8String.fromString(x.toString)
       case _ => null
     }
-    case KL => value match {
+    case Columns.Lng => value match {
       case x: Long => java.lang.Long.valueOf(x)
       case x: String => x.toLongOption match {
         case Some(n) => java.lang.Long.valueOf(n)
@@ -688,7 +322,7 @@ object RowKernel {
       case x: Double => java.lang.Long.valueOf(x.toLong)
       case _ => null
     }
-    case _ => value match { // KA
+    case _ => value match { // Columns.Arr
       case a: scala.collection.mutable.ArrayBuffer[Any @unchecked] =>
         val b = Array.newBuilder[Any]
         b.sizeHint(a.length)

@@ -53,7 +53,7 @@ case class GraftParseExec(output: Seq[Attribute], emitDropped: Boolean,
     val m = mode
     val layout = if (m == GraftParse.Counts) RowKernel.countSchema else RowKernel.schema
     val mask = if (m == GraftParse.Masked) RowKernel.maskFor(output.map(_.name)) else null
-    // nullable = true: a masked-out or marker field may be null whatever the encoder declared
+    // nullable = true: a masked-out or marker field may be null whatever the column table declares
     val fields = output.map(a => BoundReference(layout.fieldIndex(a.name), a.dataType, nullable = true))
     val (bc, withDropped, numOut) = (dicts, emitDropped, longMetric("numOutputRows"))
     child.execute().mapPartitionsInternal { it =>

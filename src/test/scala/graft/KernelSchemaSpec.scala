@@ -1,0 +1,36 @@
+package graft
+
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.RowKernel
+
+/** The kernel's output schema is derived from one column table
+  * (`graft.model.Columns`); it must keep the names, types, nullability and
+  * order recorded in `kernel_schema.json`, and the counts-mode schema must
+  * be the same fields picked from it. */
+class KernelSchemaSpec extends AnyFunSuite {
+
+  test("derived kernel schema equals the recorded golden") {
+    val src = scala.io.Source.fromResource("kernel_schema.json")
+    val golden = try DataType.fromJson(src.mkString).asInstanceOf[StructType] finally src.close()
+    assert(RowKernel.schema.length == golden.length)
+    RowKernel.schema.fields.zip(golden.fields).zipWithIndex.foreach { case ((got, want), i) =>
+      assert(got == want, s"column $i")
+    }
+  }
+
+  test("countSchema is its five columns picked from the kernel schema") {
+    val names = Seq("technology", "role", "tool", "ts", "route_outputs")
+    assert(RowKernel.countSchema == StructType(names.map(RowKernel.schema(_))))
+  }
+}
+
+object KernelSchemaSpec {
+  /** Re-record the golden after a deliberate change of the output schema:
+    * `Test/runMain graft.KernelSchemaSpec src/test/resources/kernel_schema.json`. */
+  def main(args: Array[String]): Unit = {
+    val Array(out) = args
+    java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      (RowKernel.schema.prettyJson + "\n").getBytes("UTF-8"))
+  }
+}

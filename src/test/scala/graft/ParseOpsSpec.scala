@@ -399,6 +399,8 @@ class EnrichArraySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("ECS nested projection exposes struct families") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.StructType
     val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC").getOrCreate()
@@ -407,8 +409,25 @@ class EnrichArraySpec extends org.scalatest.funsuite.AnyFunSuite {
     val f = ecs.schema.fieldNames.toSet
     assert(Set("event", "source", "destination", "network", "log", "user",
       "url", "related", "@timestamp").subsetOf(f))
-    assert(ecs.schema("event").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(ecs.schema("event").dataType.asInstanceOf[StructType]
       .fieldNames.contains("dataset"))
+    // every column with a path is exactly one leaf of the view, at that path
+    def leaves(st: StructType, at: Seq[String]): Seq[Seq[String]] = st.fields.toSeq.flatMap { f =>
+      f.dataType match {
+        case s: StructType => leaves(s, at :+ f.name)
+        case _ => Seq(at :+ f.name)
+      }
+    }
+    val got = leaves(ecs.schema, Nil)
+    val paths = graft.model.Columns.all.filter(_.path != null).map(c => Event.parsePath(c.path))
+    assert(got.size == graft.model.Columns.all.size)
+    paths.foreach(p => assert(got.count(_ == p) == 1, p.mkString(".")))
+    // nested leaves carry the flat columns' values (ua_os_name is null on
+    // every sf0.001 row, so the populated ua_os_family rides along)
+    val flat = parsed.select(col("event_dataset"), col("ua_os_name"), col("ua_os_family"))
+    val nested = ecs.select(col("event.dataset"), col("user_agent.os.name"), col("user_agent.os.family"))
+    assert(flat.filter(col("event_dataset").isNotNull && col("ua_os_family").isNotNull).count() > 0)
+    assert(flat.exceptAll(nested).count() == 0 && nested.exceptAll(flat).count() == 0)
     assert(ecs.count() > 0)
   }
 }
