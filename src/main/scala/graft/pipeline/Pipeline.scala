@@ -18,10 +18,12 @@ object Pipeline {
   @volatile private var cachedBc: Option[(SparkSession, Broadcast[Dicts])] = None
 
   /** Broadcast the dictionaries once per session (translate/geoip/dns/misp
-    * tables; SURVEY.md §2.4), and register the GraftParse planner and
-    * pruning rule on the session. */
+    * tables; SURVEY.md §2.4), register the GraftParse planner and pruning
+    * rule on the session, and install the fork-free `file:` FileContext
+    * ([[graft.io.LocalFs]]) under the session's streaming checkpoints. */
   def dictsBroadcast(spark: SparkSession): Broadcast[Dicts] = synchronized {
     GraftParse.register(spark)
+    installLocalFs(spark)
     cachedBc match {
       case Some((s, bc)) if s eq spark => bc
       case _ =>
@@ -33,6 +35,20 @@ object Pipeline {
         cachedBc = Some((spark, bc))
         bc
     }
+  }
+
+  private val fileFsKey = "fs.AbstractFileSystem.file.impl"
+
+  /** Session confs reach every Hadoop conf the session builds
+    * (`sessionState.newHadoopConf()`), so every streaming checkpoint file
+    * manager, executor-side state stores included, writes through
+    * [[graft.io.LocalFs]]. A value the user set, as a session conf or in
+    * the Hadoop configuration, wins. */
+  private def installLocalFs(spark: SparkSession): Unit = {
+    val sources = spark.sparkContext.hadoopConfiguration.getPropertySources(fileFsKey)
+    val userSet = spark.conf.getOption(fileFsKey).isDefined ||
+      (sources != null && !sources.forall(_ == "core-default.xml"))
+    if (!userSet) spark.conf.set(fileFsKey, classOf[graft.io.LocalFs].getName)
   }
 
   /** Input DataFrame with the 6 input_hint columns → parsed: the

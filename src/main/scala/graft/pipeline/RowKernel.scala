@@ -63,10 +63,11 @@ object RowKernel {
 
   /** The preamble every kernel mode shares: per partition, a technology
     * cache; per input row (conv_id, turn_idx, role, text, tool, ts), its
-    * compiled technology, `ts` in micros and millis, and the decoded text.
-    * `f` returns the turn's output rows. */
+    * compiled technology, the `ts` output value (boxed micros, or null for
+    * a null `ts`), `ts` in millis for the parse context (0 for a null `ts`)
+    * and the decoded text. `f` returns the turn's output rows. */
   private def eachTurn(it: Iterator[InternalRow])(
-      f: (InternalRow, Tech, Long, Long, String) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
+      f: (InternalRow, Tech, Any, Long, String) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
     val techs = new java.util.HashMap[UTF8String, Tech]()
     it.flatMap { row =>
       val toolU8 = if (row.isNullAt(4)) UTF8String.EMPTY_UTF8 else row.getUTF8String(4)
@@ -77,9 +78,10 @@ object RowKernel {
         tech = new Tech(key, cfg, program)
         techs.put(key, tech)
       }
-      val tsMicros = row.getLong(5)
+      val ts = if (row.isNullAt(5)) null else java.lang.Long.valueOf(row.getLong(5))
+      val tsMillis = if (ts == null) 0L else Math.floorDiv(ts.longValue, 1000L)
       val text = if (row.isNullAt(3)) null else row.getUTF8String(3).toString
-      f(row, tech, tsMicros, Math.floorDiv(tsMicros, 1000L), text)
+      f(row, tech, ts, tsMillis, text)
     }
   }
 
@@ -97,21 +99,21 @@ object RowKernel {
     * columns); `null` mask = full flatten. */
   def process(it: Iterator[InternalRow], dicts: Dicts,
               emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] =
-    eachTurn(it) { (row, tech, tsMicros, tsMillis, text) =>
+    eachTurn(it) { (row, tech, ts, tsMillis, text) =>
       val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
       if (results == null && !emitDropped) Nil
       else {
         val convU8 = if (row.isNullAt(0)) null else row.getUTF8String(0).clone()
-        val turnIdx = row.getInt(1)
+        val turnIdx = if (row.isNullAt(1)) null else java.lang.Integer.valueOf(row.getInt(1))
         val roleU8 = if (row.isNullAt(2)) null else row.getUTF8String(2).clone()
         val textU8 = if (row.isNullAt(3)) null else row.getUTF8String(3).clone()
         if (results == null)
-          droppedRow(tech, convU8, turnIdx, roleU8, textU8, tsMicros, tsMillis) :: Nil
+          droppedRow(tech, convU8, turnIdx, roleU8, textU8, ts, tsMillis) :: Nil
         else {
           var i = -1
           results.map { case (ev, parseOk) =>
             i += 1
-            flatten(ev, parseOk, i, tech, convU8, turnIdx, roleU8, textU8, tsMicros, tsMillis,
+            flatten(ev, parseOk, i, tech, convU8, turnIdx, roleU8, textU8, ts, tsMillis,
               mask, text)
           }
         }
@@ -165,28 +167,28 @@ object RowKernel {
   def processCounts(it: Iterator[InternalRow], dicts: Dicts): Iterator[InternalRow] = {
     val out = new Array[Any](5)
     val row = new GenericInternalRow(out)
-    eachTurn(it) { (r, tech, tsMicros, tsMillis, text) =>
+    eachTurn(it) { (r, tech, ts, tsMillis, text) =>
       val n = Engine.parseCardinality(tech.cfg, tech.program, text, tsMillis, dicts)
       if (n == 0) Nil
       else {
         out(0) = tech.techU8
         out(1) = if (r.isNullAt(2)) null else r.getUTF8String(2).clone()
         out(2) = tech.toolU8
-        out(3) = tsMicros
+        out(3) = ts
         out(4) = tech.routeOutputs
         Iterator.fill(n)(row)
       }
     }
   }
 
-  private def droppedRow(tech: Tech, convU8: UTF8String, turnIdx: Int,
+  private def droppedRow(tech: Tech, convU8: UTF8String, turnIdx: Any,
                          roleU8: UTF8String, textU8: UTF8String,
-                         tsMicros: Long, tsMillis: Long): InternalRow = {
+                         ts: Any, tsMillis: Long): InternalRow = {
     val v = new Array[Any](numFields)
     var j = 0
     while (j < arrayOrdinals.length) { v(arrayOrdinals(j)) = emptyArray; j += 1 }
     v(0) = convU8; v(1) = turnIdx; v(2) = 0; v(3) = roleU8; v(4) = tech.toolU8
-    v(5) = tsMicros; v(6) = textU8; v(7) = tech.techU8; v(8) = droppedRule
+    v(5) = ts; v(6) = textU8; v(7) = tech.techU8; v(8) = droppedRule
     v(9) = false; v(11) = tech.routeIndexU8(tsMillis)
     new GenericInternalRow(v)
   }
@@ -218,8 +220,8 @@ object RowKernel {
   }
 
   private def flatten(ev: Event, parseOk: Boolean, subIdx: Int, tech: Tech,
-                      convU8: UTF8String, turnIdx: Int, roleU8: UTF8String,
-                      textU8: UTF8String, tsMicros: Long, tsMillis: Long,
+                      convU8: UTF8String, turnIdx: Any, roleU8: UTF8String,
+                      textU8: UTF8String, ts: Any, tsMillis: Long,
                       mask: Array[Boolean] = null, textStr: String = null): InternalRow = {
     val v = new Array[Any](numFields)
     v(0) = convU8                     // conv_id
@@ -227,7 +229,7 @@ object RowKernel {
     v(2) = subIdx                     // sub_idx
     v(3) = roleU8                     // role
     v(4) = tech.toolU8                // tool — raw input value passthrough
-    v(5) = tsMicros                   // ts
+    v(5) = ts                         // ts
     v(6) = textU8                     // text — UNTOUCHED passthrough
     v(7) = tech.techU8                // technology
     val pr = ev.valueOrNull("[agent][parse_rule]") match {

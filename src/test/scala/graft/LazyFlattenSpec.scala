@@ -115,4 +115,30 @@ class LazyFlattenSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally cached.unpersist()
     }
   }
+
+  test("a null ts or turn_idx comes out null in the counts, masked, full and marker rows") {
+    // the iis corpus has drop{}-ed turns, so emitDropped makes marker rows
+    val nulls = Seq(Transcripts.input _, Transcripts.iisInput _).map(_(spark, sf)).reduce(_ union _)
+      .withColumn("turn_idx", lit(null).cast("int"))
+      .withColumn("ts", lit(null).cast("timestamp"))
+    def nonNull(df: DataFrame, c: String): Long = df.filter(col(c).isNotNull).count()
+
+    val counts = Pipeline.parseDfSelect(spark, nulls, aggCols)
+    assert(counts.count() > 0 && nonNull(counts, "ts") == 0)
+    assert(modes(counts) == Seq("counts"))
+    val masked = Pipeline.parseDfSelect(spark, nulls, Seq("turn_idx", "ts", "event_module"))
+    assert(masked.count() > 0 && nonNull(masked, "turn_idx") == 0 && nonNull(masked, "ts") == 0)
+    assert(modes(masked) == Seq("masked"))
+    val full = Pipeline.parseDf(spark, nulls)
+    val rows = full.collect()
+    assert(modes(full) == Seq("full"))
+    val (ti, ts) = (full.schema.fieldIndex("turn_idx"), full.schema.fieldIndex("ts"))
+    assert(rows.nonEmpty && rows.forall(r => r.isNullAt(ti) && r.isNullAt(ts)))
+    val markers = Pipeline.parseRows(spark, nulls, emitDropped = true)
+      .filter(col("parse_rule") === "dropped").select("turn_idx", "ts")
+    assert(markers.count() > 0 && nonNull(markers, "turn_idx") == 0 && nonNull(markers, "ts") == 0)
+    // a null ts falls in no hour bucket, where it read as 1970-01-01 before
+    val buckets = Pipeline.sinkCounts(Pipeline.parseDf(spark, nulls))
+    assert(buckets.count() > 0 && nonNull(buckets, "y") == 0)
+  }
 }

@@ -215,7 +215,9 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
   override def afterAll(): Unit = spark.stop()
 
-  test("file-sink streaming run resumes from checkpoint without duplicates") {
+  /** Run 1 on `first` over half the input, run 2 on `second` over the
+    * rest with the same checkpoint; the output holds each event once. */
+  private def resumeExactlyOnce(first: SparkSession, second: SparkSession): Unit = {
     spark.sparkContext.setLogLevel("ERROR")
     val inDir = Files.createTempDirectory("graft-sr-in-").toString
     val outDir = Files.createTempDirectory("graft-sr-out-").toString + "/out"
@@ -226,8 +228,8 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val part2 = all.filter(col("turn_idx") % 2 === 1)
     part1.write.mode("overwrite").parquet(inDir)
 
-    def runOnce(): Unit = {
-      val parsed = StreamingPipeline.parse(spark, StreamingPipeline.readTurns(spark, inDir))
+    def runOnce(session: SparkSession): Unit = {
+      val parsed = StreamingPipeline.parse(session, StreamingPipeline.readTurns(session, inDir))
       val q = parsed
         .select("conv_id", "turn_idx", "sub_idx", "technology", "event_hash")
         .writeStream.format("parquet")
@@ -237,16 +239,33 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
         .start()
       q.awaitTermination()
     }
-    runOnce()
+    runOnce(first)
     val n1 = spark.read.parquet(outDir).count()
     // new files arrive, resume with the SAME checkpoint
     part2.write.mode("append").parquet(inDir)
-    runOnce()
+    runOnce(second)
     val out = spark.read.parquet(outDir)
     val expected = graft.pipeline.Pipeline.parseDf(spark, all).toDF()
       .select("conv_id", "turn_idx", "sub_idx", "technology", "event_hash")
     assert(n1 > 0 && out.count() > n1)
     assert(out.exceptAll(expected).count() == 0 && expected.exceptAll(out).count() == 0,
       "streaming resume must emit each event exactly once")
+  }
+
+  test("file-sink streaming run resumes from checkpoint without duplicates") {
+    resumeExactlyOnce(spark, spark)
+  }
+
+  test("a checkpoint written through Hadoop's LocalFs resumes under graft's; a user's file: impl wins") {
+    val key = "fs.AbstractFileSystem.file.impl"
+    val hadoopLocalFs = "org.apache.hadoop.fs.local.LocalFs"
+    val first = spark.newSession()
+    first.conf.set(key, hadoopLocalFs)
+    graft.pipeline.Pipeline.dictsBroadcast(first)
+    assert(first.conf.get(key) == hadoopLocalFs)
+    val second = spark.newSession()
+    graft.pipeline.Pipeline.dictsBroadcast(second)
+    assert(second.conf.get(key) == classOf[graft.io.LocalFs].getName)
+    resumeExactlyOnce(first, second)
   }
 }
