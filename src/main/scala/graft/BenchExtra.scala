@@ -98,7 +98,7 @@ object BenchExtra {
           val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
         }
         val tBuild = t(graft.enrich.Dicts.build())
-        var store: Map[String, Map[String, String]] = null
+        var store: Map[String, graft.enrich.FlatDict] = null
         val tStore = t { store = graft.pipeline.MispFeeder.store(s2) }
         val d = graft.enrich.Dicts.build().copy(misp = store)
         val tBc = t(s2.sparkContext.broadcast(d))

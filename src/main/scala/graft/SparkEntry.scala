@@ -248,7 +248,7 @@ px AS (
     // the kernel's e90 result on every row
     "q21_translate_join" -> ((s, dir) => {
       import s.implicits._
-      val dictDf = graft.enrich.Dicts.IanaTransport.toSeq
+      val dictDf = graft.enrich.Dicts.IanaTransport.iterator.toSeq
         .toDF("iana_no", "transport_joined")
       parsed(s, dir)
         .filter(col("technology").isin("palo.alto.fw", "aws.vpcflow"))

@@ -14,91 +14,23 @@ package graft.enrich
   * replays are exact (SURVEY.md §7.4 #4).
   *
   * Built once on the driver, shipped to executors via `sc.broadcast`.
+  *
+  * Every String→String table is a [[FlatDict]]: a byte arena plus an int
+  * index, and only the arena goes over the wire.
   */
 final case class Dicts(
-  ianaTransport: Map[String, String], // protocol number → transport keyword (139 entries)
-  mnemonics: Map[String, String], // 100k-entry translate dict (reference-documented scale)
-  ianaProtocols: Map[String, String], // "port/transport" → protocol keyword (11.8k entries)
-  ianaProtocolsPort: Map[String, String], // "port" → protocol keyword (6.1k entries)
-  mitreTactics: Map[String, String], // "ta0001" → kv-encoded payload string (ref format)
-  facilityCategories: Map[String, String], // cisco facility → vendor category (1.3k entries)
-  ciscoMnemonicInfo: Map[String, String], // mnemonic → JSON payload (ref file absent; synthetic)
+  ianaTransport: FlatDict, // protocol number → transport keyword (139 entries)
+  mnemonics: FlatDict, // 100k-entry translate dict (reference-documented scale)
+  ianaProtocols: FlatDict, // "port/transport" → protocol keyword (11.8k entries)
+  ianaProtocolsPort: FlatDict, // "port" → protocol keyword (6.1k entries)
+  mitreTactics: FlatDict, // "ta0001" → kv-encoded payload string (ref format)
+  facilityCategories: FlatDict, // cisco facility → vendor category (1.3k entries)
+  ciscoMnemonicInfo: FlatDict, // mnemonic → JSON payload (ref file absent; synthetic)
   geoRanges: Array[GeoRange], // sorted by start, binary-searched
-  ptr: Map[String, String], // ip → reverse-dns hostname
+  ptr: FlatDict, // ip → reverse-dns hostname
   iocIps: Set[String], // destination.ip IOC set (kept for the q19 contract)
-  misp: Map[String, Map[String, String]] // namespace → md5(value) → JSON payload
-) extends Serializable {
-  /** Broadcast cost: default Java serialization walks the immutable-Map
-    * object graph with a per-String handle table — measured ~1.2 s per
-    * session broadcast on the ~280k-entry table. The proxy writes flat
-    * UTF pairs instead (~4× less work, same content; DictsSpec pins the
-    * roundtrip). */
-  protected def writeReplace(): AnyRef = new DictsSerProxy(this)
-}
-
-/** Serialization proxy for [[Dicts]] (writeReplace/readResolve pattern):
-  * on-wire form is a flat stream of sizes + UTF-8 strings, rebuilt into
-  * the same immutable structures on read. All dictionary keys/values are
-  * short strings (largest are ~200-char JSON payloads), far under
-  * writeUTF's 64 KB limit. */
-private[enrich] final class DictsSerProxy(@transient private var d: Dicts)
-    extends java.io.Externalizable {
-  def this() = this(null) // Externalizable no-arg contract
-  import java.io.{ObjectInput, ObjectOutput}
-  private def wMap(out: ObjectOutput, m: Map[String, String]): Unit = {
-    out.writeInt(m.size)
-    m.foreach { case (k, v) => out.writeUTF(k); out.writeUTF(v) }
-  }
-  private def rMap(in: ObjectInput): Map[String, String] = {
-    val n = in.readInt()
-    val b = Map.newBuilder[String, String]
-    b.sizeHint(n)
-    var i = 0
-    while (i < n) { b += (in.readUTF() -> in.readUTF()); i += 1 }
-    b.result()
-  }
-  override def writeExternal(out: ObjectOutput): Unit = {
-    wMap(out, d.ianaTransport); wMap(out, d.mnemonics)
-    wMap(out, d.ianaProtocols); wMap(out, d.ianaProtocolsPort)
-    wMap(out, d.mitreTactics); wMap(out, d.facilityCategories)
-    wMap(out, d.ciscoMnemonicInfo)
-    out.writeInt(d.geoRanges.length)
-    d.geoRanges.foreach { r =>
-      out.writeLong(r.start); out.writeLong(r.end)
-      out.writeUTF(r.country); out.writeUTF(r.city)
-    }
-    wMap(out, d.ptr)
-    out.writeInt(d.iocIps.size); d.iocIps.foreach(out.writeUTF)
-    out.writeInt(d.misp.size)
-    d.misp.foreach { case (ns, m) => out.writeUTF(ns); wMap(out, m) }
-  }
-  override def readExternal(in: ObjectInput): Unit = {
-    val ianaTransport = rMap(in); val mnemonics = rMap(in)
-    val ianaProtocols = rMap(in); val ianaProtocolsPort = rMap(in)
-    val mitreTactics = rMap(in); val facilityCategories = rMap(in)
-    val ciscoMnemonicInfo = rMap(in)
-    val nGeo = in.readInt()
-    val geo = new Array[GeoRange](nGeo)
-    var i = 0
-    while (i < nGeo) {
-      geo(i) = GeoRange(in.readLong(), in.readLong(), in.readUTF(), in.readUTF())
-      i += 1
-    }
-    val ptr = rMap(in)
-    val nIoc = in.readInt()
-    val iocB = Set.newBuilder[String]
-    i = 0
-    while (i < nIoc) { iocB += in.readUTF(); i += 1 }
-    val nNs = in.readInt()
-    val mispB = Map.newBuilder[String, Map[String, String]]
-    i = 0
-    while (i < nNs) { mispB += (in.readUTF() -> rMap(in)); i += 1 }
-    d = Dicts(ianaTransport, mnemonics, ianaProtocols, ianaProtocolsPort,
-      mitreTactics, facilityCategories, ciscoMnemonicInfo, geo, ptr,
-      iocB.result(), mispB.result())
-  }
-  private def readResolve(): AnyRef = d
-}
+  misp: Map[String, FlatDict] // namespace → md5(value) → JSON payload
+)
 
 final case class GeoRange(start: Long, end: Long, country: String, city: String)
 
@@ -116,8 +48,8 @@ object Dicts {
     * IANA lists several service names for some ports (e.g. 80/tcp → http,
     * www, www-http); we keep the FIRST (primary IANA name) — semicolon-joined
     * alternates in the port file are reduced the same way. */
-  private def loadYamlMap(name: String): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
+  private def loadYamlMap(name: String): FlatDict = {
+    val b = Vector.newBuilder[(String, String)]
     val seen = scala.collection.mutable.HashSet.empty[String]
     resourceLines(name).foreach { line =>
       val t = line.trim
@@ -131,21 +63,21 @@ object Dicts {
         }
       }
     }
-    b.result()
+    FlatDict(b.result())
   }
 
   /** Flat string→string JSON dictionary (mitre_*.json shape). */
-  private def loadJsonMap(name: String): Map[String, String] = {
+  private def loadJsonMap(name: String): FlatDict = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(resourceLines(name).mkString("\n"))
-    val b = Map.newBuilder[String, String]
+    val b = Vector.newBuilder[(String, String)]
     node.properties().forEach(e => b += (e.getKey -> e.getValue.asText()))
-    b.result()
+    FlatDict(b.result())
   }
 
   /** cisco_ios_facility_categories.csv: facility,"vendor category","url". */
-  private def loadFacilityCsv(): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
+  private def loadFacilityCsv(): FlatDict = {
+    val b = Vector.newBuilder[(String, String)]
     resourceLines("cisco_ios_facility_categories.csv").drop(1).foreach { line =>
       val c1 = line.indexOf(',')
       if (c1 > 0) {
@@ -157,17 +89,17 @@ object Dicts {
         b += (facility -> cat)
       }
     }
-    b.result()
+    FlatDict(b.result())
   }
 
-  lazy val IanaTransport: Map[String, String] = loadYamlMap("iana_transport.yml")
-  lazy val IanaProtocols: Map[String, String] = loadYamlMap("iana_protocols.yml")
-  lazy val IanaProtocolsPort: Map[String, String] = loadYamlMap("iana_protocols_port.yml")
+  lazy val IanaTransport: FlatDict = loadYamlMap("iana_transport.yml")
+  lazy val IanaProtocols: FlatDict = loadYamlMap("iana_protocols.yml")
+  lazy val IanaProtocolsPort: FlatDict = loadYamlMap("iana_protocols_port.yml")
 
   /** MITRE tactic id → raw payload string, exactly as the reference file
     * encodes it ("[threat][tactic][name]: X; [threat][tactic][reference]:
     * URL;" — parsed by the kv step of 93_mitre.conf). */
-  lazy val MitreTactics: Map[String, String] = loadJsonMap("mitre_tactics.json")
+  lazy val MitreTactics: FlatDict = loadJsonMap("mitre_tactics.json")
 
   /** Synthetic deterministic geo "database": 8.0.0.0/8 sliced by second octet
     * into country bands (stands in for GeoLite2-City.mmdb,
@@ -192,14 +124,11 @@ object Dicts {
     * (50,800 entries — same order of magnitude as the reference's DNS
     * hit-cache sizing, ref: config/enrichments/17_dns.conf:47-52).
     * hostname = 'ptr-a-b-c-d.internal'. */
-  def buildPtr(): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    for (prefix <- Seq("192.168", "172.16"); o3 <- 0 until 100; o4 <- 1 to 254) {
+  def buildPtr(): FlatDict =
+    FlatDict(for (prefix <- Seq("192.168", "172.16"); o3 <- 0 until 100; o4 <- 1 to 254) yield {
       val ip = s"$prefix.$o3.$o4"
-      b += (ip -> s"ptr-${ip.replace('.', '-')}.internal")
-    }
-    b.result()
-  }
+      ip -> s"ptr-${ip.replace('.', '-')}.internal"
+    })
 
   /** Deterministic IOC set (destination.ip namespace): destination IPs whose
     * last octet is 13 are "known bad" (stands in for the memcached MISP
@@ -217,82 +146,70 @@ object Dicts {
     * event on hit (ref :30-33). Namespaces ported (in the conf's order):
     * file.hash.md5 (:71), source.ip (:316), destination.ip (:341),
     * url.domain (:491). */
-  def buildMisp(): Map[String, Map[String, String]] = {
+  def buildMisp(): Map[String, FlatDict] = {
     import graft.util.Md5
     def payload(kind: String, v: String, ns: String) =
       s"""{"misp":{"$kind":"$v","provider":"misp-$ns"}}"""
-    val dst = Map.newBuilder[String, String]
-    buildIoc().foreach(ip => dst += (Md5.hex(ip) -> payload("ip", ip, "destination.ip")))
+    val dst = buildIoc().toSeq.map(ip => Md5.hex(ip) -> payload("ip", ip, "destination.ip"))
     // source ips: synthesized space is (8|10).(0..199).(0..249).(1+k); last
     // octet 13 is "known bad" — 100k entries, a realistically sized feed
-    val src = Map.newBuilder[String, String]
-    for (p <- Seq("8", "10"); a <- 0 until 200; b <- 0 until 250) {
+    val src = for (p <- Seq("8", "10"); a <- 0 until 200; b <- 0 until 250) yield {
       val ip = s"$p.$a.$b.13"
-      src += (Md5.hex(ip) -> payload("ip", ip, "source.ip"))
+      Md5.hex(ip) -> payload("ip", ip, "source.ip")
     }
     // url domains: app7 is "known bad"
     val dom = Seq("www.app7.co.uk")
-      .map(d => Md5.hex(d) -> payload("domain", d, "url.domain")).toMap
+      .map(d => Md5.hex(d) -> payload("domain", d, "url.domain"))
     // file hashes: md5-of-(k mod 1000) pool, bad when k % 10 == 4
-    val fh = Map.newBuilder[String, String]
-    (0 until 1000).filter(_ % 10 == 4).foreach { k =>
+    val fh = (0 until 1000).filter(_ % 10 == 4).map { k =>
       val h = Md5.hex(k.toString)
-      fh += (Md5.hex(h) -> payload("hash", h, "file.hash.md5"))
+      Md5.hex(h) -> payload("hash", h, "file.hash.md5")
     }
     // related.mac: cef-standardized macs whose 5th octet is 42
     val mac = (0 until 100).map { u =>
       val m = f"aa:bb:cc:dd:42:$u%02d"
       Md5.hex(m) -> payload("mac", m, "related.mac")
-    }.toMap
+    }
     // related.hosts: 12-digit shipper account ids ≡17 (mod 50) + one
     // known-bad computer name
-    val hosts = Map.newBuilder[String, String]
-    (17 until 100000 by 50).foreach { k =>
+    val hosts = (17 until 100000 by 50).map { k =>
       val h = f"$k%012d"
-      hosts += (Md5.hex(h) -> payload("host", h, "related.hosts"))
-    }
-    hosts += (Md5.hex("host7") -> payload("host", "host7", "related.hosts"))
+      Md5.hex(h) -> payload("host", h, "related.hosts")
+    } :+ (Md5.hex("host7") -> payload("host", "host7", "related.hosts"))
     // file.name / user_agent.original / user.email / related.user seeds
     val fn = Seq("data/obj7.parquet", "doc7.bin", "doc107.bin")
-      .map(v => Md5.hex(v) -> payload("name", v, "file.name")).toMap
-    val ua = Map(Md5.hex("curl/8.5") -> payload("ua", "curl/8.5", "user_agent.original"))
-    val uem = Map(Md5.hex("u13@example.com") ->
+      .map(v => Md5.hex(v) -> payload("name", v, "file.name"))
+    val ua = Seq(Md5.hex("curl/8.5") -> payload("ua", "curl/8.5", "user_agent.original"))
+    val uem = Seq(Md5.hex("u13@example.com") ->
       payload("email", "u13@example.com", "user.email"))
-    val rusr = Map(Md5.hex("u13") -> payload("user", "u13", "related.user"))
+    val rusr = Seq(Md5.hex("u13") -> payload("user", "u13", "related.user"))
     Map(
-      "file.hash.md5" -> fh.result(),
-      "source.ip" -> src.result(),
-      "destination.ip" -> dst.result(),
+      "file.hash.md5" -> fh,
+      "source.ip" -> src,
+      "destination.ip" -> dst,
       "url.domain" -> dom,
       "related.mac" -> mac,
-      "related.hosts" -> hosts.result(),
+      "related.hosts" -> hosts,
       "file.name" -> fn,
       "user_agent.original" -> ua,
       "user.email" -> uem,
-      "related.user" -> rusr)
+      "related.user" -> rusr).map { case (ns, pairs) => ns -> FlatDict(pairs) }
   }
 
   /** Synthetic 100,000-entry mnemonic dictionary — the scale the reference
     * documents for `translate` ("tested with up to 100,000 key/values",
     * ref: config/processors/syslog_audit_cisco.switch.conf:87). Exercises a
     * realistically sized broadcast (~6 MB). */
-  def buildMnemonics(): Map[String, String] = {
-    val b = Map.newBuilder[String, String]
-    b.sizeHint(100000)
-    var i = 0
-    while (i < 100000) { b += (s"MNEM-$i" -> s"category${i % 37}"); i += 1 }
-    b.result()
-  }
+  def buildMnemonics(): FlatDict =
+    FlatDict(Iterator.range(0, 100000).map(i => s"MNEM-$i" -> s"category${i % 37}"))
 
   /** cisco mnemonic → JSON info payload (msg_explanation/msg_recommendation,
     * ref: syslog_audit_cisco.switch.conf:100-133). The reference's
     * cisco_ios.json file is NOT shipped in its repo, so the payloads here
     * are deterministic synthetic stand-ins with the documented shape. */
-  def buildCiscoMnemonicInfo(): Map[String, String] = {
-    Seq("UPDOWN", "ADJCHANGE", "CONFIG_I", "LOGIN_SUCCESS", "LOGIN_FAILED")
-      .map(m => m -> s"""{"msg_explanation":"explanation for $m","msg_recommendation":"recommendation for $m","msg_txt":"format for $m"}""")
-      .toMap
-  }
+  def buildCiscoMnemonicInfo(): FlatDict =
+    FlatDict(Seq("UPDOWN", "ADJCHANGE", "CONFIG_I", "LOGIN_SUCCESS", "LOGIN_FAILED")
+      .map(m => m -> s"""{"msg_explanation":"explanation for $m","msg_recommendation":"recommendation for $m","msg_txt":"format for $m"}"""))
 
   /** Built ONCE per JVM (round-6): the table is immutable configuration
     * data — classpath resources + deterministic synthesis, no input data

@@ -453,11 +453,12 @@ object Enrich {
       if (!present) ev.partsOrNull(ipF) match {
         case ip: String =>
           // copy → resolve → remove-if-unchanged collapses to set-on-hit
-          d.ptr.get(ip).foreach(h => ev.setParts(tgtF, h))
+          val h = d.ptr.get(ip)
+          if (h != null) ev.setParts(tgtF, h)
         case a: mutable.ArrayBuffer[Any @unchecked] =>
           val uniq2 = a.iterator.collect { case s: String => s }
             .distinct.take(2).toVector
-          val hits = uniq2.flatMap(ip => d.ptr.get(ip)) // unresolved pruned (:65-77)
+          val hits = uniq2.flatMap(ip => Option(d.ptr.get(ip))) // unresolved pruned (:65-77)
           if (hits.nonEmpty) ev.setParts(tgtF, mutable.ArrayBuffer[Any](hits: _*))
         case _ => ()
       }
@@ -493,8 +494,8 @@ object Enrich {
   private def e90Iana(ev: Event, d: Dicts, ctx: Ctx): Unit = {
     if (truthyAt(ev, pIanaNumber) && !truthyAt(ev, pNetTransport)) {
       val n = ev.stringAtParts(pIanaNumber)
-      if (n != null) d.ianaTransport.get(n)
-        .foreach(t => ev.setParts(pNetTransport, t))
+      val t = if (n == null) null else d.ianaTransport.get(n)
+      if (t != null) ev.setParts(pNetTransport, t)
     }
     if (!truthyAt(ev, pNetProtocol) && truthyAt(ev, pDestinationPort)) {
       val port = ev.stringAtParts(pDestinationPort) match {
@@ -505,7 +506,7 @@ object Enrich {
         case null => d.ianaProtocolsPort.get(port)
         case t => d.ianaProtocols.get(s"$port/$t")
       }
-      proto.foreach(p => ev.setParts(pNetProtocol, p))
+      if (proto != null) ev.setParts(pNetProtocol, proto)
     }
   }
 
@@ -647,18 +648,20 @@ object Enrich {
   private def mispActive(d: Dicts): Array[MispProbe] = {
     val c = mispActiveCache
     if (c != null && (c._1 eq d.misp)) return c._2
-    val arr = mispProbes.filter(p => d.misp.get(p.ns).exists(_.nonEmpty)).toArray
+    val arr = mispProbes.filter(p => d.misp.get(p.ns).exists(_.size > 0)).toArray
     mispActiveCache = (d.misp, arr)
     arr
   }
   private def e92Misp(ev: Event, d: Dicts, ctx: Ctx): Unit = {
-    def hit(ns: String, key: String): Unit =
-      d.misp.getOrElse(ns, Map.empty).get(key).foreach { payload =>
+    def hit(ns: String, key: String): Unit = {
+      val payload = d.misp(ns).get(key) // active probes only: ns is populated
+      if (payload != null) {
         ev.addTag("log_enriched_by_misp")
         ev.set("memcache_value", payload) // mirrors the memcached get target
         graft.parse.JsonOps.parse(ev, "memcache_value", "")
         ev.remove("memcache_value") // ref :34-36
       }
+    }
     val probes = mispActive(d)
     if (probes.nonEmpty) {
       // lazily resolved per-slot md5 (null = field absent); sentinel keeps
@@ -704,7 +707,8 @@ object Enrich {
   // rule.category keys into the mnemonic dict → rule.ruleset
   private def e22Mnemonic(ev: Event, d: Dicts, ctx: Ctx): Unit =
     ev.getString("[rule][category]").foreach { c =>
-      d.mnemonics.get(s"MNEM-$c").foreach(v => ev.set("[rule][ruleset]", v))
+      val v = d.mnemonics.get(s"MNEM-$c")
+      if (v != null) ev.set("[rule][ruleset]", v)
     }
 
   // 93_mitre.conf:21-42 — translate against the REAL mitre_tactics.json

@@ -29,7 +29,8 @@ object Pipeline {
       case _ =>
         // the IOC store is BUILT by the ported misp.metrics feeder job
         // (MispFeeder) — bit-identical to the synthetic table, proven by
-        // MispFeederSpec, so consumers are unaffected by the load path
+        // MispFeederSpec, so consumers are unaffected by the load path; the
+        // store then IS Dicts.build().misp, so the JVM holds one misp table
         val bc = spark.sparkContext.broadcast(
           Dicts.build().copy(misp = MispFeeder.store(spark)))
         cachedBc = Some((spark, bc))

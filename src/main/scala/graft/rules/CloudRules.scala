@@ -71,16 +71,16 @@ object CloudRules {
     // synthetic payloads with the documented shape)
     ev.getString("[tmp][mnemonic]").foreach { m =>
       dicts.ciscoMnemonicInfo.get(m) match {
-        case Some(js) =>
+        case null => // fallback-unfolding branch, ref :110-124
+          ev.set("[event][reason]", "not_found_msg_explanation")
+          ev.set("[event][recommendation]", "not_found_msg_recommendation")
+        case js =>
           ev.set("[tmp][mnemonic_translation]", js)
           JsonOps.parse(ev, "[tmp][mnemonic_translation]", "[tmp][mnemonic_translation]")
           ev.getString("[tmp][mnemonic_translation][msg_explanation]")
             .foreach(v => ev.set("[event][reason]", v))
           ev.getString("[tmp][mnemonic_translation][msg_recommendation]")
             .foreach(v => ev.set("[event][recommendation]", v))
-        case None => // fallback-unfolding branch, ref :110-124
-          ev.set("[event][reason]", "not_found_msg_explanation")
-          ev.set("[event][recommendation]", "not_found_msg_recommendation")
       }
     }
     ev.getString("[tmp][msg]").foreach(v => ev.set("[error][message]", v)) // ref :135-137

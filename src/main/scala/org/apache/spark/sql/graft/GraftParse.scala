@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
+import org.apache.spark.sql.types.TimestampType
 import org.apache.spark.storage.StorageLevel
 import graft.enrich.Dicts
 import graft.pipeline.RowKernel
@@ -87,9 +88,13 @@ object GraftParse {
     else Masked
 
   /** The kernel over `input` (the six input columns), at full width until
-    * the optimizer prunes it. */
+    * the optimizer prunes it. The kernel reads `ts` as a UTC instant, so a
+    * `TIMESTAMP_NTZ` input (what a naive DuckDB `TIMESTAMP` reads as) is
+    * cast to `TIMESTAMP`, taking its wall-clock time in the session zone as
+    * Spark's own `hour(ts)` does; for a `TIMESTAMP` input the cast is a no-op. */
   def dataFrame(input: DataFrame, emitDropped: Boolean, dicts: Broadcast[Dicts]): DataFrame = {
-    val ds = input.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val ds = input.withColumn("ts", input("ts").cast(TimestampType))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
       GraftParse(ds.logicalPlan, DataTypeUtils.toAttributes(RowKernel.schema), emitDropped, dicts))
   }

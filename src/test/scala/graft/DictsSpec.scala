@@ -8,38 +8,57 @@ import graft.enrich.Dicts
 class DictsSpec extends AnyFunSuite {
   test("iana transport dictionary is the full reference file") {
     assert(Dicts.IanaTransport.size >= 130)
-    assert(Dicts.IanaTransport("6") == "tcp")
-    assert(Dicts.IanaTransport("17") == "udp")
-    assert(Dicts.IanaTransport("132") == "sctp")
+    assert(Dicts.IanaTransport.get("6") == "tcp")
+    assert(Dicts.IanaTransport.get("17") == "udp")
+    assert(Dicts.IanaTransport.get("132") == "sctp")
   }
   test("iana protocols dictionaries are the full reference files (primary-name rule)") {
     assert(Dicts.IanaProtocols.size >= 5000)
-    assert(Dicts.IanaProtocols("80/tcp") == "http") // first/primary IANA name
-    assert(Dicts.IanaProtocols("443/udp") == "https")
+    assert(Dicts.IanaProtocols.get("80/tcp") == "http") // first/primary IANA name
+    assert(Dicts.IanaProtocols.get("443/udp") == "https")
     assert(Dicts.IanaProtocolsPort.size >= 3000)
-    assert(Dicts.IanaProtocolsPort("80") == "http") // semicolon-joined alternates reduced
-    assert(Dicts.IanaProtocolsPort("22") == "ssh")
+    assert(Dicts.IanaProtocolsPort.get("80") == "http") // semicolon-joined alternates reduced
+    assert(Dicts.IanaProtocolsPort.get("22") == "ssh")
   }
   test("mitre tactics dictionary carries the reference's kv-encoded payloads") {
     assert(Dicts.MitreTactics.size >= 14)
-    assert(Dicts.MitreTactics("ta0001").contains("[threat][tactic][name]: initial access"))
+    assert(Dicts.MitreTactics.get("ta0001").contains("[threat][tactic][name]: initial access"))
   }
   test("cisco facility categories load the full 1,296-entry reference CSV") {
     val d = Dicts.build()
     assert(d.facilityCategories.size >= 1280) // 1295 rows, a few dup facility keys
-    assert(d.facilityCategories("LINK") == "Data link")
-    assert(d.facilityCategories("AAA") == "Authentication, authorization, and accounting")
+    assert(d.facilityCategories.get("LINK") == "Data link")
+    assert(d.facilityCategories.get("AAA") == "Authentication, authorization, and accounting")
   }
-  test("java-serialization proxy roundtrips every field (broadcast wire format)") {
+  test("java serialization ships every field in the flat form (broadcast wire format)") {
     val d = Dicts.build()
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
     oos.writeObject(d); oos.close()
-    // the wire format is the proxy's, not default serialization of Dicts
-    assert(new String(bos.toByteArray, "ISO-8859-1").contains("DictsSerProxy"))
-    val d2 = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bos.toByteArray)).readObject().asInstanceOf[Dicts]
-    assert(d2 ne d) // genuinely went through the wire format
+    // read back, noting every class descriptor and String object on the wire
+    val classes = scala.collection.mutable.Set.empty[String]
+    var strings = 0
+    val ois = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray)) {
+      enableResolveObject(true)
+      override def resolveClass(desc: java.io.ObjectStreamClass): Class[_] = {
+        classes += desc.getName; super.resolveClass(desc)
+      }
+      override def resolveObject(o: AnyRef): AnyRef = {
+        if (o.isInstanceOf[String]) strings += 1
+        o
+      }
+    }
+    val d2 = ois.readObject().asInstanceOf[Dicts]
+    // the tables went over as FlatDict arenas: the only String objects on
+    // the wire are the geo, IOC and misp namespace strings (the map form
+    // shipped two per entry, ~560k)
+    assert(classes.contains(classOf[graft.enrich.FlatDict].getName))
+    assert(strings < 2000, s"$strings String objects on the wire")
+    assert(d2 ne d)
+    val tables = (d: Dicts) => Seq(d.ianaTransport, d.mnemonics, d.ianaProtocols,
+      d.ianaProtocolsPort, d.mitreTactics, d.facilityCategories, d.ciscoMnemonicInfo,
+      d.ptr) ++ d.misp.values
+    tables(d2).zip(tables(d)).foreach { case (t2, t) => assert(t2 ne t) }
     assert(d2.ianaTransport == d.ianaTransport)
     assert(d2.mnemonics == d.mnemonics)
     assert(d2.ianaProtocols == d.ianaProtocols)
@@ -57,6 +76,6 @@ class DictsSpec extends AnyFunSuite {
     assert(d.misp("source.ip").size == 100000)
     assert(d.misp("destination.ip").size == d.iocIps.size)
     val k = graft.util.Md5.hex("192.168.7.13")
-    assert(d.misp("destination.ip")(k).contains("misp-destination.ip"))
+    assert(d.misp("destination.ip").get(k).contains("misp-destination.ip"))
   }
 }

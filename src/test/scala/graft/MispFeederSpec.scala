@@ -24,16 +24,20 @@ class MispFeederSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("feeder-built store equals the verified synthetic store") {
-    val fed = MispFeeder.store(spark)
+    val fed = MispFeeder.storeFresh(spark)
     val ref = Dicts.buildMisp()
     assert(fed.keySet == ref.keySet)
     ref.foreach { case (ns, m) =>
       val f = fed(ns)
       assert(f.size == m.size, s"namespace $ns size")
       // pinpoint the first divergence instead of a megabyte diff
-      m.foreach { case (k, v) =>
-        assert(f.get(k).contains(v), s"namespace $ns key $k")
+      m.iterator.foreach { case (k, v) =>
+        assert(f.get(k) == v, s"namespace $ns key $k")
       }
     }
+  }
+
+  test("one misp table per JVM: the memoized store is the Dicts.build() instance") {
+    assert(MispFeeder.store(spark) eq Dicts.build().misp)
   }
 }

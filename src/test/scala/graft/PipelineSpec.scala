@@ -57,6 +57,21 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
+  test("sink counts of a TIMESTAMP_NTZ input do not depend on the session time zone") {
+    val input = Transcripts.input(spark, sf)
+    // DuckDB's naive TIMESTAMP reads as TIMESTAMP_NTZ: a wall-clock time,
+    // bucketed by its own hour in every zone (the input is January: no DST)
+    assert(input.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+    def counts(zone: String) = {
+      spark.conf.set("spark.sql.session.timeZone", zone)
+      try Pipeline.sinkCounts(Pipeline.parseDf(spark, input)).collect().toSet
+      finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    }
+    val utc = counts("UTC")
+    assert(utc.nonEmpty)
+    assert(counts("America/New_York") == utc)
+  }
+
   test("sink snapshot: manifests carry lineage+metrics; resume skips completed chunks; interrupted run converges") {
     val input = Transcripts.input(spark, sf)
     val full = tmp("graft-sink-full-")
