@@ -21,10 +21,11 @@ import graft.model.Event
   * Formatters are compiled once per (pattern, locale, zone) per JVM.
   */
 object Dates {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DateTimeFormatter]()
+  private final case class FormatterKey(pattern: String, locale: Locale, zone: ZoneId, defaultYear: Int)
+  private val cache = new java.util.concurrent.ConcurrentHashMap[FormatterKey, DateTimeFormatter]()
 
   private def formatter(pattern: String, locale: Locale, zone: ZoneId, defaultYear: Int): DateTimeFormatter = {
-    val key = s"$pattern|$locale|$zone|$defaultYear"
+    val key = FormatterKey(pattern, locale, zone, defaultYear)
     val c = cache.get(key)
     if (c != null) return c
     // Joda "ZZ" (colon-separated offset, e.g. "+00:00") = Java "XXX"

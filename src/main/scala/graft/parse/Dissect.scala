@@ -28,17 +28,13 @@ final case class CompiledDissect(tokens: Array[Dissect.Token],
                                  slotPaths: Array[Seq[String]]) {
   import Dissect._
 
-  // per-thread scratch, one cell per distinct target path — avoids any
-  // allocation per event in the hottest parse operator
-  @transient private lazy val scratch: ThreadLocal[Array[String]] =
-    ThreadLocal.withInitial(() => new Array[String](slotPaths.length))
-
   def extract(ev: Event, input: String): Boolean = {
-    // staged writes: only commit to the event if the whole mapping matches.
-    // `%{+f}` appends to any earlier capture of f (plain or +), joined by
-    // the token's compile-time append separator.
-    val values = scratch.get()
-    java.util.Arrays.fill(values.asInstanceOf[Array[AnyRef]], null)
+    // staged writes, one cell per distinct target path: only commit to the
+    // event if the whole mapping matches. `%{+f}` appends to any earlier
+    // capture of f (plain or +), joined by the token's compile-time append
+    // separator. A fresh array per call costs less than a ThreadLocal
+    // lookup.
+    val values = new Array[String](slotPaths.length)
     var pos = 0
     var i = 0
     while (i < tokens.length) {

@@ -4,7 +4,7 @@ import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import graft.enrich.{Dicts, Enrich}
 import graft.model.Event
-import graft.rules.{Dropped, Parsed, ParseCtx, ParseOutcome, Registry, TechnologyConfig}
+import graft.rules.{Dropped, Parsed, ParseCtx, ParseOutcome, Program, Registry, TechnologyConfig}
 
 /** The per-turn core of the fused parse→enrich kernel: one turn in, 0..N
   * enriched events out, which [[RowKernel]] flattens to rows inside the
@@ -31,11 +31,13 @@ object Engine {
   def parseCtx(tsMillis: Long): ParseCtx =
     ParseCtx(tsMillis, Instant.ofEpochMilli(tsMillis).atZone(ZoneOffset.UTC).getYear)
 
-  /** The kernel preamble, then the technology's parse program: a fresh
+  /** The kernel preamble, then the program's cardinality step: a fresh
     * event holding `text` as `message`, the input codec applied, and a
-    * scalar `host` copied to [agent][name]. */
-  def parse(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
-            text: String, ctx: ParseCtx, dicts: Dicts): ParseOutcome = {
+    * scalar `host` copied to [agent][name]. The preamble is 1:1 and never
+    * drops. The events returned may still be owed their 1:1 body
+    * (`Pending`); [[parse]] runs it. */
+  def events(cfg: TechnologyConfig, program: Program,
+             text: String, ctx: ParseCtx, dicts: Dicts): ParseOutcome = {
     graft.rules.RuleDicts.set(dicts) // parse-stage translates (cisco)
     val ev = new Event
     ev.set("message", if (text == null) "" else text)
@@ -56,14 +58,20 @@ object Engine {
       case _: Event.FMap => ()
       case hostScalar => ev.set("[agent][name]", Event.deepCopy(hostScalar))
     }
-    program(ev, ctx)
+    program.events(ev, ctx)
   }
+
+  /** The kernel preamble, then the whole parse program: `Dropped`, or the
+    * turn's finished events. */
+  def parse(cfg: TechnologyConfig, program: Program,
+            text: String, ctx: ParseCtx, dicts: Dicts): ParseOutcome =
+    Program.finish(events(cfg, program, text, ctx, dicts), ctx)
 
   /** Shared kernel core: parse the turn, stamp parse_ok per produced
     * event, then run the enrichment chain. Returns null when the turn was
     * dropped (`drop {}`), else (event, parse_ok) pairs in sub_idx order.
     * Pure function of (tool, text, tsMillis, dicts). */
-  def parseAndEnrich(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
+  def parseAndEnrich(cfg: TechnologyConfig, program: Program,
                      text: String, tsMillis: Long, dicts: Dicts): Seq[(Event, Boolean)] = {
     val ctx = parseCtx(tsMillis)
     parse(cfg, program, text, ctx, dicts) match {
@@ -78,22 +86,23 @@ object Engine {
     }
   }
 
-  /** Counts-only variant: output CARDINALITY of a turn without running the
-    * enrichment chain or materializing any field. Valid because enrichments
-    * are 1:1 field transforms — only parse programs drop (`drop {}`) or
-    * split (records[] envelopes), and the grouped columns of the counts
-    * aggregate (technology/role/tool/ts/route_outputs) all come from the
-    * input row and the static TechnologyConfig, never from the Event.
-    * GraftParse runs this (its counts mode) when the plan above it reads
-    * only those columns. */
-  def parseCardinality(cfg: TechnologyConfig, program: (Event, ParseCtx) => ParseOutcome,
-                       text: String, tsMillis: Long, dicts: Dicts): Int =
-    parse(cfg, program, text, parseCtx(tsMillis), dicts) match {
-      case Dropped => 0
-      case Parsed(events) => events.size
-    }
+  /** Counts-only variant: the output CARDINALITY of a turn, from the
+    * program's cardinality step alone. Valid because only parse programs
+    * drop (`drop {}`) or split (newline and records[] envelopes), and they
+    * decide it before their 1:1 body; the preamble, the body and the
+    * enrichment chain are 1:1 field transforms. The grouped columns of the
+    * counts aggregate (technology/role/tool/ts/route_outputs) all come from
+    * the input row and the static TechnologyConfig, never from the Event.
+    * A program with no cardinality step yields 1 without building an event
+    * or reading `text`. A body that would throw is not run, so the turn
+    * still counts. GraftParse runs this (its counts mode) when the plan
+    * above it reads only those columns. */
+  def parseCardinality(cfg: TechnologyConfig, program: Program,
+                       text: => String, tsMillis: Long, dicts: Dicts): Int =
+    if (!program.splits) 1
+    else Program.cardinality(events(cfg, program, text, parseCtx(tsMillis), dicts))
 
-  def techOf(tool: String): (TechnologyConfig, (Event, ParseCtx) => ParseOutcome) =
+  def techOf(tool: String): (TechnologyConfig, Program) =
     (Registry.configs.getOrElse(tool, Registry.configs("unknown")),
       Registry.programs.getOrElse(tool, Registry.programs("unknown")))
 

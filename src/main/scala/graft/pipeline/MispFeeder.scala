@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.enrich.{Dicts, FlatDict}
 import graft.model.Event
-import graft.rules.{MispRules, ParseCtx, Parsed}
+import graft.rules.{ParseCtx, Parsed, Registry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The MISP store BUILDER — the Spark job the reference runs as
@@ -116,7 +116,7 @@ object MispFeeder {
         it.flatMap { line =>
           val ev = new Event
           ev.set("message", line)
-          MispRules.metrics(ev, ParseCtx(0L, 1970)) match {
+          Registry.programs("misp.metrics")(ev, ParseCtx(0L, 1970)) match {
             case Parsed(out) => out.iterator.flatMap { e =>
               for {
                 t <- e.getString("[threat][list][type]").iterator

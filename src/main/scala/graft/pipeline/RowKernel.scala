@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.enrich.Dicts
 import graft.model.{Columns, Event}
-import graft.rules.{ParseCtx, ParseOutcome, TechnologyConfig}
+import graft.rules.{Program, TechnologyConfig}
 
 /** InternalRow-level realization of the fused parse→enrich kernel, run by
   * the GraftParse plan node in batch and streaming alike.
@@ -45,7 +45,7 @@ object RowKernel {
     * instance across all of a partition's rows is safe. */
   private final class Tech(val toolU8: UTF8String, // raw input value (passthrough column)
                            val cfg: TechnologyConfig,
-                           val program: (Event, ParseCtx) => ParseOutcome) {
+                           val program: Program) {
     val techU8: UTF8String = UTF8String.fromString(cfg.tech)
     val routeOutputs: GenericArrayData =
       new GenericArrayData(cfg.outputs.iterator.map(UTF8String.fromString).toArray[Any])
@@ -64,10 +64,10 @@ object RowKernel {
   /** The preamble every kernel mode shares: per partition, a technology
     * cache; per input row (conv_id, turn_idx, role, text, tool, ts), its
     * compiled technology, the `ts` output value (boxed micros, or null for
-    * a null `ts`), `ts` in millis for the parse context (0 for a null `ts`)
-    * and the decoded text. `f` returns the turn's output rows. */
+    * a null `ts`) and `ts` in millis for the parse context (0 for a null
+    * `ts`). `f` returns the turn's output rows. */
   private def eachTurn(it: Iterator[InternalRow])(
-      f: (InternalRow, Tech, Any, Long, String) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
+      f: (InternalRow, Tech, Any, Long) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
     val techs = new java.util.HashMap[UTF8String, Tech]()
     it.flatMap { row =>
       val toolU8 = if (row.isNullAt(4)) UTF8String.EMPTY_UTF8 else row.getUTF8String(4)
@@ -80,10 +80,13 @@ object RowKernel {
       }
       val ts = if (row.isNullAt(5)) null else java.lang.Long.valueOf(row.getLong(5))
       val tsMillis = if (ts == null) 0L else Math.floorDiv(ts.longValue, 1000L)
-      val text = if (row.isNullAt(3)) null else row.getUTF8String(3).toString
-      f(row, tech, ts, tsMillis, text)
+      f(row, tech, ts, tsMillis)
     }
   }
+
+  /** The row's input text, decoded. */
+  private def textOf(row: InternalRow): String =
+    if (row.isNullAt(3)) null else row.getUTF8String(3).toString
 
   /** One partition of input rows → 0..N output rows each. `emitDropped`
     * additionally materializes one marker row (parse_rule='dropped', empty
@@ -99,7 +102,8 @@ object RowKernel {
     * columns); `null` mask = full flatten. */
   def process(it: Iterator[InternalRow], dicts: Dicts,
               emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] =
-    eachTurn(it) { (row, tech, ts, tsMillis, text) =>
+    eachTurn(it) { (row, tech, ts, tsMillis) =>
+      val text = textOf(row)
       val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
       if (results == null && !emitDropped) Nil
       else {
@@ -155,9 +159,10 @@ object RowKernel {
   val countSchema: StructType =
     StructType(Seq("technology", "role", "tool", "ts", "route_outputs").map(schema(_)))
 
-  /** Counts-only kernel: same parse dispatch, no enrichment chain, no wide
-    * flatten — one reused 5-column row emitted `cardinality` times per
-    * input turn.
+  /** Counts-only kernel: same parse dispatch, but only each program's
+    * cardinality step (Engine.parseCardinality) — no parse body, no
+    * enrichment chain, no wide flatten; one reused 5-column row emitted
+    * `cardinality` times per input turn.
     *
     * ROW-OBJECT CAVEAT (exception to this file's header contract): the
     * emitted rows share ONE mutable GenericInternalRow. This is only safe
@@ -167,8 +172,8 @@ object RowKernel {
   def processCounts(it: Iterator[InternalRow], dicts: Dicts): Iterator[InternalRow] = {
     val out = new Array[Any](5)
     val row = new GenericInternalRow(out)
-    eachTurn(it) { (r, tech, ts, tsMillis, text) =>
-      val n = Engine.parseCardinality(tech.cfg, tech.program, text, tsMillis, dicts)
+    eachTurn(it) { (r, tech, ts, tsMillis) =>
+      val n = Engine.parseCardinality(tech.cfg, tech.program, textOf(r), tsMillis, dicts)
       if (n == 0) Nil
       else {
         out(0) = tech.techU8

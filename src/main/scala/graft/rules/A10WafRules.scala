@@ -28,6 +28,10 @@ object A10WafRules {
     SyslogPri(ev) // ref :19-22
     val am = ev.getString("actual_msg").getOrElse("")
     if (am == "a10" || am == "^A10") return Dropped // ref :24-27 — literal "^A10"
+    Pending(Seq(ev), wafBody(am))
+  }
+
+  private def wafBody(am: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (am.matches("^.*?(CEF|cef):.*?$") && am.matches("(?s).*(WAF|waf).*")) { // ref :29-50
       ev.mergeInto("[agent][parse_rule]", "RULE 1")
       Grok(ev, "actual_msg", Seq(wafGrok), Seq("grok_parsefailure"))
@@ -63,6 +67,5 @@ object A10WafRules {
       if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     } else ev.remove("[event][created]")
     Seq("actual_msg", "pri", "cn1").foreach(ev.remove) // ref :113-115 (month/date/time survive, unflattened)
-    Parsed(Seq(ev))
   }
 }

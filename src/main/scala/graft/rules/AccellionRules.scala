@@ -20,6 +20,10 @@ object AccellionRules {
     ev.set("[event][dataset]", "accellion.sft")
     if (ev.getString("message").exists(_.contains("last message repeated"))) // ref :13-15
       return Dropped
+    Pending(Seq(ev), sftBody)
+  }
+
+  private def sftBody(ev: Event, ctx: ParseCtx): Unit = {
     Mutate.strip(ev, "message") // ref :16-20
     Mutate.gsub(ev, "message", "[\"]", "")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :21-25
@@ -78,6 +82,5 @@ object AccellionRules {
     Mutate.gsub(ev, "[source][user][email]", ">", "")
     Seq("source", "delay", "xdelay", "nrcpts", "[log][date_time]", "actual_msg", "rest_msg")
       .foreach(ev.remove)
-    Parsed(Seq(ev))
   }
 }

@@ -26,7 +26,7 @@ object ApacheWebRules {
     *  - the access branch replaces a LITERAL "::1" client nat ip (:29-33);
     *    the error branch gsubs the substring (::1 with a port survives as
     *    127.0.0.1:port). */
-  def apache(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def apache(ev: Event, ctx: ParseCtx): Unit = {
     Dissect(ev, "message", // ref :8-12
       "{\"type\":\"%{[[event][dataset]]}\",\"@timestamp\":\"%{[[event][created]]}\"," +
         "\"host\":\"%{[[host][name]]}\",\"severity\":\"%{[[log][syslog][priority]]}\"," +
@@ -68,7 +68,6 @@ object ApacheWebRules {
       ev.remove("rest_msg")
     }
     ev.remove("actual_msg") // ref :71-73
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------------- apache.audit
@@ -80,7 +79,7 @@ object ApacheWebRules {
     *    non-ECS fields; only [error][type] and the rule tag are ECS-visible.
     *  - error_message is never removed.
     *  - no date filter: the log_time capture is discarded unparsed. */
-  def apacheAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def apacheAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "apache") // ref :9-12
     ev.set("[event][dataset]", "apache.audit")
     Mutate.gsub(ev, "message", "[\"]", "") // ref :13-17 (gsub precedes strip)
@@ -112,7 +111,6 @@ object ApacheWebRules {
       ev.set("[agent][parse_rule]", "RULE 5")
       Mutate.update(ev, "[error][type]", "invalid request")
     }
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------- mwg.proxy.audit
@@ -125,7 +123,7 @@ object ApacheWebRules {
     *    entry, when present, overwrites.
     *  - `description` lands on [event][original], the one field the
     *    lowercase enrichment exempts. */
-  def mwgProxy(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def mwgProxy(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "mwg") // ref :9-12
     ev.set("[event][dataset]", "mwg.proxy.audit")
     ev.copyField("message", "tmp_msg") // ref :13-16
@@ -157,7 +155,6 @@ object ApacheWebRules {
       "[event][created_ms]", timezone = "GMT", locale = "en",
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]") // ref :68-72
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------------------------- iis
@@ -175,7 +172,7 @@ object ApacheWebRules {
     *    [observer][ip] and then the XFF value over [source][ip] (:66-71).
     *  - [log][source][hostname] is a sprintf of the UNrenamed
     *    [iis][s-computername] (:34-36), so it must run before the renames. */
-  def iisFlat(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def iisFlat(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "iis") // ref :9-12
     ev.set("[event][dataset]", "iis")
     Csv(ev, "message", Seq("date", "time", "s-sitename", "s-computername", // ref :13-41
@@ -213,6 +210,5 @@ object ApacheWebRules {
     if (Dates(ev, "[event][created]", Seq("yyyy-MM-dd HH:mm:ss"), // ref :79-84
       "[event][created_ms]", timezone = "GMT", locale = "en"))
       ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 }

@@ -29,7 +29,7 @@ object ApiCloudRules {
     *  - otherwise the flat rename set applies (:46-56), incl. ingestedtime
     *    → [event][ingested].
     *  - all three ISO dates remove their field on failure. */
-  def ociCloudguard(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ociCloudguard(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "oci") // ref :9-14
     ev.set("[event][module]", "oci")
     ev.set("[event][dataset]", "oci.cloudguard")
@@ -66,14 +66,13 @@ object ApiCloudRules {
     isoDate(ev, "[event][start]", "[event][start_ms]", "_dateparsefailure_es", removeOnFail = true) // ref :60-70
     isoDate(ev, "[event][end]", "[event][end_ms]", "_dateparsefailure_ee", removeOnFail = true) // ref :71-81
     isoDate(ev, "[event][ingested]", "[event][ingested_ms]", "_dateparsefailure_ei", removeOnFail = true) // ref :82-93
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------- oci.object
   /** ref api_application_oci.object.conf:9-79: flat rename set over the
     * OCI object-storage audit envelope; end/ingested/start ISO dates each
     * remove their field on failure. */
-  def ociObject(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ociObject(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "oci") // ref :9-12
     ev.set("[event][dataset]", "oci.object")
     JsonOps.parse(ev, "message", "obj") // ref :13-16
@@ -98,7 +97,6 @@ object ApiCloudRules {
     isoDate(ev, "[event][ingested]", "[event][ingested_ms]", "_dateparsefailure_ei", removeOnFail = true) // ref :50-60
     isoDate(ev, "[event][start]", "[event][start_ms]", "_dateparsefailure_es", removeOnFail = true) // ref :61-71
     ev.remove("obj") // ref :72-74
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------- jamf.endpoint_protection
@@ -111,7 +109,7 @@ object ApiCloudRules {
     *  - the failure guard `if [_dateparsefailure_ec] in [tags]` (:82-86)
     *    is a FIELD reference, never a string: the created string is never
     *    removed here (enrichment 02 removes it later with the same tag). */
-  def jamfProtect(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def jamfProtect(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "jamf") // ref :9-14
     ev.set("[event][module]", "jamf")
     ev.set("[event][dataset]", "jamf.endpoint_protection")
@@ -158,7 +156,6 @@ object ApiCloudRules {
       case false => () // broken field-ref guard: string kept (see scaladoc)
     }
     ev.remove("tmp") // ref :87-89
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------------------- sap.btp
@@ -173,7 +170,7 @@ object ApiCloudRules {
     *    tmp_data parsed (:50-57).
     *  - the ISO date has locale "ec" and NO remove-on-failure — a bad time
     *    string survives to enrichment 02 (same _ec tag, then removed). */
-  def sapBtp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def sapBtp(ev: Event, ctx: ParseCtx): Unit = {
     for (f <- Seq("event", "host", "log", "user")) ev.remove(f) // ref :9-11
     ev.copyField("message", "[event][original]") // ref :12-14
     ev.set("[event][module]", "sap") // ref :15-20
@@ -203,6 +200,5 @@ object ApiCloudRules {
       case false => () // no remove-on-failure in the ref
     }
     for (f <- Seq("tmp", "tmp_data", "tmp_error")) ev.remove(f) // ref :68-70
-    Parsed(Seq(ev))
   }
 }

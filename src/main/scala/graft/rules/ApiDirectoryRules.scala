@@ -16,7 +16,7 @@ object ApiDirectoryRules {
     *  - ExchangeMetaData BCC/CC are MERGED onto the renamed To — a second
     *    recipient list turns [destination][user][email] into an array.
     *  - created/start ISO dates drop their field on failure. */
-  def o365Dlp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def o365Dlp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "azure") // ref :9-14
     ev.set("[event][module]", "o365")
     ev.set("[event][dataset]", "o365.dlp")
@@ -41,7 +41,6 @@ object ApiDirectoryRules {
     if (Dates(ev, "[event][start]", Seq("ISO8601"), "[event][start_ms]", // ref :52-63
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_es"))) ev.remove("[event][start]")
     if (ev.hasTag("_dateparsefailure_es")) ev.remove("[event][start]")
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------- azure.graph_identity_protection
@@ -52,7 +51,7 @@ object ApiDirectoryRules {
     *  - the failure guard checks "_dateparsefailure" while the date tags
     *    "_dateparsefailure_ec" (:49-62) — the created string is never
     *    removed here (enrichment 02 scrubs it with its own _ec tag). */
-  def graphIdentity(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def graphIdentity(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "azure") // ref :9-14
     ev.set("[event][module]", "azure")
     ev.set("[event][dataset]", "azure.graph_identity_protection")
@@ -83,7 +82,6 @@ object ApiDirectoryRules {
       case false => () // mismatched guard tag in the ref: string kept
     }
     ev.remove("az") // ref :63-65
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------- security_scorecard.events
@@ -95,7 +93,7 @@ object ApiDirectoryRules {
     *  - the date lists lead with "yyyy-mm-dd HH:mm:ss" — lowercase mm
     *    (minutes) in the month slot parses the minute twice and conflicts;
     *    only the ISO8601 alternative ever succeeds. */
-  def scorecard(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def scorecard(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "security_scorecard") // ref :9-12
     ev.set("[event][dataset]", "security_scorecard.events")
     JsonOps.parse(ev, "message", "ss") // ref :13-16
@@ -127,7 +125,6 @@ object ApiDirectoryRules {
       "[event][end_ms]", tagOnFailure = Seq("_dateparsefailure_ee"))) ev.remove("[event][end]")
     if (ev.hasTag("_dateparsefailure_ee")) ev.remove("[event][end]")
     ev.remove("ss") // ref :66-68
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------ active_directory.users
@@ -140,7 +137,7 @@ object ApiDirectoryRules {
     *    redirects the event to the UNDATED "list_ad_users_<sub>" index.
     *  - the ingested date format is lowercase-literal 't'/'z'
     *    ("yyyy-MM-dd't'HH:mm:ss.SSS'z'"). */
-  def adUsers(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def adUsers(ev: Event, ctx: ParseCtx): Unit = {
     JsonOps.parse(ev, "message", "tmp") // ref :10-13
     ev.set("[event][module]", "active_directory") // ref :14-20
     ev.set("[event][dataset]", "active_directory.users")
@@ -174,6 +171,5 @@ object ApiDirectoryRules {
       "[event][ingested_ms]", timezone = "GMT", locale = "en",
       tagOnFailure = Seq("_dateparsefailure_ei"))) ev.remove("[event][ingested]")
     if (ev.hasTag("_dateparsefailure_ei")) ev.remove("[event][ingested]") // ref :65-69
-    Parsed(Seq(ev))
   }
 }

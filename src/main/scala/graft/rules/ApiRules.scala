@@ -19,14 +19,14 @@ object ApiRules {
     * FOUR ISO8601 dates — faithfully including the reference's copy-paste
     * quirk at :90/:101 where the end/modified failure branches test
     * `_dateparsefailure_es` (the START tag) instead of their own. */
-  def azureAtp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def azureAtp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "azure") // ref :9-13
     ev.set("[event][module]", "azure")
     ev.set("[event][dataset]", "azure.atp")
     if (!JsonOps.parse(ev, "message", "az")) { // ref :14-17
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     Mutate.addField(ev, "[log][source][hostname]", "%{[az][aadTenantId]}") // ref :18-20
@@ -69,7 +69,6 @@ object ApiRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_em"))
     if (ev.hasTag("_dateparsefailure_es")) ev.remove("[event][modified]") // ref :101 quirk
     else if (ev.has("[event][modified_ms]")) ev.remove("[event][modified]")
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------- proofpoint.siem_messages
@@ -78,7 +77,7 @@ object ApiRules {
     * quarantineFolder BOTH target [rule][category] — last rename wins, as in
     * the reference's in-order mutate), completelyRewritten truthiness branch
     * (false is falsy), ISO8601.SSS date with remove-on-failure. */
-  def proofpointMessages(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def proofpointMessages(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "proofpoint") // ref :9-14
     ev.set("[event][module]", "proofpoint")
     ev.set("[event][dataset]", "proofpoint.siem_messages")
@@ -86,7 +85,7 @@ object ApiRules {
     if (!JsonOps.parse(ev, "message", "pp")) { // ref :15-18
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("[pp][url]", "[url][full]") // ref :19-56
@@ -128,7 +127,6 @@ object ApiRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))) { // ref :75-87
       if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     } else ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------------- aws.elb
@@ -160,13 +158,17 @@ object ApiRules {
   def awsElb(ev: Event, ctx: ParseCtx): ParseOutcome = {
     val msg = ev.stringOrNull("message")
     if (msg == null || msg.isEmpty) return Dropped // ref :9-11
+    Pending(Seq(ev), awsElbBody)
+  }
+
+  private def awsElbBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aws") // ref :12-18
     ev.set("[event][dataset]", "aws.elb")
     ev.set("[cloud][provider]", "aws")
     if (!Grok(ev, "message", Seq(elbGrok), Seq("_grokparsefailure"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     Mutate.addField(ev, "[log][source][hostname]", "%{[tmp][instance_id]}") // ref :24-28
@@ -226,18 +228,17 @@ object ApiRules {
       "[event][ingested_ms]", timezone = "GMT",
       tagOnFailure = Seq("_dateparsefailure_ei"))) ev.remove("[event][ingested]")
     ev.remove("tmp") // ref :91-93
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------ snowflake.signin
   /** snowflake LOGIN_HISTORY (ref: snowflake_acc_login_history.conf:8-52):
     * JSON → tmp with UPPER_SNAKE columns, renames, IS_SUCCESS YES/NO branch,
     * multi-format date. */
-  def snowflakeSignin(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def snowflakeSignin(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "tmp")) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "snowflake") // ref :13-18
@@ -259,19 +260,18 @@ object ApiRules {
     if (Dates(ev, "[event][created]", Seq("yyyy-MM-dd'T'HH:mm:ss.SSSZ", "ISO8601"),
       "[event][created_ms]", timezone = "GMT",
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------ snowflake.failed_login
   /** snowflake failed logins (ref: snowflake_acc_failed_logins.conf:8-38). */
-  def snowflakeFailedLogin(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def snowflakeFailedLogin(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "snowflake") // ref :9-15
     ev.set("[event][dataset]", "snowflake.failed_login")
     ev.set("[log][source][hostname]", "sql_snowflake_failed_login")
     if (!JsonOps.parse(ev, "message", "tmp")) { // ref :16-19
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("[tmp][EVENT_TIMESTAMP]", "[event][start]") // ref :20-28
@@ -283,7 +283,6 @@ object ApiRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_es")))
       ev.remove("[event][start]") // ref :29-35
     ev.remove("tmp") // ref :36-38
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------- azure.officeactivity
@@ -322,10 +321,9 @@ object ApiRules {
       ev.tags.foreach(sub.addTag)
       sub.set("az", Event.deepCopy(rec))
       if (isEnvelope) JsonOps.encode(sub, "az", "message") // ref :22-24 replace
-      officeRecord(sub)
       sub
     }
-    Parsed(out)
+    Pending(out, (sub, _) => officeRecord(sub))
   }
 
   private def officeRecord(ev: Event): Unit = {

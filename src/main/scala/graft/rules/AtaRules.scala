@@ -31,7 +31,7 @@ object AtaRules {
     "2023" -> "Audit/Authentication Failure", "2024" -> "Security/Other",
     "2025" -> "Security/Other", "2026" -> "Security/Suspicious")
 
-  def ata(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ata(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "microsoft") // ref :9-12
     ev.set("[event][dataset]", "microsoft ata")
     ev.set("[agent][parse_rule]", "no rules") // ref :14-16
@@ -70,6 +70,5 @@ object AtaRules {
     ev.getString("[host][hostname]").foreach { h => // ref :139-143
       if (h != "") ev.copyField("[host][hostname]", "[host][name]")
     }
-    Parsed(Seq(ev))
   }
 }

@@ -22,7 +22,7 @@ object AtlassianRules {
     *    a [url][path] of "/" drops the whole [url] tree (:73-77).
     *  - the rename of top-level [host][ip] (:18) probes a field the
     *    pipeline input never sets — dead, kept. */
-  def jira(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def jira(ev: Event, ctx: ParseCtx): Unit = {
     JsonOps.parse(ev, "message", "tmp") // ref :9-12
     ev.set("[event][module]", "atlassian_jira") // ref :13-16
     ev.set("[event][dataset]", "jira")
@@ -71,7 +71,6 @@ object AtlassianRules {
       ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     for (f <- Seq("tmp", "action1", "action2", "data")) ev.remove(f) // ref :87-89
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------- jira.audit
@@ -85,7 +84,7 @@ object AtlassianRules {
     *    log.source.ip copy keeps the raw "ip-…" form.
     *  - [user][name] falls back to affectedObjects[0][name] only when the
     *    Username changedValue is absent (:55-59). */
-  def jiraAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def jiraAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "jira") // ref :9-12
     ev.set("[event][dataset]", "jira.audit")
     JsonOps.parse(ev, "message", "tmp") // ref :13-16
@@ -127,6 +126,5 @@ object AtlassianRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     for (f <- Seq("tmp", "tmp_msg", "user_dct")) ev.remove(f) // ref :74-76
-    Parsed(Seq(ev))
   }
 }

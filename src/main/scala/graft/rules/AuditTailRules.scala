@@ -18,7 +18,7 @@ object AuditTailRules {
     *    bracketed word before the pipe-delimited tail.
     *  - finalmessage (everything after the last pipe) lands on
     *    [event][outcome]. */
-  def securityCenter(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def securityCenter(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "tenable_nessus") // ref :9-12
     ev.set("[event][dataset]", "tenable_nessus.security_center")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -45,7 +45,6 @@ object AuditTailRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))
     for (f <- Seq("syslog_timestamp", "technology_name", "day", "value", "date", "actual_msg"))
       ev.remove(f) // ref :59-61
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------- sap.cloud_connector
@@ -60,6 +59,10 @@ object AuditTailRules {
     *    dead, kept. */
   def sapCloudConnector(ev: Event, ctx: ParseCtx): ParseOutcome = {
     if (ev.getString("message").exists(_.startsWith("Date & Time"))) return Dropped // ref :7-9
+    Pending(Seq(ev), sapCloudConnectorBody)
+  }
+
+  private def sapCloudConnectorBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "sap") // ref :10-16
     ev.set("[event][dataset]", "sap.cloud_connector")
     ev.copyField("[host][name]", "[log][source][hostname]") // dead
@@ -88,6 +91,5 @@ object AuditTailRules {
       ev.remove("[event][created]")
     for (f <- Seq("[agent][hostname]", "fields", "input", "type", "data")) ev.remove(f) // ref :58-60
     // rest_msg is NOT in the ref's remove list — kept (no flat column reads it)
-    Parsed(Seq(ev))
   }
 }

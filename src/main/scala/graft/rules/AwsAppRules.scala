@@ -38,13 +38,12 @@ import graft.parse.{Dates, JsonOps, Mutate}
   */
 object AwsAppRules {
 
-  private def failParse(ev: Event): ParseOutcome = {
+  private def failParse(ev: Event): Unit = {
     ev.set("[agent][parse_rule]", "not parsed")
     ev.addTag("_parse_failure")
-    Parsed(Seq(ev))
   }
 
-  def awsApp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsApp(ev: Event, ctx: ParseCtx): Unit = {
     ev.remove("event") // ref :10-12
     ev.remove("host")
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev) // ref :13-16
@@ -125,6 +124,5 @@ object AwsAppRules {
       ev.remove("[event][ingested]")
     ev.remove("tmp") // ref :122-124
     ev.remove("jtmp")
-    Parsed(Seq(ev))
   }
 }

@@ -17,6 +17,10 @@ object AwsLbRules {
 
   def awsLb(ev: Event, ctx: ParseCtx): ParseOutcome = {
     if (ev.getString("message").forall(_.isEmpty)) return Dropped // ref :9-11
+    Pending(Seq(ev), awsLbBody)
+  }
+
+  private def awsLbBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aws") // ref :12-18
     ev.set("[event][dataset]", "aws.lb")
     ev.set("[cloud][provider]", "aws")
@@ -79,6 +83,5 @@ object AwsLbRules {
       "[event][ingested_ms]", timezone = "GMT",
       tagOnFailure = Seq("_dateparsefailure_ei"))) ev.remove("[event][ingested]")
     ev.remove("tmp") // ref :91-93
-    Parsed(Seq(ev))
   }
 }

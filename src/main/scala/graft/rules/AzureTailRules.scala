@@ -86,7 +86,7 @@ object AzureTailRules {
       case Some(rs) => splitTarget(ev, rs, "az")
       case None => Vector(ev)
     }
-    events.foreach { sub =>
+    Pending(events, { (sub, _) =>
       Mutate.addField(sub, "[log][source][hostname]", "%{[az][tenantId]}") // ref :27-29
       sub.rename("[az][time]", "[event][ingested]") // ref :30-76
       sub.rename("[az][tenantId]", "[cloud][account][id]")
@@ -142,8 +142,7 @@ object AzureTailRules {
         "_dateparsefailure_ps", removeOnFailure = true)
       sub.remove("atp") // ref :126-128
       sub.remove("az")
-    }
-    Parsed(events)
+    })
   }
 
   // -------------------------------------------- azure.eventhub.security
@@ -176,7 +175,7 @@ object AzureTailRules {
         subs
       case None => Vector(ev)
     }
-    events.foreach { sub =>
+    Pending(events, { (sub, _) =>
       sub.rename("[azsec][operationName]", "[rule][name]") // ref :33-50
       sub.rename("[azsec][properties][recommendationCategory]", "[event][category]")
       sub.rename("[azsec][properties][recommendationImpact]", "[event][severity_name]")
@@ -205,8 +204,7 @@ object AzureTailRules {
       sub.remove("azsec")
       dateIso(sub, "[event][start]", "[event][start_ms]", // ref :104-116
         "_dateparsefailure_es", removeOnFailure = true)
-    }
-    Parsed(events)
+    })
   }
 
   /** The event_hub.conf FileHashes ruby (:60-100): walks [tmp][Entities]
@@ -328,7 +326,7 @@ object AzureTailRules {
         subs
       case None => Vector(ev)
     }
-    events.foreach { sub =>
+    Pending(events, { (sub, _) =>
       // ref :81-92 — dead top-level ip probes ([destination_service_ip] /
       // [logon_ip] never exist outside [az]); kept as written
       if (sub.has("[destination_service_ip]") && sub.has("[destination_service_ip][0]"))
@@ -341,7 +339,6 @@ object AzureTailRules {
         "_dateparsefailure_estart", removeOnFailure = false)
       sub.remove("az") // ref :112-114
       sub.remove("tmp")
-    }
-    Parsed(events)
+    })
   }
 }

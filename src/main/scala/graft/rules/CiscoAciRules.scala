@@ -79,7 +79,7 @@ object CiscoAciRules {
     "[tmp][loglocal]" -> "[log][syslog][facility][code]",
     "[tmp][nexus_loglocal]" -> "[log][syslog][facility][name]")
 
-  def aci(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def aci(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.aci")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -135,6 +135,5 @@ object CiscoAciRules {
     Mutate.gsub(ev, "[service][type]", "(.*)-([a-z]*)", "$2") // ref :165-168
     Mutate.gsub(ev, "[network][name]", "([a-z]*)([0-9].*)", "$1")
     Seq("[tmp]", "pri", "actual_msg").foreach(ev.remove) // ref :171-173
-    Parsed(Seq(ev))
   }
 }

@@ -10,7 +10,7 @@ import graft.parse.{Dates, Dissect, Grok, Mutate, SyslogPri}
   * date runs on a field nothing sets (no-op; e03 default applies). */
 object CiscoApicRules {
 
-  def apic(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def apic(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.apic")
     Mutate.strip(ev, "message") // ref :13-18
@@ -54,6 +54,5 @@ object CiscoApicRules {
       if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     } else ev.remove("[event][created]")
     Seq("[user][tmp]", "rest_msg", "actual_msg").foreach(ev.remove) // ref :101-103
-    Parsed(Seq(ev))
   }
 }

@@ -30,7 +30,7 @@ object CiscoRouterRules {
     head("(?<[error][message]>.*?) (?<[source][ip]>\\d+\\.\\d+\\.\\d+\\.\\d+) (O|o)n (?<[network][vlan][name]>.*?), (S|s)ourced (B|b)y (?<[network][vlan][id]>.*?)$"),
     head("(?<[error][message]>.*?)$"))
 
-  def router(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def router(ev: Event, ctx: ParseCtx): Unit = {
     ev.remove("event"); ev.remove("host") // ref :9-13
     ev.set("[event][module]", "cisco")
     ev.set("[event][dataset]", "cisco.router")
@@ -71,6 +71,5 @@ object CiscoRouterRules {
       timezone = "GMT", locale = "en", tagOnFailure = Seq("_dateparsefailure_ei"))) // ref :98-106
       ev.remove("[event][ingested]")
     ev.remove("tmp"); ev.remove("[log][syslog]"); ev.remove("observer") // ref :107-109
-    Parsed(Seq(ev))
   }
 }

@@ -48,7 +48,7 @@ object CiscoWlcRules {
       "SIG_ALARM_OFF_CONT" :: "BUFFER_POOL_EARLY_WARNING" :: Nil,
       "RULE 10", "Ops/warning"))
 
-  def wlc(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def wlc(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.wireless.controller")
     Mutate.strip(ev, "message") // ref :13-15
@@ -79,6 +79,5 @@ object CiscoWlcRules {
     }
     Seq("[log][date_time]", "rest_msg", "[event][created]", "actual_msg") // ref :160-162
       .foreach(ev.remove)
-    Parsed(Seq(ev))
   }
 }

@@ -19,7 +19,7 @@ object CitrixAdminRules {
     Dates(ev, src, Seq("yyyy-MM-dd'T'HH:mm:sss'Z'", "yyyy-MM-dd't'HH:mm:sss'z'", "ISO8601"),
       targetMs, timezone = "GMT", locale = "en")
 
-  def citrixAdmin(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def citrixAdmin(ev: Event, ctx: ParseCtx): Unit = {
     ev.remove("host") // ref :9-11 — input top level, never set
     JsonOps.parse(ev, "message", "tmp") // ref :12-15
     ev.set("[event][module]", "citrix") // ref :16-29
@@ -44,6 +44,5 @@ object CitrixAdminRules {
     isoTriple(ev, "[tmp][starttime]", "[event][start_ms]") // ref :60-66
     isoTriple(ev, "[tmp][endtime]", "[event][end_ms]") // ref :68-74
     ev.remove("tmp") // ref :75-77
-    Parsed(Seq(ev))
   }
 }

@@ -30,7 +30,7 @@ object CloudRules {
     "Notice" -> "security/activity",
     "Warning" -> "security/warning")
 
-  def ciscoSwitch(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoSwitch(ev: Event, ctx: ParseCtx): Unit = {
     val dicts = RuleDicts.get
     ev.set("[event][module]", "cisco") // ref :10-11
     ev.set("[event][dataset]", "cisco.switch")
@@ -49,7 +49,7 @@ object CloudRules {
     if (!Grok(ev, "actual_msg", Seq(ciscoMainGrok), Seq("_grokparsefailure"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     // 5. event.action = facility.mnemonic, lowercased with the msg (ref :76-84)
@@ -123,7 +123,6 @@ object CloudRules {
     ev.getString("syslog_severity").foreach(s =>
       ev.set("[rule][category]", sevCategory.getOrElse(s, "others")))
     ev.remove("tmp") // 9. (ref :260-263)
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------------------------- okta
@@ -150,10 +149,9 @@ object CloudRules {
       ev.root.forEach((k, v) => if (k != "okta") sub.root.put(k, Event.deepCopy(v)))
       ev.tags.foreach(sub.addTag)
       sub.set("okta", Event.deepCopy(rec))
-      oktaRecord(sub, ctx)
       sub
     }
-    Parsed(out)
+    Pending(out, oktaRecord)
   }
 
   private def oktaRecord(ev: Event, ctx: ParseCtx): Unit = {
@@ -195,7 +193,7 @@ object CloudRules {
   /** proofpoint SIEM clicks — semantic port of
     * config/processors/api_security_proofpoint.siem_api_clicks.conf:
     * JSON → ECS renames → two ISO8601 millisecond dates. */
-  def proofpointClicks(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def proofpointClicks(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "proofpoint") // ref :9-14
     ev.set("[event][module]", "proofpoint")
     ev.set("[event][dataset]", "proofpoint.siem_clicks")
@@ -203,7 +201,7 @@ object CloudRules {
     if (!JsonOps.parse(ev, "message", "pp")) { // ref :15-18
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("[pp][url]", "[url][full]") // ref :20-38
@@ -237,7 +235,6 @@ object CloudRules {
         tagOnFailure = Seq("_dateparsefailure_ec"))
       ev.remove("[event][created]")
     }
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------------------- cloudtrail
@@ -248,13 +245,13 @@ object CloudRules {
   private val ctOrigin = Map( // ref :81-90
     "management" -> "configuration", "Data" -> "database", "Insight" -> "intrusion_detection")
 
-  def awsCloudtrail(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsCloudtrail(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "aws")) { // ref :9-12
       ev.set("[event][module]", "aws")
       ev.set("[event][dataset]", "aws.cloudtrail")
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     Mutate.addField(ev, "[log][source][hostname]", "%{[aws][recipientAccountId]}") // ref :14-16
@@ -302,7 +299,6 @@ object CloudRules {
         tagOnFailure = Seq("_dateparsefailure_ec"))
       ev.remove("[event][created]")
     }
-    Parsed(Seq(ev))
   }
 }
 
@@ -388,7 +384,7 @@ object WindowsRules {
     }
   }
 
-  def windowsEvents(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def windowsEvents(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "windows_wef") // ref :9-11
     ev.set("[event][dataset]", "windows_wef_events")
     // beats JSON-lines envelope: {"message": <text>, "winlog": {...}} —
@@ -396,7 +392,7 @@ object WindowsRules {
     if (!JsonOps.parse(ev, "message", "")) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     // core renames (ref :12-98, the subset the corpus carries)
@@ -454,7 +450,6 @@ object WindowsRules {
     }
     Seq("winlog", "tmp", "ticket_encrypt", "ticket_option", "failure_code")
       .foreach(ev.remove) // ref :385-388
-    Parsed(Seq(ev))
   }
 }
 

@@ -11,13 +11,13 @@ object DbRules {
   // ------------------------------------------------------------ github.audit
   /** GHE haproxy-style JSON audit lines (ref: api_audit_aws.ghe.conf:8-45):
     * flat renames + a year-less syslog-style date with remove-on-failure. */
-  def githubAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def githubAudit(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "tmp")) { // ref :9-12
       ev.set("[event][module]", "github")
       ev.set("[event][dataset]", "github.audit")
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "github") // ref :13-29
@@ -42,7 +42,6 @@ object DbRules {
         defaultYear = ctx.tsYear)) ev.remove("[event][created]")
       else if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     }
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------------- proofpoint.trap
@@ -54,14 +53,14 @@ object DbRules {
     * `item['recipient'] != '' or 'null'` parses as `(x != '') or 'null'`
     * and 'null' is truthy, so EVERY recipient is collected, empties
     * included. */
-  def proofpointTrap(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def proofpointTrap(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "proofpoint") // ref :9-13
     ev.set("[event][dataset]", "proofpoint.trap")
     ev.set("[log][source][hostname]", "api_proofpoint_trap")
     if (!JsonOps.parse(ev, "message", "tmp")) { // ref :14-17
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("[tmp][summary]", "[event][reason]") // ref :18-38
@@ -127,7 +126,6 @@ object DbRules {
     dateRm("[event][created]", "[event][created_ms]", "_dateparsefailure_ec") // ref :83-103
     dateRm("[event][end]", "[event][end_ms]", "_dateparsefailure_ee")
     dateRm("[event][modified]", "[event][modified_ms]", "_dateparsefailure_em")
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------- citrix.session
@@ -136,7 +134,7 @@ object DbRules {
     * (not renamed) onto ECS, three ISO dates target start/ingested/created,
     * and a final ruby renders message back to its string form — so the
     * copied source values remain inside the message payload too. */
-  def citrixSession(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def citrixSession(ev: Event, ctx: ParseCtx): Unit = {
     // jdbc-input stand-in: the datagram is the row as JSON; message becomes
     // the parsed map (what the input codec hands the pipeline)
     if (!JsonOps.parse(ev, "message", "message")) {
@@ -144,7 +142,7 @@ object DbRules {
       ev.set("[event][dataset]", "citrix.session")
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "citrix") // ref :13-17
@@ -178,6 +176,5 @@ object DbRules {
       Seq("yyyy-MM-dd'T'HH:mm:ss.sss'Z'", "yyyy-MM-dd't'HH:mm:ss.sss'z'", "ISO8601"),
       "[event][created_ms]", timezone = "GMT")
     JsonOps.encode(ev, "message", "message") // ref :61-63 ruby to_s
-    Parsed(Seq(ev))
   }
 }

@@ -28,7 +28,7 @@ import graft.parse.{Dates, Dissect, Grok, JsonOps, Mutate, SyslogPri}
   * surfaces (translate is a no-op on a missing source). */
 object DnaF5Rules {
 
-  def ciscoDna(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoDna(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.dna")
     Mutate.lowercase(ev, "message") // ref :19-22
@@ -98,7 +98,6 @@ object DnaF5Rules {
     if (!ev.has("[network][name]")) // ref :185-190 — over-bracketed key + triple-bracket sprintf
       Mutate.addField(ev, "[network][name]", "%{[[[host][hostname]]]}")
     ev.remove("tmp"); ev.remove("actual_msg") // ref :193-196
-    Parsed(Seq(ev))
   }
 
   private val f5Prefix =
@@ -114,6 +113,10 @@ object DnaF5Rules {
       ev.set("[agent][parse_rule]", "RULE 1 (dropped)")
       return Dropped
     }
+    Pending(Seq(ev), f5GtmBody)
+  }
+
+  private def f5GtmBody(ev: Event, ctx: ParseCtx): Unit = {
     val am = ev.getString("actual_msg").getOrElse("")
     if (am.contains("httpd") && am.contains("auth token request")) { // ref :32-41
       ev.mergeInto("[agent][parse_rule]", "RULE 2")
@@ -177,6 +180,5 @@ object DnaF5Rules {
         "INFO" -> "Security/Activity", "NOTE" -> "Security/Activity",
         "WARN" -> "Security/Warning").getOrElse(sev, "Others"))
     }
-    Parsed(Seq(ev))
   }
 }

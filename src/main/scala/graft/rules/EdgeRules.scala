@@ -30,6 +30,10 @@ object EdgeRules {
   def awsCloudfront(ev: Event, ctx: ParseCtx): ParseOutcome = {
     val msg = ev.stringOrNull("message")
     if (msg == null || msg.isEmpty || msg.startsWith("#")) return Dropped // ref :9-11
+    Pending(Seq(ev), awsCloudfrontBody)
+  }
+
+  private def awsCloudfrontBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aws") // ref :12-19
     ev.set("[event][dataset]", "aws.cloudfront")
     ev.set("[cloud][provider]", "aws")
@@ -37,7 +41,7 @@ object EdgeRules {
     if (!Grok(ev, "message", Seq(cfGrok), Seq("_grokparsefailure"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     Mutate.addField(ev, "[event][created]", "%{[tmp][date]} %{[tmp][time]}") // ref :33-36
@@ -69,7 +73,6 @@ object EdgeRules {
       "[event][created_ms]", timezone = "GMT",
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     ev.remove("tmp") // ref :71-73 — the flat dotted field is NOT removed
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------- cisco.netflow
@@ -81,14 +84,14 @@ object EdgeRules {
     * map and destination.ip stays empty; BOTH date filters target
     * [event][created] (:42-55), so when first_switched is present it
     * overwrites last_switched's parse and event.start never materializes. */
-  def ciscoNetflow(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoNetflow(ev: Event, ctx: ParseCtx): Unit = {
     // input-codec stand-in: the message is the JSON datagram; parse into root
     if (!JsonOps.parse(ev, "message", "")) {
       ev.set("[event][module]", "cisco")
       ev.set("[event][dataset]", "cisco.netflow")
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     // ruby: message = netflow map rendered to a string (ref :9-11)
@@ -120,7 +123,6 @@ object EdgeRules {
     if (ev.has("[event][created_ms]")) ev.remove("[event][created]")
     Dates(ev, "[event][start]", Seq("ISO8601"), "[event][created_ms]",
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_es"))
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------------------- a10.proxy
@@ -168,6 +170,10 @@ object EdgeRules {
     SyslogPri(ev) // ref :18-21
     val msg = ev.getString("actual_msg").getOrElse("")
     if (msg == "a10" || msg == "A10") return Dropped // ref :22-24
+    Pending(Seq(ev), a10ProxyBody(msg))
+  }
+
+  private def a10ProxyBody(msg: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (msg.contains("persist-xff:")) { // ref :25-38
       ev.set("[agent][parse_rule]", "RULE 1")
       Grok(ev, "actual_msg", Seq(a10Rule1Grok), Seq("_parsefailure_body2"))
@@ -196,6 +202,5 @@ object EdgeRules {
       ev.remove("[event][created]") // ref :86-90
     }
     ev.remove("actual_msg"); ev.remove("month"); ev.remove("date"); ev.remove("time") // ref :91-93
-    Parsed(Seq(ev))
   }
 }

@@ -71,20 +71,19 @@ object EventHubRules {
     }
     records match {
       case Some(rs) =>
-        Parsed(rs.map { rec =>
-          val sub = subFor(ev, Set("azure"), target, rec)
+        Pending(rs.map(subFor(ev, Set("azure"), target, _)), { (sub, _) =>
           JsonOps.encode(sub, target, "message")
           Mutate.addField(sub, "[log][source][hostname]", s"%{[$target][tenantId]}")
           per(sub)
           sub.remove(target)
-          sub
         })
       case None => // bare object: target never set — renames no-op, hostname
         // stays the unresolved literal (94 scrubs it to null)
-        Mutate.addField(ev, "[log][source][hostname]", s"%{[$target][tenantId]}")
-        per(ev)
-        ev.remove("azure")
-        Parsed(Seq(ev))
+        Pending(Seq(ev), { (ev, _) =>
+          Mutate.addField(ev, "[log][source][hostname]", s"%{[$target][tenantId]}")
+          per(ev)
+          ev.remove("azure")
+        })
     }
   }
 
@@ -105,18 +104,15 @@ object EventHubRules {
         case Some(a: mutable.ArrayBuffer[Any @unchecked]) if a.nonEmpty => a.toVector
         case _ => Vector(new Event.FMap())
       }
-      Parsed(records.map { rec =>
-        val sub = subFor(ev, Set("tmp"), "az", rec)
+      Pending(records.map(subFor(ev, Set("tmp"), "az", _)), { (sub, _) =>
         JsonOps.encode(sub, "az", "message") // replace => "%{az}"
         per(sub)
         sub.remove("az"); sub.remove("tmp")
-        sub
       })
-    } else {
+    } else Pending(Seq(ev), { (ev, _) =>
       per(ev)
       ev.remove("az"); ev.remove("tmp")
-      Parsed(Seq(ev))
-    }
+    })
   }
 
   private def dateRm(ev: Event, f: String, fmts: Seq[String], tag: String): Unit =
@@ -392,7 +388,7 @@ object EventHubRules {
         sub
       }.toVector
     }
-    val out = subs.map { sub =>
+    Pending(subs, { (sub, _) =>
       sub.set("[event][module]", "azure")
       sub.set("[event][dataset]", "azure.anomalies")
       Mutate.addField(sub, "[log][source][hostname]", "%{[tmp][records][tenantid]}")
@@ -424,9 +420,7 @@ object EventHubRules {
       dateRm(sub, "[event][start]", Seq("ISO8601"), "_dateparsefailure_es")
       dateRm(sub, "[event][end]", Seq("ISO8601"), "_dateparsefailure_ee")
       sub.remove("tmp")
-      sub
-    }
-    Parsed(out)
+    })
   }
 
   // ---------------------------------- azure.interactivesignin (style D)
@@ -465,7 +459,7 @@ object EventHubRules {
         ev.rename("tmp", "az")
         Vector(ev)
       }
-    val out = subs.map { sub =>
+    Pending(subs, { (sub, _) =>
       // ref :49-85 — recursive key-downcase (guardduty normalizer)
       Mutate.deepDowncaseKeys(sub,
         ignore = Set("path", "@timestamp", "@metadata", "host", "@version",
@@ -548,8 +542,6 @@ object EventHubRules {
       dateRm(sub, "[event][created]", Seq("ISO8601"), "_dateparsefailure_ec")
       dateRm(sub, "[event][ingested]", Seq("ISO8601"), "_dateparsefailure_ei")
       sub.remove("az")
-      sub
-    }
-    Parsed(out)
+    })
   }
 }

@@ -25,7 +25,7 @@ object ForescoutPushRules {
         Seq(tag))
   }
 
-  def forescoutPush(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def forescoutPush(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "forescout") // ref :9-12
     ev.set("[event][dataset]", "forescout.device_inventory")
     Mutate.gsub(ev, "message", "\\r", "") // ref :13-18
@@ -61,6 +61,5 @@ object ForescoutPushRules {
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     ev.remove("fs") // ref :82-84
     ev.remove("headers")
-    Parsed(Seq(ev))
   }
 }

@@ -37,7 +37,7 @@ object ForescoutRules {
     ev.rename("[cact][Severity]", "[event][severity_name]")
   }
 
-  def counteract(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def counteract(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "forescout") // ref :9-13
     ev.set("[event][dataset]", "forescout.counteract_nac")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :14-18
@@ -184,6 +184,5 @@ object ForescoutRules {
         Mutate.replace(ev, "[log][source][hostname]", "%{[host][hostname]}")
       }
     }
-    Parsed(Seq(ev))
   }
 }

@@ -20,7 +20,7 @@ object ForwarderDbRules {
     *  - [event][duration] is converted to float and multiplied by Ruby
     *    10e6 == 1.0e7 (:63-70) — ms × 10,000,000, not nanoseconds.
     *  - [tmp][tags] (an array) renames onto [host][os][type]. */
-  def virtustreamWindows(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def virtustreamWindows(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "virtustream") // ref :9-12
     ev.set("[event][dataset]", "virtustream.windows")
     JsonOps.parse(ev, "message", "tmp") // ref :13-16
@@ -87,7 +87,6 @@ object ForwarderDbRules {
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     ev.remove("tmp") // ref :102-104
     ev.remove("port")
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------------- hadoop.impala_audit
@@ -104,7 +103,7 @@ object ForwarderDbRules {
     *    always truthy, so [event][outcome] is ALWAYS authorization_success.
     *  - [event][module] is OVERWRITTEN by statement_type.
     *  - both [fields][environment] renames probe a never-set field. */
-  def impalaAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def impalaAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "hadoop") // ref :10-13
     ev.set("[event][dataset]", "hadoop.impala_audit")
     ev.copyField("message", "[event][original]") // beats listener analogue (see scaladoc)
@@ -135,6 +134,5 @@ object ForwarderDbRules {
                   "fields", "[event][original]", "tmp_json", "tmp")) ev.remove(f)
     for (t <- Seq("impala-audit", "beats", "beats_input_codec_plain_applied", "siem-kafka"))
       ev.removeTag(t)
-    Parsed(Seq(ev))
   }
 }

@@ -34,7 +34,7 @@ object GuardiumRules {
 
   private def rm(ev: Event): String = ev.getString("rest_message").getOrElse("")
 
-  def guardium(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def guardium(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "guardium") // ref :9-12
     ev.set("[event][dataset]", "guardium.db")
     Mutate.strip(ev, "message") // ref :16-19
@@ -235,6 +235,5 @@ object GuardiumRules {
         ev.copyField("[host][hostname]", "[log][source][hostname]")
       }
     }
-    Parsed(Seq(ev))
   }
 }

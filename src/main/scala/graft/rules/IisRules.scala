@@ -26,12 +26,16 @@ object IisRules {
     ev.rename("[agent][hostname]", "[log][source][hostname]")
     val raw = ev.stringOrNull("message")
     if (raw != null && raw.startsWith("#")) return Dropped // ref :14-19
+    Pending(Seq(ev), iisW3cBody)
+  }
+
+  private def iisW3cBody(ev: Event, ctx: ParseCtx): Unit = {
     Mutate.strip(ev, "message") // ref :20-23
     Mutate.gsub(ev, "message", "\r", "")
     if (!Dissect(ev, "message", iisDissect, Seq("_dissectfailure"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     Csv(ev, "rest_msg", Nil, separator = ' ', target = "iis") // ref :29-33
     ev.copyField("[iis][column1]", "chk_data") // ref :34-36
@@ -99,6 +103,5 @@ object IisRules {
       .foreach(ev.remove)
     Mutate.convert(ev, "[source][bytes]", "integer")
     Mutate.convert(ev, "[destination][bytes]", "integer")
-    Parsed(Seq(ev))
   }
 }

@@ -17,7 +17,7 @@ import graft.parse.{Dates, Grok, Mutate}
   *    root-locale symbols. */
 object InfobloxFtpRules {
 
-  def infobloxFtp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def infobloxFtp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[log][source][hostname]", "ftp_infoblox_api") // ref :9-13
     ev.set("[event][module]", "infoblox")
     ev.set("[event][dataset]", "infoblox.dns")
@@ -46,6 +46,5 @@ object InfobloxFtpRules {
       "[event][created_ms]", timezone = "GMT", locale = "ec",
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 }

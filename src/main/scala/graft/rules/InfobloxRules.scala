@@ -36,6 +36,10 @@ object InfobloxRules {
       Mutate.addField(ev, "[agent][parse_rule]", "RULE 1 (dropped)")
       return Dropped
     }
+    Pending(Seq(ev), ipamAuditBody(am))
+  }
+
+  private def ipamAuditBody(am: String)(ev: Event, ctx: ParseCtx): Unit = {
     Dissect(ev, "actual_msg",
       "%{[[event][created]]->} %{+[[event][created]]} %{+[[event][created]]} %{source_ip} %{rest_msg}")
     val named = am.contains("named[")
@@ -143,6 +147,5 @@ object InfobloxRules {
       ev.copyField("[host][hostname]", "[log][source][hostname]")
     }
     ev.remove("[log][date_time]"); ev.remove("actual_msg"); ev.remove("rest_msg")
-    Parsed(Seq(ev))
   }
 }

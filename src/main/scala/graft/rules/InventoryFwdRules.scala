@@ -10,10 +10,9 @@ import graft.parse.{Dates, Dissect, Grok, JsonOps, Mutate, SyslogPri}
   */
 object InventoryFwdRules {
 
-  private def failParse(ev: Event): ParseOutcome = {
+  private def failParse(ev: Event): Unit = {
     ev.set("[agent][parse_rule]", "not parsed")
     ev.addTag("_parse_failure")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------- tanium.inventory
@@ -29,7 +28,7 @@ object InventoryFwdRules {
     *    brace-less payload lands the default _grokparsefailure.
     *  - skip_on_invalid_json (:26-30): an unparseable remainder is
     *    silently ignored, every rename goes dead. */
-  def taniumInventory(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def taniumInventory(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "tanium") // ref :9-12
     ev.set("[event][dataset]", "tanium.inventory")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -68,7 +67,6 @@ object InventoryFwdRules {
     ev.remove("actual_msg") // ref :102-104
     ev.remove("tanm")
     ev.remove("tmp_msg")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------- virtustream.linux
@@ -81,7 +79,7 @@ object InventoryFwdRules {
     *    :exception=>…}` captures split ruby-exception payloads.
     *  - non-bracketed logstash messages rename syslog_message →
     *    [error][message] wholesale (:42-46). */
-  def virtustreamLinux(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def virtustreamLinux(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "virtustream") // ref :9-12
     ev.set("[event][dataset]", "virtustream.linux")
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev) // ref :13-16
@@ -117,7 +115,6 @@ object InventoryFwdRules {
     if (Dates(ev, "[tmp][received_at]", Seq("ISO8601"), "[event][ingested_ms]", // ref :61-66
       timezone = "GMT", locale = "en")) ()
     ev.remove("tmp") // ref :68-70
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------- pingfederate.auth
@@ -136,6 +133,10 @@ object InventoryFwdRules {
     val msg0 = ev.getString("message").getOrElse("")
     if (msg0 == "") return Dropped // ref :13-18 (RULE 1 (dropped))
     if (msg0.contains("<191>")) return Dropped // ref :21-27 (RULE 2 (dropped))
+    Pending(Seq(ev), pingfederateBody)
+  }
+
+  private def pingfederateBody(ev: Event, ctx: ParseCtx): Unit = {
     Mutate.strip(ev, "message") // ref :28-33
     Mutate.gsub(ev, "message", "\\r\\n", ";")
     Mutate.gsub(ev, "message", "  ", " ")
@@ -176,6 +177,5 @@ object InventoryFwdRules {
     ev.remove("del1")
     ev.remove("[log][date]")
     ev.remove("rest_msg")
-    Parsed(Seq(ev))
   }
 }

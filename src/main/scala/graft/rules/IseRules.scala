@@ -61,7 +61,7 @@ object IseRules {
     "CISE_Passed_Authentications" -> "success",
     "CISE_Failed_Authentications" -> "failure", "CISE_Failed_Attempts" -> "failure")
 
-  def ciscoIse(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoIse(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.ise")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -69,7 +69,7 @@ object IseRules {
     if (!Grok(ev, "actual_msg", Seq(iseMainGrok), Seq("_grokparsefailure"))) { // ref :24-29
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("syslog_date", "[tmp][syslog_date]") // ref :32-35
@@ -152,6 +152,5 @@ object IseRules {
       if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]")
     }
     Seq("tmp", "kvs", "actual_msg", "proc_tmp").foreach(ev.remove) // ref :264-267
-    Parsed(Seq(ev))
   }
 }

@@ -29,7 +29,7 @@ object JuniperRules {
     if (category != null) Mutate.addField(ev, "[rule][category]", category)
   }
 
-  def fwTraffic(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def fwTraffic(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "juniper")
     ev.set("[event][dataset]", "juniper.fw_traffic")
     Mutate.strip(ev, "message")
@@ -139,6 +139,5 @@ object JuniperRules {
     if (ev.getString("[destination][nat][ip]").exists(_.contains("a")))
       ev.remove("[destination][nat][ip]")
     if (ev.has("[host][hostname]")) ev.copyField("[host][hostname]", "[host][name]")
-    Parsed(Seq(ev))
   }
 }

@@ -59,6 +59,10 @@ object LiebermanRules {
       ev.set("[agent][parse_rule]", "RULE 1 (dropped)")
       return Dropped
     }
+    Pending(Seq(ev), passManagerBody)
+  }
+
+  private def passManagerBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.mergeInto("[agent][parse_rule]", "RULE 2") // ref :28-35
     Mutate.strip(ev, "actual_msg")
     Mutate.gsub(ev, "actual_msg", "\\\"", "'")
@@ -109,6 +113,5 @@ object LiebermanRules {
     Seq("[log][date_time]", "extra", "map_context", "compact_mode", "manager_name",
       "account_store_identifier", "propogation_name", "actual_msg", "tmp_user_name")
       .foreach(ev.remove) // ref :314
-    Parsed(Seq(ev))
   }
 }

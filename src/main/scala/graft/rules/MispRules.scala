@@ -114,10 +114,14 @@ object MispRules {
     ev.set("[observer][type]", "api")
     val msg = ev.getString("message").getOrElse("")
     if (msg.contains("\"type\":\"text\"") || msg.contains("\"type\":\"float\"")) return Dropped
+    Pending(Seq(ev), metricsBody)
+  }
+
+  private def metricsBody(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "misp")) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.addTag("mitre att&ck")
@@ -205,6 +209,5 @@ object MispRules {
     else
       Mutate.addField(ev, "[event][category]", "active")
     ev.remove("misp"); ev.remove("[threat][list][event_tag]")
-    Parsed(Seq(ev))
   }
 }

@@ -107,6 +107,10 @@ object NetscalerRules {
       ev.set("[agent][parse_rule]", "RULE 1 (dropped)")
       return Dropped
     }
+    Pending(Seq(ev), netscalerBody)
+  }
+
+  private def netscalerBody(ev: Event, ctx: ParseCtx): Unit = {
     // ref :34-38 — created(2 tokens) host ppe : description : rest
     Dissect(ev, "actual_msg",
       "%{[[event][created]]} %{+[[event][created]]} %{[[source][address]]} %{?data} : %{event_description} : %{rest_msg}")
@@ -352,6 +356,5 @@ object NetscalerRules {
     ev.getString("[host][hostname]").foreach { h =>
       if (h != "") ev.copyField("[host][hostname]", "[host][name]")
     }
-    Parsed(Seq(ev))
   }
 }

@@ -20,7 +20,7 @@ object OpsRules {
     * "access success"; and the failure branch checks "_dateparsefailure"
     * while the date tags "_dateparsefailure_ec" (:72-76), so a failed
     * created date would never be removed. */
-  def hdfsAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def hdfsAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "hadoop") // ref :10-14
     ev.set("[event][dataset]", "hadoop.hdfs_audit")
     // beats-side metadata the conf consumes: event.original (plain codec)
@@ -30,7 +30,7 @@ object OpsRules {
     if (!Grok(ev, "[event][original]", Seq(hdfsGrok), Seq("_grokparsefailure_to_tmp"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     Mutate.gsub(ev, "tmp", "\\\\\"", "\"") // ref :19-23
@@ -52,7 +52,6 @@ object OpsRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     // ref :72-76 checks the WRONG tag — on failure the string field stays
     Seq("fields", "tmp", "[event][original]", "tmp_kv").foreach(ev.remove) // ref :77-80
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------------ linux.host
@@ -63,7 +62,7 @@ object OpsRules {
     * pri until the cleanup remove (:127). The severity translate's
     * dictionary keys are whole captured phrases ("fatal: Access denied");
     * absent severity skips the translate (no fallback fires). */
-  def linuxHost(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def linuxHost(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "linux") // ref :9-12
     ev.set("[event][dataset]", "linux.syslog")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -73,7 +72,7 @@ object OpsRules {
       Seq("_dissectfailure"))) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     val pri = ev.getString("pri").getOrElse("")
     val msg = ev.getString("actual_msg").getOrElse("")
@@ -144,7 +143,6 @@ object OpsRules {
     if (ev.has("[host][hostname]")) // ref :143-147
       ev.copyField("[host][hostname]", "[host][name]")
     ev.rename("[host][name]", "[log][source][hostname]") // ref :148-150
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------- f5.loadbalancer
@@ -177,6 +175,10 @@ object OpsRules {
     SyslogPri(ev, removeField = false) // ref :21-23 — pri is kept
     val m = ev.getString("actual_msg").getOrElse("")
     if (m.contains(" debug ")) return Dropped // ref :25-30 RULE 1
+    Pending(Seq(ev), f5LtmBody(m))
+  }
+
+  private def f5LtmBody(m: String)(ev: Event, ctx: ParseCtx): Unit = {
     // ref :31-39 RULE 2: pri is numeric — "EMRG" never matches (dead arm)
     val matched: Boolean =
       if (m.contains("emdeviced")) { // ref RULE 3
@@ -220,6 +222,5 @@ object OpsRules {
     }
     ev.remove("pri") // ref :302-304
     ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 }

@@ -18,7 +18,7 @@ import graft.parse.{Dates, Dissect, Kv, Mutate}
   *  - the internal-need hostname guard copies to [host][name] (:74-79). */
 object PreemptRules {
 
-  def preempt(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def preempt(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "preempt") // ref :9-12
     ev.set("[event][dataset]", "preempt.threat_intelligence")
     Mutate.strip(ev, "message") // ref :14-16
@@ -58,6 +58,5 @@ object PreemptRules {
       ev.remove(f)
     if (ev.getString("[host][hostname]").exists(_.nonEmpty)) // ref :76-81
       ev.copyField("[host][hostname]", "[host][name]")
-    Parsed(Seq(ev))
   }
 }

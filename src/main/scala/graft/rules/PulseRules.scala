@@ -36,7 +36,7 @@ object PulseRules {
 
   private def desc(ev: Event): String = ev.getString("event_description").getOrElse("")
 
-  def pulseVpn(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def pulseVpn(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "pulse_secure") // ref :9-12
     ev.set("[event][dataset]", "pulse_secure.vpn")
     Mutate.strip(ev, "message") // ref :13-16
@@ -219,6 +219,5 @@ object PulseRules {
       ev.remove("[event][created]")
     Seq("[log][date_time]", "event_description", "actual_msg", "msg", "event_info")
       .foreach(ev.remove) // ref :453-455
-    Parsed(Seq(ev))
   }
 }

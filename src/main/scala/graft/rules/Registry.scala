@@ -17,10 +17,54 @@ final case class TechnologyConfig(
 )
 
 /** Outcome of a parse program. `Dropped` mirrors the `drop {}` filter;
-  * `Parsed` carries 1..N events (N>1 only on envelope splits). */
+  * `Parsed` carries 1..N finished events (N>1 only on envelope splits);
+  * `Pending` carries them with the program's 1:1 rest still to run. */
 sealed trait ParseOutcome
 case object Dropped extends ParseOutcome
 final case class Parsed(events: Seq[Event]) extends ParseOutcome
+/** The events a program's cardinality step yields, each still owed `body`.
+  * Typed `Unit`, a body can neither drop its event nor add one, so
+  * `events.size` is the turn's event count before any body runs. */
+final case class Pending(events: Seq[Event], body: (Event, ParseCtx) => Unit) extends ParseOutcome
+
+/** A parse program, split at its last cardinality decision. `step` holds
+  * the drop guards and the splits: it returns `Dropped` or the turn's
+  * events, `Pending` their 1:1 rest (or `Parsed` for a program left whole).
+  * A program with no such decision has no step and is all `body`: it keeps
+  * the one event the kernel preamble made. Applied as a function, a program
+  * runs whole and returns `Dropped` or `Parsed`. */
+final class Program private (step: (Event, ParseCtx) => ParseOutcome,
+                             body: (Event, ParseCtx) => Unit)
+    extends ((Event, ParseCtx) => ParseOutcome) {
+  /** Whether the program can yield other than exactly one event. */
+  def splits: Boolean = step != null
+
+  /** The cardinality step alone. */
+  def events(ev: Event, ctx: ParseCtx): ParseOutcome =
+    if (step == null) Pending(ev :: Nil, body) else step(ev, ctx)
+
+  def apply(ev: Event, ctx: ParseCtx): ParseOutcome = Program.finish(events(ev, ctx), ctx)
+}
+
+object Program {
+  /** A program with no cardinality step. */
+  def apply(body: (Event, ParseCtx) => Unit): Program = new Program(null, body)
+
+  /** A program whose `step` drops or splits. */
+  def split(step: (Event, ParseCtx) => ParseOutcome): Program = new Program(step, null)
+
+  /** Runs a pending body on each event, in order. */
+  def finish(outcome: ParseOutcome, ctx: ParseCtx): ParseOutcome = outcome match {
+    case Pending(events, body) => events.foreach(body(_, ctx)); Parsed(events)
+    case done => done
+  }
+
+  def cardinality(outcome: ParseOutcome): Int = outcome match {
+    case Dropped => 0
+    case Parsed(events) => events.size
+    case Pending(events, _) => events.size
+  }
+}
 
 /** Context handed to programs: deterministic clock material (no Time.now —
   * SURVEY.md §7.4 #4). */
@@ -390,19 +434,18 @@ object Registry {
     // a multi-line datagram becomes one event per line, each running the
     // full palo program — the third cardinality-increasing path
     val raw = ev.stringOrNull("message")
-    if (raw != null && raw.indexOf('\n') >= 0) {
-      val out = raw.split("\n").toVector.map { line =>
+    val events =
+      if (raw != null && raw.indexOf('\n') >= 0) raw.split("\n").toVector.map { line =>
         val sub = new Event
         ev.tags.foreach(sub.addTag)
         sub.set("message", line)
-        paloAltoOne(sub, ctx)
+        sub
       }
-      return Parsed(out)
-    }
-    Parsed(Seq(paloAltoOne(ev, ctx)))
+      else Seq(ev)
+    Pending(events, paloAltoOne)
   }
 
-  private def paloAltoOne(ev: Event, ctx: ParseCtx): Event = {
+  private def paloAltoOne(ev: Event, ctx: ParseCtx): Unit = {
     Mutate.gsub(ev, "message", "\\\\\"", "\"") // ref :9-12
     Grok(ev, "message", Seq(HeaderGrok), Seq("_parsefailure_header"))
     SyslogPri(ev) // ref :18-21
@@ -423,7 +466,6 @@ object Registry {
       ev.set("[agent][parse_rule]", "not parsed") // ref :449
       ev.addTag("_parse_failure")
     }
-    ev
   }
 
   /** aws.vpcflow — semantic port of
@@ -441,7 +483,11 @@ object Registry {
     ev.set("[event][dataset]", "aws.vpcflow")
     val msg = ev.getString("message").getOrElse("")
     if (msg.startsWith("version") || msg.contains("NODATA") || msg.isEmpty)
-      return Dropped // ref :14-16
+      Dropped // ref :14-16
+    else Pending(Seq(ev), vpcflowBody)
+  }
+
+  private def vpcflowBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[agent][parse_rule]", "Rule 1")
     if (Dissect(ev, "message", vpcflowDissect, Seq("_dissectfailure_1"))) {
       Mutate.addField(ev, "[log][source][hostname]", "%{[cloud][account][id]}") // ref :24-26
@@ -457,7 +503,6 @@ object Registry {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
     }
-    Parsed(Seq(ev))
   }
 
   /** linux.rsyslog — sshd auth ladder, grok-primary (semantic port of the
@@ -470,7 +515,7 @@ object Registry {
     "^%{SYSLOGTIMESTAMP:[tmp][ts]} %{NOTSPACE:[host][name]} sshd\\[%{INT:[process][pid]}\\]: " +
       "Failed password for invalid user %{USERNAME:[user][name]} from %{IPV4:[source][ip]} port %{INT:[source][port]} ssh2"
 
-  def rsyslog(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def rsyslog(ev: Event, ctx: ParseCtx): Unit = {
     Grok(ev, "message", Seq(HeaderGrok), Seq("_parsefailure_header"))
     SyslogPri(ev)
     ev.set("[event][module]", "linux")
@@ -499,7 +544,6 @@ object Registry {
         tagOnFailure = Seq("_dateparsefailure_ec"), defaultYear = ctx.tsYear)
       ev.remove("tmp")
     }
-    Parsed(Seq(ev))
   }
 
   /** cef.fw — CEF header dissect + kv extensions (semantic port of "Rule 1",
@@ -509,7 +553,7 @@ object Registry {
     "CEF:%{?v}|%{[observer][vendor]}|%{[observer][product]}|%{[rule][version]}|" +
       "%{[rule][category]}|%{[rule][name]}|%{[event][severity]}|%{somedata}"
 
-  def cef(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def cef(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cef")
     ev.set("[event][dataset]", "cef.fw")
     ev.set("[event][kind]", "firewall")
@@ -529,7 +573,6 @@ object Registry {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
     }
-    Parsed(Seq(ev))
   }
 
   /** azure.signin — Event Hub records[] envelope: json → split → json_encode
@@ -556,21 +599,24 @@ object Registry {
       ev.root.forEach((k, v) => if (k != "azure") sub.root.put(k, Event.deepCopy(v)))
       ev.tags.foreach(sub.addTag)
       sub.set("azsign", Event.deepCopy(rec))
-      JsonOps.encode(sub, "azsign", "message") // ref :26-29 json_encode
-      sub.rename("[azsign][resultType]", "[error][code]")
-      sub.rename("[azsign][identity]", "[user][full_name]")
-      sub.rename("[azsign][properties][userPrincipalName]", "[user][email]")
-      sub.rename("[azsign][properties][userAgent]", "[user_agent][original]") // ref :44
-      sub.rename("[azsign][properties][appDisplayName]", "[service][name]")
-      sub.rename("[azsign][callerIpAddress]", "[source][ip]")
-      val cas = sub.getString("[azsign][properties][conditionalAccessStatus]").getOrElse("")
-      if (cas.contains("success")) sub.set("[event][outcome]", "authentication_successful")
-      else if (cas.contains("failure")) sub.set("[event][outcome]", "authentication_failure")
-      else sub.set("[event][outcome]", "unknown")
-      sub.remove("azsign")
       sub
     }
-    Parsed(out)
+    Pending(out, azureSigninRecord)
+  }
+
+  private def azureSigninRecord(sub: Event, ctx: ParseCtx): Unit = {
+    JsonOps.encode(sub, "azsign", "message") // ref :26-29 json_encode
+    sub.rename("[azsign][resultType]", "[error][code]")
+    sub.rename("[azsign][identity]", "[user][full_name]")
+    sub.rename("[azsign][properties][userPrincipalName]", "[user][email]")
+    sub.rename("[azsign][properties][userAgent]", "[user_agent][original]") // ref :44
+    sub.rename("[azsign][properties][appDisplayName]", "[service][name]")
+    sub.rename("[azsign][callerIpAddress]", "[source][ip]")
+    val cas = sub.getString("[azsign][properties][conditionalAccessStatus]").getOrElse("")
+    if (cas.contains("success")) sub.set("[event][outcome]", "authentication_successful")
+    else if (cas.contains("failure")) sub.set("[event][outcome]", "authentication_failure")
+    else sub.set("[event][outcome]", "unknown")
+    sub.remove("azsign")
   }
 
   /** mcafee.mcp — positional CSV parse (semantic port of
@@ -584,7 +630,11 @@ object Registry {
   def mcafeeMcp(ev: Event, ctx: ParseCtx): ParseOutcome = {
     Mutate.strip(ev, "message")
     val msg = ev.getString("message").getOrElse("")
-    if (msg.isEmpty) return Dropped // ref :13-15
+    if (msg.isEmpty) Dropped // ref :13-15
+    else Pending(Seq(ev), mcafeeMcpBody)
+  }
+
+  private def mcafeeMcpBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "mcafee")
     ev.set("[event][dataset]", "mcafee.mcp")
     ev.set("[agent][parse_rule]", "Rule 1")
@@ -597,7 +647,6 @@ object Registry {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
     }
-    Parsed(Seq(ev))
   }
 
   /** trellix.epo — header/xml split grok + xml parse + ECS renames
@@ -605,7 +654,7 @@ object Registry {
   private val epoSplitGrok =
     "^(?<[tmp][header]>epoevents.*?) .*?(?<[tmp][xml]><" + "\\?xml.*)$"
 
-  def trellixEpo(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def trellixEpo(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "trellix")
     ev.set("[event][dataset]", "trellix.epo")
     if (Grok(ev, "message", Seq(epoSplitGrok), Seq("_grokparsefailure_to_tmp")) &&
@@ -623,187 +672,185 @@ object Registry {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
     }
-    Parsed(Seq(ev))
   }
 
   /** unknown technology — nothing matches: stamp "not parsed" + failure tag
     * (ref: syslog_security_palo.alto.fw.conf:449 else-branch convention). */
-  def unknown(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def unknown(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "unknown")
     ev.set("[event][dataset]", "unknown")
     ev.set("[agent][parse_rule]", "not parsed")
     ev.addTag("_parse_failure")
-    Parsed(Seq(ev))
   }
 
-  private val basePrograms: Map[String, (Event, ParseCtx) => ParseOutcome] = Map(
-    "palo.alto.fw" -> paloAlto,
-    "aws.vpcflow" -> vpcflow,
-    "linux.rsyslog" -> rsyslog,
-    "cef.fw" -> cef,
-    "azure.signin" -> azureSignin,
-    "mcafee.mcp" -> mcafeeMcp,
-    "trellix.epo" -> trellixEpo,
-    "cisco.switch" -> CloudRules.ciscoSwitch,
-    "okta.audit" -> CloudRules.oktaAudit,
-    "aws.cloudtrail" -> CloudRules.awsCloudtrail,
-    "windows.events" -> WindowsRules.windowsEvents,
-    "proofpoint.siem_clicks" -> CloudRules.proofpointClicks,
-    "azure.atp" -> ApiRules.azureAtp,
-    "proofpoint.siem_messages" -> ApiRules.proofpointMessages,
-    "aws.elb" -> ApiRules.awsElb,
-    "snowflake.signin" -> ApiRules.snowflakeSignin,
-    "snowflake.failed_login" -> ApiRules.snowflakeFailedLogin,
-    "azure.officeactivity" -> ApiRules.azureOfficeactivity,
-    "cisco.ise" -> IseRules.ciscoIse,
-    "iis.w3c" -> IisRules.iisW3c,
-    "hadoop.hdfs_audit" -> OpsRules.hdfsAudit,
-    "f5.loadbalancer" -> OpsRules.f5Ltm,
-    "aws.cloudfront" -> EdgeRules.awsCloudfront,
-    "cisco.netflow" -> EdgeRules.ciscoNetflow,
-    "aws.guardduty" -> SecRules.awsGuardduty,
-    "azure.securityalert" -> SecRules.azureSecurityalert,
-    "linux.host" -> OpsRules.linuxHost,
-    "checkpoint.fw" -> SecRules.checkpointFw,
-    "github.audit" -> DbRules.githubAudit,
-    "citrix.session" -> DbRules.citrixSession,
-    "cisco.meraki.fw" -> SecRules.merakiFw,
-    "proofpoint.trap" -> DbRules.proofpointTrap,
-    "aws.securityhub" -> SecRules.awsSecurityhub,
-    "a10.proxy" -> EdgeRules.a10Proxy,
-    "entrust.mpki.cmpv2" -> WebSecRules.mpkiCmpv2,
-    "cisco.mso" -> WebSecRules.ciscoMso,
-    "sap.t-codes" -> WebSecRules.sapTcodes,
-    "cisco.riverbed.stdout" -> WebSecRules.riverbedStdout,
-    "oci.vcn" -> WebSecRules.ociVcn,
-    "aix.rsyslog" -> WebSecRules.aixRsyslog,
-    "as400.audit" -> WebSecRules.as400Audit,
-    "dell.drac" -> WebSecRules.dellDrac,
-    "checkpoint.fw_audit" -> WebSecRules.checkpointOps,
-    "hadoop.hms_audit" -> WebSecRules.hmsAudit,
-    "ansible.audit" -> WebSecRules.ansibleAudit,
-    "azure.mcas" -> WebSecRules.azureMcas,
-    "redhat.syslog" -> WebSecRules.redhatSyslog,
-    "virtustream.trendmicro" -> WebSecRules.trendmicroFwd,
-    "rsa.auth" -> WebSecRules.rsaAuth,
-    "vuln.gitguardian_api" -> WebSecRules.gitguardian,
-    "github.ghe" -> WebSecRules.awsGhe,
-    "oci.audit" -> WebSecRules.ociAudit,
-    "aws.cloudflare" -> WebSecRules.awsCloudflare,
-    "known_good_file_hash.nist" -> WebSecRules.nistHash,
-    "sysdig.scan.api" -> WebSecRules.sysdigScan,
-    "kafka.error" -> WebSecRules.beatsAgent("kafka", "kafka.error", 3) _,
-    "syncplicity.admin_logs" -> WebSecRules.syncplicityAdmin,
-    "syncplicity.user_logs" -> WebSecRules.syncplicityUser,
-    "security_scorecard.company_scores" -> WebSecRules.scorecard,
-    "tanium.agent" -> WebSecRules.beatsAgent("tanium", "tanium.agent", 0) _,
-    "rundeck.agent" -> WebSecRules.beatsAgent("rundeck", "rundeck.agent", 0) _,
-    "hadoop.agent" -> WebSecRules.beatsAgent("hadoop", "hadoop.agent", 1) _,
-    "elasticsearch.audit" -> WebSecRules.beatsAgent("elasticsearch", "elasticsearch.audit", 2) _,
-    "unidentified" -> WebSecRules.unidentified,
-    "cisco.meraki.wap" -> WebSecRules.headerOnly("cisco.meraki", "cisco.meraki.wap", strip = false) _,
-    "cisco.meraki.router" -> WebSecRules.headerOnly("cisco.meraki", "cisco.meraki.router", strip = true) _,
-    "cisco.satellite" -> WebSecRules.headerOnly("cisco", "cisco.satellite", strip = false) _,
-    "cisco.wireless.bridge" -> WebSecRules.headerOnly("cisco", "cisco.wireless.bridge", strip = false) _,
-    "cisco.prime" -> WebSecRules.ciscoPrime,
-    "cisco.riverbed.amauth" -> WebSecRules.riverbedAmauth,
-    "securityonion.zeek" -> ZeekRules.zeek,
-    "securityonion.suricata" -> WebSecRules.suricata,
-    "apache.access" -> WebSecRules.apacheAccess,
-    "azure.eventhub.o365_dlp" -> WebSecRules.o365Dlp,
-    "azure.eventhub.o365.msg_tracking" -> WebSecRules.o365MsgTracking,
-    "azure.fwflow" -> WebSecRules.azureFwFlow,
-    "proofpoint.pod" -> WebSecRules.proofpointPod,
-    "misp.metrics" -> MispRules.metrics,
-    "infoblox.ipam_audit" -> InfobloxRules.ipamAudit,
-    "juniper.fw_traffic" -> JuniperRules.fwTraffic,
-    "symantec.endpoint_protection" -> SymantecRules.endpoint,
-    "azure.eventhub.insights_audit" -> EventHubRules.ehAudit,
-    "azure.eventhub.insights_operational" -> EventHubRules.ehOperational,
-    "azure.audit" -> EventHubRules.ehAzureaudit,
-    "azure.riskyuser" -> EventHubRules.ehRiskyuser,
-    "azure.emailevents" -> EventHubRules.ehEmailevents,
-    "azure.userriskevents" -> EventHubRules.ehUserriskevents,
-    "azure.securityincident" -> EventHubRules.ehSecurityincident,
-    "azure.anomalies" -> EventHubRules.ehAnomalies,
-    "azure.interactivesignin" -> EventHubRules.ehInteractiveSignin,
-    "citrix.netscaler" -> NetscalerRules.netscaler,
-    "juniper_pulse.ssl.vpn" -> PulseRules.pulseVpn,
-    "tanium" -> TaniumRules.tanium,
-    "guardium.db" -> GuardiumRules.guardium,
-    "sdwan.app" -> SdwanRules.sdwanApp,
-    "skyhigh.security.mgr" -> SkyhighRules.secMgr,
-    "skyhigh.swg" -> SkyhighRules.swg,
-    "skyhigh.scp" -> SkyhighRules.scp,
-    "forescout.counteract.nac" -> ForescoutRules.counteract,
-    "cisco.dna" -> DnaF5Rules.ciscoDna,
-    "f5.big.ip.gtm.dns" -> DnaF5Rules.f5Gtm,
-    "lieberman.random.pass.mgr" -> LiebermanRules.passManager,
-    "snmp.forescout" -> TenableRules.snmpForescout,
-    "tenable.nessus_scanner" -> TenableRules.nessusScanner,
-    "tenable.security_center" -> TenableRules.securityCenter,
-    "tenable.sc_api" -> TenableRules.vulnSc,
-    "tenable.asm_api" -> TenableRules.vulnAsm,
-    "layer7.securespan.soa.gw" -> Layer7Rules.layer7,
-    "microsoft.ata" -> AtaRules.ata,
-    "spectracom.ntp" -> SpectracomRules.ntp,
-    "sdwan.os_ubuntu" -> SdwanOsRules.osUbuntu,
-    "a10.waf" -> A10WafRules.waf,
-    "cisco.router" -> CiscoRouterRules.router,
-    "cisco.apic" -> CiscoApicRules.apic,
-    "cisco.stealthwatch" -> StealthwatchRules.stealthwatch,
-    "accellion.sft" -> AccellionRules.sft,
-    "sap.onapsis" -> SapOnapsisRules.onapsis,
-    "symantec.dlp" -> SymantecDlpRules.dlp,
-    "cisco.aci" -> CiscoAciRules.aci,
-    "cisco.wireless.controller" -> CiscoWlcRules.wlc,
-    "azure.eventhub.atp" -> AzureTailRules.ehAtp,
-    "azure.eventhub.security" -> AzureTailRules.ehSecurity,
-    "azure.graph_data" -> AzureTailRules.graphApi,
-    "riverbed.netim" -> RiverbedNetimRules.netim,
-    "aws.app" -> AwsAppRules.awsApp,
-    "tanium.inventory" -> InventoryFwdRules.taniumInventory,
-    "virtustream.linux" -> InventoryFwdRules.virtustreamLinux,
-    "pingfederate.auth" -> InventoryFwdRules.pingfederate,
-    "cisco.riverbed.audit" -> RiverbedFlatRules.audit,
-    "cisco.riverbed.vnes_analytics" -> RiverbedFlatRules.vnes,
-    "cisco.riverbed.scportal" -> RiverbedFlatRules.scportal,
-    "cisco.riverbed.opnetreport" -> RiverbedFlatRules.opnetreport,
-    "ubiquiti.wireless.bridge.session" -> WirelessEdgeRules.ubiquitiBridge,
-    "ubiquiti.controller" -> WirelessEdgeRules.ubiquitiController,
-    "cisco.wireless.access_point" -> WirelessEdgeRules.ciscoWirelessAp,
-    "cisco.waas" -> WirelessEdgeRules.ciscoWaas,
-    "apache" -> ApacheWebRules.apache,
-    "apache.audit" -> ApacheWebRules.apacheAudit,
-    "mwg.proxy.audit" -> ApacheWebRules.mwgProxy,
-    "iis" -> ApacheWebRules.iisFlat,
-    "jira" -> AtlassianRules.jira,
-    "jira.audit" -> AtlassianRules.jiraAudit,
-    "beyondtrust.secure_remote_mngt" -> SecOpsRules.bomgar,
-    "tufin.fw_acl_manager" -> SecOpsRules.tufin,
-    "hp.nnm_audit" -> SecOpsRules.hpNnm,
-    "oci.cloudguard" -> ApiCloudRules.ociCloudguard,
-    "oci.object" -> ApiCloudRules.ociObject,
-    "jamf.endpoint_protection" -> ApiCloudRules.jamfProtect,
-    "sap.btp" -> ApiCloudRules.sapBtp,
-    "o365.dlp" -> ApiDirectoryRules.o365Dlp,
-    "azure.graph_identity_protection" -> ApiDirectoryRules.graphIdentity,
-    "security_scorecard.events" -> ApiDirectoryRules.scorecard,
-    "active_directory.users" -> ApiDirectoryRules.adUsers,
-    "virtustream.windows" -> ForwarderDbRules.virtustreamWindows,
-    "hadoop.impala_audit" -> ForwarderDbRules.impalaAudit,
-    "tenable_nessus.security_center" -> AuditTailRules.securityCenter,
-    "sap.cloud_connector" -> AuditTailRules.sapCloudConnector,
-    "citrix.admin" -> CitrixAdminRules.citrixAdmin,
-    "aws.lb" -> AwsLbRules.awsLb,
-    "skyhigh.atd" -> SkyhighAtdRules.skyhighAtd,
-    "preempt.threat_intelligence" -> PreemptRules.preempt,
-    "skyhigh_scal" -> ScalAuditRules.scalAudit,
-    "infoblox.dns" -> InfobloxFtpRules.infobloxFtp,
-    "windows.exporter" -> WindowsExporterRules.windowsExporter,
-    "forescout.device_inventory" -> ForescoutPushRules.forescoutPush,
-    "unknown" -> unknown)
+  private val basePrograms: Map[String, Program] = Map(
+    "palo.alto.fw" -> Program.split(paloAlto),
+    "aws.vpcflow" -> Program.split(vpcflow),
+    "linux.rsyslog" -> Program(rsyslog),
+    "cef.fw" -> Program(cef),
+    "azure.signin" -> Program.split(azureSignin),
+    "mcafee.mcp" -> Program.split(mcafeeMcp),
+    "trellix.epo" -> Program(trellixEpo),
+    "cisco.switch" -> Program(CloudRules.ciscoSwitch),
+    "okta.audit" -> Program.split(CloudRules.oktaAudit),
+    "aws.cloudtrail" -> Program(CloudRules.awsCloudtrail),
+    "windows.events" -> Program(WindowsRules.windowsEvents),
+    "proofpoint.siem_clicks" -> Program(CloudRules.proofpointClicks),
+    "azure.atp" -> Program(ApiRules.azureAtp),
+    "proofpoint.siem_messages" -> Program(ApiRules.proofpointMessages),
+    "aws.elb" -> Program.split(ApiRules.awsElb),
+    "snowflake.signin" -> Program(ApiRules.snowflakeSignin),
+    "snowflake.failed_login" -> Program(ApiRules.snowflakeFailedLogin),
+    "azure.officeactivity" -> Program.split(ApiRules.azureOfficeactivity),
+    "cisco.ise" -> Program(IseRules.ciscoIse),
+    "iis.w3c" -> Program.split(IisRules.iisW3c),
+    "hadoop.hdfs_audit" -> Program(OpsRules.hdfsAudit),
+    "f5.loadbalancer" -> Program.split(OpsRules.f5Ltm),
+    "aws.cloudfront" -> Program.split(EdgeRules.awsCloudfront),
+    "cisco.netflow" -> Program(EdgeRules.ciscoNetflow),
+    "aws.guardduty" -> Program(SecRules.awsGuardduty),
+    "azure.securityalert" -> Program.split(SecRules.azureSecurityalert),
+    "linux.host" -> Program(OpsRules.linuxHost),
+    "checkpoint.fw" -> Program.split(SecRules.checkpointFw),
+    "github.audit" -> Program(DbRules.githubAudit),
+    "citrix.session" -> Program(DbRules.citrixSession),
+    "cisco.meraki.fw" -> Program(SecRules.merakiFw),
+    "proofpoint.trap" -> Program(DbRules.proofpointTrap),
+    "aws.securityhub" -> Program(SecRules.awsSecurityhub),
+    "a10.proxy" -> Program.split(EdgeRules.a10Proxy),
+    "entrust.mpki.cmpv2" -> Program(WebSecRules.mpkiCmpv2),
+    "cisco.mso" -> Program(WebSecRules.ciscoMso),
+    "sap.t-codes" -> Program(WebSecRules.sapTcodes),
+    "cisco.riverbed.stdout" -> Program(WebSecRules.riverbedStdout),
+    "oci.vcn" -> Program(WebSecRules.ociVcn),
+    "aix.rsyslog" -> Program(WebSecRules.aixRsyslog),
+    "as400.audit" -> Program(WebSecRules.as400Audit),
+    "dell.drac" -> Program(WebSecRules.dellDrac),
+    "checkpoint.fw_audit" -> Program(WebSecRules.checkpointOps),
+    "hadoop.hms_audit" -> Program(WebSecRules.hmsAudit),
+    "ansible.audit" -> Program(WebSecRules.ansibleAudit),
+    "azure.mcas" -> Program(WebSecRules.azureMcas),
+    "redhat.syslog" -> Program(WebSecRules.redhatSyslog),
+    "virtustream.trendmicro" -> Program(WebSecRules.trendmicroFwd),
+    "rsa.auth" -> Program(WebSecRules.rsaAuth),
+    "vuln.gitguardian_api" -> Program(WebSecRules.gitguardian),
+    "github.ghe" -> Program(WebSecRules.awsGhe),
+    "oci.audit" -> Program(WebSecRules.ociAudit),
+    "aws.cloudflare" -> Program(WebSecRules.awsCloudflare),
+    "known_good_file_hash.nist" -> Program(WebSecRules.nistHash),
+    "sysdig.scan.api" -> Program(WebSecRules.sysdigScan),
+    "kafka.error" -> Program(WebSecRules.beatsAgent("kafka", "kafka.error", 3) _),
+    "syncplicity.admin_logs" -> Program(WebSecRules.syncplicityAdmin),
+    "syncplicity.user_logs" -> Program(WebSecRules.syncplicityUser),
+    "security_scorecard.company_scores" -> Program(WebSecRules.scorecard),
+    "tanium.agent" -> Program(WebSecRules.beatsAgent("tanium", "tanium.agent", 0) _),
+    "rundeck.agent" -> Program(WebSecRules.beatsAgent("rundeck", "rundeck.agent", 0) _),
+    "hadoop.agent" -> Program(WebSecRules.beatsAgent("hadoop", "hadoop.agent", 1) _),
+    "elasticsearch.audit" -> Program(WebSecRules.beatsAgent("elasticsearch", "elasticsearch.audit", 2) _),
+    "unidentified" -> Program(WebSecRules.unidentified),
+    "cisco.meraki.wap" -> Program(WebSecRules.headerOnly("cisco.meraki", "cisco.meraki.wap", strip = false) _),
+    "cisco.meraki.router" -> Program(WebSecRules.headerOnly("cisco.meraki", "cisco.meraki.router", strip = true) _),
+    "cisco.satellite" -> Program(WebSecRules.headerOnly("cisco", "cisco.satellite", strip = false) _),
+    "cisco.wireless.bridge" -> Program(WebSecRules.headerOnly("cisco", "cisco.wireless.bridge", strip = false) _),
+    "cisco.prime" -> Program(WebSecRules.ciscoPrime),
+    "cisco.riverbed.amauth" -> Program(WebSecRules.riverbedAmauth),
+    "securityonion.zeek" -> Program.split(ZeekRules.zeek),
+    "securityonion.suricata" -> Program(WebSecRules.suricata),
+    "apache.access" -> Program(WebSecRules.apacheAccess),
+    "azure.eventhub.o365_dlp" -> Program(WebSecRules.o365Dlp),
+    "azure.eventhub.o365.msg_tracking" -> Program(WebSecRules.o365MsgTracking),
+    "azure.fwflow" -> Program(WebSecRules.azureFwFlow),
+    "proofpoint.pod" -> Program(WebSecRules.proofpointPod),
+    "misp.metrics" -> Program.split(MispRules.metrics),
+    "infoblox.ipam_audit" -> Program.split(InfobloxRules.ipamAudit),
+    "juniper.fw_traffic" -> Program(JuniperRules.fwTraffic),
+    "symantec.endpoint_protection" -> Program(SymantecRules.endpoint),
+    "azure.eventhub.insights_audit" -> Program.split(EventHubRules.ehAudit),
+    "azure.eventhub.insights_operational" -> Program.split(EventHubRules.ehOperational),
+    "azure.audit" -> Program.split(EventHubRules.ehAzureaudit),
+    "azure.riskyuser" -> Program.split(EventHubRules.ehRiskyuser),
+    "azure.emailevents" -> Program.split(EventHubRules.ehEmailevents),
+    "azure.userriskevents" -> Program.split(EventHubRules.ehUserriskevents),
+    "azure.securityincident" -> Program.split(EventHubRules.ehSecurityincident),
+    "azure.anomalies" -> Program.split(EventHubRules.ehAnomalies),
+    "azure.interactivesignin" -> Program.split(EventHubRules.ehInteractiveSignin),
+    "citrix.netscaler" -> Program.split(NetscalerRules.netscaler),
+    "juniper_pulse.ssl.vpn" -> Program(PulseRules.pulseVpn),
+    "tanium" -> Program(TaniumRules.tanium),
+    "guardium.db" -> Program(GuardiumRules.guardium),
+    "sdwan.app" -> Program(SdwanRules.sdwanApp),
+    "skyhigh.security.mgr" -> Program.split(SkyhighRules.secMgr),
+    "skyhigh.swg" -> Program(SkyhighRules.swg),
+    "skyhigh.scp" -> Program.split(SkyhighRules.scp),
+    "forescout.counteract.nac" -> Program(ForescoutRules.counteract),
+    "cisco.dna" -> Program(DnaF5Rules.ciscoDna),
+    "f5.big.ip.gtm.dns" -> Program.split(DnaF5Rules.f5Gtm),
+    "lieberman.random.pass.mgr" -> Program.split(LiebermanRules.passManager),
+    "snmp.forescout" -> Program(TenableRules.snmpForescout),
+    "tenable.nessus_scanner" -> Program.split(TenableRules.nessusScanner),
+    "tenable.security_center" -> Program(TenableRules.securityCenter),
+    "tenable.sc_api" -> Program.split(TenableRules.vulnSc),
+    "tenable.asm_api" -> Program.split(TenableRules.vulnAsm),
+    "layer7.securespan.soa.gw" -> Program.split(Layer7Rules.layer7),
+    "microsoft.ata" -> Program(AtaRules.ata),
+    "spectracom.ntp" -> Program(SpectracomRules.ntp),
+    "sdwan.os_ubuntu" -> Program(SdwanOsRules.osUbuntu),
+    "a10.waf" -> Program.split(A10WafRules.waf),
+    "cisco.router" -> Program(CiscoRouterRules.router),
+    "cisco.apic" -> Program(CiscoApicRules.apic),
+    "cisco.stealthwatch" -> Program(StealthwatchRules.stealthwatch),
+    "accellion.sft" -> Program.split(AccellionRules.sft),
+    "sap.onapsis" -> Program(SapOnapsisRules.onapsis),
+    "symantec.dlp" -> Program(SymantecDlpRules.dlp),
+    "cisco.aci" -> Program(CiscoAciRules.aci),
+    "cisco.wireless.controller" -> Program(CiscoWlcRules.wlc),
+    "azure.eventhub.atp" -> Program.split(AzureTailRules.ehAtp),
+    "azure.eventhub.security" -> Program.split(AzureTailRules.ehSecurity),
+    "azure.graph_data" -> Program.split(AzureTailRules.graphApi),
+    "riverbed.netim" -> Program(RiverbedNetimRules.netim),
+    "aws.app" -> Program(AwsAppRules.awsApp),
+    "tanium.inventory" -> Program(InventoryFwdRules.taniumInventory),
+    "virtustream.linux" -> Program(InventoryFwdRules.virtustreamLinux),
+    "pingfederate.auth" -> Program.split(InventoryFwdRules.pingfederate),
+    "cisco.riverbed.audit" -> Program(RiverbedFlatRules.audit),
+    "cisco.riverbed.vnes_analytics" -> Program(RiverbedFlatRules.vnes),
+    "cisco.riverbed.scportal" -> Program.split(RiverbedFlatRules.scportal),
+    "cisco.riverbed.opnetreport" -> Program(RiverbedFlatRules.opnetreport),
+    "ubiquiti.wireless.bridge.session" -> Program(WirelessEdgeRules.ubiquitiBridge),
+    "ubiquiti.controller" -> Program(WirelessEdgeRules.ubiquitiController),
+    "cisco.wireless.access_point" -> Program(WirelessEdgeRules.ciscoWirelessAp),
+    "cisco.waas" -> Program(WirelessEdgeRules.ciscoWaas),
+    "apache" -> Program(ApacheWebRules.apache),
+    "apache.audit" -> Program(ApacheWebRules.apacheAudit),
+    "mwg.proxy.audit" -> Program(ApacheWebRules.mwgProxy),
+    "iis" -> Program(ApacheWebRules.iisFlat),
+    "jira" -> Program(AtlassianRules.jira),
+    "jira.audit" -> Program(AtlassianRules.jiraAudit),
+    "beyondtrust.secure_remote_mngt" -> Program(SecOpsRules.bomgar),
+    "tufin.fw_acl_manager" -> Program(SecOpsRules.tufin),
+    "hp.nnm_audit" -> Program(SecOpsRules.hpNnm),
+    "oci.cloudguard" -> Program(ApiCloudRules.ociCloudguard),
+    "oci.object" -> Program(ApiCloudRules.ociObject),
+    "jamf.endpoint_protection" -> Program(ApiCloudRules.jamfProtect),
+    "sap.btp" -> Program(ApiCloudRules.sapBtp),
+    "o365.dlp" -> Program(ApiDirectoryRules.o365Dlp),
+    "azure.graph_identity_protection" -> Program(ApiDirectoryRules.graphIdentity),
+    "security_scorecard.events" -> Program(ApiDirectoryRules.scorecard),
+    "active_directory.users" -> Program(ApiDirectoryRules.adUsers),
+    "virtustream.windows" -> Program(ForwarderDbRules.virtustreamWindows),
+    "hadoop.impala_audit" -> Program(ForwarderDbRules.impalaAudit),
+    "tenable_nessus.security_center" -> Program(AuditTailRules.securityCenter),
+    "sap.cloud_connector" -> Program.split(AuditTailRules.sapCloudConnector),
+    "citrix.admin" -> Program(CitrixAdminRules.citrixAdmin),
+    "aws.lb" -> Program.split(AwsLbRules.awsLb),
+    "skyhigh.atd" -> Program(SkyhighAtdRules.skyhighAtd),
+    "preempt.threat_intelligence" -> Program(PreemptRules.preempt),
+    "skyhigh_scal" -> Program(ScalAuditRules.scalAudit),
+    "infoblox.dns" -> Program(InfobloxFtpRules.infobloxFtp),
+    "windows.exporter" -> Program(WindowsExporterRules.windowsExporter),
+    "forescout.device_inventory" -> Program(ForescoutPushRules.forescoutPush),
+    "unknown" -> Program(unknown))
 
-  val programs: Map[String, (Event, ParseCtx) => ParseOutcome] =
+  val programs: Map[String, Program] =
     basePrograms ++ SnowflakeFamily.programs
 }

@@ -25,7 +25,7 @@ object RiverbedFlatRules {
     *    NO date filter ever runs, so event.created stays the default.
     *  - the "_LOGIN" branch (:31) is case-sensitive and only reachable when
     *    neither "LogIn" nor "LogOut" matched first. */
-  def audit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def audit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.riverbed.audit")
     Mutate.gsub(ev, "message", "\\t", " ") // ref :13-16
@@ -58,7 +58,6 @@ object RiverbedFlatRules {
                   "[allowed][msg]", "[action][name]", "[user][msg]", "[host][msg]",
                   "[resource][name]", "[allowed][status]", "[resource][msg]", "time", "zone"))
       ev.remove(f)
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------- cisco.riverbed.vnes_analytics
@@ -76,7 +75,7 @@ object RiverbedFlatRules {
     *    _grokparsefailure families, so parse_ok stays true.
     *  - the date format "YYYY/MM/DD" (:34-39) is Joda week-year +
     *    day-of-year; consistent only while month == January. */
-  def vnes(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def vnes(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.riverbed.vnes_analytics")
     Dissect(ev, "message",
@@ -93,7 +92,6 @@ object RiverbedFlatRules {
       ev.remove("[event][created]") // target == source: string replaced
     ev.remove("rest_msg") // ref :40-42
     ev.remove("ip")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------- cisco.riverbed.scportal
@@ -118,6 +116,10 @@ object RiverbedFlatRules {
     val msg = ev.getString("message").getOrElse("")
     val dictWords = Seq("appmodel", "workflow", "environment", "monitoring", "data_sources")
     if (msg.contains("{'") && dictWords.exists(msg.contains)) return Dropped // ref :13-18
+    Pending(Seq(ev), scportalBody(msg))
+  }
+
+  private def scportalBody(msg: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (msg.contains("{'")) { // ref :19-27
       ev.set("[agent][parse_rule]", "RULE 2")
       Dissect(ev, "message",
@@ -147,7 +149,6 @@ object RiverbedFlatRules {
     if (ev.getString("[host][hostname]").exists(_.nonEmpty)) // ref :72-77
       ev.copyField("[host][hostname]", "[host][name]")
     ev.rename("observerip", "[log][source][hostname]") // ref :78-82 — dead
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------- cisco.riverbed.opnetreport
@@ -162,7 +163,7 @@ object RiverbedFlatRules {
     *    into @timestamp (:49-53), which enrichment 04 clobbers: dead.
     *  - RULE 2/3/5 remove the top-level "host" field the pipeline input
     *    never sets — dead, kept. */
-  def opnetreport(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def opnetreport(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.riverbed.opnetreport")
     val msg = ev.getString("message").getOrElse("")
@@ -199,6 +200,5 @@ object RiverbedFlatRules {
       Mutate.gsub(ev, "message", "[\\r]", "")
       Dissect(ev, "message", "%{[[log][level]]} [%{?[[network][log]]},%{?[[event][log]]}: %{[[file][path]]}]")
     }
-    Parsed(Seq(ev))
   }
 }

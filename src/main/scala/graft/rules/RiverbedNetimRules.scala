@@ -38,7 +38,7 @@ object RiverbedNetimRules {
     2L -> "critical", 3L -> "error", 4L -> "warning", 5L -> "notice",
     7L -> "debug", 0L -> "emergency", 1L -> "alert", 6L -> "informational")
 
-  def netim(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def netim(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "riverbed") // ref :10-13
     ev.set("[event][dataset]", "riverbed.netim")
     Mutate.lowercase(ev, "message") // ref :17-21
@@ -98,6 +98,5 @@ object RiverbedNetimRules {
       "[event][start_ms]", timezone = "CST6CDT")
     ev.remove("[tmp]") // ref :186-188
     ev.remove("syslog_pri")
-    Parsed(Seq(ev))
   }
 }

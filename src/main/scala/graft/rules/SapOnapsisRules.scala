@@ -66,7 +66,7 @@ object SapOnapsisRules {
     "SystemChangeGlobalSettingUpdate" -> "Audit/Other",
     "ClientSpecificSettingsAllowance" -> "Audit/Other")
 
-  def onapsis(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def onapsis(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "sap") // ref :9-12
     ev.set("[event][dataset]", "sap.onapsis")
     Mutate.strip(ev, "message") // ref :13-15
@@ -113,6 +113,5 @@ object SapOnapsisRules {
       ev.getString("[event][type]").foreach { t =>
         ev.set("[rule][category]", typeDict.getOrElse(t, "Others"))
       }
-    Parsed(Seq(ev))
   }
 }

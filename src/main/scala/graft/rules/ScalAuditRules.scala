@@ -14,7 +14,7 @@ import graft.parse.{Dates, JsonOps, Mutate}
   *  - created/ingested are UNIX_MS json numbers. */
 object ScalAuditRules {
 
-  def scalAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def scalAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "skyhigh") // ref :7-11
     ev.set("[event][dataset]", "skyhigh_scal")
     ev.remove("host") // ref :12-17
@@ -49,6 +49,5 @@ object ScalAuditRules {
       timezone = "GMT", locale = "en", tagOnFailure = Seq("_dateparsefailure_ei")))
       ev.remove("[event][ingested]")
     ev.remove("tmp") // ref :82-85
-    Parsed(Seq(ev))
   }
 }

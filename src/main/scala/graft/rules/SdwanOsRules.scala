@@ -24,7 +24,7 @@ object SdwanOsRules {
     "warning" -> 4L, "indeterminate" -> 6L, "minor" -> 5L, "major" -> 3L,
     "critical" -> 2L, "cleared" -> 6L)
 
-  def osUbuntu(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def osUbuntu(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "versa") // ref :9-15
     ev.set("[event][dataset]", "versa_sdwan.os_ubuntu")
     Mutate.lowercase(ev, "message") // ref :23-25
@@ -73,6 +73,5 @@ object SdwanOsRules {
         Seq("_dissect_error-sdwan.os-message"))
     }
     ev.remove("tmp"); ev.remove("actual_msg") // ref :151-153
-    Parsed(Seq(ev))
   }
 }

@@ -53,7 +53,7 @@ object SdwanRules {
 
   private def dataset(ev: Event): String = ev.getString("[tmp][dataset]").getOrElse("")
 
-  def sdwanApp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def sdwanApp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "versa") // ref :9-12
     ev.set("[event][dataset]", "versa.sdwan_application")
     Mutate.lowercase(ev, "message") // ref :15-19
@@ -185,6 +185,5 @@ object SdwanRules {
       }
     }
     Seq("rest_msg", "event_kind", "tmp", "actual_msg", "rest_data").foreach(ev.remove) // ref :341-343
-    Parsed(Seq(ev))
   }
 }

@@ -23,7 +23,7 @@ object SecOpsRules {
     *    the kv `target=` rename, which overwrites it.
     *  - [event][created] comes from the kv `when=` UNIX field (:66-73);
     *    failures drop the field (:74-78). */
-  def bomgar(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def bomgar(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "beyondtrust") // ref :10-13
     ev.set("[event][dataset]", "beyondtrust.secure_remote_mngt")
     Mutate.strip(ev, "message") // ref :14-16
@@ -52,7 +52,6 @@ object SecOpsRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_ec")))
       ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]") // ref :74-78
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------------------- tufin
@@ -67,7 +66,7 @@ object SecOpsRules {
     *    a field no rule ever writes — source missing means the fallback is
     *    never applied, so [rule][category] stays empty on every event.
     *  - RULE 5's date (:76-79) probes [log][date], also never set. */
-  def tufin(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def tufin(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "tufin") // ref :9-12
     ev.set("[event][dataset]", "tufin.fw_acl_manager")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -118,7 +117,6 @@ object SecOpsRules {
         "WARN" -> "Security Other", "NOTE" -> "Security Other").getOrElse(sev, "Others")
       ev.set("[rule][category]", cat)
     }
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------- hp.nnm_audit
@@ -138,7 +136,7 @@ object SecOpsRules {
     *  - failed logins would strip the @realm off [client][user][name]
     *    (:52-57); the agent.hostname/type renames (:22-26) probe fields the
     *    pipeline input never sets — dead, kept. */
-  def hpNnm(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def hpNnm(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "hp") // ref :9-12
     ev.set("[event][dataset]", "hp.nnm_audit")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-16
@@ -169,6 +167,5 @@ object SecOpsRules {
     if (Dates(ev, "[event][created]", Seq("ISO8601"), "[event][created_ms]")) // ref :71-74
       ev.remove("[event][created]")
     for (f <- Seq("rest_msg", "rest_msg2", "parsed_kv", "actual_msg")) ev.remove(f) // ref :76-78
-    Parsed(Seq(ev))
   }
 }

@@ -17,13 +17,13 @@ object SecRules {
     * :127's `![source][ip] and [source][ip] == ""` can never both hold, so
     * the ipv6 fallback is dead. Renames through the networkinterfaces ARRAY
     * without an index (:75-77,:89) address nothing, as in Logstash. */
-  def awsGuardduty(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsGuardduty(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "guard")) { // ref :9-12
       ev.set("[event][module]", "aws")
       ev.set("[event][dataset]", "aws.guardduty")
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[cloud][provider]", "aws") // ref :13-18
@@ -90,7 +90,6 @@ object SecRules {
     dateRm("[event][end]", "[event][end_ms]",
       Seq("ISO8601", "yyyy-MM-dd HH:mm:ss.Z"), "_dateparsefailure_ee")
     ev.remove("guard") // ref :180-182
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------------------- checkpoint.fw
@@ -111,6 +110,10 @@ object SecRules {
     SyslogPri(ev) // ref :19-22
     val msg = ev.getString("actual_msg").getOrElse("")
     if (msg.contains("syslog_severity=Debug")) return Dropped // ref :23-25
+    Pending(Seq(ev), checkpointFwBody(msg))
+  }
+
+  private def checkpointFwBody(msg: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (msg.contains("=") && msg.contains(";")) { // ref :26-51 Type 1
       Mutate.addField(ev, "[agent][parse_rule]", "Type 1")
       if (Dissect(ev, "actual_msg",
@@ -167,7 +170,6 @@ object SecRules {
     Seq("[log][date_time]", "msg", "actual_msg", "fw", "sic", "pn")
       .foreach(ev.remove) // ref :142 — tmp_data is NOT removed (stray field)
     ev.set("[event][kind]", "checkpoint.fw")
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------------------------- aws.securityhub
@@ -177,14 +179,14 @@ object SecRules {
     * event silently keeps only the LAST finding. The resources ruby
     * collects non-empty ids/regions into ARRAYS (cloud.instance.id /
     * cloud.region scalar columns therefore flatten null). */
-  def awsSecurityhub(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsSecurityhub(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aws") // ref :9-14
     ev.set("[event][dataset]", "aws.securityhub")
     Mutate.lowercase(ev, "message") // ref :15-17
     if (!JsonOps.parse(ev, "message", "tmp")) { // ref :18-21
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     import scala.collection.mutable
@@ -226,7 +228,6 @@ object SecRules {
     dateRm("[event][created]", "[event][created_ms]", "_dateparsefailure_ec") // ref :75-86
     dateRm("[event][modified]", "[event][modified_ms]", "_dateparsefailure_em")
     ev.remove("tmp"); ev.remove("data") // ref :87-89
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------------------- cisco.meraki.fw
@@ -241,7 +242,7 @@ object SecRules {
     * fields. The closing severity translate keys on lowercase-shorthand
     * labels ('info' never matches the real 'informational'), overwriting
     * any category0/1 value. */
-  def merakiFw(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def merakiFw(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco.meraki") // ref :9-12
     ev.set("[event][dataset]", "cisco.meraki.fw_traffic")
     Mutate.strip(ev, "message") // ref :13-17
@@ -252,7 +253,7 @@ object SecRules {
       Seq("_dissectfailure"))) { // ref :27-31
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     val rest = ev.getString("rest_msg").getOrElse("")
     if (rest.contains("content_ing_block")) { // ref :32-41 RULE 1
@@ -303,7 +304,6 @@ object SecRules {
         "Warning" -> "Security/Warning")
         .getOrElse(sev, "Others"))
     }
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------ azure.securityalert
@@ -337,10 +337,9 @@ object SecRules {
       ev.tags.foreach(sub.addTag)
       sub.set("az", Event.deepCopy(rec))
       if (isEnvelope) JsonOps.encode(sub, "az", "message")
-      alertRecord(sub)
       sub
     }
-    Parsed(out)
+    Pending(out, (sub, _) => alertRecord(sub))
   }
 
   private def alertRecord(ev: Event): Unit = {

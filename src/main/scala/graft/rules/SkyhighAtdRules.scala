@@ -15,7 +15,7 @@ import graft.parse.{Dates, Dissect, Grok, JsonOps, SyslogPri}
   *  - the year-less start clock defaults to the event year. */
 object SkyhighAtdRules {
 
-  def skyhighAtd(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def skyhighAtd(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "skyhigh") // ref :9-12
     ev.set("[event][dataset]", "skyhigh.atd")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -72,6 +72,5 @@ object SkyhighAtdRules {
       ev.remove("[event][start]")
     if (ev.hasTag("_dateparsefailure_es")) ev.remove("[event][start]") // ref :94-98
     for (f <- Seq("atd", "actual_msg", "log_message")) ev.remove(f) // ref :99-101
-    Parsed(Seq(ev))
   }
 }

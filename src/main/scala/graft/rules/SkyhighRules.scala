@@ -42,6 +42,10 @@ object SkyhighRules {
       ev.set("[agent][parse_rule]", "RULE 1 (dropped)")
       return Dropped
     }
+    Pending(Seq(ev), secMgrBody)
+  }
+
+  private def secMgrBody(ev: Event, ctx: ParseCtx): Unit = {
     if (ev.getString("message").exists(_.contains("{name="))) { // ref :31-40
       Grok(ev, "message", Seq("^.*?\\{name=(?<[[observer][hostname]]>.*?)}.*?"),
         Seq("_parsefailure_header"))
@@ -154,7 +158,6 @@ object SkyhighRules {
     ev.getString("[source][port]").foreach { p =>
       if (p.contains("N") || p.contains("A")) ev.remove("[source][port]")
     }
-    Parsed(Seq(ev))
   }
 
   // ---------------- swg ----------------
@@ -227,7 +230,7 @@ object SkyhighRules {
     "301" -> "Blocked due to an authentication redirect",
     "400" -> "Blocked due to an authorized override redirect")
 
-  def swg(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def swg(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "skyhigh") // ref :11-19
     ev.set("[event][dataset]", "skyhigh.swg")
     ev.copyField("message", "[event][original]")
@@ -271,7 +274,6 @@ object SkyhighRules {
         ev.remove("[event][created]")
     }
     Seq("tmp_csv_2", "tmp_url", "tmp_referrer", "tmp_csv", "tmp").foreach(ev.remove) // ref :198-200
-    Parsed(Seq(ev))
   }
 
   // ---------------- scp ----------------
@@ -300,6 +302,10 @@ object SkyhighRules {
     Mutate.strip(ev, "message")
     val msg = ev.getString("message").getOrElse("")
     if (msg == "") return Dropped // ref :17-19
+    Pending(Seq(ev), scpBody(msg))
+  }
+
+  private def scpBody(msg: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (!msg.matches("^test message for.*?$")) { // ref :20-116
       Csv(ev, "message", scpColumns, skipEmptyColumns = true)
       Mutate.convert(ev, "[destination][bytes]", "integer")
@@ -352,6 +358,5 @@ object SkyhighRules {
       }
     }
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 }

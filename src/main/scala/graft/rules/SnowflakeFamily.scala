@@ -461,7 +461,7 @@ object SnowflakeFamily {
         ("[event][end]", ISOD, "_dateparsefailure_ee"))))
 
   // ------------------------------------------------------- rule programs
-  def program(m: Member): (Event, ParseCtx) => ParseOutcome = { (ev, _) =>
+  def program(m: Member): Program = Program { (ev, _) =>
     ev.set("[event][module]", "snowflake")
     ev.set("[event][dataset]", m.tech)
     ev.set("[log][source][hostname]", m.hostname)
@@ -469,7 +469,6 @@ object SnowflakeFamily {
     if (!JsonOps.parse(ev, "message", "tmp")) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      Parsed(Seq(ev))
     } else {
       ev.set("[agent][parse_rule]", "Rule 1")
       // lower-members' confs address the already-lowercased keys
@@ -492,11 +491,10 @@ object SnowflakeFamily {
           ev.remove(tgt)
       }
       ev.remove("tmp")
-      Parsed(Seq(ev))
     }
   }
 
-  val programs: Map[String, (Event, ParseCtx) => ParseOutcome] =
+  val programs: Map[String, Program] =
     members.map(m => m.tech -> program(m)).toMap
 
   val configs: Map[String, TechnologyConfig] =

@@ -15,7 +15,7 @@ import graft.parse.{Dates, Dissect, Grok, Kv, Mutate, SyslogPri}
   * fall through to RULEs 10-12. */
 object SpectracomRules {
 
-  def ntp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ntp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "spectracom") // ref :9-12
     ev.set("[event][dataset]", "spectracom.ntp")
     Mutate.strip(ev, "message") // ref :13-15
@@ -88,6 +88,5 @@ object SpectracomRules {
       ev.remove("[event][created]")
     Seq("actual_msg", "[log][date]", "logname", "rest_msg", "euid", "ruser", "pri")
       .foreach(ev.remove) // ref :169-171
-    Parsed(Seq(ev))
   }
 }

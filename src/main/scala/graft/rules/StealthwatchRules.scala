@@ -19,7 +19,7 @@ object StealthwatchRules {
   private val startFormats =
     Seq("MMM dd HH:mm:ss", "ISO8601", "yyyy-MM-dd'T'HH:mm:ss'TZD'")
 
-  def stealthwatch(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def stealthwatch(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.stealthwatch")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -72,6 +72,5 @@ object StealthwatchRules {
       if (ev.hasTag("_dateparsefailure")) ev.remove("[event][created]")
     } else ev.remove("[event][created]")
     Seq("[log][date_time]", "host", "port", "rest_msg", "actual_msg").foreach(ev.remove) // ref :118-121
-    Parsed(Seq(ev))
   }
 }

@@ -69,7 +69,7 @@ object SymantecDlpRules {
     "[dlp][ENDPOINT_USERNAME]" -> "[user][name]",
     "[dlp][DATAOWNER_NAME]" -> "[file][owner]")
 
-  def dlp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def dlp(ev: Event, ctx: ParseCtx): Unit = {
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :12-16
     SyslogPri(ev) // ref :17-20
     Dissect(ev, "actual_msg", bodyDissect) // ref :21-26
@@ -101,6 +101,5 @@ object SymantecDlpRules {
       timezone = "GMT", locale = "en", defaultYear = ctx.tsYear))
       ev.remove("[event][created]")
     ev.copyField("[host][hostname]", "[host][name]") // ref :109-113 — vacuous guard
-    Parsed(Seq(ev))
   }
 }

@@ -43,7 +43,7 @@ object SymantecRules {
       ev.remove(f)
     }
 
-  def endpoint(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def endpoint(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "symantec")
     ev.set("[event][dataset]", "symantec.endpoint_protection")
     Mutate.strip(ev, "message") // ref :14-16
@@ -300,6 +300,5 @@ object SymantecRules {
       val m = java.util.regex.Pattern.compile("^.*?((cve|CVE)-\\d+-\\d+)").matcher(rn)
       if (m.find()) ev.set("[vulnerability][id]", m.group(1))
     }
-    Parsed(Seq(ev))
   }
 }

@@ -54,7 +54,7 @@ object TaniumRules {
   private def props(k: Int): String =
     "[tanm][Match Details][match][properties]" + ("[parent]" * k)
 
-  def tanium(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def tanium(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "tanium") // ref :9-12
     ev.set("[event][dataset]", "tanium.events")
     val msg = ev.getString("message").getOrElse("")
@@ -201,6 +201,5 @@ object TaniumRules {
     ev.getString("[host][hostname]").foreach { h => // ref :443-447
       if (h != "") ev.copyField("[host][hostname]", "[host][name]")
     }
-    Parsed(Seq(ev))
   }
 }

@@ -26,7 +26,7 @@ import graft.parse.{Dates, Dissect, Grok, Kv, Mutate, SyslogPri}
   * lines that miss the grok keep the default `_grokparsefailure`. */
 object TenableRules {
 
-  def snmpForescout(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def snmpForescout(ev: Event, ctx: ParseCtx): Unit = {
     Dissect(ev, "message", "%{[data]} MESSAGE %{[[rest_msg]]}", Seq("_dissectfailure")) // ref :11-16
     Mutate.gsub(ev, "rest_msg", "(.\\d+ =)", " =") // ref :18-20
     Kv.withPattern(ev, "rest_msg", ",\\s*", '=', target = "oid",
@@ -37,7 +37,6 @@ object TenableRules {
     ev.rename("[oid][forescout-mib::ctdeviceipaddresstype ]", "[network][type]")
     ev.rename("[oid][forescout-mib::ctdeviceid ]", "[agent][id]")
     ev.remove("rest_msg"); ev.remove("data"); ev.remove("oid") // ref :46
-    Parsed(Seq(ev))
   }
 
   // ---------------- tenable nessus scanner ----------------
@@ -56,6 +55,10 @@ object TenableRules {
     // gate is these substrings
     if (am.contains("call stack") || am.contains("-----") || am.contains("# "))
       return Dropped
+    Pending(Seq(ev), nessusScannerBody(am))
+  }
+
+  private def nessusScannerBody(am: String)(ev: Event, ctx: ParseCtx): Unit = {
     if (am.contains("t.nessuscore") || am.contains("T.NessusCore")) { // ref :25-168
       if (am.contains("received signal") || am.contains("Nessus is ready")) { // ref :26-44
         Dissect(ev, "actual_msg",
@@ -129,7 +132,6 @@ object TenableRules {
       ev.addTag("unparsed") // ref :169-172
     }
     ev.remove("ns"); ev.remove("tmp"); ev.remove("actual_msg") // ref :174-176
-    Parsed(Seq(ev))
   }
 
   // ---------------- tenable security center ----------------
@@ -137,7 +139,7 @@ object TenableRules {
   private val scGrok = // ref :36-42
     "%{SYSLOGTIMESTAMP:syslog_timestamp} %{SYSLOGHOST:syslog_hostname}\\s(?<technology_name>.*?):.*\\[%{WORD:product}\\]\\:\\s%{WORD:day},\\s%{GREEDYDATA:date}\\s-%{INT:value}\\|%{WORD:status}\\|%{WORD:infotype}\\|%{WORD:messagetype}\\|%{WORD:errorlevel}\\|%{GREEDYDATA:finalmessage}"
 
-  def securityCenter(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def securityCenter(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "tenable_nessus") // ref :9-12
     ev.set("[event][dataset]", "tenable_nessus.security_center")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -161,7 +163,6 @@ object TenableRules {
       ev.remove("date")
     Seq("syslog_timestamp", "technology_name", "day", "value", "date", "actual_msg")
       .foreach(ev.remove) // ref :59-61
-    Parsed(Seq(ev))
   }
 
   // ---------------- vuln tenable sc / asm (api) ----------------

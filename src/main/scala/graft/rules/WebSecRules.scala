@@ -13,15 +13,14 @@ import scala.collection.mutable
   * api_security_proofpoint.pod_email_gateway}.conf. */
 object WebSecRules {
 
-  private def failParse(ev: Event): ParseOutcome = {
+  private def failParse(ev: Event): Unit = {
     ev.set("[agent][parse_rule]", "not parsed")
     ev.addTag("_parse_failure")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------ entrust mpki + cisco.mso
   /** ref syslog_audit_mpki.cmpv2.conf. */
-  def mpkiCmpv2(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def mpkiCmpv2(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "entrust")
     ev.set("[event][dataset]", "entrust.mpki.cmpv2")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -39,13 +38,12 @@ object WebSecRules {
       "[event][created_ms]", timezone = "GMT", locale = "en"))
       ev.remove("[event][created]")
     else ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_audit_cisco.mso.conf — fluentd-wrapped lines with two
     * refinement dissects (failed-attempt user split; triple-append audit
     * description cut at "event:"). */
-  def ciscoMso(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoMso(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco")
     ev.set("[event][dataset]", "cisco.mso")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -72,14 +70,13 @@ object WebSecRules {
         tagOnFailure = Seq("_dissect_failure_3"))
     }
     Seq("rest_msg", "mso", "actual_msg").foreach(ev.remove(_))
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------- sap tcodes + riverbed stdout
   /** ref api_https_audit_sap_tcodes.conf — compact yyyyMMddHHmmss.SSS date,
     * [value_header][0] probes, and a non-ip client_pc that the coercion
     * pass migrates into source.address. */
-  def sapTcodes(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def sapTcodes(ev: Event, ctx: ParseCtx): Unit = {
     Seq("event", "host", "log").foreach(ev.remove(_))
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
@@ -109,12 +106,11 @@ object WebSecRules {
       ev.remove("[event][created]")
     else ev.remove("[event][created]")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   /** ref flat_file_audit_riverbed.stdout.conf — three bracketed-line
     * branches; only the Start/Stop branch assembles a date. */
-  def riverbedStdout(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def riverbedStdout(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco")
     ev.set("[event][dataset]", "cisco.riverbed.stdout")
     val msg = ev.getString("message").getOrElse("")
@@ -139,12 +135,11 @@ object WebSecRules {
       ev.remove("[event][created]")
     }
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------- oci.vcn + aix.rsyslog
   /** ref api_network_oci.vcn.conf — VCN flow logs. */
-  def ociVcn(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ociVcn(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "vcn")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[cloud][provider]", "oci")
@@ -174,13 +169,12 @@ object WebSecRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_ei")))
       ev.remove("[event][ingested]")
     ev.remove("vcn")
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_audit_aix_rsyslog.conf — brace-split header, embedded JSON,
     * whitespace-collapsed + lowercased audit text re-dissected with a
     * four-token MMM dd HH:mm:ss yyyy date. */
-  def aixRsyslog(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def aixRsyslog(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aix")
     ev.set("[event][dataset]", "aix.rsyslog")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -203,14 +197,13 @@ object WebSecRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     else ev.remove("[event][created]")
     Seq("actual_msg", "rest_message", "tmp").foreach(ev.remove(_))
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------------- as400.audit + dell.drac
   /** ref syslog_as400_audit.conf — lowercased message, optional
     * {name=…}/pri header, JSON payload with a_/b_/… prefixed columns, and
     * a dotted-time "yyyy-MM-dd HH.mm.ss" date built by sprintf. */
-  def as400Audit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def as400Audit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "as400")
     ev.set("[event][dataset]", "as400.audit")
     Mutate.lowercase(ev, "message")
@@ -237,12 +230,11 @@ object WebSecRules {
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     else ev.remove("[event][created]")
     Seq("actual_msg", "tmp", "date", "time", "[log][original]").foreach(ev.remove(_))
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_remote_console.conf (dell.drac) — event.action refined in
     * place by three sequential dissects. */
-  def dellDrac(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def dellDrac(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "dell")
     ev.set("[event][dataset]", "dell.drac")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -262,13 +254,12 @@ object WebSecRules {
       ev.remove("[event][created]")
     }
     ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 
   // ------------------------- checkpoint.fw_audit / hms_audit / ansible
   /** ref syslog_audit_checkpoint.operations.conf — auth-failure grok and
     * illegal-pam dissect branches; no parse_rule is ever set. */
-  def checkpointOps(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def checkpointOps(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "checkpoint")
     ev.set("[event][dataset]", "checkpoint.fw_audit")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -291,14 +282,13 @@ object WebSecRules {
       ev.remove("[event][created]")
     }
     ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 
   /** ref hadoop_hms_audit.conf (beats envelope via json codec) — the
     * severity string dies on the enumerated long coercion, and the date
     * removal guard probes the generic _dateparsefailure tag while the
     * date emits _dateparsefailure_ec (dead guard). */
-  def hmsAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def hmsAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "hadoop")
     ev.set("[event][dataset]", "hadoop.hms_audit")
     Grok(ev, "[event][original]",
@@ -320,7 +310,6 @@ object WebSecRules {
     Seq("program", "role", "topic_name", "hadoop_hdfs_audit", "input",
       "service", "destination", "fields", "tmp", "[event][original]",
       "tmp_kv").foreach(ev.remove(_))
-    Parsed(Seq(ev))
   }
 
   /** ref flat_file_audit_ansible.conf (log.file.path via json codec).
@@ -328,7 +317,7 @@ object WebSecRules {
     * the dedicated Dev pattern is dead; the build-version conditional
     * probes the QUOTED literal "[log][file][path]" (not the field), so the
     * else branch always wins. */
-  def ansibleAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ansibleAudit(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "ansible")
     ev.set("[event][dataset]", "ansible.audit")
     ev.copyField("[log][file][path]", "[tmp][full_filename]")
@@ -348,7 +337,6 @@ object WebSecRules {
     else
       Mutate.addField(ev, "[package][build_version]", "CNetOps")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   // -------------------------------- mcas / redhat / trendmicro forwarder
@@ -356,7 +344,7 @@ object WebSecRules {
     * probes [event][created], but the timestamp was renamed to
     * [event][start] — UNIX_MS never runs, the raw epoch string sits in
     * start until the coercion pass removes it (start_ms null). */
-  def azureMcas(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def azureMcas(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "azure")
     ev.set("[log][source][hostname]", "api_azure_mcas")
     ev.set("[event][module]", "azure")
@@ -364,7 +352,7 @@ object WebSecRules {
     if (!JsonOps.parse(ev, "message", "az")) {
       ev.addTag("_json_failure_azure_mcas")
       ev.set("[agent][parse_rule]", "not parsed")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.rename("[az][contextId]", "[event][id]")
@@ -383,7 +371,6 @@ object WebSecRules {
     ev.remove("az")
     Dates(ev, "[event][created]", Seq("UNIX_MS"), "[event][created_ms]",
       timezone = "UTC", tagOnFailure = Seq("_dateparsefailure_ec")) // dead: never set
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_audit_linux.redhat.conf. The kv keys are the sudo
@@ -391,7 +378,7 @@ object WebSecRules {
     * [linux][pwd]/[linux][user]/[linux][command] — all three are dead (and
     * the user `update` would only write a literal anyway). The dissected
     * [agent][name] overwrites the input normalization. */
-  def redhatSyslog(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def redhatSyslog(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "redhat")
     ev.set("[event][dataset]", "redhat.syslog")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
@@ -409,12 +396,11 @@ object WebSecRules {
       tagOnFailure = Seq("_dateparsefailure_ec"), defaultYear = ctx.tsYear))
       ev.remove("[event][created]")
     else ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_virtustream_trendmicro_forwarder.conf — json envelope
     * around a CEF-ish syslog line, pipe dissect + space kv. */
-  def trendmicroFwd(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def trendmicroFwd(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "virtustream")
     ev.set("[event][dataset]", "virtustream.trendmicro")
     if (!JsonOps.parse(ev, "message", "tmp_msg")) return failParse(ev)
@@ -441,7 +427,6 @@ object WebSecRules {
       ev.remove("[event][created]")
     else ev.remove("[event][created]")
     Seq("rest_msg", "tmp", "tmp_msg").foreach(ev.remove(_))
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------- rsa.auth + gitguardian
@@ -451,7 +436,7 @@ object WebSecRules {
     * MINUTES — the pattern only succeeds on rows whose month equals the
     * timestamp's minute, and then resolves into January; the dissect
     * captures [source][ip] twice (the second wins). */
-  def rsaAuth(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def rsaAuth(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "rsa")
     ev.set("[event][dataset]", "rsa.auth")
     Mutate.strip(ev, "message")
@@ -470,13 +455,12 @@ object WebSecRules {
         .getOrElse(p, "Others")) // numeric pri never matches — fallback always
     }
     ev.remove("actual_msg"); ev.remove("pri")
-    Parsed(Seq(ev))
   }
 
   /** ref vuln_gitguardian_internal.conf — secret_hash lands directly on
     * [related][hash] (a scalar the related-hash collector keeps); the
     * undated resolved_at string is swept by the coercion pass. */
-  def gitguardian(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def gitguardian(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "gitguardian")
@@ -506,14 +490,13 @@ object WebSecRules {
       timezone = "UTC", locale = "en", tagOnFailure = Seq("_dateparsefailure_ec")))
       ev.remove("[event][created]")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------- ghe / oci / cloudflare
   /** ref api_audit_aws.ghe.conf. Its date formats are "MMM dd HH:mm:ss"
     * and "MMM  dd HH:mm:ss" — NO single-digit-day form, so days 1-9 fail
     * both, get the failure tag, and created falls to the 03 default. */
-  def awsGhe(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsGhe(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "github")
@@ -538,13 +521,12 @@ object WebSecRules {
         && ev.hasTag("_dateparsefailure_ec")) ()
       ev.remove("[event][created]")
     }
-    Parsed(Seq(ev))
   }
 
   /** ref api_audit_oci.audit.conf — the hostname add_field sprintf runs
     * AFTER the renames inside its mutate block (Logstash decorate order),
     * and resourceId is never renamed, so it resolves. */
-  def ociAudit(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ociAudit(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "aud")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[cloud][provider]", "oci")
@@ -567,13 +549,12 @@ object WebSecRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_es")))
       ev.remove("[event][start]")
     ev.remove("aud")
-    Parsed(Seq(ev))
   }
 
   /** ref api_security_aws.cloudflare.conf — the Action rename target is
     * the malformed "[event]action]"; interpreted as the [event][action]
     * typo (the plausible production reading), kept cited. */
-  def awsCloudflare(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def awsCloudflare(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "aws")
     ev.set("[event][dataset]", "aws.cloudflare")
     ev.set("[log][source][hostname]", "api_aws_cloudflare")
@@ -595,13 +576,12 @@ object WebSecRules {
       timezone = "GMT", tagOnFailure = Seq("_dateparsefailure_ec")))
       ev.remove("[event][created]")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   // ---------------------------------------------- nist hashes + sysdig
   /** ref api_sqlite_known_good_hash_nist.conf — the known-good hash feed;
     * the three hash renames feed 14_related_hash downstream. */
-  def nistHash(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def nistHash(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "known_good_file_hash")
     ev.set("[event][dataset]", "known_good_file_hash.nist")
     ev.set("[log][source][hostname]", "api_sqlite_hash.nist")
@@ -615,11 +595,10 @@ object WebSecRules {
     ev.rename("[tmp][file_size]", "[file][size]")
     ev.rename("[tmp][package_id]", "[file][uid]")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   /** ref vuln_sysdig_scanning.conf. */
-  def sysdigScan(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def sysdigScan(ev: Event, ctx: ParseCtx): Unit = {
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
     ev.set("[agent][parse_rule]", "Rule 1")
     ev.set("[event][module]", "sysdig")
@@ -643,14 +622,13 @@ object WebSecRules {
     if (Dates(ev, "[event][created]", Seq("yyyy-MM-dd HH:mm:ss Z 'UTC'"),
       "[event][created_ms]", timezone = "UTC", locale = "en",
       tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------ syncplicity + scorecard
   /** ref api_audit_syncplicity.adm_report.conf — its csv has NO columns
     * list (the remove_field still names long-gone fields), so values land
     * in the default column1..N slots and nothing visible survives. */
-  def syncplicityAdmin(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def syncplicityAdmin(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "syncplicity")
     ev.set("[log][source][hostname]", "api_syncplicity_adm_log")
     ev.set("[event][module]", "syncplicity")
@@ -663,7 +641,6 @@ object WebSecRules {
         "MMM dd HH:mm:ss.SSS", "MMM dd HH:mm:ss"),
       "[event][created_ms]", timezone = "GMT", locale = "en",
       defaultYear = ctx.tsYear)) ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   private val syncplicityUserCols = Vector(
@@ -681,7 +658,7 @@ object WebSecRules {
   /** ref api_audit_syncplicity.usr_report.conf — 32-column csv; the
     * [event][end] column has no date block, so 02's unparsed-date pass
     * removes it. */
-  def syncplicityUser(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def syncplicityUser(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[cloud][provider]", "syncplicity")
     ev.set("[log][source][hostname]", "api_syncplicity")
     ev.set("[event][module]", "syncplicity")
@@ -697,11 +674,10 @@ object WebSecRules {
       "[event][start_ms]", timezone = "GMT", locale = "en",
       defaultYear = ctx.tsYear)) ev.remove("[event][start]")
     if (ev.has("[host][hostname]")) ev.copyField("[host][hostname]", "[host][name]")
-    Parsed(Seq(ev))
   }
 
   /** ref api_security_scorecard.affiliate_company_scores.conf. */
-  def scorecard(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def scorecard(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "security_scorecard")
     ev.set("[event][dataset]", "security_scorecard.company_scores")
     ev.set("[log][source][hostname]", "scorecard_events_company_scores")
@@ -716,7 +692,6 @@ object WebSecRules {
     ev.rename("[ss][size]", "[rule][category]")
     ev.rename("[ss][event.dataset]", "[event][kind]")
     ev.remove("ss")
-    Parsed(Seq(ev))
   }
 
   // -------------------------------------------------- beats-agent techs
@@ -729,7 +704,7 @@ object WebSecRules {
     * bracketless scrub), and hadoop RENAMES beat.hostname into
     * log.source.hostname first, so its later host.hostname rename no-ops. */
   def beatsAgent(module: String, dataset: String, mode: Int)
-                (ev: Event, ctx: ParseCtx): ParseOutcome = {
+                (ev: Event, ctx: ParseCtx): Unit = {
     // mode 0 = tanium/rundeck, 1 = hadoop, 2 = elasticsearch.audit,
     // 3 = kafka.error (copy hostname + sprintf update, ref kafka_error.conf)
     val hadoopUser = mode == 1
@@ -764,7 +739,6 @@ object WebSecRules {
       Seq("beat", "input", "topic_name", "offset", "@version", "fields",
         "prospector", "level").foreach(ev.remove(_))
     if (mode != 2) ev.remove("[event][original]") // es keeps it in its list
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------- header-only syslog techs
@@ -774,28 +748,26 @@ object WebSecRules {
     * syslog_audit_cisco.wireless.bridge.conf): no parse rule is ever set,
     * so parse_rule stays "not parsed" while parse_ok remains true. */
   def headerOnly(module: String, dataset: String, strip: Boolean)
-                (ev: Event, ctx: ParseCtx): ParseOutcome = {
+                (ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", module)
     ev.set("[event][dataset]", dataset)
     if (strip) Mutate.strip(ev, "message")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header"))
     SyslogPri(ev)
     ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_source_unidentified.conf — a pure labeler. */
-  def unidentified(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def unidentified(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "unidentified")
     ev.set("[event][dataset]", "unidentified")
     ev.remove("agent.name"); ev.remove("[agent][name]")
     if (ev.has("[log][source][ip]") && !ev.has("[log][source][hostname]"))
       ev.copyField("[log][source][ip]", "[log][source][hostname]")
-    Parsed(Seq(ev))
   }
 
   /** ref syslog_audit_cisco.prime.conf — header + trimmed-key kv. */
-  def ciscoPrime(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoPrime(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco")
     ev.set("[event][dataset]", "cisco.prime")
     ev.set("[agent][rule]", "logstash")
@@ -808,13 +780,12 @@ object WebSecRules {
     ev.rename("[ciscopr][Client IP Address]", "[client][ip]")
     ev.rename("[ciscopr][Change Audit Details]", "[event][outcome]")
     ev.remove("ciscopr"); ev.remove("data"); ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 
   /** ref flat_file_audit_riverbed.amauth.conf — gsub'd copy + pad dissect
     * (incl. the `%{+?data}` append-to-skip oddity, which lands on an
     * unaddressable top-level '?data' key, as in Logstash). */
-  def riverbedAmauth(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def riverbedAmauth(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco")
     ev.set("[event][dataset]", "cisco.riverbed.amauth")
     ev.rename("[host][name]", "[log][source][hostname]")
@@ -824,14 +795,13 @@ object WebSecRules {
     Dissect(ev, "tmp",
       "%{?data->} %{+?data} %{[[event][action]]->} %{+[[event][action]]} %{[[user][name]]} %{?data}")
     ev.remove("tmp") // the '?data' key lingers, invisible — as in Logstash
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------- securityonion.suricata
   /** ref syslog_securityonion_securityonion.suricata.conf. The
     * [host][name] → log.source.hostname copy is a no-op on this input
     * (no beats host envelope) — mirrored. */
-  def suricata(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def suricata(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "securityonion")
     ev.set("[event][dataset]", "securityonion.suricata")
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
@@ -860,7 +830,6 @@ object WebSecRules {
     if (Dates(ev, "[event][created]", Seq("ISO8601"), "[event][created_ms]",
       timezone = "GMT", locale = "en", tagOnFailure = Seq("_dateparsefailure_ec")))
       ev.remove("[event][created]")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------ apache.access
@@ -868,7 +837,7 @@ object WebSecRules {
     * into `date_time`, which nothing parses — created falls back to the
     * enrichment-03 default; RULE 2's [log][date] date block is fully dead
     * (the field is only captured by RULE 1). Both mirrored. */
-  def apacheAccess(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def apacheAccess(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "apache")
     ev.set("[event][dataset]", "apache.access")
     Mutate.strip(ev, "message")
@@ -901,7 +870,6 @@ object WebSecRules {
       Mutate.addField(ev, "[rule][category]", "Ops/Information")
     }
     ev.remove("date_time"); ev.remove("[log][date]")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------- azure.eventhub.o365_dlp
@@ -909,7 +877,7 @@ object WebSecRules {
     * TWICE ("azure" then "microsoft o365 dlp logs") — the second promotes
     * it to an ARRAY, which flattens to NULL (mirrored). The end/modified
     * date-failure removals probe the _es tag (reference copy-paste). */
-  def o365Dlp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def o365Dlp(ev: Event, ctx: ParseCtx): Unit = {
     Mutate.addField(ev, "[event][module]", "azure")
     ev.set("[event][dataset]", "azure.eventhub.o365_dlp")
     ev.set("[kafka][topic]", "api_azure.eventhub.o365_dlp")
@@ -941,13 +909,12 @@ object WebSecRules {
         if (Dates(ev, f, Seq("ISO8601"), f.dropRight(1) + "_ms]",
           timezone = "GMT", tagOnFailure = Seq(tag))) ev.remove(f)
       }
-    Parsed(Seq(ev))
   }
 
   // ----------------------------------- azure.eventhub.o365.msg_tracking
   /** ref event_hub_audit_o365.msg.trkg_eventhub.conf — incl. the dead
     * `"size:"` flat-key rename. */
-  def o365MsgTracking(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def o365MsgTracking(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "azure")
     ev.set("[event][dataset]", "azure.eventhub.o365.msg_tracking")
     ev.set("[kafka][topic]", "api_azure.eventhub.o365.msg_tracking")
@@ -982,7 +949,6 @@ object WebSecRules {
         "[event][created_ms]", timezone = "UTC")) ev.remove("[event][created]")
     }
     ev.remove("msg")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------------- azure.fwflow
@@ -998,7 +964,7 @@ object WebSecRules {
     "AZFWNetworkRule" -> "azure.fw", "AZFWIdpsSignature" -> "azure.ids",
     "AZFWApplicationRule" -> "azure.proxy", "AZFWFlowTrace" -> "azure.flow")
 
-  def azureFwFlow(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def azureFwFlow(ev: Event, ctx: ParseCtx): Unit = {
     Seq("event", "host", "log", "user").foreach(ev.remove(_))
     ev.set("[event][module]", "azure")
     if (!JsonOps.parse(ev, "message", "tmp")) return failParse(ev)
@@ -1052,14 +1018,13 @@ object WebSecRules {
       "[event][created_ms]", timezone = "UTC", tagOnFailure = Seq("_dateparsefailure_ec"))
     ev.remove("[event][created]")
     ev.remove("tmp")
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------- proofpoint.pod
   /** ref api_security_proofpoint.pod_email_gateway.conf. msgParts ruby
     * collects LISTS onto scalar ECS fields (null columns); rcpts arrays
     * merged with cc/to arrays; bracketed connection hosts stripped. */
-  def proofpointPod(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def proofpointPod(ev: Event, ctx: ParseCtx): Unit = {
     ev.copyField("message", "tmp_msg")
     ev.set("[cloud][provider]", "proofpoint")
     ev.set("[event][module]", "proofpoint")
@@ -1137,6 +1102,5 @@ object WebSecRules {
       tagOnFailure = Seq("_dateparsefailure_es")))
       ev.remove("[event][start]")
     ev.remove("tmp_msg"); ev.remove("pp")
-    Parsed(Seq(ev))
   }
 }

@@ -15,7 +15,7 @@ import graft.parse.{Dates, JsonOps, Mutate}
   *    fails both formats (locale "ec" again). */
 object WindowsExporterRules {
 
-  def windowsExporter(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def windowsExporter(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "windows") // ref :9-12
     ev.set("[event][dataset]", "windows.exporter")
     JsonOps.parse(ev, "message", "tmp_msg") // ref :13-16
@@ -68,6 +68,5 @@ object WindowsExporterRules {
         tagOnFailure = Seq("_dateparsefailure_ec"))) ev.remove("[event][created]")
     }
     for (f <- Seq("tmp_msg", "tmp", "payload_dct")) ev.remove(f) // ref :81-83
-    Parsed(Seq(ev))
   }
 }

@@ -23,7 +23,7 @@ object WirelessEdgeRules {
     *    itself when it carries a :port suffix.
     *  - the trailing ISO8601 date (:90-97) probes [event][created], which
     *    this conf never sets — a permanent no-op, kept as written. */
-  def ubiquitiBridge(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ubiquitiBridge(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "ubiquiti") // ref :9-12
     ev.set("[event][dataset]", "ubiquiti.wireless.bridge.session")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :13-17
@@ -61,7 +61,6 @@ object WirelessEdgeRules {
     ev.remove("actual_msg")
     Dates(ev, "[event][created]", Seq("ISO8601"), "[event][created_ms]", // ref :88-95 — dead probe
       timezone = "GMT", locale = "en", tagOnFailure = Seq("_dateparsefailure_ec"))
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------------------ ubiquiti.controller
@@ -75,7 +74,7 @@ object WirelessEdgeRules {
     *  - date format "yyy.MM.dd-HH:mm:ss.SSS" (:63-69): a 3-y year run.
     *  - the "penalizing" refinement (:50-60) dissects a copy; user.name is
     *    the token right after "penalizing". */
-  def ubiquitiController(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ubiquitiController(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "ubiquiti") // ref :9-12
     ev.set("[event][dataset]", "ubiquiti.controller")
     Grok(ev, "message", Seq(Registry.HeaderGrok), Seq("_parsefailure_header")) // ref :14-18
@@ -107,7 +106,6 @@ object WirelessEdgeRules {
     if (ev.getString("[host][hostname]").exists(_.nonEmpty)) // ref :70-75
       ev.copyField("[host][hostname]", "[host][name]")
     ev.rename("[host][name]", "[log][source][hostname]") // ref :76-80
-    Parsed(Seq(ev))
   }
 
   // ------------------------------------- cisco.wireless.access_point
@@ -123,7 +121,7 @@ object WirelessEdgeRules {
     *    discarded despite its ECS-looking name.
     *  - the ` \w+$` gsub (:85-89) would strip a trailing bare word off
     *    [event][created]; fraction/second endings never match it. */
-  def ciscoWirelessAp(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoWirelessAp(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.wireless.access_point")
     Mutate.strip(ev, "message") // ref :13-15
@@ -169,7 +167,6 @@ object WirelessEdgeRules {
       tagOnFailure = Seq("_dateparsefailure_ec"), defaultYear = ctx.tsYear))
       ev.remove("[event][created]")
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]") // ref :97-101
-    Parsed(Seq(ev))
   }
 
   // --------------------------------------------------------- cisco.waas
@@ -183,7 +180,7 @@ object WirelessEdgeRules {
     *    failure tag differ.
     *  - a payload that fails the main dissect still walks the else branch
     *    and collects _dissectfailure_other on the missing rest_msg. */
-  def ciscoWaas(ev: Event, ctx: ParseCtx): ParseOutcome = {
+  def ciscoWaas(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "cisco") // ref :9-12
     ev.set("[event][dataset]", "cisco.waas")
     Mutate.gsub(ev, "message", "  ", " ") // ref :13-16 (gsub precedes strip)
@@ -217,6 +214,5 @@ object WirelessEdgeRules {
     if (ev.hasTag("_dateparsefailure_ec")) ev.remove("[event][created]") // ref :76-80
     ev.remove("rest_msg") // ref :81-83
     ev.remove("actual_msg")
-    Parsed(Seq(ev))
   }
 }

@@ -156,12 +156,16 @@ object ZeekRules {
 
   def zeek(ev: Event, ctx: ParseCtx): ParseOutcome = {
     if (ev.stringOrNull("dataset") == "syslog") return Dropped // ref :9-11
+    Pending(Seq(ev), zeekBody)
+  }
+
+  private def zeekBody(ev: Event, ctx: ParseCtx): Unit = {
     ev.set("[event][module]", "securityonion")
     ev.set("[event][dataset]", "securityonion.zeek")
     if (!JsonOps.parse(ev, "message", "tmp")) {
       ev.set("[agent][parse_rule]", "not parsed")
       ev.addTag("_parse_failure")
-      return Parsed(Seq(ev))
+      return
     }
     ev.set("[agent][parse_rule]", "Rule 1")
     if (ev.has("[host][name]")) ev.copyField("[host][name]", "[log][source][hostname]")
@@ -280,6 +284,5 @@ object ZeekRules {
         if (ev.has(f) && Dates(ev, f, Seq("UNIX"), tgt,
           timezone = "GMT", locale = "en", tagOnFailure = Seq(tag))) ev.remove(f)
       }
-    Parsed(Seq(ev))
   }
 }

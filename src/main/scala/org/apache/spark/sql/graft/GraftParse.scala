@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.apache.spark.storage.StorageLevel
 import graft.enrich.Dicts
 import graft.pipeline.RowKernel
@@ -91,12 +92,21 @@ object GraftParse {
     * the optimizer prunes it. The kernel reads `ts` as a UTC instant, so a
     * `TIMESTAMP_NTZ` input (what a naive DuckDB `TIMESTAMP` reads as) is
     * cast to `TIMESTAMP`, taking its wall-clock time in the session zone as
-    * Spark's own `hour(ts)` does; for a `TIMESTAMP` input the cast is a no-op. */
+    * Spark's own `hour(ts)` does. Both types hold micros, so in a zone with
+    * a constant zero offset the cast is the identity and is left out; for
+    * a `TIMESTAMP` input it is a no-op. */
   def dataFrame(input: DataFrame, emitDropped: Boolean, dicts: Broadcast[Dicts]): DataFrame = {
-    val ds = input.withColumn("ts", input("ts").cast(TimestampType))
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val in = if (input.schema("ts").dataType == TimestampNTZType && isUtc(input.sparkSession)) input
+      else input.withColumn("ts", input("ts").cast(TimestampType))
+    val ds = in.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
       GraftParse(ds.logicalPlan, DataTypeUtils.toAttributes(RowKernel.schema), emitDropped, dicts))
+  }
+
+  /** Whether `spark`'s session zone has a constant zero offset. */
+  private def isUtc(spark: SparkSession): Boolean = {
+    val rules = DateTimeUtils.getZoneId(spark.conf.get("spark.sql.session.timeZone")).getRules
+    rules.isFixedOffset && rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds == 0
   }
 
   /** `df`'s executed rows copied out of the exec's reused buffer and

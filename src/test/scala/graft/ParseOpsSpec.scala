@@ -364,6 +364,21 @@ class RegistryCompileSpec extends org.scalatest.funsuite.AnyFunSuite {
       prog(ev, ParseCtx(0L, 1970)) // must not throw
     }
   }
+
+  test("every program's cardinality step counts what its deferred body finishes") {
+    import graft.model.Event
+    import graft.rules.{ParseCtx, Program, Registry}
+    val ctx = ParseCtx(0L, 1970)
+    def probe = { val ev = new Event; ev.set("message", "compile probe"); ev }
+    Registry.programs.foreach { case (tech, prog) =>
+      val step = prog.events(probe, ctx)
+      val counted = Program.cardinality(step)
+      val forced = Program.finish(step, ctx) // the deferred body must not throw
+      assert(Program.cardinality(forced) == counted, tech)
+      assert(Program.cardinality(prog(probe, ctx)) == counted, tech)
+      if (!prog.splits) assert(counted == 1, tech)
+    }
+  }
 }
 
 class EnrichArraySpec extends org.scalatest.funsuite.AnyFunSuite {
