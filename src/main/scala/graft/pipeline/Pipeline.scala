@@ -10,8 +10,10 @@ import org.apache.spark.sql.graft.GraftParse
   * of A"): read → conv_id exchange → ONE fused kernel node (GraftParse:
   * parse+enrich with broadcasts) → per-sink filtered writes → grouped
   * counts. The record-level stages are narrow; the only shuffles are the
-  * conv_id exchange and the final aggregations — by design, that plan
-  * shape survives a 100× scale-up unchanged.
+  * conv_id exchange under a row-mode kernel and the final aggregations. A
+  * counts query has no conv_id exchange: it plans scan → counts kernel →
+  * partial count in one stage, then the aggregate exchange. By design,
+  * those plan shapes survive a 100× scale-up unchanged.
   */
 object Pipeline {
 
@@ -64,6 +66,12 @@ object Pipeline {
     * to the 6 input_hint columns (drives parquet column pruning) and
     * hash-repartition on conv_id to the executor parallelism.
     *
+    * The exchange serves the row modes (full and masked): it gives Sink
+    * its chunk layout and keeps a conversation's rows on one task. The
+    * counts kernel is per row and reads neither conv_id nor turn_idx, so
+    * GraftParse's pruning rule removes this exchange under a counts node
+    * and the scan reads role, text, tool and ts only.
+    *
     * EXPLICIT partitioning (north rule): without it, AQE right-sizes the
     * upstream shuffle by BYTES and coalesces a small input to ~1 partition
     * — correct for scans, wrong for a compute-bound parse stage (measured:
@@ -96,15 +104,22 @@ object Pipeline {
     * (technology, role, tool, event-time bucket) — Catalyst-native
     * partial+final hash aggregation (SURVEY.md §2.6). The sink dimension
     * comes from exploding route_outputs (a row routed to 2 sinks counts in
-    * both, mirroring the reference's sequential multi-sink fan-out). */
+    * both, mirroring the reference's sequential multi-sink fan-out).
+    *
+    * It counts first and fans out after: grouping on route_outputs, then
+    * exploding each group's count, equals exploding each row first because
+    * route_outputs is a function of `tool` (the technology config's
+    * outputs, or `[]` on a marker row, which explodes to nothing) and no
+    * config lists a sink twice. So the partial aggregate sees each row
+    * once, not once per sink. */
   def sinkCounts(parsed: DataFrame): DataFrame =
     parsed
-      .select(explode(col("route_outputs")).as("sink"),
-        col("technology"), col("role"), col("tool"), col("ts"))
-      .groupBy(col("sink"), col("technology"), col("role"), col("tool"),
+      .groupBy(col("route_outputs"), col("technology"), col("role"), col("tool"),
         year(col("ts")).as("y"), month(col("ts")).as("m"),
         dayofmonth(col("ts")).as("d"), hour(col("ts")).as("h"))
       .agg(count(lit(1)).as("cnt"))
+      .select(explode(col("route_outputs")).as("sink"), col("technology"), col("role"),
+        col("tool"), col("y"), col("m"), col("d"), col("h"), col("cnt"))
 
   /** Same result via an explicit two-phase SALTED aggregation — the skew
     * defusal the north rule asks for on conv_id/technology-skewed keys

@@ -90,9 +90,10 @@ object RowKernel {
 
   /** One partition of input rows → 0..N output rows each. `emitDropped`
     * additionally materializes one marker row (parse_rule='dropped', empty
-    * route_outputs) per `drop {}`-ed input turn so a single pass can
-    * account for conservation metrics — used by Sink; the query path
-    * filters at the source by not asking.
+    * route_outputs) per input turn that yields no event — `drop {}`-ed, or
+    * split into none (palo's `split {}` on newline-only text) — so a
+    * single pass can account for conservation metrics — used by Sink; the
+    * query path filters at the source by not asking.
     *
     * Lazy flatten: `mask(ordinal)` selects which columns to materialize —
     * unselected Event-derived fields stay null and skip their map walk +
@@ -105,13 +106,14 @@ object RowKernel {
     eachTurn(it) { (row, tech, ts, tsMillis) =>
       val text = textOf(row)
       val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
-      if (results == null && !emitDropped) Nil
+      val noEvent = results == null || results.isEmpty
+      if (noEvent && !emitDropped) Nil
       else {
         val convU8 = if (row.isNullAt(0)) null else row.getUTF8String(0).clone()
         val turnIdx = if (row.isNullAt(1)) null else java.lang.Integer.valueOf(row.getInt(1))
         val roleU8 = if (row.isNullAt(2)) null else row.getUTF8String(2).clone()
         val textU8 = if (row.isNullAt(3)) null else row.getUTF8String(3).clone()
-        if (results == null)
+        if (noEvent)
           droppedRow(tech, convU8, turnIdx, roleU8, textU8, ts, tsMillis) :: Nil
         else {
           var i = -1
@@ -162,7 +164,9 @@ object RowKernel {
   /** Counts-only kernel: same parse dispatch, but only each program's
     * cardinality step (Engine.parseCardinality) — no parse body, no
     * enrichment chain, no wide flatten; one reused 5-column row emitted
-    * `cardinality` times per input turn.
+    * `cardinality` times per input turn. It reads the input's role, text,
+    * tool and ts only: GraftParse feeds it typed nulls for conv_id and
+    * turn_idx.
     *
     * ROW-OBJECT CAVEAT (exception to this file's header contract): the
     * emitted rows share ONE mutable GenericInternalRow. This is only safe

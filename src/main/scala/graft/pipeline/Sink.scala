@@ -103,8 +103,9 @@ object Sink {
 
     val chunkOf = pmod(hash(col("conv_id")), lit(numChunks))
     val pendingInput = input.filter(chunkOf.isin(pending: _*))
-    // ONE parse pass over all pending chunks; dropped turns become marker
-    // rows (empty route_outputs) so conservation needs no second input scan.
+    // ONE parse pass over all pending chunks; a turn that yields no event
+    // (dropped, or split into none) becomes a marker row (empty
+    // route_outputs), so conservation needs no second input scan.
     // conv_id passes through the kernel unchanged, so the chunk is
     // re-derivable on the output side with the same hash expression.
     // Persisted at the RDD layer (as SparkEntry.parsed): the write's stage

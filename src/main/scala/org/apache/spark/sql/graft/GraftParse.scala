@@ -4,8 +4,10 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BoundReference, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, BoundReference, Literal,
+  NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, RepartitionByExpression,
+  UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
@@ -21,14 +23,17 @@ import graft.pipeline.RowKernel
   * subset of [[RowKernel.schema]]. Because the kernel sits in the plan
   * instead of behind an RDD, Catalyst sees the whole query: [[PruneColumns]]
   * narrows `output` to what the plan above reads, and the mode follows from
-  * what is left (see [[GraftParse.modeOf]]). `emitDropped` adds one marker
-  * row per `drop {}`-ed turn (Sink's single-pass conservation accounting).
+  * what is left (see [[GraftParse.modeOf]]), and in counts mode narrows the
+  * node's input too (see [[GraftParse.countsInput]]). `emitDropped` adds one
+  * marker row per turn that yields no event (Sink's single-pass
+  * conservation accounting).
   *
   * `output` keeps the attributes (and exprIds) it was built with; pruning
   * only drops entries, so references above the node stay bound. */
 case class GraftParse(child: LogicalPlan, output: Seq[Attribute], emitDropped: Boolean,
                       dicts: Broadcast[Dicts]) extends UnaryNode {
-  // the kernel produces its output and reads every input column
+  // the kernel produces its output and reads its input by ordinal; in
+  // counts mode conv_id and turn_idx arrive as typed nulls
   override def producedAttributes: AttributeSet = outputSet
   override def references: AttributeSet = child.outputSet
   def mode: String = GraftParse.modeOf(output, emitDropped)
@@ -130,7 +135,10 @@ object GraftParse {
   /** Narrow the node's output to the columns the Project above it reads.
     * ColumnPruning puts such a Project under Generate/Aggregate, so this
     * also covers explode and count() (zero columns). It then removes the
-    * Project between a Filter and the node, hence the second case. */
+    * Project between a Filter and the node, hence the second case. A node
+    * left in counts mode also gets its input narrowed ([[countsInput]]);
+    * this rule is the one place that decides whether a kernel keeps the
+    * conv_id exchange under it. */
   object PruneColumns extends Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
       case p @ Project(_, g: GraftParse) if !g.outputSet.subsetOf(p.references) =>
@@ -139,8 +147,34 @@ object GraftParse {
           if !g.outputSet.subsetOf(p.references ++ f.references) =>
         p.copy(child = f.copy(child = narrow(g, p.references ++ f.references)))
     }
-    private def narrow(g: GraftParse, used: AttributeSet): GraftParse =
-      g.copy(output = g.output.filter(used.contains))
+    private def narrow(g: GraftParse, used: AttributeSet): GraftParse = {
+      val n = g.copy(output = g.output.filter(used.contains))
+      if (n.mode == Counts) n.copy(child = countsInput(n.child)) else n
+    }
+  }
+
+  /** The input columns the counts kernel does not read. */
+  private val unreadByCounts = Set("conv_id", "turn_idx")
+
+  /** The counts kernel's input: `child` without the repartition directly
+    * under the node, or under the `ts` cast of [[dataFrame]], and with
+    * conv_id and turn_idx replaced by typed nulls, so a scan below reads
+    * role, text, tool and ts only while the kernel keeps its input
+    * ordinals. The counts kernel is a per-row function, so a repartition
+    * under it co-locates nothing; the conv_id exchange serves the row modes
+    * (Sink's chunk layout), which keep it. */
+  private def countsInput(child: LogicalPlan): LogicalPlan = {
+    val in = child match {
+      case r: RepartitionByExpression => r.child
+      case p @ Project(_, r: RepartitionByExpression) => p.copy(child = r.child)
+      case other => other
+    }
+    def placeholder(e: NamedExpression): NamedExpression =
+      if (unreadByCounts(e.name)) Alias(Literal(null, e.dataType), e.name)() else e
+    in match {
+      case p @ Project(list, _) => p.copy(projectList = list.map(placeholder))
+      case other => Project(other.output.map(placeholder), other)
+    }
   }
 
   object Planner extends SparkStrategy {

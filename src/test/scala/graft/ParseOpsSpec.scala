@@ -365,6 +365,15 @@ class RegistryCompileSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
+  test("every technology config lists each sink at most once") {
+    // Pipeline.sinkCounts counts before it fans out to sinks, which equals
+    // fanning out first only while no sink is listed twice
+    import graft.rules.Registry
+    Registry.configs.foreach { case (tech, c) =>
+      assert(c.outputs.distinct == c.outputs, s"$tech lists a sink twice: ${c.outputs}")
+    }
+  }
+
   test("every program's cardinality step counts what its deferred body finishes") {
     import graft.model.Event
     import graft.rules.{ParseCtx, Program, Registry}

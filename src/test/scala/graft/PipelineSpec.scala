@@ -118,6 +118,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("sink snapshot: a turn split into no event counts as an input row, dropped") {
+    // palo's split {} on newline-only text yields no event; the manifests
+    // must still account for the turn
+    val palo = Transcripts.input(spark, sf).filter(col("tool") === "palo.alto.fw")
+    val blank = palo.select(concat(col("conv_id"), lit("-blank")).as("conv_id"), col("turn_idx"),
+      col("role"), when(col("turn_idx") % 2 === 0, "\n").otherwise("\n\n").as("text"),
+      col("tool"), col("ts"))
+    val input = palo.unionByName(blank)
+    val (n, blanks) = (input.count(), blank.count())
+    assert(blanks > 0)
+    val m = Sink.writeSnapshot(spark, input, tmp("graft-sink-blank-"), "snap1", numChunks = 4)
+    assert(m.map(_.inputRows).sum == n)
+    assert(m.map(_.dropped).sum == blanks)
+    assert(m.map(_.outputEvents).sum == Pipeline.parseDf(spark, palo).count())
+  }
+
   test("streaming parse of a cardinality-up corpus (okta JSON array) equals batch") {
     val inDir = tmp("graft-stream-okta-")
     Transcripts.oktaInput(spark, sf).write.mode("overwrite").parquet(inDir)

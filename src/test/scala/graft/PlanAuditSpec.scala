@@ -61,21 +61,42 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def modes(plan: String): Seq[String] =
     "GraftParse (counts|masked|full)".r.findAllMatchIn(plan).map(_.group(1)).toSeq
 
-  test("sink counts: conv_id exchange below GraftParse, ONE agg exchange above") {
+  /** The plan's lines below its first GraftParse node. */
+  private def belowKernel(plan: String): Seq[String] =
+    plan.split("\n").toSeq.dropWhile(!_.contains("GraftParse ")).drop(1)
+
+  /** The column names of the plan's first parquet scan's ReadSchema. */
+  private def readSchema(plan: String): Set[String] =
+    "ReadSchema: struct<([^>]*)>".r.findFirstMatchIn(plan).toSeq
+      .flatMap(_.group(1).split(",")).map(_.takeWhile(_ != ':')).toSet
+
+  /** The counts plan: scan → counts kernel → partial count in one stage,
+    * then the aggregate's exchange, the plan's only one; the scan reads the
+    * four columns the counts kernel uses. */
+  private def assertCountsPlan(): Unit = {
     val df = Pipeline.sinkCounts(Pipeline.parseDf(spark, spark.read.parquet(inputPath)))
     df.collect()
     val plan = finalPlan(df)
     val lines = plan.split("\n").toSeq
     def lineOf(s: String) = lines.indexWhere(_.contains(s))
     val exchanges = lines.zipWithIndex.filter(_._1.contains("Exchange "))
-    assert(exchanges.size == 2, s"expected the conv_id and the aggregate exchange:\n$plan")
-    val (aggExchange, inputExchange) = (exchanges(0), exchanges(1))
-    assert(inputExchange._1.contains("hashpartitioning(conv_id"), plan)
-    val kernel = lineOf("GraftParse ")
-    val partial = lineOf("partial_count")
-    assert(aggExchange._2 < partial && partial < kernel && kernel < inputExchange._2,
-      s"expected agg exchange > partial_count > GraftParse > conv_id exchange:\n$plan")
+    assert(exchanges.size == 1, s"expected the aggregate's exchange only:\n$plan")
+    val (kernel, partial) = (lineOf("GraftParse "), lineOf("partial_count"))
+    assert(exchanges.head._2 < partial && partial < kernel,
+      s"expected agg exchange > partial_count > GraftParse:\n$plan")
+    assert(!belowKernel(plan).exists(_.contains("Exchange ")), s"an exchange below the kernel:\n$plan")
     assert(modes(plan) == Seq("counts"), s"sinkCounts(parseDf) must run the counts-only kernel:\n$plan")
+    assert(readSchema(plan) == Set("role", "text", "tool", "ts"), plan)
+  }
+
+  test("sink counts: ONE agg exchange and none below GraftParse") {
+    assertCountsPlan()
+  }
+
+  test("sink counts under America/New_York: the same one-stage plan") {
+    // a non-UTC zone puts the ts cast between the node and its input
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try assertCountsPlan() finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 
   test("GraftParse runs the masked kernel under a 3-column enriched select") {
@@ -87,6 +108,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val node = plan.split("\n").find(_.contains("GraftParse ")).get
     assert(Seq("source_ip#", "event_module#", "source_ip_private#").forall(node.contains) &&
       !node.contains("technology#"), s"output not pruned to the select: $node")
+    assert(belowKernel(plan).exists(_.contains("hashpartitioning(conv_id")),
+      s"the masked kernel keeps the conv_id exchange:\n$plan")
   }
 
   test("GraftParse runs the full kernel under Sink.writeSnapshot's emitDropped parse") {
@@ -103,8 +126,13 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       val deadline = System.nanoTime() + 10000000000L
       while (plans.size < 3 && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
-    val seen = plans.toArray(Array.empty[String]).toSeq.flatMap(modes)
+    val kernelPlans = plans.toArray(Array.empty[String]).toSeq.filter(_.contains("GraftParse "))
+    val seen = kernelPlans.flatMap(modes)
     assert(seen.nonEmpty && seen.forall(_ == "full"), s"GraftParse modes in the sink's plans: $seen")
+    kernelPlans.foreach { plan =>
+      assert(belowKernel(plan).exists(_.contains("hashpartitioning(conv_id")),
+        s"the full kernel keeps the conv_id exchange:\n$plan")
+    }
   }
 
   test("parsed() RDD-level cache returns exactly the rows of the direct kernel path") {
@@ -148,8 +176,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = streamedPlan(StreamingPipeline.sinkCounts(streamed), "audit_counts",
       OutputMode.Complete())
     assert(modes(plan) == Seq("counts"), plan)
-    val below = plan.split("\n").dropWhile(!_.contains("GraftParse "))
-    assert(!below.exists(_.contains("Exchange ")), s"an exchange below the kernel:\n$plan")
+    assert(!belowKernel(plan).exists(_.contains("Exchange ")), s"an exchange below the kernel:\n$plan")
+    assert(readSchema(plan) == Set("role", "text", "tool", "ts"), plan)
   }
 
   test("streaming conversationState runs the masked kernel over (conv_id, parse_ok)") {
