@@ -1,9 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftParse
 
 /** Routed sink writer with snapshot manifests, per-partition lineage +
   * metrics, and checkpoint-resume (north rule: "resumable from checkpoint
@@ -32,14 +35,17 @@ import org.apache.spark.sql.graft.GraftParse
   * records input rows, parsed/failed/dropped, and per-sink routed counts.
   * Re-running a snapshot skips chunks whose ledger marker exists.
   *
-  * The write is ONE input pass: pending chunks are parsed once
-  * (drop{}-ed turns materialize as marker rows so conservation metrics need
-  * no second scan), persisted, fanned out by exploding route_outputs, and
-  * written with dynamic partition overwrite on (sink, chunk) — the
-  * sequential non-cloned multi-sink strategy of the reference
-  * (ref: build_scripts/README.md:54-56) without re-scanning the input per
-  * chunk or per sink. Ledger markers commit after the write lands, making
-  * the protocol idempotent (at-least-once write, exactly-once visibility).
+  * The write is ONE input pass and one SQL execution, with no persist:
+  * pending chunks are parsed once (drop{}-ed turns materialize as marker
+  * rows so conservation metrics need no second scan), fanned out by
+  * exploding route_outputs, and written with dynamic partition overwrite on
+  * (sink, chunk) — the sequential non-cloned multi-sink strategy of the
+  * reference (ref: build_scripts/README.md:54-56) without re-scanning the
+  * input per chunk or per sink. The manifest metrics are observed on the
+  * pre-explode rows inside that write (`Dataset.observe`), in its result
+  * stage, so a retried task is counted once. Manifests and ledger markers
+  * commit after the write lands, making the protocol idempotent
+  * (at-least-once write, exactly-once visibility).
   */
 object Sink {
 
@@ -63,12 +69,6 @@ object Sink {
       try it.iterator().asScala.map(_.getFileName.toString)
         .flatMap(_.toIntOption).toSet
       finally it.close()
-    }
-  }
-  private implicit class JIter[T](val it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
     }
   }
 
@@ -95,6 +95,7 @@ object Sink {
     * the chunks processed in THIS invocation (resumed chunks are skipped). */
   def writeSnapshot(spark: SparkSession, input: DataFrame, rootDir: String,
                     snapshotId: String, numChunks: Int = 8): Seq[ChunkMetrics] = {
+    require(numChunks >= 1, s"numChunks must be at least 1, got $numChunks")
     validateSnapshotManifest(rootDir, snapshotId, numChunks)
     Files.createDirectories(ledgerDir(rootDir, snapshotId))
     val done = completedChunks(rootDir, snapshotId)
@@ -108,50 +109,76 @@ object Sink {
     // route_outputs), so conservation needs no second input scan.
     // conv_id passes through the kernel unchanged, so the chunk is
     // re-derivable on the output side with the same hash expression.
-    // Persisted at the RDD layer (as SparkEntry.parsed): the write's stage
-    // runs kernel, cache build and write together. A Dataset persist of this
-    // plan, which holds the conv_id exchange, is built by adaptive execution
-    // as a stage of its own that the write then reads back.
-    val parsed = GraftParse.persistedRows(
-      Pipeline.parseRows(spark, pendingInput, emitDropped = true).withColumn("chunk", chunkOf),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // single write job: explode route fan-out, dynamic overwrite of only
-      // the (sink, chunk) partitions this invocation owns. Marker rows have
-      // no outputs, so the explode drops them from the data files.
-      parsed.withColumn("sink", explode(col("route_outputs")))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("sink", "chunk")
-        .parquet(s"$rootDir/snapshot=$snapshotId")
+    val counted = new Observation()
+    Pipeline.parseRows(spark, pendingInput, emitDropped = true).withColumn("chunk", chunkOf)
+      .observe(counted, udaf(ManifestCounts, Encoders.product[SinkRow])(col("chunk"), col("sub_idx"),
+        col("parse_rule"), col("parse_ok"), col("route_outputs")).as("chunks"))
+      // explode the route fan-out; marker rows have no outputs, so the
+      // explode drops them from the data files. Dynamic overwrite of only
+      // the (sink, chunk) partitions this invocation owns.
+      .withColumn("sink", explode(col("route_outputs")))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("sink", "chunk")
+      .parquet(s"$rootDir/snapshot=$snapshotId")
 
-      // metrics: one aggregation pass over the persisted parse result
-      val marker = col("parse_rule") === "dropped"
-      val baseRows = parsed.groupBy(col("chunk")).agg(
-        count(when(col("sub_idx") === 0, 1)).as("input_rows"),
-        count(when(!marker, 1)).as("output_events"),
-        count(when(marker, 1)).as("dropped"),
-        count(when(!marker && !col("parse_ok"), 1)).as("failed")
-      ).collect().map(r => r.getInt(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val routedRows = parsed
-        .select(col("chunk"), explode(col("route_outputs")).as("s"))
-        .groupBy(col("chunk"), col("s")).agg(count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (c, rows) => c -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap }
+    val observed = counted.get("chunks").asInstanceOf[collection.Seq[Row]].map { r =>
+      ChunkMetrics(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
+        r.getMap[String, Long](6).toMap)
+    }.map(m => m.chunk -> m).toMap
+    pending.map { c =>
+      val m = observed.getOrElse(c, ChunkMetrics(c, 0L, 0L, 0L, 0L, 0L, Map.empty))
+      writeManifest(rootDir, snapshotId, m)
+      commitLedger(rootDir, snapshotId, c)
+      m
+    }
+  }
 
-      pending.map { c =>
-        val (inRows, outEvents, dropped, failed) =
-          baseRows.getOrElse(c, (0L, 0L, 0L, 0L))
-        val m = ChunkMetrics(c, inRows, outEvents,
-          parsed = outEvents - failed, failed = failed, dropped = dropped,
-          routedPerSink = routedRows.getOrElse(c, Map.empty))
-        writeManifest(rootDir, snapshotId, m)
-        commitLedger(rootDir, snapshotId, c)
-        m
+  /** The per-chunk manifest counts of one write, as a single typed
+    * aggregate: the plan holds one expression however many chunks and sinks
+    * there are, and the buffer holds one entry per chunk seen. */
+  private object ManifestCounts extends Aggregator[SinkRow, ByChunk, Seq[ChunkMetrics]] {
+    def zero: ByChunk = mutable.HashMap.empty
+    def reduce(b: ByChunk, r: SinkRow): ByChunk = { b.getOrElseUpdate(r.chunk, new ChunkCounts).count(r); b }
+    def merge(a: ByChunk, b: ByChunk): ByChunk = {
+      b.foreach { case (k, c) => a.getOrElseUpdate(k, new ChunkCounts).merge(c) }
+      a
+    }
+    def finish(b: ByChunk): Seq[ChunkMetrics] = b.toSeq.map { case (k, c) => c.metrics(k) }
+    def bufferEncoder: Encoder[ByChunk] = Encoders.javaSerialization
+    def outputEncoder: Encoder[Seq[ChunkMetrics]] = ExpressionEncoder[Seq[ChunkMetrics]]()
+  }
+
+  /** The columns of a parsed row that [[ManifestCounts]] reads. */
+  private[pipeline] final case class SinkRow(chunk: Int, sub_idx: Int, parse_rule: String, parse_ok: Boolean,
+                                             route_outputs: Seq[String])
+
+  private type ByChunk = mutable.HashMap[Int, ChunkCounts]
+
+  private[pipeline] final class ChunkCounts extends Serializable {
+    private var inputRows, outputEvents, dropped, failed = 0L
+    private val routed = mutable.HashMap.empty[String, Long]
+
+    /** `sub_idx = 0` is an input row; a marker row (`parse_rule =
+      * 'dropped'`) is dropped, any other row an output event, failed unless
+      * `parse_ok`; each element of route_outputs is one routed row. */
+    def count(r: SinkRow): Unit = {
+      if (r.sub_idx == 0) inputRows += 1
+      if (r.parse_rule == "dropped") dropped += 1
+      else {
+        outputEvents += 1
+        if (!r.parse_ok) failed += 1
       }
-    } finally GraftParse.unpersistRows(parsed)
+      if (r.route_outputs != null) r.route_outputs.foreach(route(_, 1L))
+    }
+    def merge(o: ChunkCounts): Unit = {
+      inputRows += o.inputRows; outputEvents += o.outputEvents
+      dropped += o.dropped; failed += o.failed
+      o.routed.foreach { case (s, n) => route(s, n) }
+    }
+    private def route(sink: String, n: Long): Unit = routed(sink) = routed.getOrElse(sink, 0L) + n
+    def metrics(chunk: Int): ChunkMetrics = ChunkMetrics(chunk, inputRows, outputEvents,
+      parsed = outputEvents - failed, failed = failed, dropped = dropped, routedPerSink = routed.toMap)
   }
 
   private def writeManifest(rootDir: String, snapshotId: String, m: ChunkMetrics): Unit = {

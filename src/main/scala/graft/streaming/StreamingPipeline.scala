@@ -62,8 +62,10 @@ object StreamingPipeline {
       emitDropped = false, Pipeline.dictsBroadcast(spark))
 
   /** North-rule aggregate, streaming form: per-sink counts by
-    * (technology, role, tool, 1-hour tumbling window) with a 2-hour
-    * watermark bounding state. */
+    * (technology, role, tool, 1-hour tumbling window), with a 2-hour
+    * watermark on ts. The watermark bounds state only in Update or Append
+    * mode; every caller runs Complete mode, where Spark keeps every window's
+    * count and evicts nothing, so state grows with the hours of history. */
   def sinkCounts(parsed: DataFrame): DataFrame =
     parsed
       .withWatermark("ts", "2 hours")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -121,10 +121,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("sink snapshot: a turn split into no event counts as an input row, dropped") {
     // palo's split {} on newline-only text yields no event; the manifests
     // must still account for the turn
-    val palo = Transcripts.input(spark, sf).filter(col("tool") === "palo.alto.fw")
-    val blank = palo.select(concat(col("conv_id"), lit("-blank")).as("conv_id"), col("turn_idx"),
-      col("role"), when(col("turn_idx") % 2 === 0, "\n").otherwise("\n\n").as("text"),
-      col("tool"), col("ts"))
+    val (palo, blank) = PipelineSpec.paloAndBlanks(spark, sf)
     val input = palo.unionByName(blank)
     val (n, blanks) = (input.count(), blank.count())
     assert(blanks > 0)
@@ -298,5 +295,17 @@ class StreamingResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.pipeline.Pipeline.dictsBroadcast(second)
     assert(second.conf.get(key) == classOf[graft.io.LocalFs].getName)
     resumeExactlyOnce(first, second)
+  }
+}
+
+object PipelineSpec {
+  /** The main corpus's palo turns, and one newline-only copy of each under
+    * a new conv_id: palo's split {} turns such text into no event. */
+  def paloAndBlanks(spark: SparkSession, sf: String): (DataFrame, DataFrame) = {
+    val palo = Transcripts.input(spark, sf).filter(col("tool") === "palo.alto.fw")
+    val blank = palo.select(concat(col("conv_id"), lit("-blank")).as("conv_id"), col("turn_idx"),
+      col("role"), when(col("turn_idx") % 2 === 0, "\n").otherwise("\n\n").as("text"),
+      col("tool"), col("ts"))
+    (palo, blank)
   }
 }

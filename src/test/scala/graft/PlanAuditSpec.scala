@@ -113,26 +113,36 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GraftParse runs the full kernel under Sink.writeSnapshot's emitDropped parse") {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // ONE SQL execution per call: the full kernel, the manifest metrics
+    // observed in the write (CollectMetrics), and nothing persisted
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+        execs.add(f -> qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        execs.add(f -> qe.executedPlan.toString)
     }
     val root = java.nio.file.Files.createTempDirectory("graft_planaudit_sink").toString
+    def all = execs.toArray(Array.empty[(String, String)]).toSeq
     spark.listenerManager.register(listener)
     try {
       graft.pipeline.Sink.writeSnapshot(spark, spark.read.parquet(inputPath), root, "s1", numChunks = 2)
-      val deadline = System.nanoTime() + 10000000000L
-      while (plans.size < 3 && System.nanoTime() < deadline) Thread.sleep(10)
+      // a sentinel execution: the listener bus delivers in order, so once it
+      // arrives every execution of the write has arrived too
+      spark.range(7).toDF("sentinel_col").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!all.exists(_._2.contains("sentinel_col")) && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
-    val kernelPlans = plans.toArray(Array.empty[String]).toSeq.filter(_.contains("GraftParse "))
-    val seen = kernelPlans.flatMap(modes)
-    assert(seen.nonEmpty && seen.forall(_ == "full"), s"GraftParse modes in the sink's plans: $seen")
-    kernelPlans.foreach { plan =>
-      assert(belowKernel(plan).exists(_.contains("hashpartitioning(conv_id")),
-        s"the full kernel keeps the conv_id exchange:\n$plan")
-    }
+    val seen = all.takeWhile(!_._2.contains("sentinel_col"))
+    assert(!seen.exists(_._1 == "persistedRows"), s"a persistedRows execution: ${seen.map(_._1)}")
+    val kernel = seen.filter(_._2.contains("GraftParse "))
+    assert(kernel.size == 1, s"expected ONE SQL execution holding GraftParse, got ${seen.map(_._1)}")
+    val plan = kernel.head._2.split("== Initial Plan ==")(0)
+    assert(modes(plan) == Seq("full"), s"the sink's write must run the full kernel:\n$plan")
+    assert(belowKernel(plan).exists(_.contains("hashpartitioning(conv_id")),
+      s"the full kernel keeps the conv_id exchange:\n$plan")
+    assert(plan.contains("CollectMetrics"), s"the manifest metrics are not observed in the write:\n$plan")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty, "an RDD is left persisted")
   }
 
   test("parsed() RDD-level cache returns exactly the rows of the direct kernel path") {
