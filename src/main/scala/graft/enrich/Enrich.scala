@@ -1,7 +1,7 @@
 package graft.enrich
 
 import graft.model.Event
-import graft.parse.{Dates, Kv, Mutate, Net, SyslogPri}
+import graft.parse.{Mutate, Net, SyslogPri}
 import graft.rules.TechnologyConfig
 import scala.collection.mutable
 
@@ -880,8 +880,8 @@ object Enrich {
   private val rawFns: Array[(Event, Dicts, Ctx) => Unit] = rawSteps.map(_._2).toArray
   private val noMask: Array[Boolean] = new Array[Boolean](rawSteps.length)
   // NOTE: this is the per-technology STEP-skip mask of the enrichment
-  // chain — unrelated to RowKernel.maskFor, which is the lazy-flatten
-  // COLUMN mask of the output schema (same name, different axis).
+  // chain — unrelated to RowKernel.maskFor, the COLUMN mask that picks
+  // which output columns a kernel call emits (same name, different axis).
   private val maskCache =
     new java.util.concurrent.ConcurrentHashMap[Set[String], Array[Boolean]]()
   private def maskFor(disabled: Set[String]): Array[Boolean] = {

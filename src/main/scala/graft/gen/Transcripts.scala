@@ -1408,147 +1408,44 @@ a10_turns AS (
   FROM a10_line
 )"""
 
-  def a10Input(spark: SparkSession, sfDir: String): DataFrame = {
+  /** A side corpus: `events.parquet` as the `events` view, then the turn
+    * columns of each of `views` defined in `cte`, unioned. */
+  private def sideInput(spark: SparkSession, sfDir: String, cte: String, views: String*): DataFrame = {
     spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $a10Cte SELECT conv_id, turn_idx, role, text, tool, ts FROM a10_turns")
+    spark.sql(s"WITH $cte " +
+      views.map(v => s"SELECT conv_id, turn_idx, role, text, tool, ts FROM $v").mkString(" UNION ALL "))
   }
 
-  def shInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $shCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sh_turns")
-  }
-
-  def ptInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ptCte SELECT conv_id, turn_idx, role, text, tool, ts FROM pt_turns")
-  }
-
-  def mkInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mkCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mk_turns")
-  }
-
-  def ghInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ghCte SELECT conv_id, turn_idx, role, text, tool, ts FROM gh_turns")
-  }
-
-  def cxInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $cxCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cx_turns")
-  }
-
-  def ckInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ckCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ck_turns")
-  }
-
-  def lhInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $lhCte SELECT conv_id, turn_idx, role, text, tool, ts FROM lh_turns")
-  }
-
-  def gdInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $gdCte SELECT conv_id, turn_idx, role, text, tool, ts FROM gd_turns")
-  }
-
-  def saInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $saCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sa_turns")
-  }
-
-  def cfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $cfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cf_turns")
-  }
-
-  def nfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $nfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM nf_turns")
-  }
-
-  def hdfsInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $hdfsCte SELECT conv_id, turn_idx, role, text, tool, ts FROM hdfs_turns")
-  }
-
-  def f5Input(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $f5Cte SELECT conv_id, turn_idx, role, text, tool, ts FROM f5_turns")
-  }
-
-  def iisInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $iisCte SELECT conv_id, turn_idx, role, text, tool, ts FROM iis_turns")
-  }
-
-  def iseInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $iseCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ise_turns")
-  }
-
-  def atpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $atpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM atp_turns")
-  }
-
-  def ppmInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ppmCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ppm_turns")
-  }
-
-  def elbInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $elbCte SELECT conv_id, turn_idx, role, text, tool, ts FROM elb_turns")
-  }
-
-  def sfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sf_turns" +
-      " UNION ALL SELECT conv_id, turn_idx, role, text, tool, ts FROM sff_turns")
-  }
-
-  def offInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $offCte SELECT conv_id, turn_idx, role, text, tool, ts FROM off_turns")
-  }
-
-  def ppInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ppCte SELECT conv_id, turn_idx, role, text, tool, ts FROM pp_turns")
-  }
-
-  def winInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $winCte SELECT conv_id, turn_idx, role, text, tool, ts FROM win_turns")
-  }
-
-  def ciscoInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ciscoCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cisco_turns")
-  }
-
-  def oktaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $oktaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM okta_turns")
-  }
-
-  def ctInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ctCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ct_turns")
-  }
+  def a10Input(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, a10Cte, "a10_turns")
+  def shInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, shCte, "sh_turns")
+  def ptInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ptCte, "pt_turns")
+  def mkInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mkCte, "mk_turns")
+  def ghInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ghCte, "gh_turns")
+  def cxInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, cxCte, "cx_turns")
+  def ckInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ckCte, "ck_turns")
+  def lhInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, lhCte, "lh_turns")
+  def gdInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, gdCte, "gd_turns")
+  def saInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, saCte, "sa_turns")
+  def cfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, cfCte, "cf_turns")
+  def nfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, nfCte, "nf_turns")
+  def hdfsInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, hdfsCte, "hdfs_turns")
+  def f5Input(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, f5Cte, "f5_turns")
+  def iisInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, iisCte, "iis_turns")
+  def iseInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, iseCte, "ise_turns")
+  def atpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, atpCte, "atp_turns")
+  def ppmInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ppmCte, "ppm_turns")
+  def elbInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, elbCte, "elb_turns")
+  def sfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sfCte, "sf_turns", "sff_turns")
+  def offInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, offCte, "off_turns")
+  def ppInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ppCte, "pp_turns")
+  def winInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, winCte, "win_turns")
+  def ciscoInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ciscoCte, "cisco_turns")
+  def oktaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, oktaCte, "okta_turns")
+  def ctInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ctCte, "ct_turns")
 
   /** Spark-side csv/xml corpora (input_hint shape). */
-  def csvInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $csvCte SELECT conv_id, turn_idx, role, text, tool, ts FROM csv_turns")
-  }
-
-  def xmlInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $xmlCte SELECT conv_id, turn_idx, role, text, tool, ts FROM xml_turns")
-  }
+  def csvInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, csvCte, "csv_turns")
+  def xmlInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, xmlCte, "xml_turns")
 
   // ===================================================================
   // event_hub_audit_azure.* family corpora (ref: config/processors/
@@ -1958,10 +1855,7 @@ ib_turns AS (
   FROM ib_base
 )"""
 
-  def ibInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ibCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ib_turns")
-  }
+  def ibInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ibCte, "ib_turns")
 
   /** juniper.fw_traffic corpus — 14 branches over the conf's 24 rules (ref:
     * config/processors/syslog_security_juniper.fw.conf). */
@@ -2036,10 +1930,7 @@ jn_turns AS (
   FROM jn_line
 )"""
 
-  def jnInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $jnCte SELECT conv_id, turn_idx, role, text, tool, ts FROM jn_turns")
-  }
+  def jnInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, jnCte, "jn_turns")
 
   /** Portable 'yyyy-MM-dd HH:mm:ss' (space-separated) of a ts column. */
   private def spSecOf(c: String): String =
@@ -2163,10 +2054,7 @@ so_turns AS (
   FROM so_base
 )"""
 
-  def soInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $soCte SELECT conv_id, turn_idx, role, text, tool, ts FROM so_turns")
-  }
+  def soInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, soCte, "so_turns")
 
   /** apache.access corpus — RULE 1 (header form) vs RULE 2, status ladder. */
   val apCte: String = s"""
@@ -2195,10 +2083,7 @@ ap_turns AS (
   FROM ap_base
 )"""
 
-  def apInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $apCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ap_turns")
-  }
+  def apInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, apCte, "ap_turns")
 
   /** azure.eventhub.o365_dlp corpus — single alert-object shape. */
   val dlpCte: String = s"""
@@ -2225,10 +2110,7 @@ dlp_turns AS (
   FROM dlp_base
 )"""
 
-  def dlpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $dlpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM dlp_turns")
-  }
+  def dlpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, dlpCte, "dlp_turns")
 
   /** azure.eventhub.o365.msg_tracking corpus. */
   val mtCte: String = s"""
@@ -2256,10 +2138,7 @@ mt_turns AS (
   FROM mt_base
 )"""
 
-  def mtInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mtCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mt_turns")
-  }
+  def mtInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mtCte, "mt_turns")
 
   /** azure.fwflow corpus — one row per kind family (ksel). */
   val fwCte: String = s"""
@@ -2307,10 +2186,7 @@ fw_turns AS (
   FROM fw_base
 )"""
 
-  def fwInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $fwCte SELECT conv_id, turn_idx, role, text, tool, ts FROM fw_turns")
-  }
+  def fwInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, fwCte, "fw_turns")
 
   /** proofpoint.pod corpus — scalar-vs-array recipient forms, bracketed
     * connection hosts, msgParts lists. */
@@ -2352,10 +2228,7 @@ pod_turns AS (
   FROM pod_base
 )"""
 
-  def podInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $podCte SELECT conv_id, turn_idx, role, text, tool, ts FROM pod_turns")
-  }
+  def podInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, podCte, "pod_turns")
 
   /** entrust mpki + cisco.mso corpus. */
   val mpCte: String = s"""
@@ -2390,10 +2263,7 @@ mp_turns AS (
   FROM mp_base
 )"""
 
-  def mpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mp_turns")
-  }
+  def mpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mpCte, "mp_turns")
 
   /** sap tcodes + riverbed stdout corpus. */
   val spCte: String = s"""
@@ -2436,10 +2306,7 @@ sp_turns AS (
   FROM sp_base
 )"""
 
-  def spInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $spCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sp_turns")
-  }
+  def spInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, spCte, "sp_turns")
 
   /** oci.vcn + aix.rsyslog corpus. */
   val vxCte: String = s"""
@@ -2478,10 +2345,7 @@ vx_turns AS (
   FROM vx_base
 )"""
 
-  def vxInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $vxCte SELECT conv_id, turn_idx, role, text, tool, ts FROM vx_turns")
-  }
+  def vxInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, vxCte, "vx_turns")
 
   /** as400.audit + dell.drac corpus. */
   val a4Cte: String = s"""
@@ -2525,10 +2389,7 @@ a4_turns AS (
   FROM a4_base
 )"""
 
-  def a4Input(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $a4Cte SELECT conv_id, turn_idx, role, text, tool, ts FROM a4_turns")
-  }
+  def a4Input(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, a4Cte, "a4_turns")
 
   /** checkpoint.fw_audit + hadoop.hms_audit + ansible.audit corpus. */
   val chCte: String = s"""
@@ -2570,10 +2431,7 @@ ch_turns AS (
   FROM ch_base
 )"""
 
-  def chInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $chCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ch_turns")
-  }
+  def chInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, chCte, "ch_turns")
 
   /** mcas + redhat + trendmicro forwarder corpus. */
   val mcCte: String = s"""
@@ -2617,10 +2475,7 @@ mc_turns AS (
   FROM mc_base
 )"""
 
-  def mcInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mcCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mc_turns")
-  }
+  def mcInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mcCte, "mc_turns")
 
   /** rsa.auth + gitguardian corpus. */
   val rgCte: String = s"""
@@ -2661,10 +2516,7 @@ rg_turns AS (
   FROM rg_base
 )"""
 
-  def rgInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $rgCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rg_turns")
-  }
+  def rgInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, rgCte, "rg_turns")
 
   /** github-ghe + oci.audit + aws.cloudflare corpus. */
   val goCte: String = s"""
@@ -2705,10 +2557,7 @@ go_turns AS (
   FROM go_base
 )"""
 
-  def goInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $goCte SELECT conv_id, turn_idx, role, text, tool, ts FROM go_turns")
-  }
+  def goInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, goCte, "go_turns")
 
   /** nist known-good hashes + sysdig scan + kafka.error corpus. */
   val nkCte: String = s"""
@@ -2748,10 +2597,7 @@ nk_turns AS (
   FROM nk_base
 )"""
 
-  def nkInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $nkCte SELECT conv_id, turn_idx, role, text, tool, ts FROM nk_turns")
-  }
+  def nkInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, nkCte, "nk_turns")
 
   /** syncplicity (admin/user csv) + security scorecard corpus. */
   val syCte: String = s"""
@@ -2785,10 +2631,7 @@ sy_turns AS (
   FROM sy_base
 )"""
 
-  def syInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $syCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sy_turns")
-  }
+  def syInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, syCte, "sy_turns")
 
   /** Shared beats-envelope corpus for the four agent technologies. */
   val baCte: String = s"""
@@ -2814,10 +2657,7 @@ ba_turns AS (
   FROM ba_base
 )"""
 
-  def baInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $baCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ba_turns")
-  }
+  def baInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, baCte, "ba_turns")
 
   /** Shared corpus for the seven small header/labeler technologies —
     * mixed tools in ONE input frame (the kernel dispatches per row). */
@@ -2856,10 +2696,7 @@ hx_turns AS (
   FROM hx_base
 )"""
 
-  def hxInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $hxCte SELECT conv_id, turn_idx, role, text, tool, ts FROM hx_turns")
-  }
+  def hxInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, hxCte, "hx_turns")
 
   /** securityonion.zeek corpus — beats envelope ({"message": <inner zeek
     * JSON string>, dataset, category, host.name}) with the inner JSON's
@@ -2916,10 +2753,7 @@ zk_turns AS (
   FROM zk_inner
 )"""
 
-  def zkInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $zkCte SELECT conv_id, turn_idx, role, text, tool, ts FROM zk_turns")
-  }
+  def zkInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, zkCte, "zk_turns")
 
   /** misp.metrics feeder corpus (ref: api_security_misp.metrics.conf) —
     * exercises the type fan-out, the 1D/2D mac normalization (incl. the
@@ -2970,30 +2804,17 @@ mf_turns AS (
   FROM mf_base
 )"""
 
-  def mfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mf_turns")
-  }
-
-  def symInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $symCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sym_turns")
-  }
-
-  private def ehInputOf(cte: String, turns: String)(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $cte SELECT conv_id, turn_idx, role, text, tool, ts FROM $turns")
-  }
-
-  def ehaInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehaCte, "eha_turns")(spark, sfDir)
-  def ehoInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehoCte, "eho_turns")(spark, sfDir)
-  def ehzInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehzCte, "ehz_turns")(spark, sfDir)
-  def ehrInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehrCte, "ehr_turns")(spark, sfDir)
-  def ehmInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehmCte, "ehm_turns")(spark, sfDir)
-  def ehuInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehuCte, "ehu_turns")(spark, sfDir)
-  def ehiInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehiCte, "ehi_turns")(spark, sfDir)
-  def ehnInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehnCte, "ehn_turns")(spark, sfDir)
-  def ehsInput(spark: SparkSession, sfDir: String): DataFrame = ehInputOf(ehsCte, "ehs_turns")(spark, sfDir)
+  def mfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mfCte, "mf_turns")
+  def symInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, symCte, "sym_turns")
+  def ehaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehaCte, "eha_turns")
+  def ehoInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehoCte, "eho_turns")
+  def ehzInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehzCte, "ehz_turns")
+  def ehrInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehrCte, "ehr_turns")
+  def ehmInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehmCte, "ehm_turns")
+  def ehuInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehuCte, "ehu_turns")
+  def ehiInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehiCte, "ehi_turns")
+  def ehnInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehnCte, "ehn_turns")
+  def ehsInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehsCte, "ehs_turns")
 
   /** Portable "MM/dd/yyyy:HH:mm:ss" netscaler wall-clock render of a
     * timestamp expression (Spark + DuckDB EXTRACT only). */
@@ -3094,10 +2915,7 @@ nt_turns AS (
   FROM nt_line
 )"""
 
-  def ntInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ntCte SELECT conv_id, turn_idx, role, text, tool, ts FROM nt_turns")
-  }
+  def ntInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ntCte, "nt_turns")
 
   /** Portable ISO-8601 "+00:00" render of a timestamp expression. */
   private def isoClock(tsExpr: String): String =
@@ -3172,10 +2990,7 @@ jp_turns AS (
   FROM jp_body
 )"""
 
-  def jpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $jpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM jp_turns")
-  }
+  def jpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, jpCte, "jp_turns")
 
   /** tanium.events — JSON alert/inventory datagrams for the four Intel-Type
     * branches of syslog_security_tanium.conf, incl. a two-level process
@@ -3253,10 +3068,7 @@ tn_turns AS (
   FROM tn_body
 )"""
 
-  def tnInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tnCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tn_turns")
-  }
+  def tnInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tnCte, "tn_turns")
 
   /** Portable "yyyy-MM-dd HH:mm:ss" render of a timestamp expression. */
   private def sqlClock(tsExpr: String): String =
@@ -3321,10 +3133,7 @@ gdm_turns AS (
   FROM gdm_body
 )"""
 
-  def gdmInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $gdmCte SELECT conv_id, turn_idx, role, text, tool, ts FROM gdm_turns")
-  }
+  def gdmInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, gdmCte, "gdm_turns")
 
   /** versa sdwan.app — Rule 1 syslog event/cli lines and Rule 2 analytics
     * exports ({name=}-prefixed and bare) across the alarmlog /
@@ -3381,10 +3190,7 @@ sd_turns AS (
   FROM sd_body
 )"""
 
-  def sdInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sdCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sd_turns")
-  }
+  def sdInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sdCte, "sd_turns")
 
   /** skyhigh.security.mgr — NSM forwarder lines (ACL/Fault/Audit/Alert +
     * the RULE 20 else) for syslog_security_skyhigh.security.mgr.conf. */
@@ -3431,10 +3237,7 @@ shm_turns AS (
   FROM shm_body
 )"""
 
-  def shmInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $shmCte SELECT conv_id, turn_idx, role, text, tool, ts FROM shm_turns")
-  }
+  def shmInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, shmCte, "shm_turns")
 
   /** skyhigh.swg — web-gateway access (double-space kv), virus, and cert-
     * error lines for syslog_security_skyhigh.swg.conf. The ts=[...] value is
@@ -3478,10 +3281,7 @@ swg_turns AS (
   FROM swg_body
 )"""
 
-  def swgInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $swgCte SELECT conv_id, turn_idx, role, text, tool, ts FROM swg_turns")
-  }
+  def swgInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, swgCte, "swg_turns")
 
   /** skyhigh.scp — 49-column API CSV rows (domain-backslash and plain
     * users) plus the pass-through "test message" row, exercising the second
@@ -3521,10 +3321,7 @@ scp_turns AS (
   FROM scp_body
 )"""
 
-  def scpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $scpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM scp_turns")
-  }
+  def scpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, scpCte, "scp_turns")
 
   /** forescout.counteract_nac — CounterAct threat-Log kv, application
     * status, NAC-policy MAC lines, the RULE 8 else (trailing-space
@@ -3575,10 +3372,7 @@ fs_turns AS (
   FROM fs_body
 )"""
 
-  def fsInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $fsCte SELECT conv_id, turn_idx, role, text, tool, ts FROM fs_turns")
-  }
+  def fsInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, fsCte, "fs_turns")
 
   /** cisco.dna — lowercased DNA-center webhook syslog (assurance issue,
     * audit " - - " shape, increase/decrease reason) for
@@ -3618,10 +3412,7 @@ dna_turns AS (
   FROM dna_body
 )"""
 
-  def dnaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $dnaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM dna_turns")
-  }
+  def dnaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, dnaCte, "dna_turns")
 
   /** f5 gtm.dns — the 12-branch dissect ladder of
     * syslog_audit_f5.big.ip.gtm.dns.conf (DBUG drop, httpd token/AUDIT,
@@ -3664,10 +3455,7 @@ fg_turns AS (
   FROM fg_body
 )"""
 
-  def fgInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $fgCte SELECT conv_id, turn_idx, role, text, tool, ts FROM fg_turns")
-  }
+  def fgInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, fgCte, "fg_turns")
 
   /** lieberman.pass_manager — XML-attribute erpm events in the four shape
     * variants (OpResult/other × self-closing/map-context) plus the
@@ -3737,10 +3525,7 @@ lb_turns AS (
   FROM lb_body
 )"""
 
-  def lbInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $lbCte SELECT conv_id, turn_idx, role, text, tool, ts FROM lb_turns")
-  }
+  def lbInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, lbCte, "lb_turns")
 
   /** snmp_forescout + tenable nessus/security-center — one shared base,
     * three tools (snmp trap varbinds; nessus dissect/grok/kv + drop +
@@ -3797,10 +3582,7 @@ tb_turns AS (
   FROM tb_body
 )"""
 
-  def tbInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tbCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tb_turns")
-  }
+  def tbInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tbCte, "tb_turns")
 
   /** vuln tenable sc/asm APIs — JSON findings with the CVE `split {}`
     * fan-out (2 CVEs → 2 events) and no-CVE singles. The vprContext
@@ -3852,10 +3634,7 @@ tv_turns AS (
   FROM tv_body
 )"""
 
-  def tvInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tvCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tv_turns")
-  }
+  def tvInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tvCte, "tv_turns")
 
   /** layer7 securespan — ssg gateway lines for the pri-substring ladder of
     * syslog_security_layer7.securespan.soa.gw.conf: the RULE 1 headers+XML
@@ -3905,10 +3684,7 @@ l7_turns AS (
   FROM l7_body
 )"""
 
-  def l7Input(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $l7Cte SELECT conv_id, turn_idx, role, text, tool, ts FROM l7_turns")
-  }
+  def l7Input(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, l7Cte, "l7_turns")
 
   /** microsoft ata — CEF alert lines (suspicious service creation /
     * pass-the-hash) plus a malformed line for the no-pipes failure path
@@ -3944,10 +3720,7 @@ mata_turns AS (
   FROM mata_body
 )"""
 
-  def mataInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mataCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mata_turns")
-  }
+  def mataInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mataCte, "mata_turns")
 
   /** spectracom.ntp — appliance sshd/useradd/oscillator lines for the
     * 12-branch ladder of syslog_audit_spectracom.ntp.conf (the XO1 line
@@ -3989,10 +3762,7 @@ ntp_turns AS (
   FROM ntp_body
 )"""
 
-  def ntpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ntpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ntp_turns")
-  }
+  def ntpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ntpCte, "ntp_turns")
 
   /** versa sdwan.os_ubuntu — tailf alarmman event, sshd connection-closed
     * (the `]}`-terminated tail) and the generic catch-all
@@ -4029,10 +3799,7 @@ vos_turns AS (
   FROM vos_body
 )"""
 
-  def vosInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $vosCte SELECT conv_id, turn_idx, role, text, tool, ts FROM vos_turns")
-  }
+  def vosInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, vosCte, "vos_turns")
 
   /** a10.waf — CEF WAF alert, TCP resets-connection, persist-xff pair, the
     * no-rule fallback and the literal health-check drop
@@ -4071,10 +3838,7 @@ aw_turns AS (
   FROM aw_body
 )"""
 
-  def awInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $awCte SELECT conv_id, turn_idx, role, text, tool, ts FROM aw_turns")
-  }
+  def awInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, awCte, "aw_turns")
 
   /** cisco.router — {name=}-shipped IOS lines: the named-ACL hit (pattern
     * 1), the mac-flap/vlan form (pattern 8) and the catch-all (pattern 9),
@@ -4117,10 +3881,7 @@ cr_turns AS (
   FROM cr_body
 )"""
 
-  def crInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $crCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cr_turns")
-  }
+  def crInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, crCte, "cr_turns")
 
   /** cisco.apic — pam auth failure, incorrect packet flags, aaa ssh-failure
     * subject, and the other fallback (syslog_security_cisco.apic.conf). */
@@ -4160,10 +3921,7 @@ ca_turns AS (
   FROM ca_body
 )"""
 
-  def caInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $caCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ca_turns")
-  }
+  def caInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, caCte, "ca_turns")
 
   /** cisco.stealthwatch — CSV flow (localhost + real-ip), pipe-named rule
     * and pipe-kv alarm shapes (syslog_security_cisco.stealthwatch.conf). */
@@ -4203,10 +3961,7 @@ swt_turns AS (
   FROM swt_body
 )"""
 
-  def swtInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $swtCte SELECT conv_id, turn_idx, role, text, tool, ts FROM swt_turns")
-  }
+  def swtInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, swtCte, "swt_turns")
 
   /** accellion.sft — httpd session, Download audit, sendmail to=/STARTTLS/
     * from= variants and the repeated-message drop
@@ -4247,10 +4002,7 @@ ac_turns AS (
   FROM ac_body
 )"""
 
-  def acInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $acCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ac_turns")
-  }
+  def acInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, acCte, "ac_turns")
 
   /** sap.onapsis — heartbeat conditional (commented-out drop), incident JSON
     * with alarm-profile ruby collector, ISO/millis/second erp_time date list,
@@ -4309,10 +4061,7 @@ onp_turns AS (
   FROM onp_body
 )"""
 
-  def onpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $onpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM onp_turns")
-  }
+  def onpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, onpCte, "onp_turns")
 
   /** symantec.dlp — 3-token year-less syslog date dissect, 8-pipe CEF split,
     * kv over the CR-separated incident body (syslog_security_symantec.dlp
@@ -4432,10 +4181,7 @@ aci_turns AS (
   FROM aci_body
 )"""
 
-  def aciInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $aciCte SELECT conv_id, turn_idx, role, text, tool, ts FROM aci_turns")
-  }
+  def aciInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, aciCte, "aci_turns")
 
   /** cisco.wireless.control.system — `host: ts: %CODE: desc` ladder
     * (syslog_audit_cisco.wireless.control.system.conf). ksel 0 RULE 6
@@ -4476,15 +4222,8 @@ wlc_turns AS (
   FROM wlc_body
 )"""
 
-  def wlcInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $wlcCte SELECT conv_id, turn_idx, role, text, tool, ts FROM wlc_turns")
-  }
-
-  def sdlInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sdlCte SELECT conv_id, turn_idx, role, text, tool, ts FROM sdl_turns")
-  }
+  def wlcInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, wlcCte, "wlc_turns")
+  def sdlInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sdlCte, "sdl_turns")
 
   /** azure.eventhub.atp — records[] envelope over AdvancedHunting-style
     * CamelCase properties (event_hub_security_azure.event_hub_atp.conf).
@@ -4562,10 +4301,7 @@ eat_turns AS (
   FROM eat_base
 )"""
 
-  def eatInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $eatCte SELECT conv_id, turn_idx, role, text, tool, ts FROM eat_turns")
-  }
+  def eatInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, eatCte, "eat_turns")
 
   /** azure.eventhub.security — the space-stripping security-center feed
     * (event_hub_security_azure.event_hub.conf). esel 0 two-record
@@ -4619,10 +4355,7 @@ ehc_turns AS (
   FROM ehc_base
 )"""
 
-  def ehcInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ehcCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ehc_turns")
-  }
+  def ehcInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ehcCte, "ehc_turns")
 
   /** azure.graph_data — Graph security API alerts
     * (api_security_azure.graph_api.conf). gsel 0 full alert (the invalid
@@ -4675,10 +4408,7 @@ gra_turns AS (
   FROM gra_base
 )"""
 
-  def graInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $graCte SELECT conv_id, turn_idx, role, text, tool, ts FROM gra_turns")
-  }
+  def graInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, graCte, "gra_turns")
 
   /** riverbed.netim — weekly threshold-crossing alarms
     * (syslog_audit_riverbed.netim_weekly.conf). rsel 0 flattened (comma-
@@ -4766,10 +4496,7 @@ rvb_turns AS (
   FROM rvb_base
 )"""
 
-  def rvbInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $rvbCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rvb_turns")
-  }
+  def rvbInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, rvbCte, "rvb_turns")
 
   /** aws.app — journald + EKS datadog feed (api_aws_app.conf). asel 0
     * journald record (16-digit microsecond created → the bounded-UNIX /
@@ -4845,10 +4572,7 @@ app_turns AS (
   FROM app_base
 )"""
 
-  def appInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $appCte SELECT conv_id, turn_idx, role, text, tool, ts FROM app_turns")
-  }
+  def appInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, appCte, "app_turns")
 
   /** tanium.inventory — asset-report JSON after a braced prefix blob
     * (syslog_list_inventory_tanium.conf). tsel 0 full record (Intel Type
@@ -4904,10 +4628,7 @@ tin_turns AS (
   FROM tin_base
 )"""
 
-  def tinInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tinCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tin_turns")
-  }
+  def tinInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tinCte, "tin_turns")
 
   /** virtustream.linux — rsyslog-forwarder JSON envelope
     * (logstash_virtustream_linux_forwarder.conf). vsel 0 logstash self-log
@@ -4955,10 +4676,7 @@ vl_turns AS (
   FROM vl_base
 )"""
 
-  def vlInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $vlCte SELECT conv_id, turn_idx, role, text, tool, ts FROM vl_turns")
-  }
+  def vlInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, vlCte, "vl_turns")
 
   /** pingfederate.auth — flat-file jetty/provisioner log
     * (flat_file_audit_pingfederate.conf). psel 0 RULE 3 (PingOne API
@@ -5006,10 +4724,7 @@ pf_turns AS (
   FROM pf_base
 )"""
 
-  def pfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $pfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM pf_turns")
-  }
+  def pfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, pfCte, "pf_turns")
 
   /** cisco.riverbed.audit — tab/CR/quote-scrubbed login audit lines
     * (flat_file_audit_riverbed.audit.conf). asel 0 RULE 1 LogIn with host
@@ -5043,10 +4758,7 @@ rau_turns AS (
   FROM rau_base
 )"""
 
-  def rauInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $rauCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rau_turns")
-  }
+  def rauInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, rauCte, "rau_turns")
 
   /** cisco.riverbed.vnes_analytics — vnes web log
     * (flat_file_audit_riverbed.vnes_analytics.conf). vsel 0 login line
@@ -5082,10 +4794,7 @@ rvn_turns AS (
   FROM rvn_base
 )"""
 
-  def rvnInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $rvnCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rvn_turns")
-  }
+  def rvnInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, rvnCte, "rvn_turns")
 
   /** cisco.riverbed.scportal — steelcentral portal mix
     * (flat_file_audit_riverbed.scportal.conf). ssel 0 RULE 2 python-dict
@@ -5124,10 +4833,7 @@ rsc_turns AS (
   FROM rsc_base
 )"""
 
-  def rscInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $rscCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rsc_turns")
-  }
+  def rscInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, rscCte, "rsc_turns")
 
   /** cisco.riverbed.opnetreport — opnet report scraper
     * (flat_file_audit_riverbed.opnetreport.conf). osel 0 RULE 1 ^2019
@@ -5160,10 +4866,7 @@ rop_turns AS (
   FROM rop_base
 )"""
 
-  def ropInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ropCte SELECT conv_id, turn_idx, role, text, tool, ts FROM rop_turns")
-  }
+  def ropInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ropCte, "rop_turns")
 
   /** ubiquiti.wireless.bridge.session — airos/dropbear syslog
     * (syslog_audit_ubiquiti.wireless_bridge.conf). bsel 0 init line with a
@@ -5200,10 +4903,7 @@ ubb_turns AS (
   FROM ubb_base
 )"""
 
-  def ubbInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ubbCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ubb_turns")
-  }
+  def ubbInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ubbCte, "ubb_turns")
 
   /** ubiquiti.controller — filebeat JSON envelope over the unifi server log
     * (syslog_audit_ubiquiti.controller_session_logs.conf). csel 0 generic
@@ -5240,10 +4940,7 @@ ubc_turns AS (
   FROM ubc_base
 )"""
 
-  def ubcInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ubcCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ubc_turns")
-  }
+  def ubcInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ubcCte, "ubc_turns")
 
   /** cisco.wireless.access_point — WLC/AP syslog
     * (syslog_audit_cisco.wireless.ap.conf). wsel 0 RULE 1 UTC clock,
@@ -5273,10 +4970,7 @@ cwa_turns AS (
   FROM cwa_base
 )"""
 
-  def cwaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $cwaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cwa_turns")
-  }
+  def cwaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, cwaCte, "cwa_turns")
 
   /** cisco.waas — WAAS pam/tcpproxy syslog (syslog_security_cisco.waas.conf).
     * asel 0 rule 1 auth failure (rest_msg pre-lowercased), 1 rule 2 packet
@@ -5311,10 +5005,7 @@ cws_turns AS (
   FROM cws_base
 )"""
 
-  def cwsInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $cwsCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cws_turns")
-  }
+  def cwsInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, cwsCte, "cws_turns")
 
   /** apache — rsyslog JSON envelope over access+error logs
     * (syslog_audit_apache.conf). asel 0 access (::1 nat, CR-terminated
@@ -5366,10 +5057,7 @@ apa_turns AS (
   FROM apa_base
 )"""
 
-  def apaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $apaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM apa_turns")
-  }
+  def apaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, apaCte, "apa_turns")
 
   /** apache.audit — error_log flat file (flat_file_audit_apache.error.conf).
     * esel 0-4 = RULE 1-5, 5 = no rule ("other error"). */
@@ -5400,10 +5088,7 @@ ape_turns AS (
   FROM ape_base
 )"""
 
-  def apeInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $apeCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ape_turns")
-  }
+  def apeInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, apeCte, "ape_turns")
 
   /** mwg.proxy.audit — newline-folded k:v export
     * (flat_file_audit_mwg.proxy.conf). msel 0 full block (underscore runs,
@@ -5446,10 +5131,7 @@ mwg_turns AS (
   FROM mwg_base
 )"""
 
-  def mwgInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $mwgCte SELECT conv_id, turn_idx, role, text, tool, ts FROM mwg_turns")
-  }
+  def mwgInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, mwgCte, "mwg_turns")
 
   /** iis — flat-file W3C row, space-separated (flat_file_audit_iis.conf).
     * isel 0 22-column row (no XFF), 1 23-column row with private XFF
@@ -5480,10 +5162,7 @@ iif_turns AS (
   FROM iif_base
 )"""
 
-  def iifInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $iifCte SELECT conv_id, turn_idx, role, text, tool, ts FROM iif_turns")
-  }
+  def iifInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, iifCte, "iif_turns")
 
   /** jira — filebeat envelope over the access/session log
     * (flat_file_atlassian_jira.conf). jsel 0 Container-destroyed dissect,
@@ -5530,10 +5209,7 @@ jir_turns AS (
   FROM jir_base
 )"""
 
-  def jirInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $jirCte SELECT conv_id, turn_idx, role, text, tool, ts FROM jir_turns")
-  }
+  def jirInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, jirCte, "jir_turns")
 
   /** jira.audit — double-encoded audit record in a filebeat envelope
     * (flat_file_atlassian_jira_audit.conf). asel 0 full changedValues
@@ -5573,10 +5249,7 @@ jia_turns AS (
   FROM jia_base
 )"""
 
-  def jiaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $jiaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM jia_turns")
-  }
+  def jiaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, jiaCte, "jia_turns")
 
   /** beyondtrust.secure_remote_mngt (bomgar) — RFC5424-ish appliance feed
     * (syslog_security_bomgar.conf). bsel 0 login, 1 logout, 2 unknown
@@ -5609,10 +5282,7 @@ bgr_turns AS (
   FROM bgr_base
 )"""
 
-  def bgrInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $bgrCte SELECT conv_id, turn_idx, role, text, tool, ts FROM bgr_turns")
-  }
+  def bgrInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, bgrCte, "bgr_turns")
 
   /** tufin.fw_acl_manager — SecureTrack syslog (syslog_security_tufin.conf).
     * tsel 0 RULE 1 policy fetch, 1 RULE 2+3 (SC-wrapped user id gsubs),
@@ -5653,10 +5323,7 @@ tuf_turns AS (
   FROM tuf_base
 )"""
 
-  def tufInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tufCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tuf_turns")
-  }
+  def tufInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tufCte, "tuf_turns")
 
   /** hp.nnm_audit — NNMi sign-in audit with newline/tab k:v blocks
     * (syslog_security_hp.network.node.mgr.conf). hsel 0 successful sign-in
@@ -5695,10 +5362,7 @@ hpn_turns AS (
   FROM hpn_base
 )"""
 
-  def hpnInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $hpnCte SELECT conv_id, turn_idx, role, text, tool, ts FROM hpn_turns")
-  }
+  def hpnInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, hpnCte, "hpn_turns")
 
   /** oci.cloudguard — cloud guard problem feed
     * (api_security_oci.cloudguard.conf). csel 0 embedded python-dict
@@ -5748,10 +5412,7 @@ ocg_turns AS (
   FROM ocg_base
 )"""
 
-  def ocgInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ocgCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ocg_turns")
-  }
+  def ocgInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ocgCte, "ocg_turns")
 
   /** oci.object — object-storage audit envelope
     * (api_application_oci.object.conf). osel 0 full record, 1 bad
@@ -5783,10 +5444,7 @@ oob_turns AS (
   FROM oob_base
 )"""
 
-  def oobInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $oobCte SELECT conv_id, turn_idx, role, text, tool, ts FROM oob_turns")
-  }
+  def oobInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, oobCte, "oob_turns")
 
   /** jamf.endpoint_protection — protect alert (api_security_jamf.protect
     * .conf). jsel 0 full record with processes/user arrays + UNIX clock,
@@ -5820,10 +5478,7 @@ jmf_turns AS (
   FROM jmf_base
 )"""
 
-  def jmfInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $jmfCte SELECT conv_id, turn_idx, role, text, tool, ts FROM jmf_turns")
-  }
+  def jmfInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, jmfCte, "jmf_turns")
 
   /** sap.btp — triple-encoded audit-log record (api_security_sap_btp.conf).
     * bsel 0 full nesting (email grok), 1 no inner data + bad time. */
@@ -5859,10 +5514,7 @@ btp_turns AS (
   FROM btp_base
 )"""
 
-  def btpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $btpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM btp_turns")
-  }
+  def btpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, btpCte, "btp_turns")
 
   /** o365.dlp — unified audit DLP record (api_security_azure.o365_dlp.conf).
     * dsel 0 scalar To, 1 array To + BCC (merge targets the doomed envelope
@@ -5893,10 +5545,7 @@ odl_turns AS (
   FROM odl_base
 )"""
 
-  def odlInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $odlCte SELECT conv_id, turn_idx, role, text, tool, ts FROM odl_turns")
-  }
+  def odlInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, odlCte, "odl_turns")
 
   /** azure.graph_identity_protection — risk detection record
     * (api_security_azure.graph_identity_protection_api.conf). gsel 0
@@ -5929,10 +5578,7 @@ gip_turns AS (
   FROM gip_base
 )"""
 
-  def gipInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $gipCte SELECT conv_id, turn_idx, role, text, tool, ts FROM gip_turns")
-  }
+  def gipInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, gipCte, "gip_turns")
 
   /** security_scorecard.events — external-scan issue record
     * (api_security_scorecard.events.conf). ssel 0 full record (dst_host
@@ -5965,10 +5611,7 @@ ssc_turns AS (
   FROM ssc_base
 )"""
 
-  def sscInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sscCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ssc_turns")
-  }
+  def sscInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sscCte, "ssc_turns")
 
   /** active_directory.users — ad inventory record with dotted keys
     * (api_list_ad_users.conf). asel 0 full (undated list_ad_users_corp
@@ -6003,10 +5646,7 @@ adu_turns AS (
   FROM adu_base
 )"""
 
-  def aduInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $aduCte SELECT conv_id, turn_idx, role, text, tool, ts FROM adu_turns")
-  }
+  def aduInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, aduCte, "adu_turns")
 
   /** virtustream.windows — nxlog JSON envelope
     * (logstash_virtustream_windows_forwarder.conf). wsel 0 security 4624
@@ -6056,10 +5696,7 @@ vw_turns AS (
   FROM vw_base
 )"""
 
-  def vwInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $vwCte SELECT conv_id, turn_idx, role, text, tool, ts FROM vw_turns")
-  }
+  def vwInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, vwCte, "vw_turns")
 
   /** hadoop.impala_audit — wrapper object with an escaped inner record
     * (hadoop_impala_audit.conf). isel 0 QUERY with catalog object, 1 DDL
@@ -6099,10 +5736,7 @@ imp_turns AS (
   FROM imp_base
 )"""
 
-  def impInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $impCte SELECT conv_id, turn_idx, role, text, tool, ts FROM imp_turns")
-  }
+  def impInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, impCte, "imp_turns")
 
   /** tenable_nessus.security_center — SC app syslog
     * (syslog_audit_tenable.security_center.conf). tsel 0 SecurityCenter
@@ -6137,10 +5771,7 @@ tsc_turns AS (
   FROM tsc_base
 )"""
 
-  def tscInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $tscCte SELECT conv_id, turn_idx, role, text, tool, ts FROM tsc_turns")
-  }
+  def tscInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, tscCte, "tsc_turns")
 
   /** sap.cloud_connector — lowercased audit csv-ish rows
     * (flat_file_log_audit_sap.cloud_connector.conf). csel 0
@@ -6176,10 +5807,7 @@ scc_turns AS (
   FROM scc_base
 )"""
 
-  def sccInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sccCte SELECT conv_id, turn_idx, role, text, tool, ts FROM scc_turns")
-  }
+  def sccInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sccCte, "scc_turns")
 
   /** citrix.admin — director/DDC admin audit record
     * (db_audit_citrix.admin.conf). csel 0 success + domain-backslash
@@ -6217,10 +5845,7 @@ cta_turns AS (
   FROM cta_base
 )"""
 
-  def ctaInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ctaCte SELECT conv_id, turn_idx, role, text, tool, ts FROM cta_turns")
-  }
+  def ctaInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ctaCte, "cta_turns")
 
   /** aws.lb — ALB/ELB access log (s3_log_aws.lb.conf). lsel 0 v2 line with
     * the full quoted tail, 1 classic v1 line (missing tail; the nil != "-"
@@ -6260,10 +5885,7 @@ alb_turns AS (
   FROM alb_base
 )"""
 
-  def albInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $albCte SELECT conv_id, turn_idx, role, text, tool, ts FROM alb_turns")
-  }
+  def albInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, albCte, "alb_turns")
 
   /** skyhigh.atd — detonation verdict syslog (syslog_security_skyhigh.atd
     * .conf). asel 0 Summary/Subject shape + SubmitterType MWG ("permitted"),
@@ -6307,10 +5929,7 @@ atd_turns AS (
   FROM atd_base
 )"""
 
-  def atdInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $atdCte SELECT conv_id, turn_idx, role, text, tool, ts FROM atd_turns")
-  }
+  def atdInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, atdCte, "atd_turns")
 
   /** preempt.threat_intelligence — CEF-over-syslog threat feed
     * (api_security_preempt_monthly.conf). psel 0 domain suser (Rule 1
@@ -6347,10 +5966,7 @@ pre_turns AS (
   FROM pre_base
 )"""
 
-  def preInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $preCte SELECT conv_id, turn_idx, role, text, tool, ts FROM pre_turns")
-  }
+  def preInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, preCte, "pre_turns")
 
   /** skyhigh_scal — SCAL audit record, whole-message lowercased before
     * parse (api_skyhigh_scal_audit.conf). ssel 0 with middlename, 1
@@ -6384,10 +6000,7 @@ scl_turns AS (
   FROM scl_base
 )"""
 
-  def sclInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $sclCte SELECT conv_id, turn_idx, role, text, tool, ts FROM scl_turns")
-  }
+  def sclInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, sclCte, "scl_turns")
 
   /** infoblox.dns (ftp_gzip) — named query-log lines
     * (ftp_gzip_audit_infoblox_dns.conf). isel 0 full response + answer
@@ -6425,10 +6038,7 @@ ifx_turns AS (
   FROM ifx_base
 )"""
 
-  def ifxInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $ifxCte SELECT conv_id, turn_idx, role, text, tool, ts FROM ifx_turns")
-  }
+  def ifxInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, ifxCte, "ifx_turns")
 
   /** windows.exporter — exported evtx records with a double-encoded Payload
     * (flat_file_security_windows.exported_security_events.conf). wsel 0
@@ -6474,10 +6084,7 @@ wxp_turns AS (
   FROM wxp_base
 )"""
 
-  def wxpInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $wxpCte SELECT conv_id, turn_idx, role, text, tool, ts FROM wxp_turns")
-  }
+  def wxpInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, wxpCte, "wxp_turns")
 
   /** forescout.device_inventory — push-api ';'/':' kv inventory rows
     * (push_api_list_inventory_forescout.conf). fsel 0 wired host (aci port
@@ -6516,10 +6123,7 @@ fsd_turns AS (
   FROM fsd_base
 )"""
 
-  def fsdInput(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
-    spark.sql(s"WITH $fsdCte SELECT conv_id, turn_idx, role, text, tool, ts FROM fsd_turns")
-  }
+  def fsdInput(spark: SparkSession, sfDir: String): DataFrame = sideInput(spark, sfDir, fsdCte, "fsd_turns")
 
   /** Spark-side materialization: registers `events` from `sfDir` and returns
     * the turns DataFrame (conv_id, turn_idx, role, text, tool, ts, event_id).

@@ -1,7 +1,6 @@
 package graft.parse
 
 import graft.model.Event
-import scala.collection.mutable
 
 /** Positional CSV parse — semantics of the Logstash `csv` filter as used by
   * the reference (7 uses; ref: config/processors/api_security_mcafee.mcp_v5

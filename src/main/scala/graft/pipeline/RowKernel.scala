@@ -20,9 +20,11 @@ import graft.rules.{Program, TechnologyConfig}
   * this measurably reduces DRAM pressure — the bottleneck behind the N-vs-4N
   * scaling obligation.
   *
-  * Row-object contract: every emitted row is a fresh GenericInternalRow
-  * (safe to buffer/cache downstream); input rows are only read inside the
-  * flatMap callback, with retained strings cloned out of the reused buffer.
+  * Row-object contract, with no exception: every emitted row is a fresh
+  * GenericInternalRow holding exactly the columns the call's mask selects,
+  * in column-table order (safe to buffer/cache downstream); input rows are
+  * only read inside the flatMap callback, with retained strings cloned out
+  * of the reused buffer.
   */
 object RowKernel {
 
@@ -34,15 +36,39 @@ object RowKernel {
   private val emptyArray = new GenericArrayData(Array.empty[Any])
   private val droppedRule = UTF8String.fromString("dropped")
   private val notParsed = UTF8String.fromString("not parsed")
-  private val arrayOrdinals: Array[Int] = schema.fields.zipWithIndex.collect {
-    case (f, idx) if f.dataType.isInstanceOf[ArrayType] => idx
+
+  // the context columns' ordinals, at the head of the column table
+  private val Array(convId, turnIdx, subIdx, roleCol, toolCol, tsCol, textCol, techCol, parseRule,
+      parseOk, tagsCol, routeIndex, routeOutputs) =
+    Array("conv_id", "turn_idx", "sub_idx", "role", "tool", "ts", "text", "technology",
+      "parse_rule", "parse_ok", "tags", "route_index", "route_outputs").map(schema.fieldIndex)
+
+  /** The columns a counted row can hold: each comes from the input row or
+    * the static technology config, never from the event. */
+  private val countCols = Set("technology", "role", "tool", "ts", "route_outputs")
+
+  /** Whether a call emitting `cols` runs at counts depth: only each
+    * program's cardinality step (Engine.parseCardinality), then that many
+    * rows — no parse body, no enrichment chain, no flatten. A marker row
+    * (`emitDropped`) needs the whole parse. */
+  def countsOnly(cols: Iterable[String], emitDropped: Boolean): Boolean =
+    !emitDropped && cols.forall(countCols)
+
+  /** The column mask selecting `cols`: [[process]] then emits rows of
+    * exactly those columns. NOTE: this is a COLUMN mask of the output
+    * schema — unrelated to Enrich.maskFor, the per-technology STEP-skip
+    * mask of the enrichment chain (same name, different axis). */
+  def maskFor(cols: Seq[String]): Array[Boolean] = {
+    val m = new Array[Boolean](numFields)
+    cols.foreach(c => m(schema.fieldIndex(c)) = true)
+    m
   }
 
   /** Per-partition compiled technology entry: config + program + reusable
-    * constant columns (raw input tool value, technology name, route_outputs
-    * array, dated index cached per epoch-day — log batches are
-    * time-clustered). Emitted UTF8Strings are immutable, so sharing one
-    * instance across all of a partition's rows is safe. */
+    * constant columns (raw input tool value, null for a null tool;
+    * technology name, route_outputs array, dated index cached per epoch-day
+    * — log batches are time-clustered). Emitted UTF8Strings are immutable,
+    * so sharing one instance across all of a partition's rows is safe. */
   private final class Tech(val toolU8: UTF8String, // raw input value (passthrough column)
                            val cfg: TechnologyConfig,
                            val program: Program) {
@@ -61,20 +87,21 @@ object RowKernel {
     }
   }
 
-  /** The preamble every kernel mode shares: per partition, a technology
-    * cache; per input row (conv_id, turn_idx, role, text, tool, ts), its
-    * compiled technology, the `ts` output value (boxed micros, or null for
-    * a null `ts`) and `ts` in millis for the parse context (0 for a null
-    * `ts`). `f` returns the turn's output rows. */
+  /** The preamble every call shares: per partition, a technology cache;
+    * per input row (conv_id, turn_idx, role, text, tool, ts), its compiled
+    * technology (a null tool runs the `unknown` program, as an empty one
+    * does), the `ts` output value (boxed micros, or null for a null `ts`)
+    * and `ts` in millis for the parse context (0 for a null `ts`). `f`
+    * returns the turn's output rows. */
   private def eachTurn(it: Iterator[InternalRow])(
       f: (InternalRow, Tech, Any, Long) => IterableOnce[InternalRow]): Iterator[InternalRow] = {
     val techs = new java.util.HashMap[UTF8String, Tech]()
     it.flatMap { row =>
-      val toolU8 = if (row.isNullAt(4)) UTF8String.EMPTY_UTF8 else row.getUTF8String(4)
+      val toolU8 = if (row.isNullAt(4)) null else row.getUTF8String(4)
       var tech = techs.get(toolU8)
       if (tech == null) {
-        val key = toolU8.clone()
-        val (cfg, program) = Engine.techOf(key.toString)
+        val key = if (toolU8 == null) null else toolU8.clone()
+        val (cfg, program) = Engine.techOf(if (key == null) "" else key.toString)
         tech = new Tech(key, cfg, program)
         techs.put(key, tech)
       }
@@ -88,65 +115,94 @@ object RowKernel {
   private def textOf(row: InternalRow): String =
     if (row.isNullAt(3)) null else row.getUTF8String(3).toString
 
-  /** One partition of input rows → 0..N output rows each. `emitDropped`
-    * additionally materializes one marker row (parse_rule='dropped', empty
-    * route_outputs) per input turn that yields no event — `drop {}`-ed, or
-    * split into none (palo's `split {}` on newline-only text) — so a
-    * single pass can account for conservation metrics — used by Sink; the
-    * query path filters at the source by not asking.
+  /** One call's writer: `slot(ordinal)` is the column's index in the
+    * emitted row, or -1 when the mask leaves it out. Event rows, marker
+    * rows and counted rows all write through it. */
+  private final class Writer(mask: Array[Boolean]) {
+    private val selected = (0 until numFields).filter(o => mask == null || mask(o))
+    val slot: Array[Int] = Array.fill(numFields)(-1)
+    selected.zipWithIndex.foreach { case (o, s) => slot(o) = s }
+    val names: Seq[String] = selected.map(schema.fieldNames(_))
+    private val arraySlots: Array[Int] =
+      selected.indices.filter(s => schema(selected(s)).dataType.isInstanceOf[ArrayType]).toArray
+
+    def has(ord: Int): Boolean = slot(ord) >= 0
+    def put(v: Array[Any], ord: Int, x: Any): Unit = { val s = slot(ord); if (s >= 0) v(s) = x }
+
+    /** A fresh row holding what all of a turn's rows share: the input's
+      * conv_id, turn_idx, role, tool, ts and text (`textU8`), the
+      * technology, and the empty array in every array column. */
+    def turnRow(row: InternalRow, tech: Tech, ts: Any, textU8: UTF8String): Array[Any] = {
+      val v = new Array[Any](selected.length)
+      var j = 0
+      while (j < arraySlots.length) { v(arraySlots(j)) = emptyArray; j += 1 }
+      if (has(convId) && !row.isNullAt(0)) v(slot(convId)) = row.getUTF8String(0).clone()
+      if (has(turnIdx) && !row.isNullAt(1)) v(slot(turnIdx)) = row.getInt(1)
+      if (has(roleCol) && !row.isNullAt(2)) v(slot(roleCol)) = row.getUTF8String(2).clone()
+      put(v, toolCol, tech.toolU8)
+      put(v, tsCol, ts)
+      put(v, textCol, textU8)
+      put(v, techCol, tech.techU8)
+      v
+    }
+  }
+
+  /** One partition of input rows → 0..N output rows each, holding the
+    * columns `mask` selects (`maskFor`; null = all). Unselected columns are
+    * never computed: an unselected event-derived field skips its map walk
+    * and UTF8String conversion, which is the wide path's DRAM traffic, and
+    * a call whose columns pass [[countsOnly]] runs no parse body at all.
     *
-    * Lazy flatten: `mask(ordinal)` selects which columns to materialize —
-    * unselected Event-derived fields stay null and skip their map walk +
-    * UTF8String conversion entirely, which is the wide path's DRAM traffic.
-    * The 13 context columns (conv/turn/.../route) are always populated.
-    * Output schema is unchanged (GraftParseExec projects the selected
-    * columns); `null` mask = full flatten. */
+    * `emitDropped` additionally materializes one marker row
+    * (parse_rule='dropped', parse_ok=false, empty tags, route_outputs and
+    * array columns) per input turn that yields no event — `drop {}`-ed, or
+    * split into none (palo's `split {}` on newline-only text) — so a single
+    * pass can account for conservation metrics — used by Sink; the query
+    * path filters at the source by not asking. */
   def process(it: Iterator[InternalRow], dicts: Dicts,
-              emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] =
-    eachTurn(it) { (row, tech, ts, tsMillis) =>
-      val text = textOf(row)
-      val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
-      val noEvent = results == null || results.isEmpty
-      if (noEvent && !emitDropped) Nil
-      else {
-        val convU8 = if (row.isNullAt(0)) null else row.getUTF8String(0).clone()
-        val turnIdx = if (row.isNullAt(1)) null else java.lang.Integer.valueOf(row.getInt(1))
-        val roleU8 = if (row.isNullAt(2)) null else row.getUTF8String(2).clone()
-        val textU8 = if (row.isNullAt(3)) null else row.getUTF8String(3).clone()
-        if (noEvent)
-          droppedRow(tech, convU8, turnIdx, roleU8, textU8, ts, tsMillis) :: Nil
+              emitDropped: Boolean, mask: Array[Boolean]): Iterator[InternalRow] = {
+    val w = new Writer(mask)
+    if (countsOnly(w.names, emitDropped))
+      eachTurn(it) { (row, tech, ts, tsMillis) =>
+        val n = Engine.parseCardinality(tech.cfg, tech.program, textOf(row), tsMillis, dicts)
+        if (n == 0) Nil
         else {
-          var i = -1
-          results.map { case (ev, parseOk) =>
-            i += 1
-            flatten(ev, parseOk, i, tech, convU8, turnIdx, roleU8, textU8, ts, tsMillis,
-              mask, text)
+          val v = w.turnRow(row, tech, ts, null)
+          w.put(v, routeOutputs, tech.routeOutputs)
+          Iterator.tabulate(n)(i => new GenericInternalRow(if (i == 0) v else v.clone()))
+        }
+      }
+    else
+      eachTurn(it) { (row, tech, ts, tsMillis) =>
+        val text = textOf(row)
+        val results = Engine.parseAndEnrich(tech.cfg, tech.program, text, tsMillis, dicts)
+        val noEvent = results == null || results.isEmpty
+        if (noEvent && !emitDropped) Nil
+        else {
+          val textU8 = if (row.isNullAt(3)) null else row.getUTF8String(3).clone()
+          val v = w.turnRow(row, tech, ts, textU8)
+          if (noEvent) {
+            w.put(v, subIdx, 0)
+            w.put(v, parseRule, droppedRule)
+            w.put(v, parseOk, false)
+            w.put(v, routeIndex, tech.routeIndexU8(tsMillis))
+            new GenericInternalRow(v) :: Nil
+          } else {
+            // the last event takes the turn row itself, the others a copy
+            val last = results.length - 1
+            var i = -1
+            results.map { case (ev, ok) =>
+              i += 1
+              flatten(w, if (i == last) v else v.clone(), ev, ok, i, tech, tsMillis, text, textU8)
+            }
           }
         }
       }
-    }
-
-  /** Count of always-populated context columns at the head of the table
-    * (conv_id..route_outputs), whose ordinals `flatten` and `droppedRow`
-    * write directly. */
-  val numContextCols: Int = Columns.all.indexWhere(_.kind != Columns.Context)
-
-  /** Ordinal mask for a column subset (always includes the context
-    * columns — they are populated unconditionally). NOTE: this is the
-    * lazy-flatten COLUMN mask of the output schema — unrelated to
-    * Enrich.maskFor, the per-technology STEP-skip mask of the enrichment
-    * chain (same name, different axis). */
-  def maskFor(cols: Seq[String]): Array[Boolean] = {
-    val m = new Array[Boolean](numFields)
-    var i = 0
-    while (i < numContextCols) { m(i) = true; i += 1 }
-    cols.foreach(c => m(schema.fieldIndex(c)) = true)
-    m
   }
 
   // ---- Flatten inversion (round 6, guide §1.2 "per-task work") ----------
   // flatten walks the event tree ONCE, scattering populated leaves into
-  // their ordinals through a segment trie built from the column table —
+  // their slots through a segment trie built from the column table —
   // O(populated fields), not O(schema width).
 
   /** Trie over path segments; a terminal node carries the flatten ordinal
@@ -157,59 +213,12 @@ object RowKernel {
     var kind: Int = -1
   }
 
-  /** Counts-only 5-column schema (see Engine.parseCardinality). */
-  val countSchema: StructType =
-    StructType(Seq("technology", "role", "tool", "ts", "route_outputs").map(schema(_)))
-
-  /** Counts-only kernel: same parse dispatch, but only each program's
-    * cardinality step (Engine.parseCardinality) — no parse body, no
-    * enrichment chain, no wide flatten; one reused 5-column row emitted
-    * `cardinality` times per input turn. It reads the input's role, text,
-    * tool and ts only: GraftParse feeds it typed nulls for conv_id and
-    * turn_idx.
-    *
-    * ROW-OBJECT CAVEAT (exception to this file's header contract): the
-    * emitted rows share ONE mutable GenericInternalRow. This is only safe
-    * because the sole consumer, GraftParseExec, projects each row to an
-    * UnsafeRow before pulling the next — a cache/sort/collect over this
-    * iterator would silently see the last row N times. */
-  def processCounts(it: Iterator[InternalRow], dicts: Dicts): Iterator[InternalRow] = {
-    val out = new Array[Any](5)
-    val row = new GenericInternalRow(out)
-    eachTurn(it) { (r, tech, ts, tsMillis) =>
-      val n = Engine.parseCardinality(tech.cfg, tech.program, textOf(r), tsMillis, dicts)
-      if (n == 0) Nil
-      else {
-        out(0) = tech.techU8
-        out(1) = if (r.isNullAt(2)) null else r.getUTF8String(2).clone()
-        out(2) = tech.toolU8
-        out(3) = ts
-        out(4) = tech.routeOutputs
-        Iterator.fill(n)(row)
-      }
-    }
-  }
-
-  private def droppedRow(tech: Tech, convU8: UTF8String, turnIdx: Any,
-                         roleU8: UTF8String, textU8: UTF8String,
-                         ts: Any, tsMillis: Long): InternalRow = {
-    val v = new Array[Any](numFields)
-    var j = 0
-    while (j < arrayOrdinals.length) { v(arrayOrdinals(j)) = emptyArray; j += 1 }
-    v(0) = convU8; v(1) = turnIdx; v(2) = 0; v(3) = roleU8; v(4) = tech.toolU8
-    v(5) = ts; v(6) = textU8; v(7) = tech.techU8; v(8) = droppedRule
-    v(9) = false; v(11) = tech.routeIndexU8(tsMillis)
-    new GenericInternalRow(v)
-  }
-
   private val flattenTrie: FTrie = new FTrie
 
-  /** Tag-derived boolean columns (ordinal, tagTrue, tagFalse) and the
-    * event-derived ordinals defaulting to the shared empty array; also
-    * builds [[flattenTrie]]. */
-  private val (privOrdinals, derivedArrOrdinals): (Array[(Int, String, String)], Array[Int]) = {
+  /** Tag-derived boolean columns (ordinal, tagTrue, tagFalse); also builds
+    * [[flattenTrie]]. */
+  private val privOrdinals: Array[(Int, String, String)] = {
     val privs = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
-    val arrs = scala.collection.mutable.ArrayBuffer.empty[Int]
     Columns.all.zipWithIndex.foreach { case (c, ord) =>
       if (c.kind == Columns.Priv) privs += ((ord, c.tagTrue, c.tagFalse))
       else if (c.kind != Columns.Context) {
@@ -222,67 +231,57 @@ object RowKernel {
         require(n.ordinal == -1, s"duplicate flatten path ${c.path}")
         n.ordinal = ord
         n.kind = c.kind
-        if (c.kind == Columns.Arr) arrs += ord
       }
     }
-    (privs.toArray, arrs.toArray)
+    privs.toArray
   }
 
-  private def flatten(ev: Event, parseOk: Boolean, subIdx: Int, tech: Tech,
-                      convU8: UTF8String, turnIdx: Any, roleU8: UTF8String,
-                      textU8: UTF8String, ts: Any, tsMillis: Long,
-                      mask: Array[Boolean] = null, textStr: String = null): InternalRow = {
-    val v = new Array[Any](numFields)
-    v(0) = convU8                     // conv_id
-    v(1) = turnIdx                    // turn_idx
-    v(2) = subIdx                     // sub_idx
-    v(3) = roleU8                     // role
-    v(4) = tech.toolU8                // tool — raw input value passthrough
-    v(5) = ts                         // ts
-    v(6) = textU8                     // text — UNTOUCHED passthrough
-    v(7) = tech.techU8                // technology
-    val pr = ev.valueOrNull("[agent][parse_rule]") match {
-      case x: String => x
-      case a: scala.collection.mutable.ArrayBuffer[Any @unchecked] =>
-        a.collect { case x: String => x }.mkString(",") // stacked add_field rules
-      case _ => null
+  /** Fill `v`, a copy of the turn's row, with the columns of event `ev`
+    * (the `i`-th of its turn). */
+  private def flatten(w: Writer, v: Array[Any], ev: Event, ok: Boolean, i: Int, tech: Tech,
+                      tsMillis: Long, textStr: String, textU8: UTF8String): InternalRow = {
+    w.put(v, subIdx, i)
+    if (w.has(parseRule)) {
+      val pr = ev.valueOrNull("[agent][parse_rule]") match {
+        case x: String => x
+        case a: scala.collection.mutable.ArrayBuffer[Any @unchecked] =>
+          a.collect { case x: String => x }.mkString(",") // stacked add_field rules
+        case _ => null
+      }
+      v(w.slot(parseRule)) = if (pr == null) notParsed else UTF8String.fromString(pr)
     }
-    v(8) = if (pr == null) notParsed else UTF8String.fromString(pr) // parse_rule
-    v(9) = parseOk                    // parse_ok
-    v(10) = if (ev.tags.isEmpty) emptyArray // tags (sorted)
-    else {
+    w.put(v, parseOk, ok)
+    if (w.has(tagsCol) && ev.tags.nonEmpty) { // sorted
       val t = ev.tags.toArray
       java.util.Arrays.sort(t.asInstanceOf[Array[Object]])
       val o = new Array[Any](t.length)
       var j = 0
       while (j < t.length) { o(j) = UTF8String.fromString(t(j)); j += 1 }
-      new GenericArrayData(o)
+      v(w.slot(tagsCol)) = new GenericArrayData(o)
     }
-    v(11) = ev.getString("[@metadata][output]") match { // conf-level index override
-      case Some(o) => UTF8String.fromString(o)
-      case None => tech.routeIndexU8(tsMillis)
-    }                                 // route_index
-    v(12) = tech.routeOutputs         // route_outputs (shared immutable constant)
-    // Event-derived section: array defaults, tag-derived booleans, then ONE
-    // walk of the populated event tree (the masked lazy-flatten contract is
-    // unchanged: unselected ordinals keep their default null/empty-array)
+    if (w.has(routeIndex))
+      v(w.slot(routeIndex)) = ev.getString("[@metadata][output]") match { // conf-level index override
+        case Some(o) => UTF8String.fromString(o)
+        case None => tech.routeIndexU8(tsMillis)
+      }
+    w.put(v, routeOutputs, tech.routeOutputs) // shared immutable constant
+    // event-derived section: tag-derived booleans, then ONE walk of the
+    // populated event tree (absent leaves keep their null/empty-array default)
     var j = 0
-    while (j < derivedArrOrdinals.length) { v(derivedArrOrdinals(j)) = emptyArray; j += 1 }
-    j = 0
     while (j < privOrdinals.length) {
       val (ord, tagTrue, tagFalse) = privOrdinals(j)
-      if (mask == null || mask(ord))
-        v(ord) = if (ev.hasTag(tagTrue)) java.lang.Boolean.TRUE
-                 else if (ev.hasTag(tagFalse)) java.lang.Boolean.FALSE else null
+      if (w.has(ord))
+        v(w.slot(ord)) = if (ev.hasTag(tagTrue)) java.lang.Boolean.TRUE
+                         else if (ev.hasTag(tagFalse)) java.lang.Boolean.FALSE else null
       j += 1
     }
-    scatter(ev.root, flattenTrie, v, mask, textStr, textU8)
+    scatter(ev.root, flattenTrie, v, w.slot, textStr, textU8)
     new GenericInternalRow(v)
   }
 
   /** Walk one level of the event tree against the flatten trie, converting
-    * each matched leaf per its column kind; absent columns keep their
-    * defaults. Descends only into nested maps — an ArrayBuffer at an
+    * each matched leaf of a column with a `slot` per its column kind; absent
+    * columns keep their defaults. Descends only into nested maps — an ArrayBuffer at an
     * intermediate segment never matches (mirrors Event.partsOrNull, whose
     * array probe requires a numeric segment; no flatten path has one).
     *
@@ -292,20 +291,20 @@ object RowKernel {
     * same object) reuses that encoding instead of re-encoding the largest
     * string in the row (UTF8Strings are immutable, so sharing is safe). */
   private def scatter(m: Event.FMap, node: FTrie, v: Array[Any],
-                      mask: Array[Boolean], textStr: String, textU8: UTF8String): Unit = {
+                      slot: Array[Int], textStr: String, textU8: UTF8String): Unit = {
     val it = m.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       val child = node.children.get(e.getKey)
       if (child != null) {
         val value = e.getValue
-        if (child.ordinal >= 0 && (mask == null || mask(child.ordinal))) {
+        if (child.ordinal >= 0 && slot(child.ordinal) >= 0) {
           val conv = convertLeaf(value, child.kind, textStr, textU8)
-          if (conv != null) v(child.ordinal) = conv
+          if (conv != null) v(slot(child.ordinal)) = conv
         }
         value match {
           case mm: Event.FMap if !child.children.isEmpty =>
-            scatter(mm, child, v, mask, textStr, textU8)
+            scatter(mm, child, v, slot, textStr, textU8)
           case _ => ()
         }
       }

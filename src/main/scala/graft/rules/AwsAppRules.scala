@@ -1,7 +1,7 @@
 package graft.rules
 
 import graft.model.Event
-import graft.parse.{Dates, JsonOps, Mutate}
+import graft.parse.{Dates, JsonOps}
 
 /** aws.app — semantic port of config/processors/api_aws_app.conf (124
   * lines): the journald + EKS/datadog application-log feed. One JSON object

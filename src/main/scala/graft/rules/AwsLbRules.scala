@@ -1,7 +1,7 @@
 package graft.rules
 
 import graft.model.Event
-import graft.parse.{Dates, Grok, JsonOps, Mutate}
+import graft.parse.{Dates, Grok, Mutate}
 
 /** aws.lb — s3_log_aws.lb.conf (ELB/ALB access log). Quirks mirrored:
   *  - the mega-grok (:19-23) is ported VERBATIM, including the missing

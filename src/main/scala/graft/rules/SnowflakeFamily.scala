@@ -1,6 +1,5 @@
 package graft.rules
 
-import graft.model.Event
 import graft.parse._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 

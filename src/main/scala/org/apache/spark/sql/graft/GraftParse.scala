@@ -4,8 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, BoundReference, Literal,
-  NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Literal, NamedExpression,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, RepartitionByExpression,
   UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -42,11 +42,11 @@ case class GraftParse(child: LogicalPlan, output: Seq[Attribute], emitDropped: B
     copy(child = newChild)
 }
 
-/** Runs the row kernel in the node's mode over each child partition and
-  * emits UnsafeRows of exactly `output`. Every kernel row is projected
-  * before the kernel is pulled again (the counts kernel reuses one mutable
-  * row); the projection in turn reuses its buffer, so a consumer that keeps
-  * rows across `next()` must copy them, as with any SparkPlan. */
+/** Runs the row kernel over each child partition and emits UnsafeRows of
+  * exactly `output`, which is in column-table order (pruning only filters
+  * it) — the order the kernel emits. The projection reuses its buffer, so a
+  * consumer that keeps rows across `next()` must copy them, as with any
+  * SparkPlan. */
 case class GraftParseExec(output: Seq[Attribute], emitDropped: Boolean,
                           dicts: Broadcast[Dicts], child: SparkPlan) extends UnaryExecNode {
   override def producedAttributes: AttributeSet = outputSet
@@ -57,18 +57,16 @@ case class GraftParseExec(output: Seq[Attribute], emitDropped: Boolean,
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val m = mode
-    val layout = if (m == GraftParse.Counts) RowKernel.countSchema else RowKernel.schema
-    val mask = if (m == GraftParse.Masked) RowKernel.maskFor(output.map(_.name)) else null
-    // nullable = true: a masked-out or marker field may be null whatever the column table declares
-    val fields = output.map(a => BoundReference(layout.fieldIndex(a.name), a.dataType, nullable = true))
+    val names = output.map(_.name)
+    require(names == RowKernel.schema.fieldNames.toSeq.filter(names.toSet),
+      s"GraftParse output is not in column-table order: $names")
+    val mask = RowKernel.maskFor(names)
+    // binds each field nullable, a superset of the column table's nullability
+    val types = output.map(_.dataType).toArray
     val (bc, withDropped, numOut) = (dicts, emitDropped, longMetric("numOutputRows"))
     child.execute().mapPartitionsInternal { it =>
-      val proj = UnsafeProjection.create(fields)
-      val rows =
-        if (m == GraftParse.Counts) RowKernel.processCounts(it, bc.value)
-        else RowKernel.process(it, bc.value, withDropped, mask)
-      rows.map { r => numOut += 1; proj(r) }
+      val proj = UnsafeProjection.create(types)
+      RowKernel.process(it, bc.value, withDropped, mask).map { r => numOut += 1; proj(r) }
     }
   }
 
@@ -77,19 +75,16 @@ case class GraftParseExec(output: Seq[Attribute], emitDropped: Boolean,
 }
 
 object GraftParse {
-  /** Counts: parse for cardinality only, no enrichment, no flatten
-    * (Engine.parseCardinality) — valid when only the columns taken from the
-    * input row and the static technology config are read. Masked: the full
-    * kernel, flattening only the output's columns. Full: every column. */
+  /** EXPLAIN labels of what the one kernel call does for an output. Counts:
+    * parse for cardinality only, no enrichment, no flatten
+    * ([[RowKernel.countsOnly]]). Masked: the whole kernel, flattening only
+    * the output's columns. Full: every column. */
   val Counts = "counts"
   val Masked = "masked"
   val Full = "full"
 
-  // lazy: register() runs at session set-up and must not initialize RowKernel
-  private lazy val countCols: Set[String] = RowKernel.countSchema.fieldNames.toSet
-
   def modeOf(output: Seq[Attribute], emitDropped: Boolean): String =
-    if (!emitDropped && output.forall(a => countCols.contains(a.name))) Counts
+    if (RowKernel.countsOnly(output.map(_.name), emitDropped)) Counts
     else if (output.size == RowKernel.schema.length) Full
     else Masked
 

@@ -6,8 +6,8 @@ import graft.pipeline.RowKernel
 
 /** The kernel's output schema is derived from one column table
   * (`graft.model.Columns`); it must keep the names, types, nullability and
-  * order recorded in `kernel_schema.json`, and the counts-mode schema must
-  * be the same fields picked from it. */
+  * order recorded in `kernel_schema.json`; the columns a counted row can
+  * hold are the five taken from the input row and the technology config. */
 class KernelSchemaSpec extends AnyFunSuite {
 
   test("derived kernel schema equals the recorded golden") {
@@ -19,9 +19,12 @@ class KernelSchemaSpec extends AnyFunSuite {
     }
   }
 
-  test("countSchema is its five columns picked from the kernel schema") {
-    val names = Seq("technology", "role", "tool", "ts", "route_outputs")
-    assert(RowKernel.countSchema == StructType(names.map(RowKernel.schema(_))))
+  test("the counts column set is technology, role, tool, ts and route_outputs") {
+    val names = Set("technology", "role", "tool", "ts", "route_outputs")
+    val counted = RowKernel.schema.fieldNames.filter(c => RowKernel.countsOnly(Seq(c), emitDropped = false))
+    assert(counted.toSet == names)
+    assert(RowKernel.countsOnly(names, emitDropped = false))
+    assert(!RowKernel.countsOnly(names, emitDropped = true), "a marker row needs the whole parse")
   }
 }
 

@@ -116,6 +116,44 @@ class LazyFlattenSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("an emitDropped select runs the masked kernel and equals the projected full rows") {
+    val cols = Seq("sub_idx", "parse_rule", "parse_ok", "tags", "route_outputs").map(col)
+    val (palo, blank) = PipelineSpec.paloAndBlanks(spark, sf)
+    Seq("iis" -> Transcripts.iisInput(spark, sf), "palo+blanks" -> palo.unionByName(blank)).foreach {
+      case (name, input) =>
+        val full = GraftParse.persistedRows(Pipeline.parseRows(spark, input, emitDropped = true),
+          StorageLevel.MEMORY_ONLY)
+        try {
+          assert(full.filter(col("parse_rule") === "dropped").count() > 0, s"$name has no marker row")
+          assertSameRows(Pipeline.parseRows(spark, input, emitDropped = true).select(cols: _*),
+            full.select(cols: _*), "masked", s"$name/emitDropped")
+        } finally GraftParse.unpersistRows(full)
+    }
+  }
+
+  test("a null tool comes out null and runs the unknown program; an empty tool stays empty") {
+    val main = Transcripts.input(spark, sf)
+    val nulls = main.withColumn("tool", lit(null).cast("string"))
+    def tools(df: DataFrame): Set[(String, String)] = { // the rows of df's own plan
+      val (t, k) = (df.schema.fieldIndex("tool"), df.schema.fieldIndex("technology"))
+      df.collect().map(r => (r.getString(t), r.getString(k))).toSet
+    }
+    val counts = Pipeline.parseDfSelect(spark, nulls, aggCols)
+    assert(counts.count() == main.count()) // unknown never drops or splits
+    assert(tools(counts) == Set((null, "unknown")))
+    assert(modes(counts) == Seq("counts"))
+    val masked = Pipeline.parseDfSelect(spark, nulls, Seq("tool", "technology", "event_module"))
+    assert(tools(masked) == Set((null, "unknown")))
+    assert(modes(masked) == Seq("masked"))
+    val full = Pipeline.parseDf(spark, nulls)
+    assert(tools(full) == Set((null, "unknown")))
+    assert(modes(full) == Seq("full"))
+    val buckets = Pipeline.sinkCounts(Pipeline.parseDf(spark, nulls))
+    assert(buckets.count() > 0 && buckets.filter(col("tool").isNotNull).count() == 0)
+    val empty = main.withColumn("tool", lit(""))
+    assert(tools(Pipeline.parseDfSelect(spark, empty, aggCols)) == Set(("", "unknown")))
+  }
+
   test("a null ts or turn_idx comes out null in the counts, masked, full and marker rows") {
     // the iis corpus has drop{}-ed turns, so emitDropped makes marker rows
     val nulls = Seq(Transcripts.input _, Transcripts.iisInput _).map(_(spark, sf)).reduce(_ union _)
